@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, IncrDedup, Linking, Similarity}
-import graft.plans.{Materialize, Pipeline}
+import graft.plans.{Materialize, Pipeline, Scope}
 import graft.sources.{ChemDict, PageGen}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -89,11 +89,16 @@ object Bench {
       .createTempDirectory("graft-bench-compact").toString
     var compactRound = 0
 
-    val thunks: Seq[(String, () => Unit)] = Seq(
-      "kg_pipeline" -> (() => {
+    // at-rest index state built on the warmup round lives in this scope
+    // for the whole run; each query's own caches live in a per-call
+    // scope closed after its action
+    val held = new Scope(spark)
+
+    val thunks: Seq[(String, Scope => Unit)] = Seq(
+      "kg_pipeline" -> (implicit sc => {
         nTriples = Pipeline.run(PageGen.pages(spark, nPages)).count()
       }),
-      "wet_write" -> (() => {
+      "wet_write" -> (implicit sc => {
         // corpus-export throughput: the released-text sink (WET
         // conversion-record shards, gzip member per record) — pairs
         // with warc_read to bracket the ingest/export story
@@ -107,7 +112,7 @@ object Bench {
         graft.sources.Warc.writeWet(
           docs.repartition(spark.sparkContext.defaultParallelism), out); ()
       }),
-      "warc_read" -> (() => {
+      "warc_read" -> (implicit sc => {
         // S1 ingest throughput: stream-parse every gzip-per-record WARC
         // shard (one task per shard, the format's parallelism unit) and
         // touch every parsed byte via the length sum
@@ -121,14 +126,14 @@ object Bench {
         graft.sources.Warc.read(spark, s"$warcDir/*.warc.gz")
           .agg(count(lit(1)), sum(length(col("html")))).collect(); ()
       }),
-      "warc_read_few" -> (() => {
+      "warc_read_few" -> (implicit sc => {
         // splittability baseline: 2 big shards at file granularity —
         // 2 tasks regardless of cores (the gzip format's own limit)
         val d = ensureWarcFew()
         graft.sources.Warc.read(spark, s"$d/warc/*.warc.gz")
           .agg(count(lit(1)), sum(length(col("html")))).collect(); ()
       }),
-      "warc_read_cdx" -> (() => {
+      "warc_read_cdx" -> (implicit sc => {
         // the same 2 shards via the CDX range reader: (file,
         // offset/1MiB) buckets spread members across all cores —
         // sub-file splits the format alone cannot offer (r4 task #7)
@@ -137,23 +142,20 @@ object Bench {
           spark.read.parquet(s"$d/cdx"), splitBytes = 1L << 20)
           .agg(count(lit(1)), sum(length(col("html")))).collect(); ()
       }),
-      "kg_linked" -> (() => {
+      "kg_linked" -> (implicit sc => {
         val ann = Pipeline.annotate(Pipeline.sentences(PageGen.pages(spark, nPages)), names)
-        val (linked, unpersist) = Linking.linkTriplesFusedWithHandle(ann, ChemDict.entries)
-        try { linked.count(); () } finally unpersist()
+        Linking.linkTriplesFused(ann, ChemDict.entries).count(); ()
       }),
-      "kg_entities_linked" -> (() => {
+      "kg_entities_linked" -> (implicit sc => {
         // J2 strict per-mention back-attachment, fused single-pass
         val ann = Pipeline.annotate(Pipeline.sentences(PageGen.pages(spark, nPages)), names)
-        val (attached, unpersist) = Linking.attachToMentionsWithHandle(ann,
-          Linking.dictDs(spark, ChemDict.entries))
-        try { attached.count(); () } finally unpersist()
+        Linking.attachToMentions(ann, Linking.dictDs(spark, ChemDict.entries)).count(); ()
       }),
-      "dedup_minhash" -> (() => {
+      "dedup_minhash" -> (implicit sc => {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         Dedup.minhashPairs(docs, threshold = 0.5).count(); ()
       }),
-      "dedup_incr" -> (() => {
+      "dedup_incr" -> (implicit sc => {
         // the per-crawl marginal cost: delta (10%) deduped against the
         // persisted seen-corpus band index — the number a 10^12-doc
         // deployment pays per crawl, vs dedup_minhash's full-batch
@@ -164,17 +166,16 @@ object Bench {
         val corpus = docs.filter(col("doc_id") % 10 =!= 7)
         val delta = docs.filter(col("doc_id") % 10 === 7)
         if (incrDedupIdx == null) {
-          val b = IncrDedup.bandIndex(corpus).persist()
-          val c = IncrDedup.bucketCounts(b).persist()
+          val b = held.persist(IncrDedup.bandIndex(corpus))
+          val c = held.persist(IncrDedup.bucketCounts(b))
           b.count(); c.count()
           incrDedupIdx = (b, c)
         }
-        val (pairs, release) = IncrDedup.incrementalPairsWithHandle(
+        val pairs = IncrDedup.incrementalPairs(
           incrDedupIdx._1, incrDedupIdx._2, corpus, delta, threshold = 0.5)
-        try { IncrDedup.survivors(delta, pairs).count(); () }
-        finally release()
+        IncrDedup.survivors(delta, pairs).count(); ()
       }),
-      "dedup_incr_idx" -> (() => {
+      "dedup_incr_idx" -> (implicit sc => {
         // the same crawl job verified off the int-only shingle sidecar:
         // NO corpus text input at all — the at-10^12-docs shape, where
         // re-reading corpus (id, text) per crawl is the cost that
@@ -184,59 +185,57 @@ object Bench {
         val corpus = docs.filter(col("doc_id") % 10 =!= 7)
         val delta = docs.filter(col("doc_id") % 10 === 7)
         if (incrDedupIdx == null) {
-          val b = IncrDedup.bandIndex(corpus).persist()
-          val c = IncrDedup.bucketCounts(b).persist()
+          val b = held.persist(IncrDedup.bandIndex(corpus))
+          val c = held.persist(IncrDedup.bucketCounts(b))
           b.count(); c.count()
           incrDedupIdx = (b, c)
         }
         if (incrDedupShs == null) {
-          incrDedupShs = IncrDedup.shingleSidecar(corpus).persist()
+          incrDedupShs = held.persist(IncrDedup.shingleSidecar(corpus))
           incrDedupShs.count()
         }
-        val (pairs, release) = IncrDedup.incrementalPairsFromIndexWithHandle(
+        val pairs = IncrDedup.incrementalPairsFromIndex(
           incrDedupIdx._1, incrDedupIdx._2, incrDedupShs, delta, threshold = 0.5)
-        try { IncrDedup.survivors(delta, pairs).count(); () }
-        finally release()
+        IncrDedup.survivors(delta, pairs).count(); ()
       }),
-      "dedup_jaccard" -> (() => {
+      "dedup_jaccard" -> (implicit sc => {
         // the EXACT near-dup path (prefix-filtered all-pairs) — tracked
         // next to the probabilistic minhash path it cross-checks
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         Dedup.jaccardPairs(docs, threshold = 0.5).count(); ()
       }),
-      "kg_render" -> (() => {
+      "kg_render" -> (implicit sc => {
         // displacy render: annotate + per-row HTML assembly + the
         // zero-shuffle contiguous title lag (pipeline layout)
         val ann = Pipeline.annotate(Pipeline.sentences(PageGen.pages(spark, nPages)), names)
         graft.operators.Render.htmlContiguous(ann).count(); ()
       }),
-      "dedup_embedding" -> (() => {
+      "dedup_embedding" -> (implicit sc => {
         // the bucketed near-dup scale path (multi-probe sign-LSH)
         val emb = Dedup.plantNearDups(spark.read.parquet(s"$sfDir/embeddings.parquet"))
         Dedup.embeddingPairs(emb, threshold = 0.95).count(); ()
       }),
-      "semdedup" -> (() => {
+      "semdedup" -> (implicit sc => {
         // cluster-scoped semantic dedup: Lloyd train + assign +
         // within-cell exact-cosine pairs + CC survivor rule
         val raw = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val (surv, release) = graft.operators.SemDedup.survivorsWithHandle(
-          Dedup.plantNearDups(raw), Similarity.ivfCentroids(raw, 16), 0.95)
-        try { surv.count(); () } finally release()
+        graft.operators.SemDedup.survivors(
+          Dedup.plantNearDups(raw), Similarity.ivfCentroids(raw, 16), 0.95).count(); ()
       }),
-      "ann_brute" -> (() => {
+      "ann_brute" -> (implicit sc => {
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         Similarity.bruteForceTopK(emb, emb.orderBy("vec_id").limit(20), 10).count(); ()
       }),
-      "ann_lsh" -> (() => {
+      "ann_lsh" -> (implicit sc => {
         // the bucketed ANN scale path — regression-tracked next to brute
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         Similarity.lshTopK(emb, emb.orderBy("vec_id").limit(20), 10).count(); ()
       }),
-      "ann_ivf" -> (() => {
+      "ann_ivf" -> (implicit sc => {
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         Similarity.ivfTopK(emb, emb.orderBy("vec_id").limit(20), 10).count(); ()
       }),
-      "ann_pq" -> (() => {
+      "ann_pq" -> (implicit sc => {
         // the memory-bound path: train + encode + ADC scan + exact
         // rerank of the c=100 shortlist
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -245,7 +244,7 @@ object Bench {
           emb.orderBy("vec_id").limit(20), 10, 100, cbs,
           graft.operators.Pq.encode(emb, cbs)).count(); ()
       }),
-      "kg_incremental" -> (() => {
+      "kg_incremental" -> (implicit sc => {
         import spark.implicits._
         if (incrRound == 0)
           Materialize.runResumable(spark, PageGen.pages(spark, nPages), incrDir, 32)
@@ -264,7 +263,7 @@ object Bench {
         Materialize.incrementalUpdate(spark, batch, incrDir, 32,
           mergeOnRead = true); ()
       }),
-      "kg_compact" -> (() => {
+      "kg_compact" -> (implicit sc => {
         // the MoR maintenance cycle, measured end to end: 3 re-crawl
         // deltas land merge-on-read, then compact() folds them (and
         // any tombstones) back into the base buckets — the cost that
@@ -289,7 +288,7 @@ object Bench {
         }
         Materialize.compact(spark, compactDir); ()
       }),
-      "release_incr" -> (() => {
+      "release_incr" -> (implicit sc => {
         // the INCREMENTAL release: one crawl delta (doc_id%10==9)
         // through the gates against the at-rest index (seen exact
         // hashes + band index + shingle sidecar + bench set), all
@@ -302,18 +301,16 @@ object Bench {
           val idx = graft.operators.Release.buildIndex(
             docs.filter(col("doc_id") % 10 =!= 9))
           relIdx = graft.operators.Release.Index(
-            idx.exactHashes.persist(), idx.bands.persist(),
-            idx.counts.persist(), idx.shingles.persist(),
-            idx.bench.persist())
+            held.persist(idx.exactHashes), held.persist(idx.bands),
+            held.persist(idx.counts), held.persist(idx.shingles),
+            held.persist(idx.bench))
           relIdx.exactHashes.count(); relIdx.bands.count()
           relIdx.counts.count(); relIdx.shingles.count(); relIdx.bench.count()
         }
         val delta = docs.filter(col("doc_id") % 10 === 9)
-        val (fates, release) =
-          graft.operators.Release.incrementalLedgerWithHandle(delta, relIdx)
-        try { fates.count(); () } finally release()
+        graft.operators.Release.incrementalLedger(delta, relIdx).count(); ()
       }),
-      "corpus_release" -> (() => {
+      "corpus_release" -> (implicit sc => {
         // the composed end-to-end release build (langid/quality/
         // repetition gates + PII redaction in ONE projection → exact
         // dedup → minhash near-dup → 8-gram decontam) over the planted
@@ -321,10 +318,9 @@ object Bench {
         // measures the full chain including the attrition ledger joins
         val docs = SparkEntry.releaseFixture(
           spark.read.parquet(s"$sfDir/documents.parquet"))
-        val (fates, release) = graft.operators.Release.ledgerWithHandle(docs)
-        try { fates.count(); () } finally release()
+        graft.operators.Release.ledger(docs).count(); ()
       }),
-      "decontam" -> (() => {
+      "decontam" -> (implicit sc => {
         // eval-leakage sweep: corpus-pass gram hashing + broadcast join
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         graft.operators.Decontaminate.overlap(
@@ -332,16 +328,15 @@ object Bench {
           docs.filter(col("doc_id") % 20 === 7)
             .select(col("doc_id").as("bench_id"), col("text"))).count(); ()
       }),
-      "search_bm25" -> (() => {
+      "search_bm25" -> (implicit sc => {
         // lexical top-k: postings build (one agg, persisted once per
         // run) + broadcast query scoring + per-query rank windows
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val (topk, unpersist) = graft.operators.Search.bm25TopKWithHandle(
+        graft.operators.Search.bm25TopK(
           docs, Seq(1 -> Seq("dup", "hash", "join"),
-            2 -> Seq("merge", "sort", "window")), k = 10)
-        try { topk.count(); () } finally unpersist()
+            2 -> Seq("merge", "sort", "window")), k = 10).count(); ()
       }),
-      "pack_chunks" -> (() => {
+      "pack_chunks" -> (implicit sc => {
         // context-length packing manifest: per-shard window cumsum +
         // slice explode (the one-exchange path)
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -350,16 +345,14 @@ object Bench {
             graft.operators.TextStats.wsTokenCount(col("text")).as("n_tokens")),
           ctxLen = 64, nShards = 32).count(); ()
       }),
-      "span_dedup" -> (() => {
+      "span_dedup" -> (implicit sc => {
         // ExactSubstr: persisted window pass + flag agg + broadcast
         // rewrite; agg forces the UDF projection (count would prune it)
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val (cleaned, release) = graft.operators.SpanDedup
-          .removeDupSpansWithHandle(docs, k = 8)
-        try { cleaned.agg(sum(length(col("clean_text")))).collect(); () }
-        finally release()
+        graft.operators.SpanDedup.removeDupSpans(docs, k = 8)
+          .agg(sum(length(col("clean_text")))).collect(); ()
       }),
-      "line_dedup" -> (() => {
+      "line_dedup" -> (implicit sc => {
         // CCNet-style line-level boilerplate strike: two (hash, doc)
         // aggs + bounded blocklist collect + zero-exchange rewrite.
         // The agg over length() forces the rewrite projection — a bare
@@ -374,7 +367,7 @@ object Bench {
         graft.operators.Lines.removeBoilerplate(docs, maxDocFreq = 50)
           .agg(sum(length(col("clean_text")))).collect(); ()
       }),
-      "sample_mixture" -> (() => {
+      "sample_mixture" -> (implicit sc => {
         // data-recipe realization: broadcast weights + copy explode
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         val w = (0 until 20).map(i => s"src$i" -> (i % 4 match {
@@ -382,7 +375,7 @@ object Bench {
         })).toMap
         graft.operators.Sampling.sampleMixture(docs, w).count(); ()
       }),
-      "bpe_tokenize" -> (() => {
+      "bpe_tokenize" -> (implicit sc => {
         // tokenizer fit (one agg + driver merge loop) + zero-exchange
         // corpus encode
         import graft.operators.Bpe
@@ -390,28 +383,25 @@ object Bench {
         val merges = Bpe.train(d.filter(col("doc_id") % 7 === 3), 40)
         Bpe.encodePieces(d, merges).count(); ()
       }),
-      "kg_pagerank" -> (() => {
+      "kg_pagerank" -> (implicit sc => {
         // post-materialize graph analytics: fused linking pass → arc
         // derivation → 5 fixed-point power iterations (long-keyed
         // joins + integer sums only)
         import graft.operators.Graph
         val ann = Pipeline.annotate(Pipeline.sentences(PageGen.pages(spark, nPages)), names)
-        val (linked, unpersist) = Linking.linkTriplesFusedWithHandle(ann, ChemDict.entries)
-        val (edges, releaseEdges) = Graph.propertyEdgesWithHandle(linked)
-        try { Graph.pageRank(edges).count(); () }
-        finally { releaseEdges(); unpersist() }
+        val edges = Graph.propertyEdges(Linking.linkTriplesFused(ann, ChemDict.entries))
+        Graph.pageRank(edges).count(); ()
       }),
-      "ppl_buckets" -> (() => {
+      "ppl_buckets" -> (implicit sc => {
         // CCNet terciles: LM train + score + exact global rank (range
         // repartition + prefix offsets — no single-partition window)
         import graft.operators.{NgramLm, Ranking}
         val d = spark.read.parquet(s"$sfDir/documents.parquet")
         val ref = d.filter(col("doc_id") % 10 === 3)
-        val (buckets, release) = Ranking.perplexityBucketsWithHandle(NgramLm.score(d,
-          NgramLm.lmTable(NgramLm.counts(ref), NgramLm.vocabSize(ref))))
-        try { buckets.count(); () } finally release()
+        Ranking.perplexityBuckets(NgramLm.score(d,
+          NgramLm.lmTable(NgramLm.counts(ref), NgramLm.vocabSize(ref)))).count(); ()
       }),
-      "nb_classify" -> (() => {
+      "nb_classify" -> (implicit sc => {
         // train (one agg over the labeled slice) + broadcast-resolve
         // scoring + argmax window
         import graft.operators.Classify
@@ -421,18 +411,18 @@ object Bench {
           Classify.nbTable(Classify.counts(tr), Classify.vocabSize(tr)),
           Classify.priors(tr))).count(); ()
       }),
-      "q1_agg" -> (() => {
+      "q1_agg" -> (implicit sc => {
         spark.read.parquet(s"$sfDir/lineitem.parquet")
           .groupBy("l_returnflag", "l_linestatus")
           .agg(sum("l_quantity"), count(lit(1))).count(); ()
       }),
-      "q2_join" -> (() => {
+      "q2_join" -> (implicit sc => {
         val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
         val part = spark.read.parquet(s"$sfDir/part.parquet")
         li.join(broadcast(part), li("l_partkey") === part("p_partkey"))
           .groupBy("p_brand").agg(count(lit(1))).count(); ()
       }),
-      "q7_events_window" -> (() => {
+      "q7_events_window" -> (implicit sc => {
         spark.read.parquet(s"$sfDir/events.parquet")
           .groupBy(date_trunc("hour", col("ts")), col("event_type"))
           .agg(count(lit(1))).count(); ()
@@ -442,16 +432,17 @@ object Bench {
     // one full DISCARDED warmup round first: JIT/codegen must see every
     // query path before any measured round — the small-slice pipeline
     // warmup alone left first-round JIT noise inside the measured min
-    for ((_, f) <- thunks) f()
+    for ((_, f) <- thunks) Scope(spark)(f)
 
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     for (_ <- 0 until Rounds; (name, f) <- thunks) {
-      val (_, t) = timed(f())
+      val (_, t) = timed(Scope(spark)(f))
       samples(name) = t :: samples.getOrElse(name, Nil)
     }
     val best = samples.map { case (k, ts) => k -> ts.min }.toMap
     val median = samples.map { case (k, ts) => k -> ts.sorted.apply(ts.size / 2) }.toMap
     val spread = samples.map { case (k, ts) => k -> ((ts.max - ts.min) / ts.min) }.toMap
+    held.close()
     Result(best, median, spread, nTriples, nPages.toLong)
   }
 

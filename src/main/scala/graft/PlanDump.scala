@@ -1,14 +1,15 @@
 package graft
 
 import graft.operators._
+import graft.plans.Scope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dump `explain("formatted")` for the query paths the r6 optimization
-  * round touched (dev tool): writes one `<name>.txt` per query into the
-  * target directory. Run from the round-5 tree for the `_before`
-  * captures and from the current tree for `_after` (the driver cannot
-  * run Spark; these files are the committed plan evidence).
+/** Dump `explain("formatted")` for the operator paths whose plan shape
+  * matters (dev tool): writes one `<name>.txt` per query into the
+  * target directory. Run from the parent tree for the `_before`
+  * captures and from the current tree for `_after`; the files are the
+  * committed plan evidence under `plans/`.
   *
   * Usage: runMain graft.PlanDump <outDir> [suffix]
   */
@@ -45,54 +46,49 @@ object PlanDump {
       dump("nb_score", Classify.score(docs, nb, Classify.priors(tr)))
     }
     // search_bm25 scoring plan (idf broadcast bound)
-    locally {
-      val (topk, rel) = Search.bm25TopKWithHandle(docs,
+    Scope(spark) { implicit sc =>
+      dump("search_bm25", Search.bm25TopK(docs,
         Seq(1 -> Seq("dup", "hash", "join"), 2 -> Seq("merge", "sort", "window")),
-        k = 10)
-      dump("search_bm25", topk)
-      rel()
+        k = 10))
+    }
+    // pair plans: the candidate (banding) subtree is a scope
+    // leaf, so the pair plan scans it instead of embedding it per use
+    Scope(spark) { implicit sc =>
+      dump("dedup_minhash_pairs", Dedup.minhashPairs(docs, threshold = 0.5))
+    }
+    Scope(spark) { implicit sc =>
+      dump("dedup_jaccard_pairs", Dedup.jaccardPairs(docs, threshold = 0.5))
     }
     // composed release ledger (leaf cuts: the fates plan reads flat
     // cached leaves instead of re-embedding the pair chain)
-    locally {
-      val fixture = SparkEntry.releaseFixture(docs)
-      val (fates, rel) = Release.ledgerWithHandle(fixture)
-      dump("release_fates", fates)
-      rel()
+    Scope(spark) { implicit sc =>
+      dump("release_fates", Release.ledger(SparkEntry.releaseFixture(docs)))
     }
     // incremental release ledger
-    locally {
+    Scope(spark) { implicit sc =>
       val fixture = SparkEntry.releaseFixture(docs)
       val idx = Release.buildIndex(fixture.filter(col("doc_id") % 10 =!= 9))
-      val (fates, rel) = Release.incrementalLedgerWithHandle(
-        fixture.filter(col("doc_id") % 10 === 9), idx)
-      dump("release_incr_fates", fates)
-      rel()
+      dump("release_incr_fates", Release.incrementalLedger(
+        fixture.filter(col("doc_id") % 10 === 9), idx))
     }
     // incremental dedup survivors (cand leaf + CC fusion)
-    locally {
+    Scope(spark) { implicit sc =>
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val delta = docs.filter(col("doc_id") % 10 === 7)
-      val b = IncrDedup.bandIndex(corpus).persist()
-      val c = IncrDedup.bucketCounts(b).persist()
+      val b = sc.persist(IncrDedup.bandIndex(corpus))
+      val c = sc.persist(IncrDedup.bucketCounts(b))
       b.count(); c.count()
-      val (pairs, rel) = IncrDedup.incrementalPairsWithHandle(
-        b, c, corpus, delta, threshold = 0.5)
+      val pairs = IncrDedup.incrementalPairs(b, c, corpus, delta, threshold = 0.5)
       dump("dedup_incr_survivors", IncrDedup.survivors(delta, pairs))
-      rel(); b.unpersist(); c.unpersist()
     }
-    // minhash cluster labels (CC endpoint-node driver form)
-    dump("dedup_minhash_clusters", Dedup.minhashClusters(docs, threshold = 0.5))
-    // semdedup survivors
-    locally {
+    Scope(spark) { implicit sc =>
+      // minhash cluster labels (CC endpoint-node driver form)
+      dump("dedup_minhash_clusters", Dedup.minhashClusters(docs, threshold = 0.5))
+      // semdedup survivors
       val raw = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val (surv, rel) = SemDedup.survivorsWithHandle(
-        Dedup.plantNearDups(raw), Similarity.ivfCentroids(raw, 16), 0.95)
-      dump("semdedup_survivors", surv)
-      rel()
-    }
-    // pagerank result frame (driver-branch local relation vs iterated plan)
-    locally {
+      dump("semdedup_survivors", SemDedup.survivors(
+        Dedup.plantNearDups(raw), Similarity.ivfCentroids(raw, 16), 0.95))
+      // pagerank result frame (driver-branch local relation vs iterated plan)
       val edges = Seq((1L, -1L, 3L), (-1L, 1L, 3L), (2L, -1L, 1L), (-1L, 2L, 1L))
         .toDF("src", "dst", "support")
       dump("kg_pagerank", Graph.pageRank(edges))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, IncrDedup}
+import graft.plans.Scope
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -22,29 +23,28 @@ object ProfileIncr {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val corpus = docs.filter(col("doc_id") % 10 =!= 7)
     val delta = docs.filter(col("doc_id") % 10 === 7)
-    val b = IncrDedup.bandIndex(corpus).persist()
-    val c = IncrDedup.bucketCounts(b).persist()
+    val index = new Scope(spark)
+    val b = index.persist(IncrDedup.bandIndex(corpus))
+    val c = index.persist(IncrDedup.bucketCounts(b))
     b.count(); c.count()
-    def best(f: => Unit): Double =
+    def best(f: Scope => Unit): Double =
       (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+        val t0 = System.nanoTime(); Scope(spark)(f); (System.nanoTime() - t0) / 1e9
       }.min
-    def crawlJob(): Unit = {
-      val (pairs, release) = IncrDedup.incrementalPairsWithHandle(
-        b, c, corpus, delta, threshold = 0.5)
-      try { IncrDedup.survivors(delta, pairs).count(); () } finally release()
+    def crawlJob(implicit s: Scope): Unit = {
+      val pairs = IncrDedup.incrementalPairs(b, c, corpus, delta, threshold = 0.5)
+      IncrDedup.survivors(delta, pairs).count(); ()
     }
-    crawlJob() // warmup
-    val tBands = best { Dedup.minhashBands(delta).count(); () }
-    val tPairs = best {
-      val (pairs, release) = IncrDedup.incrementalPairsWithHandle(
-        b, c, corpus, delta, threshold = 0.5)
-      try { pairs.count(); () } finally release()
+    Scope(spark)(crawlJob(_)) // warmup
+    val tBands = best { _ => Dedup.minhashBands(delta).count(); () }
+    val tPairs = best { implicit s =>
+      IncrDedup.incrementalPairs(b, c, corpus, delta, threshold = 0.5).count(); ()
     }
-    val tCrawl = best { crawlJob() }
-    val tBatch = best { Dedup.minhashPairs(docs, threshold = 0.5).count(); () }
+    val tCrawl = best(crawlJob(_))
+    val tBatch = best { implicit s => Dedup.minhashPairs(docs, threshold = 0.5).count(); () }
     println(f"[profile-incr] deltaSignatures=$tBands%.3f pairs=$tPairs%.3f " +
       f"crawlJob=$tCrawl%.3f batchPairs=$tBatch%.3f")
+    index.close()
     spark.stop()
   }
 }

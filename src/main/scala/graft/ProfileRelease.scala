@@ -1,11 +1,12 @@
 package graft
 
 import graft.operators._
+import graft.plans.Scope
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-by-stage timing of the composed release build (dev tool,
-  * mirrors ProfilePipeline/ProfileIncr). Historical findings recorded
+  * mirrors ProfileIncr). Historical findings recorded
   * in BENCH.md: the interpreted HOF n-gram builders cost ~12 ms/row
   * (now the single-pass native scan, ~50x), and count()-only probes
   * lie about projection cost because column pruning deletes the work —
@@ -28,86 +29,80 @@ object ProfileRelease {
     }
     val docs = SparkEntry.releaseFixture(
       spark.read.parquet(s"$sfDir/documents.parquet"))
-    for (round <- 1 to 2) {
+    for (round <- 1 to 2) Scope(spark) { implicit sc =>
       println(s"--- round $round ---")
-      val compact = Release.labeled(docs).persist()
+      val compact = sc.persist(Release.labeled(docs))
       t("labeled (persisted)")(compact.count())
       val a0 = compact.filter(col("red").isNotNull).select("doc_id", "red")
-      val keep = a0.groupBy(md5(col("red")).as("h"))
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id").persist()
+      val keep = sc.persist(a0.groupBy(md5(col("red")).as("h"))
+        .agg(min(col("doc_id")).as("doc_id")).select("doc_id"))
       t("exact keep ids")(keep.count())
       val a1 = a0.join(keep, Seq("doc_id"), "left_semi")
-      val (pairs, relPairs) = Dedup.minhashPairsWithHandle(a1, "doc_id", "red",
-        threshold = 0.5)
-      val p = pairs.select(col("id_a").as("cid_a"), col("id_b").as("cid_b")).persist()
-      t("minhash pairs")(p.count())
-      val touched = p.select(col("cid_a").as("cid"))
-        .union(p.select(col("cid_b").as("cid"))).distinct()
-      val cc = t("CC (pair-touched nodes)")(
-        Canonicalize.connectedComponents(touched, p))
-      t("cc.count")(cc.count())
-      relPairs(); p.unpersist()
+      Scope(spark) { pairScope =>
+        val pairs = Dedup.minhashPairs(a1, "doc_id", "red", threshold = 0.5)(pairScope)
+        val p = pairScope.persist(
+          pairs.select(col("id_a").as("cid_a"), col("id_b").as("cid_b")))
+        t("minhash pairs")(p.count())
+        val touched = p.select(col("cid_a").as("cid"))
+          .union(p.select(col("cid_b").as("cid"))).distinct()
+        val cc = t("CC (pair-touched nodes)")(
+          Canonicalize.connectedComponents(touched, p))
+        t("cc.count")(cc.count())
+      }
       val bench = docs.filter(col("doc_id") % 20 === 7)
         .select(col("doc_id").as("bench_id"), col("text").as("red"))
       t("decontam flagged")(Decontaminate.flagged(a1, bench, "doc_id",
         "bench_id", "red").count())
-      t("full ledger")(Release.ledgerWithHandle(docs) match {
-        case (f, rel) => try f.count() finally rel()
-      })
-      compact.unpersist(); keep.unpersist()
+      t("full ledger")(Scope(spark)(Release.ledger(docs)(_).count()))
     }
     // incremental form: index built+persisted once, two warm crawls
     val seen = docs.filter(col("doc_id") % 10 =!= 9)
     val delta = docs.filter(col("doc_id") % 10 === 9)
+    val held = new Scope(spark)
     val idx0 = Release.buildIndex(seen)
-    val idx = Release.Index(idx0.exactHashes.persist(), idx0.bands.persist(),
-      idx0.counts.persist(), idx0.shingles.persist(), idx0.bench.persist())
+    val idx = Release.Index(held.persist(idx0.exactHashes), held.persist(idx0.bands),
+      held.persist(idx0.counts), held.persist(idx0.shingles), held.persist(idx0.bench))
     t("index build+persist")(Seq(idx.exactHashes, idx.bands, idx.counts,
       idx.shingles, idx.bench).foreach(_.count()))
     for (round <- 1 to 3) {
       t(s"incremental ledger r$round")(
-        Release.incrementalLedgerWithHandle(delta, idx) match {
-          case (f, rel) => try f.count() finally rel()
-        })
+        Scope(spark)(Release.incrementalLedger(delta, idx)(_).count()))
     }
     // stage bisect of one incremental crawl
-    {
-      val compact = Release.labeled(delta).persist()
+    Scope(spark) { implicit sc =>
+      val compact = sc.persist(Release.labeled(delta))
       t("i: labeled")(compact.count())
       val a0 = compact.filter(col("red").isNotNull).select("doc_id", "red")
       val hashed = a0.select(col("doc_id"), md5(col("red")).as("h"))
-      val keep = hashed
+      val keep = sc.persist(hashed
         .join(hashed.groupBy("h").agg(min(col("doc_id")).as("keep_id")), Seq("h"))
         .filter(col("doc_id") === col("keep_id"))
         .join(idx.exactHashes, Seq("h"), "left_anti")
-        .select("doc_id").persist()
+        .select("doc_id"))
       t("i: exact keep")(keep.count())
       val a1 = a0.join(keep, Seq("doc_id"), "left_semi")
-      val (pairs, relP) = IncrDedup.incrementalPairsFromIndexWithHandle(
+      val pp = sc.persist(IncrDedup.incrementalPairsFromIndex(
         idx.bands, idx.counts, idx.shingles, a1, "doc_id", "red",
-        threshold = 0.5)
-      val pp = pairs.persist()
+        threshold = 0.5))
       t("i: incr pairs")(pp.count())
       val kept = t("i: survivors")(IncrDedup.survivors(a1, pp))
       t("i: kept.count")(kept.count())
-      relP(); pp.unpersist()
       val nearKill = a1.select("doc_id").join(kept, Seq("doc_id"), "left_anti")
       val a2 = a1.join(nearKill, Seq("doc_id"), "left_anti")
       t("i: decontam")(Decontaminate.flagged(a2,
         idx.bench.select(col("bench_id"), col("text").as("red")),
         "doc_id", "bench_id", "red").count())
       // CC cost isolation: same pair set, pre-materialized inputs
-      val pmat = pp.localCheckpoint()
+      val (pmat, _) = sc.leaf(pp)
       t("i: survivors(pre-materialized pairs)")(
-        IncrDedup.survivors(a1.localCheckpoint(), pmat).count())
-      val nodes2 = pmat.select(col("id_a").as("cid"))
-        .union(pmat.select(col("id_b").as("cid"))).distinct().localCheckpoint()
-      val edges2 = pmat.select(col("id_a").as("cid_a"), col("id_b").as("cid_b"))
-        .localCheckpoint()
+        IncrDedup.survivors(sc.leaf(a1)._1, pmat).count())
+      val (nodes2, _) = sc.leaf(pmat.select(col("id_a").as("cid"))
+        .union(pmat.select(col("id_b").as("cid"))).distinct())
+      val (edges2, _) = sc.leaf(
+        pmat.select(col("id_a").as("cid_a"), col("id_b").as("cid_b")))
       t("i: bare CC on materialized")(
         Canonicalize.connectedComponents(nodes2, edges2).count())
       // which part of survivors recomputes? edge/node build vs CC loop
-      pp.persist(); pp.count()
       val pairIds3 = pp
         .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
       val nodes3 = pairIds3.select(col("id").as("cid"))
@@ -115,9 +110,8 @@ object ProfileRelease {
       t("i: nodes3.count (from cached pp)")(nodes3.count())
       t("i: CC on cached-pp derivations")(
         Canonicalize.connectedComponents(nodes3, edges3).count())
-      pp.unpersist()
-      compact.unpersist(); keep.unpersist()
     }
+    held.close()
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.plans.Scope
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -8,7 +9,7 @@ import org.apache.spark.sql.functions._
   * ScalingBench problem size (reads the materialized 80k-doc input the
   * scaling run leaves under /tmp/graft_docs), at an arbitrary
   * parallelism — run at local[2] and local[8] to see which phases
-  * carry the non-scaling fraction. Phases mirror buildWithHandle's
+  * carry the non-scaling fraction. Phases mirror Release.build's
   * structure; cfg matches the scaling run (useBroadcast = false).
   */
 object ProfileReleaseScale {
@@ -51,37 +52,32 @@ object ProfileReleaseScale {
     val docs = spark.read.parquet(docsDir)
     val cfg = Release.Config(useBroadcast = false)
     // warmup (JIT/codegen) on a slice
-    locally {
-      val (f, rel) = Release.ledgerWithHandle(
-        docs.where(col("doc_id") < 500), cfg = cfg)
-      try f.count() finally rel()
-    }
+    Scope(spark)(Release.ledger(docs.where(col("doc_id") < 500), cfg = cfg)(_).count())
     for (round <- 1 to 2) {
       println(s"--- round $round  cores=$cores ---")
-      t("full ledger")(Release.ledgerWithHandle(docs, cfg = cfg) match {
-        case (f, rel) => try f.count() finally rel()
-      })
+      t("full ledger")(Scope(spark)(Release.ledger(docs, cfg = cfg)(_).count()))
     }
     // phase bisect
-    val compact = Release.labeled(docs).persist()
+    implicit val sc: Scope = new Scope(spark)
+    val compact = sc.persist(Release.labeled(docs))
     t("p: labeled+persist")(compact.count())
     val a0 = compact.filter(col("red").isNotNull).select("doc_id", "red")
-    val keep = a0.groupBy(md5(col("red")).as("h"))
-      .agg(min(col("doc_id")).as("doc_id")).select("doc_id").persist()
+    val keep = sc.persist(a0.groupBy(md5(col("red")).as("h"))
+      .agg(min(col("doc_id")).as("doc_id")).select("doc_id"))
     t("p: exact keep")(keep.count())
     val a1 = a0.join(keep, Seq("doc_id"), "left_semi")
-    val (pairs, relPairs) = phase("p: cand build (eager)")(
-      Dedup.minhashPairsWithHandle(a1, "doc_id", "red",
-        threshold = cfg.nearThreshold, useBroadcast = false))
-    val p = pairs.select(col("id_a").as("cid_a"), col("id_b").as("cid_b")).persist()
-    val nP = phase("p: verify (pairs.count)")(p.count())
-    println(s"[profile-scale] nPairs=$nP")
-    val pl = spark.createDataFrame(p.rdd, p.schema)
-    val touched = pl.select(col("cid_a").as("cid"))
-      .union(pl.select(col("cid_b").as("cid"))).distinct()
-    t("p: CC")(Canonicalize.connectedComponents(touched, pl,
-      knownEdgeCount = Some(nP), nodesArePairEndpoints = true).count())
-    relPairs(); p.unpersist()
+    Scope(spark) { pairScope =>
+      val pairs = phase("p: cand build (eager)")(
+        Dedup.minhashPairs(a1, "doc_id", "red",
+          threshold = cfg.nearThreshold, useBroadcast = false)(pairScope))
+      val (pl, nP) = phase("p: verify (pairs.count)")(pairScope.leaf(
+        pairs.select(col("id_a").as("cid_a"), col("id_b").as("cid_b"))))
+      println(s"[profile-scale] nPairs=$nP")
+      val touched = pl.select(col("cid_a").as("cid"))
+        .union(pl.select(col("cid_b").as("cid"))).distinct()
+      t("p: CC")(Canonicalize.connectedComponents(touched, pl,
+        knownEdgeCount = Some(nP), nodesArePairEndpoints = true).count())
+    }
     val bench = docs.filter(col("doc_id") % 20 === 7)
       .select(col("doc_id").as("bench_id"), col("text").as("red"))
     phase("p: decontam flagged")(Decontaminate.flagged(a1, bench, "doc_id",
@@ -136,7 +132,7 @@ object ProfileReleaseScale {
     val layout0 = a0.select(col("doc_id")).rdd
       .mapPartitionsWithIndex { (i, it) => Iterator((i, it.size)) }.collect()
     println(s"[profile-scale] a0 partitions = ${layout0.length}")
-    compact.unpersist(); keep.unpersist()
+    sc.close()
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.Pipeline
+import graft.plans.{Pipeline, Scope}
 import graft.sources.PageGen
 import org.apache.spark.sql.SparkSession
 import scala.sys.process._
@@ -157,15 +157,12 @@ object ScalingBench {
         // certification must run the shape a 100-TB cluster would.
         val cfg = graft.operators.Release.Config(useBroadcast = false)
         // JIT/codegen warmup on a small slice of the same shape
-        val (wf, wrel) = graft.operators.Release.ledgerWithHandle(
+        Scope(spark)(graft.operators.Release.ledger(
           docs.where(org.apache.spark.sql.functions.col("doc_id") < 500),
-          cfg = cfg)
-        try wf.count() finally wrel()
+          cfg = cfg)(_).count())
         for (_ <- 1 to 2) { // the ledger run is long; 2 rounds bound the cost
           val t0 = System.nanoTime()
-          val (fates, rel) =
-            graft.operators.Release.ledgerWithHandle(docs, cfg = cfg)
-          try n = fates.count() finally rel()
+          n = Scope(spark)(graft.operators.Release.ledger(docs, cfg = cfg)(_).count())
           best = math.min(best, (System.nanoTime() - t0) / 1e9)
         }
       } else {

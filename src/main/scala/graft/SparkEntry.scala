@@ -2,7 +2,7 @@ package graft
 
 import graft.model.Triple
 import graft.operators._
-import graft.plans.Pipeline
+import graft.plans.{Pipeline, Scope}
 import graft.sources.{ChemDict, PageGen}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -164,7 +164,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Pipeline.run(PageGen.pages(spark, 200)).toDF()
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every query by name. The lambdas return LAZY frames; the
+    * caches the operators build for them register into `scope`, which
+    * the caller opens per query and closes after that query's action
+    * (`Verify`).
+    */
+  def queries(implicit scope: Scope): Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---------- KG pipeline (rows-only; gated by PipelineSpec P/R) ----------
     "kg_sentences" -> ((s, dir) =>
       Pipeline.sentences(pages(s, dir))
@@ -429,11 +434,8 @@ object SparkEntry {
       val corpus = d.filter(col("doc_id") % 10 =!= 7)
       val delta = d.filter(col("doc_id") % 10 === 7)
       val idx = IncrDedup.bandIndex(corpus)
-      // WithHandle (handle dropped): the candidate subplan cache
-      // outlives the one-shot query until session stop — the same
-      // accepted trade as kg_linked above
-      IncrDedup.incrementalPairsWithHandle(idx, IncrDedup.bucketCounts(idx),
-        corpus, delta, threshold = 0.5)._1.orderBy("id_a", "id_b")
+      IncrDedup.incrementalPairs(idx, IncrDedup.bucketCounts(idx),
+        corpus, delta, threshold = 0.5).orderBy("id_a", "id_b")
     }),
     "dedup_incr_pairs_idx" -> ((s, dir) => {
       val d = docs(s, dir)
@@ -444,19 +446,17 @@ object SparkEntry {
       // int-only shingle sidecar — the crawl job never reads corpus
       // text. Same pairs as dedup_incr_pairs (collision caveat
       // disclosed in IncrDedup), so it shares that oracle's SQL.
-      IncrDedup.incrementalPairsFromIndexWithHandle(idx,
+      IncrDedup.incrementalPairsFromIndex(idx,
         IncrDedup.bucketCounts(idx), IncrDedup.shingleSidecar(corpus),
-        delta, threshold = 0.5)._1.orderBy("id_a", "id_b")
+        delta, threshold = 0.5).orderBy("id_a", "id_b")
     }),
     "dedup_incr_survivors" -> ((s, dir) => {
       val d = docs(s, dir)
       val corpus = d.filter(col("doc_id") % 10 =!= 7)
       val delta = d.filter(col("doc_id") % 10 === 7)
       val idx = IncrDedup.bandIndex(corpus)
-      // WithHandle (handle dropped): same accepted candidate-cache
-      // leak-until-session-stop trade as dedup_incr_pairs above
-      val pairs = IncrDedup.incrementalPairsWithHandle(idx,
-        IncrDedup.bucketCounts(idx), corpus, delta, threshold = 0.5)._1
+      val pairs = IncrDedup.incrementalPairs(idx,
+        IncrDedup.bucketCounts(idx), corpus, delta, threshold = 0.5)
       IncrDedup.survivors(delta, pairs).orderBy("doc_id")
     }),
 
@@ -924,14 +924,11 @@ object SparkEntry {
     // over a planted fixture derivation that exercises EVERY fate
     // (see releaseFixture). The whole chain — including the minhash
     // candidate generation from dumped murmur parameters and the CC
-    // survivor rule — replays in DuckDB; the persisted intermediates of
-    // the one-shot `ledger` calls live until session stop (the accepted
-    // Verify-query trade documented on the other *WithHandle wrappers).
+    // survivor rule — replays in DuckDB.
     "release_fates" -> ((s, dir) =>
       Release.ledger(releaseFixture(docs(s, dir))).orderBy("doc_id")),
     "release_corpus" -> ((s, dir) =>
-      Release.releasedWithHandle(releaseFixture(docs(s, dir)))._1
-        .orderBy("doc_id")),
+      Release.released(releaseFixture(docs(s, dir))).orderBy("doc_id")),
     "release_stats" -> ((s, dir) =>
       Release.stats(Release.ledger(releaseFixture(docs(s, dir))))
         .orderBy("fate")),
@@ -965,8 +962,8 @@ object SparkEntry {
       val fx = releaseFixture(docs(s, dir))
       val seen = fx.filter(col("doc_id") % 10 =!= 9)
       val delta = fx.filter(col("doc_id") % 10 === 9)
-      Release.incrementalLedgerWithHandle(delta, Release.buildIndex(seen))
-        ._1.orderBy("doc_id")
+      Release.incrementalLedger(delta, Release.buildIndex(seen))
+        .orderBy("doc_id")
     }),
     "release_incr_bands" -> ((s, dir) => {
       // the at-rest band index over the SEEN near-dup-stage input —

@@ -1,8 +1,11 @@
 package graft
+import graft.plans.Scope
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Each query runs in its own Scope, closed after its write; a query
+  * that leaves cache entries behind anyway is reported on stderr. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -15,11 +18,23 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val names = Scope(spark)(SparkEntry.queries(_).keys.toSeq)
+    names.foreach { name =>
+      try Scope(spark) { scope =>
+        SparkEntry.queries(scope)(name)(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+      // a lazily persisted frame that never ran has a cache-manager
+      // entry but no persistent RDD yet
+      val rdds = spark.sparkContext.getPersistentRDDs.size
+      val left = if (rdds == 0 && !spark.sharedState.cacheManager.isEmpty) 1 else rdds
+      if (left > 0) {
+        System.err.println(s"[verify] $name left $left cache entries")
+        // start the next query clean, so each leak is reported once
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.Normalize
 import graft.model.{CanonicalEntity, ChemDictEntry}
+import graft.plans.Scope
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -144,32 +145,6 @@ object Canonicalize {
     * instead (a diameter needing > 2^40 jumps does not exist).
     * Returns (cid, cluster_id = min cid of component).
     */
-  /** Lineage cut over a MATERIALIZED (persisted + counted) frame: the
-    * LogicalRDD leaf plans downstream actions over a flat scan instead
-    * of re-analyzing the producer's whole logical subtree per action —
-    * with a deep producer (the incremental dedup pair chain) the
-    * repeated driver-side analysis alone measured ~1.5s PER derived
-    * action even though execution hit the cache (BENCH.md). Jobs on the
-    * leaf read the cached blocks; lineage-based recompute is kept.
-    */
-  private[operators] def planLeaf(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.rdd, df.schema)
-
-  /** Materialize a PERSISTED frame and hand back its lineage-cut leaf
-    * plus the row count with ONE driver-side analysis/planning pass:
-    * `df.rdd` plans the (cached) frame once, the RDD count executes it
-    * (filling the cache), and the leaf wraps the SAME RDD so no later
-    * action re-plans the producer subtree. The former
-    * `df.count(); planLeaf(df)` sequence analyzed the deep producer
-    * plan TWICE — measured ~1.6s per analysis for the incremental-dedup
-    * pair chain at sf0.1 (ProfileRelease bisect), pure driver time.
-    */
-  private[operators] def materializedLeaf(df: DataFrame): (DataFrame, Long) = {
-    val rdd = df.rdd
-    val n = rdd.count()
-    (df.sparkSession.createDataFrame(rdd, df.schema), n)
-  }
-
   /** Edge count at or below which CC runs as a driver-side union-find
     * instead of the distributed label loop. The dup/synonym graph is
     * the OUTPUT of pair verification — usually minuscule next to the
@@ -203,43 +178,45 @@ object Canonicalize {
     *    endpoint set (what all in-tree callers construct). The driver
     *    branch then RETURNS THE LOCAL LABEL MAP directly as a
     *    driver-built DataFrame — the coverage-guard job, the node
-    *    resolution join and the localCheckpoint job all collapse away
+    *    resolution join and the materializing job all collapse away
     *    (4 jobs → 1 collect). Output rows are identical by
     *    construction: every endpoint appears in the union-find label
-    *    map, and there are no non-endpoint nodes to backfill.
+    *    map, and there are no non-endpoint nodes to backfill. A pair
+    *    with a null endpoint breaks that equality (its non-null end
+    *    would have no label row), so this form require-fails on one.
+    *  - The returned labels are materialized: a driver-built frame, or
+    *    a leaf registered in `scope`, so callers may release their pair
+    *    caches right after the call.
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 40,
       driverEdgeThreshold: Long = DriverEdgeThreshold,
       knownEdgeCount: Option[Long] = None,
-      nodesArePairEndpoints: Boolean = false): DataFrame = {
+      nodesArePairEndpoints: Boolean = false)(implicit scope: Scope): DataFrame = {
     val spark = nodes.sparkSession
     if (knownEdgeCount.getOrElse(pairs.count()) <= driverEdgeThreshold)
       return connectedComponentsDriver(nodes, pairs, nodesArePairEndpoints)
-    // persist + LogicalRDD wrap (pageRank's arcs pattern): a cached
+    // every iteration plans over scope leaves (Scope.leaf): a cached
     // frame keeps its full ANALYZED lineage, and every iteration's
-    // action re-runs analysis/optimization over that subtree on the
-    // driver — with an expensive upstream (the LSH + verify chain
-    // feeding IncrDedup.survivors) the re-planning alone dominated the
-    // loop (measured 12.2s vs 2.0s for an identical 198-edge graph
-    // from leaf inputs at sf0.1). The wrap plans every iteration over a
-    // flat leaf while KEEPING lineage-based recompute (an executor loss
-    // re-derives blocks; a localCheckpoint would abort) and
-    // deterministic release (unpersist below, not driver GC).
-    def leaf(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
+    // action would re-run analysis over that subtree on the driver —
+    // with an expensive upstream (the LSH + verify chain feeding
+    // IncrDedup.survivors) the re-planning alone dominated the loop
+    // (measured 12.2s vs 2.0s for an identical 198-edge graph from leaf
+    // inputs at sf0.1). Leaves keep lineage-based recompute (an
+    // executor loss re-derives blocks; a localCheckpoint would abort).
+    // The edge list and each iteration's labels live in nested scopes
+    // released as the loop moves on (the finally also covers a failed
+    // convergence require, so a caller retrying with a higher maxIter
+    // accumulates no cache); only the final labels go to `scope`.
     // undirected edge list, both directions
-    val edgesPlan = pairs.select(col("cid_a").as("src"), col("cid_b").as("dst"))
-      .union(pairs.select(col("cid_b").as("src"), col("cid_a").as("dst")))
-      .persist()
-    val edges = leaf(edgesPlan)
-    var prevPlan = nodes.select(col("cid"), col("cid").as("cluster_id")).persist()
-    var labels = leaf(prevPlan)
+    val edgeScope = new Scope(spark)
+    var held = new Scope(spark)
+    try {
+    val (edges, _) = edgeScope.leaf(
+      pairs.select(col("cid_a").as("src"), col("cid_b").as("dst"))
+        .union(pairs.select(col("cid_b").as("src"), col("cid_a").as("dst"))))
+    var labels = held.leaf(nodes.select(col("cid"), col("cid").as("cluster_id")))._1
     var changedCount = 1L
     var iter = 0
-    // the finally releases BOTH persisted frames even when the
-    // convergence require below fires (or any iteration throws) — a
-    // caller that catches and retries with a higher maxIter must not
-    // accumulate leaked executor cache per failed attempt
-    try {
     while (changedCount > 0 && iter < maxIter) {
       val candidate = edges
         .join(labels, edges("dst") === labels("cid"))
@@ -261,23 +238,23 @@ object Canonicalize {
             .as("cluster_id"),
           (least(col("mid_label"), coalesce(col("jlabel"), col("mid_label")))
             < col("old_label")).as("changed"))
-        .persist() // materialized by the count; released next iteration
-      changedCount = updated.filter(col("changed")).count()
-      prevPlan.unpersist()
-      prevPlan = updated
-      labels = leaf(updated).select("cid", "cluster_id")
+      // the previous labels release once this round is materialized
+      val prev = held
+      held = new Scope(spark)
+      val (u, _) = try held.leaf(updated) finally prev.close()
+      changedCount = u.filter(col("changed")).count()
+      labels = u.select("cid", "cluster_id")
       iter += 1
     }
     require(changedCount == 0,
       s"connectedComponents did not converge within $maxIter iterations " +
         s"($changedCount labels still changing) — result would be silently " +
         "wrong cluster ids; raise maxIter")
-    // one final lineage cut so the RETURNED frame outlives the
-    // unpersists in the finally (same shape as pageRank's `out`)
-    labels.localCheckpoint()
+    // the returned labels outlive the nested scopes
+    scope.leaf(labels)._1
     } finally {
-      prevPlan.unpersist()
-      edgesPlan.unpersist()
+      held.close()
+      edgeScope.close()
     }
   }
 
@@ -289,19 +266,26 @@ object Canonicalize {
     * root, so each tree's root is its component minimum by induction,
     * and `find` is order-independent — bit-identical labels for any
     * edge arrival order or partitioning. Returned labels are
-    * localCheckpoint'd like the loop's (materialized, edge-free
-    * lineage), so callers release their pair caches right after.
+    * materialized like the loop's, so callers release their pair caches
+    * right after.
     */
   private def connectedComponentsDriver(nodes: DataFrame, pairs: DataFrame,
-      nodesArePairEndpoints: Boolean = false): DataFrame = {
+      nodesArePairEndpoints: Boolean)(implicit scope: Scope): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val edges = pairs
-      .select(col("cid_a").cast("long"), col("cid_b").cast("long"))
-      // null endpoints: the distributed equi-joins drop such edges
-      // silently; match that instead of crashing the typed collect
-      .filter(col("cid_a").isNotNull && col("cid_b").isNotNull)
-      .as[(Long, Long)].collect()
+    val rows = pairs.select(col("cid_a").cast("long"), col("cid_b").cast("long"))
+      .collect()
+    // null endpoints: the distributed equi-joins drop such edges
+    // silently, and the node join below backfills their nodes; the
+    // endpoint-node form has no node join, so there a dropped edge
+    // would silently drop its non-null endpoint from the output
+    val edges = rows.collect {
+      case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
+    }
+    require(!nodesArePairEndpoints || edges.length == rows.length,
+      s"connectedComponents: ${rows.length - edges.length} pair(s) with a null " +
+        "endpoint — nodesArePairEndpoints would lose their nodes; filter them " +
+        "or pass the node set")
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x0: Long): Long = {
       var x = x0
@@ -325,7 +309,7 @@ object Canonicalize {
     // endpoint-node callers: the label map IS the answer — nodes ==
     // endpoints means no backfill rows exist and nothing distributed
     // remains to resolve, so skip the guard job, the node join and the
-    // localCheckpoint job entirely (lineage is already action-free)
+    // materializing job entirely (lineage is already action-free)
     if (nodesArePairEndpoints)
       return labelMap.toDF("cid", "cluster_id")
     val labels = labelMap.toDF("k", "v")
@@ -342,8 +326,30 @@ object Canonicalize {
       .join(broadcast(labels), nodes("cid").cast("long") === col("k"), "left")
       .select(col("cid"),
         coalesce(col("v"), col("cid").cast("long")).as("cluster_id"))
-    out.localCheckpoint()
+    scope.leaf(out)._1
   }
+
+  /** Connected components of a pair graph (cid_a, cid_b) over its
+    * PAIR-TOUCHED ids only: an id no pair touches is trivially its own
+    * cluster, so routing a full node set through the label iterations
+    * would put O(all ids) rows into every round for a merge set that
+    * is O(pairs). Returns (cid, cluster_id) for the pair endpoints; the
+    * caller backfills untouched ids with cluster_id = cid.
+    *
+    * The pairs are materialized once as a leaf in a nested scope (CC
+    * reads them from several subtrees, and the producer is typically
+    * the deep LSH + verify chain) and released as soon as the labels
+    * exist; the edge count rides into CC (no size probe) and the
+    * endpoint-node form collapses the driver branch to one collect.
+    */
+  def pairComponents(pairs: DataFrame)(implicit scope: Scope): DataFrame =
+    Scope(pairs.sparkSession) { pairScope =>
+      val (pl, nPairs) = pairScope.leaf(pairs)
+      val touched = pl.select(col("cid_a").as("cid"))
+        .union(pl.select(col("cid_b").as("cid"))).distinct()
+      connectedComponents(touched, pl,
+        knownEdgeCount = Some(nPairs), nodesArePairEndpoints = true)
+    }
 
   /** Full canonicalization: dict → clustered entity table. The label
     * back-attachment is a JOIN on cid, not a broadcast of a
@@ -351,23 +357,11 @@ object Canonicalize {
     * Catalyst still picks a broadcast join automatically when the dict
     * is actually small.
     */
-  def entityTable(dict: Dataset[ChemDictEntry]): Dataset[CanonicalEntity] = {
+  def entityTable(dict: Dataset[ChemDictEntry])(implicit scope: Scope)
+      : Dataset[CanonicalEntity] = {
     val spark = dict.sparkSession
     import spark.implicits._
-    // CC over PAIR-TOUCHED cids only (the dedup-family discipline): an
-    // entry no blocking pair touches is trivially its own cluster, so
-    // the full-dict node set would route O(|dict|) rows through every
-    // label iteration for a merge set that is O(|synonym pairs|).
-    // Untouched entries get cluster_id = cid back in the final join.
-    val pairs = candidatePairs(dict).persist()
-    // materialize + lineage-cut in one analysis pass (materializedLeaf)
-    val (pl, nPairs) = materializedLeaf(pairs)
-    val touched = pl.select(col("cid_a").as("cid"))
-      .union(pl.select(col("cid_b").as("cid"))).distinct()
-    val labels =
-      try connectedComponents(touched, pl,
-        knownEdgeCount = Some(nPairs), nodesArePairEndpoints = true)
-      finally { pairs.unpersist(); () }
+    val labels = pairComponents(candidatePairs(dict))
     dict.toDF()
       .join(labels, Seq("cid"), "left")
       .select(coalesce(col("cluster_id"), col("cid")).as("clusterId"),
@@ -377,7 +371,8 @@ object Canonicalize {
       .as[CanonicalEntity]
   }
 
-  def entityTable(spark: SparkSession, dict: Array[ChemDictEntry]): Dataset[CanonicalEntity] = {
+  def entityTable(spark: SparkSession, dict: Array[ChemDictEntry])(implicit scope: Scope)
+      : Dataset[CanonicalEntity] = {
     import spark.implicits._
     entityTable(spark.createDataset(dict.toIndexedSeq))
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
@@ -26,7 +27,7 @@ import scala.util.hashing.MurmurHash3
   * of the bench gram hashes (~12 bits/gram at 1% fpp) pre-filters the
   * corpus gram stream BEFORE any exchange, grams with large bench
   * fan-out take a BUDGET-CAPPED broadcast lane (≤ [[MaxHotGramRows]]
-  * rows, hottest first — the skew lane, see `overlapWithHandle`), and
+  * rows, hottest first — the skew lane, see `overlap`), and
   * the rest joins as a salted shuffled hash join — exchange bytes are
   * O(|matching grams|) longs (plus the fpp sliver), never O(corpus).
   * Bloom false positives are dropped by the inner join on the exact
@@ -123,6 +124,11 @@ object Decontaminate {
     * n_doc_grams, n_bench_grams, frac_doc, frac_bench). frac_bench
     * (share of the BENCH item's grams found in the doc) is the leakage
     * metric: 1.0 means the document contains the whole eval item.
+    *
+    * The useBroadcast=false path ships a Bloom sketch and a hot-gram
+    * set as broadcast variables; both register into `scope`, so they
+    * are destroyed deterministically instead of when the returned plan
+    * becomes driver-GC-unreachable (ContextCleaner).
     */
   def overlap(
       corpus: DataFrame,
@@ -132,33 +138,13 @@ object Decontaminate {
       textCol: String = "text",
       n: Int = DefaultN,
       useBroadcast: Boolean = true
-  ): DataFrame =
-    overlapWithHandle(corpus, bench, idCol, benchIdCol, textCol, n,
-      useBroadcast)._1
-
-  /** [[overlap]] plus a release handle for the Bloom-sketch broadcast
-    * the useBroadcast=false path ships (no-op otherwise). Without the
-    * handle the sketch is reclaimed only when the returned plan becomes
-    * driver-GC-unreachable (ContextCleaner) — nondeterministic in a
-    * long-lived session running repeated sweeps; call the handle after
-    * the result's last action for deterministic release (same pattern
-    * as Linking.linkTriplesFusedWithHandle).
-    */
-  def overlapWithHandle(
-      corpus: DataFrame,
-      bench: DataFrame,
-      idCol: String = "doc_id",
-      benchIdCol: String = "bench_id",
-      textCol: String = "text",
-      n: Int = DefaultN,
-      useBroadcast: Boolean = true
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     val cg = gramRows(corpus, idCol, textCol, n)
       .toDF("doc_id", "gh", "n_doc_grams")
     val bg = gramRows(bench, benchIdCol, textCol, n)
       .toDF("bench_id", "gh", "n_bench_grams")
-    val (joined, release) =
-      if (useBroadcast) (cg.join(broadcast(bg), Seq("gh")), () => ())
+    val joined =
+      if (useBroadcast) cg.join(broadcast(bg), Seq("gh"))
       else {
         // dup-heavy/huge-bench path: Bloom-prefilter the corpus gram
         // stream before any exchange, then shuffled hash join — only
@@ -167,31 +153,29 @@ object Decontaminate {
         val spark = corpus.sparkSession
         import spark.implicits._
         // bg feeds THREE eager driver actions (count + bloom build +
-        // hot-gram probe) — persist across exactly those and release
-        // in-call; the one bench-side flatMap recompute inside the
-        // lazy join is cheap (bench << corpus) and beats leaking a
-        // cached DataFrame (same trade as
-        // Dedup.fetchCandidatePayload's candIds)
-        bg.persist()
-        val (bf, hotGrams) =
-          try {
-            val nGrams = math.max(bg.count(), 1024L)
-            val filt = bg.stat.bloomFilter("gh", nGrams, 0.01)
-            // hottest-first, budget-capped hot gram set (row budget ÷
-            // fanout floor bounds the gram count the limit can admit)
-            val hot = bg.groupBy(col("gh")).agg(count(lit(1)).as("nb"))
-              .filter(col("nb") >= HotGramFanout)
-              .orderBy(col("nb").desc, col("gh"))
-              .limit((MaxHotGramRows / HotGramFanout).toInt)
-              .select("gh", "nb").as[(Long, Long)].collect()
-            // enforce the ROW cap exactly: take hottest grams while
-            // their bench-row sum fits the broadcast budget
-            var budget = MaxHotGramRows
-            (filt, hot.takeWhile { case (_, nb) =>
-              val ok = nb <= budget; if (ok) budget -= nb; ok
-            }.map(_._1).toSet)
-          } finally bg.unpersist()
-        val bfB = spark.sparkContext.broadcast(bf)
+        // hot-gram probe) — persist across exactly those in a nested
+        // scope; the one bench-side flatMap recompute inside the lazy
+        // join is cheap (bench << corpus) and beats holding a cached
+        // DataFrame until the caller's scope closes
+        val (bf, hotGrams) = Scope(spark) { local =>
+          local.persist(bg)
+          val nGrams = math.max(bg.count(), 1024L)
+          val filt = bg.stat.bloomFilter("gh", nGrams, 0.01)
+          // hottest-first, budget-capped hot gram set (row budget ÷
+          // fanout floor bounds the gram count the limit can admit)
+          val hot = bg.groupBy(col("gh")).agg(count(lit(1)).as("nb"))
+            .filter(col("nb") >= HotGramFanout)
+            .orderBy(col("nb").desc, col("gh"))
+            .limit((MaxHotGramRows / HotGramFanout).toInt)
+            .select("gh", "nb").as[(Long, Long)].collect()
+          // enforce the ROW cap exactly: take hottest grams while
+          // their bench-row sum fits the broadcast budget
+          var budget = MaxHotGramRows
+          (filt, hot.takeWhile { case (_, nb) =>
+            val ok = nb <= budget; if (ok) budget -= nb; ok
+          }.map(_._1).toSet)
+        }
+        val bfB = scope.broadcast(bf)
         val mightContain = udf((gh: Long) => bfB.value.mightContain(gh))
         // HYBRID hot/cold join (guide §2.5: "broadcast-join just the
         // hot keys and shuffle-join the rest"): a gram shared by many
@@ -211,7 +195,7 @@ object Decontaminate {
         // in EXACTLY one lane (the lanes partition the gram space) and
         // joins exactly once, so the unioned rows are identical to the
         // broadcast path — spec-asserted.
-        val hotB = spark.sparkContext.broadcast(hotGrams)
+        val hotB = scope.broadcast(hotGrams)
         val isHot = udf((gh: Long) => hotB.value.contains(gh))
         val cgF = cg.filter(mightContain(col("gh")))
         val hotJoined = cgF.filter(isHot(col("gh")))
@@ -223,10 +207,9 @@ object Decontaminate {
             explode(lit((0 until k).toArray))).hint("shuffle_hash"),
             Seq("gh", "salt"))
           .drop("salt")
-        (hotJoined.unionByName(coldJoined),
-          () => { bfB.destroy(); hotB.destroy() })
+        hotJoined.unionByName(coldJoined)
       }
-    (finishOverlap(joined), release)
+    finishOverlap(joined)
   }
 
   private def finishOverlap(joined: DataFrame): DataFrame =
@@ -257,7 +240,7 @@ object Decontaminate {
       n: Int = DefaultN,
       minFracBench: Double = 0.5,
       useBroadcast: Boolean = true
-  ): DataFrame =
+  )(implicit scope: Scope): DataFrame =
     overlap(corpus, bench, idCol, benchIdCol, textCol, n, useBroadcast)
       .filter(col("frac_bench") >= minFracBench)
       .groupBy("doc_id")
@@ -276,7 +259,7 @@ object Decontaminate {
       n: Int = DefaultN,
       minFracBench: Double = 0.5,
       useBroadcast: Boolean = true
-  ): DataFrame = {
+  )(implicit scope: Scope): DataFrame = {
     val bad = flagged(corpus, bench, idCol, benchIdCol, textCol, n,
       minFracBench, useBroadcast).select(col("doc_id").as(idCol))
     corpus.join(bad, Seq(idCol), "left_anti")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Scope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
@@ -144,43 +145,7 @@ object Dedup {
       threshold: Double = 0.7,
       maxBucket: Int = 128,
       useBroadcast: Boolean = true
-  ): DataFrame =
-    minhashPairsImpl(docs, idCol, textCol, k, bands, threshold, maxBucket,
-      useBroadcast, persistCand = false)._1
-
-  /** Like `minhashPairs` but also returns a release handle the caller
-    * should invoke after its action completes: on the useBroadcast=false
-    * path the candidate-pair subplan (full-corpus banding + self-join)
-    * is persisted — it feeds the Bloom build (a driver action) AND the
-    * returned lazy pair joins, and without the cache the most expensive
-    * stage of the job would run three times at the dup-heavy production
-    * scale this path exists for. Handle is a no-op on the broadcast
-    * path (nothing persisted there).
-    */
-  def minhashPairsWithHandle(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      k: Int = 16,
-      bands: Int = 8,
-      threshold: Double = 0.7,
-      maxBucket: Int = 128,
-      useBroadcast: Boolean = true
-  ): (DataFrame, () => Unit) =
-    minhashPairsImpl(docs, idCol, textCol, k, bands, threshold, maxBucket,
-      useBroadcast, persistCand = true)
-
-  private def minhashPairsImpl(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      bands: Int,
-      threshold: Double,
-      maxBucket: Int,
-      useBroadcast: Boolean,
-      persistCand: Boolean
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     val compactDocs = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("txt"))
     // (band, band_hash, id) — the ONLY rows that ever shuffle
     val banded = minhashBands(docs, idCol, textCol, k, bands)
@@ -193,41 +158,11 @@ object Dedup {
         Seq("band", "bh"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-
     // verification: fetch candidate texts by id (see fetchCandidatePayload
     // for the broadcast vs dup-heavy-corpus exchange discipline)
-    val (candU, nCand, releaseCand) = candMaterializedLeaf(cand, persistCand)
-    val (candDocs, side, releaseFetch) =
-      fetchCandidatePayload(candU, compactDocs, useBroadcast, nCand)
-    (verifyCandidatePairs(candU, candDocs, side, threshold, 3),
-      () => { releaseFetch(); releaseCand() })
+    val (candU, candDocs, side) = fetchCandidatePayload(cand, compactDocs, useBroadcast)
+    verifyCandidatePairs(candU, candDocs, side, threshold, 3)
   }
-
-  /** Handle-path treatment of the candidate subplan — the most
-    * expensive subtree of every pair job, and one that reappears ~4
-    * times in the final plan (spine + candIds broadcast + both fetch
-    * sides). persistCand callers get it persisted, MATERIALIZED (one
-    * eager job — the racing-copies lesson from IncrDedup.survivors:
-    * a lazy cache is raced by the parallel subtrees of the first
-    * action) and LINEAGE-CUT, so (a) the heavy banding executes once
-    * by construction instead of relying on exchange reuse, and (b)
-    * the downstream pair plan embeds a flat leaf 4 times instead of
-    * the whole candidate tree — driver-side analysis of the pair plan
-    * measured ~1.6s per action at sf0.1 with the embedded tree
-    * (ProfileRelease bisect), pure re-analysis cost the leaf removes.
-    * One-shot callers (persistCand = false) keep the plain lazy plan:
-    * a leaf without a persisted cache would LOSE exchange reuse and
-    * recompute the banding per reference.
-    */
-  private[operators] def candMaterializedLeaf(
-      cand: DataFrame, persistCand: Boolean)
-      : (DataFrame, Option[Long], () => Unit) =
-    if (!persistCand) (cand, None, () => ())
-    else {
-      cand.persist()
-      val (leaf, n) = Canonicalize.materializedLeaf(cand)
-      (leaf, Some(n), () => { cand.unpersist(); () })
-    }
 
   /** Exact-Jaccard verification tail shared by the minhash / jaccard /
     * incremental candidate generators: join the fetched candidate
@@ -347,11 +282,11 @@ object Dedup {
       }.toDF("band", "bh", "id")
   }
 
-  /** Candidate-payload fetch for pair verification (shared by
-    * `minhashPairs` and `embeddingPairs`). `cand` is (id_a, id_b);
-    * `payload` is (id, <payload cols>). Returns the payload rows
-    * restricted to candidate ids plus the join-side decorator for the
-    * two fetch joins.
+  /** Candidate-payload fetch for pair verification (shared by every
+    * pair generator). `cand` is (id_a, id_b); `payload` is (id,
+    * <payload cols>). Returns the materialized candidate leaf, the
+    * payload rows restricted to candidate ids, and the join-side
+    * decorator for the two fetch joins.
     *
     * useBroadcast=true (default, near-dups rare): candidate ids
     * broadcast into a semi-join, matching payloads broadcast back —
@@ -368,53 +303,36 @@ object Dedup {
     * are identical to the broadcast path (asserted in DedupSpec; plan
     * asserted in PlanSpec under autoBroadcastJoinThreshold=-1).
     *
-    * Handle-path callers pass a MATERIALIZED LEAF as `cand` (see
-    * `candMaterializedLeaf`), so the Bloom-build driver actions and the
-    * returned lazy pair joins all read one persisted candidate cache
-    * through a flat plan; one-shot callers pass the lazy plan and rely
-    * on exchange reuse.
+    * The candidate subplan — the most expensive subtree of every pair
+    * job, and one that reappears ~4 times in the final plan (spine +
+    * candIds broadcast + both fetch sides) — is materialized as a
+    * scope leaf first and returned in place of `cand`: one eager job
+    * (a lazy cache is raced by the parallel subtrees of the first
+    * action), so the banding executes once by construction, and the
+    * pair plan embeds a flat leaf instead of the whole candidate tree.
     */
   private[operators] def fetchCandidatePayload(
       cand: DataFrame,
       payload: DataFrame,
-      useBroadcast: Boolean,
-      knownCandCount: Option[Long] = None
-  ): (DataFrame, DataFrame => DataFrame, () => Unit) = {
+      useBroadcast: Boolean
+  )(implicit scope: Scope): (DataFrame, DataFrame, DataFrame => DataFrame) = {
+    val (candU, nPairs) = scope.leaf(cand)
     if (useBroadcast) {
-      val candIds = cand
+      val candIds = candU
         .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-      (payload.join(broadcast(candIds), Seq("id"), "left_semi"),
-        df => broadcast(df), () => ())
+      (candU, payload.join(broadcast(candIds), Seq("id"), "left_semi"),
+        df => broadcast(df))
     } else {
-      val spark = payload.sparkSession
-      val bf = knownCandCount match {
-        case Some(nPairs) =>
-          // handle-path callers know the pair count from the candidate
-          // materialization: distinct ids ≤ 2·pairs, so sizing the
-          // Bloom at that bound skips BOTH the distinct aggregation
-          // and its count job (an O(cand) exchange + a driver round
-          // trip). Overestimating expectedNumItems only LOWERS the
-          // fpp (more bits, ≤2x — bloom inserts are idempotent, no
-          // distinct needed); false positives still die in the exact
-          // id joins, so rows are unchanged.
-          cand.select(explode(array(col("id_a"), col("id_b"))).as("id"))
-            .stat.bloomFilter("id", math.max(2L * nPairs, 1024L), 0.01)
-        case None =>
-          // one-shot path: candIds feeds TWO eager driver actions
-          // (count + bloom build) — persist across exactly those and
-          // release in-call, so the distinct-aggregation runs once
-          val candIds = cand
-            .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-          candIds.persist()
-          try {
-            val n = math.max(candIds.count(), 1024L)
-            candIds.stat.bloomFilter("id", n, 0.01)
-          } finally candIds.unpersist()
-      }
-      val bfB = spark.sparkContext.broadcast(bf)
+      // distinct ids ≤ 2·pairs, so sizing the Bloom at that bound skips
+      // both a distinct aggregation and its count job. Overestimating
+      // expectedNumItems only LOWERS the fpp (more bits, ≤2x — bloom
+      // inserts are idempotent, no distinct needed); false positives
+      // still die in the exact id joins, so rows are unchanged.
+      val bf = candU.select(explode(array(col("id_a"), col("id_b"))).as("id"))
+        .stat.bloomFilter("id", math.max(2L * nPairs, 1024L), 0.01)
+      val bfB = scope.broadcast(bf)
       val mightContain = udf((id: Long) => bfB.value.mightContain(id))
-      (payload.filter(mightContain(col("id"))), df => df.hint("shuffle_hash"),
-        () => ())
+      (candU, payload.filter(mightContain(col("id"))), df => df.hint("shuffle_hash"))
     }
   }
 
@@ -431,25 +349,14 @@ object Dedup {
     */
   def minhashClusters(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.7,
-      useBroadcast: Boolean = true): DataFrame = {
-    val (rawPairs, release) = minhashPairsWithHandle(docs, idCol, textCol,
-      threshold = threshold, useBroadcast = useBroadcast)
-    val pairs = rawPairs.select(col("id_a").as("cid_a"), col("id_b").as("cid_b"))
-      .persist()
-    // materialize + lineage-cut in ONE analysis pass (see
-    // Canonicalize.materializedLeaf — the old count-then-planLeaf
-    // sequence analyzed the deep pair chain twice)
-    val (pl, nPairs) = Canonicalize.materializedLeaf(pairs)
-    val touched = pl.select(col("cid_a").as("cid"))
-      .union(pl.select(col("cid_b").as("cid"))).distinct()
-    // CC materializes the edge list eagerly (persist + checkpointed
-    // label iterations), so the candidate cache can release right after;
-    // the count + endpoint-node hints collapse the driver branch to one
-    // collect (Canonicalize.connectedComponents doc)
-    val labels =
-      try Canonicalize.connectedComponents(touched, pl,
-        knownEdgeCount = Some(nPairs), nodesArePairEndpoints = true)
-      finally { release(); pairs.unpersist(); () }
+      useBroadcast: Boolean = true)(implicit scope: Scope): DataFrame = {
+    // the candidate cache lives only until CC has built the labels
+    val labels = Scope(docs.sparkSession) { pairScope =>
+      val pairs = minhashPairs(docs, idCol, textCol, threshold = threshold,
+        useBroadcast = useBroadcast)(pairScope)
+      Canonicalize.pairComponents(
+        pairs.select(col("id_a").as("cid_a"), col("id_b").as("cid_b")))
+    }
     docs.select(col(idCol).cast("long").as(idCol))
       .join(labels.select(col("cid").as(idCol), col("cluster_id")),
         Seq(idCol), "left")
@@ -555,35 +462,7 @@ object Dedup {
       threshold: Double = 0.7,
       n: Int = 3,
       useBroadcast: Boolean = true
-  ): DataFrame =
-    jaccardPairsImpl(docs, idCol, textCol, threshold, n, useBroadcast,
-      persistCand = false)._1
-
-  /** `jaccardPairs` + release handle — same contract as
-    * `minhashPairsWithHandle` (the handle matters on the
-    * useBroadcast=false path, where the candidate subplan is persisted
-    * across the Bloom build and the pair joins).
-    */
-  def jaccardPairsWithHandle(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      threshold: Double = 0.7,
-      n: Int = 3,
-      useBroadcast: Boolean = true
-  ): (DataFrame, () => Unit) =
-    jaccardPairsImpl(docs, idCol, textCol, threshold, n, useBroadcast,
-      persistCand = true)
-
-  private def jaccardPairsImpl(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double,
-      n: Int,
-      useBroadcast: Boolean,
-      persistCand: Boolean
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val compactDocs = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("txt"))
     val sh = shingleRows(docs, idCol, textCol, n)
@@ -624,11 +503,8 @@ object Dedup {
       .filter(least(col("sz_a") - col("rk_a"), col("sz_b") - col("rk_b")) + 1 >=
         ceil(lit(threshold / (1.0 + threshold)) * (col("sz_a") + col("sz_b")) - Eps))
       .select("id_a", "id_b").distinct()
-    val (candU, nCand, releaseCand) = candMaterializedLeaf(cand, persistCand)
-    val (candDocs, side, releaseFetch) =
-      fetchCandidatePayload(candU, compactDocs, useBroadcast, nCand)
-    (verifyCandidatePairs(candU, candDocs, side, threshold, n),
-      () => { releaseFetch(); releaseCand() })
+    val (candU, candDocs, side) = fetchCandidatePayload(cand, compactDocs, useBroadcast)
+    verifyCandidatePairs(candU, candDocs, side, threshold, n)
   }
 
   // ---------- simhash ----------
@@ -752,6 +628,13 @@ object Dedup {
     * order, so the dumped cosine columns (ann_*_topk,
     * dedup_embedding_pairs oracles) hash-match exactly as before.
     * Array (not Seq) parameters decode via toFloatArray — no boxing.
+    *
+    * One divergence: a ZERO-NORM vector. Under ANSI mode `cosineCol`
+    * raises DIVIDE_BY_ZERO on the zero divisor, while this UDF
+    * returns NaN (plain IEEE 0/0 or x/0 in the JVM), and NaN fails
+    * every `>= threshold` filter — so a zero embedding silently drops
+    * out of `embeddingPairs` / the ANN scorers instead of failing the
+    * job. Callers that must reject zero vectors check norms upstream.
     */
   def cosineFloatUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (a: Array[Float], b: Array[Float]) =>
@@ -832,37 +715,7 @@ object Dedup {
       bits: Int = 8,
       multiProbe: Boolean = true,
       useBroadcast: Boolean = true
-  ): DataFrame =
-    embeddingPairsImpl(emb, idCol, vecCol, threshold, bits, multiProbe,
-      useBroadcast, persistCand = false)._1
-
-  /** `embeddingPairs` + release handle — same contract as
-    * `minhashPairsWithHandle` (the handle matters on the
-    * useBroadcast=false path, where the candidate subplan is persisted
-    * across the Bloom build and the pair joins).
-    */
-  def embeddingPairsWithHandle(
-      emb: DataFrame,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      threshold: Double = 0.95,
-      bits: Int = 8,
-      multiProbe: Boolean = true,
-      useBroadcast: Boolean = true
-  ): (DataFrame, () => Unit) =
-    embeddingPairsImpl(emb, idCol, vecCol, threshold, bits, multiProbe,
-      useBroadcast, persistCand = true)
-
-  private def embeddingPairsImpl(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      bits: Int,
-      multiProbe: Boolean,
-      useBroadcast: Boolean,
-      persistCand: Boolean
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     val withSig = embeddingBuckets(emb, idCol, vecCol, bits)
     val banded = withSig.select("bucket", "id")
     val probeSide =
@@ -874,14 +727,12 @@ object Dedup {
       .join(banded.select(col("bucket"), col("id").as("id_b")), Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    val (candU, nCand, releaseCand) = candMaterializedLeaf(cand, persistCand)
-    val (candVecs, side, releaseFetch) =
-      fetchCandidatePayload(candU, withSig.select("id", "v"), useBroadcast, nCand)
-    val out = candU
+    val (candU, candVecs, side) =
+      fetchCandidatePayload(cand, withSig.select("id", "v"), useBroadcast)
+    candU
       .join(side(candVecs.select(col("id").as("id_a"), col("v").as("v_a"))), Seq("id_a"))
       .join(side(candVecs.select(col("id").as("id_b"), col("v").as("v_b"))), Seq("id_b"))
       .filter(cosineFloatUdf(col("v_a"), col("v_b")) >= threshold)
       .select("id_a", "id_b")
-    (out, () => { releaseFetch(); releaseCand() })
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -100,36 +101,21 @@ object Graph {
     * PROP/FORMULA-headed rows carry `propType`; rows of the same tuple
     * pair up. Only (long, long, long) rows survive past the tuple join.
     *
-    * One-shot convenience over `propertyEdgesWithHandle`: the compact
-    * projection persist is released only at session stop (the accepted
-    * Verify trade; loops use the handle).
+    * The linked table feeds THREE consumers (prop-node ranks, the chem
+    * side, the prop side) and the caller typically feeds the result to
+    * `pageRank`, which scans the arc list again for out-weights — so
+    * the compact (tkey, cid, propType, headLabel) projection, never
+    * full linked rows, becomes a scope leaf: materialized eagerly (a
+    * lazy persist races the consumers' scans into concurrent full
+    * upstream recomputes before any block is cached) and lineage-cut
+    * (`linked` embeds the whole annotate+linking chain, and each
+    * consumer's action would re-analyze it on the driver).
     */
-  def propertyEdges(linked: DataFrame): DataFrame =
-    propertyEdgesWithHandle(linked)._1
-
-  /** `propertyEdges` + unpersist handle. The linked table feeds THREE
-    * consumers (prop-node ranks, the chem side, the prop side) and the
-    * caller typically feeds the result to `pageRank`, which scans the
-    * arc list again for out-weights — without a persist the upstream
-    * linking join would re-execute once per consumer (the
-    * fetchCandidatePayload lesson from the dedup review). Only the
-    * compact (tkey, cid, propType, headLabel) projection persists,
-    * never full linked rows.
-    */
-  def propertyEdgesWithHandle(linked: DataFrame): (DataFrame, () => Unit) = {
-    val compactPlan = linked
+  def propertyEdges(linked: DataFrame)(implicit scope: Scope): DataFrame = {
+    val (compact, _) = scope.leaf(linked
       .filter((col("headLabel") === "CHEM" && col("cid").isNotNull) ||
         col("propType") =!= "")
-      .select(tupleKey.as("tkey"), col("cid"), col("propType"), col("headLabel"))
-      .persist()
-    // materialize EAGERLY (downstream consumers — and pageRank's arc
-    // self-join — scan `compact` from multiple subtrees of one job; a
-    // lazy persist races those scans into concurrent full upstream
-    // recomputes before any block is cached) and LINEAGE-CUT in the
-    // same pass: `linked` embeds the whole annotate+linking chain, and
-    // each consumer's action would re-analyze it on the driver
-    // (Canonicalize.materializedLeaf)
-    val (compact, _) = Canonicalize.materializedLeaf(compactPlan)
+      .select(tupleKey.as("tkey"), col("cid"), col("propType"), col("headLabel")))
     val pnodes = propNodes(compact.select(col("propType")))
     // ONE wide exchange: group the tuple's members by tkey and emit the
     // chem×prop pairs in-row (collect_set = the per-tuple DISTINCT; the
@@ -147,10 +133,9 @@ object Graph {
       .agg(count(lit(1)).as("support"))
       .join(broadcast(pnodes), Seq("prop_type"))
       .select(col("cid"), col("node"), col("support"))
-    val edges = pairs
+    pairs
       .select(col("cid").as("src"), col("node").as("dst"), col("support"))
       .union(pairs.select(col("node").as("src"), col("cid").as("dst"), col("support")))
-    (edges, () => { compactPlan.unpersist(); () })
   }
 
   /** Per-node degree stats over the arc list: arc count and total
@@ -184,32 +169,32 @@ object Graph {
     * property (num = 0) are not candidates at all.
     */
   def relatedChems(edges: DataFrame,
-      nQueries: Int = DefaultRelQueries, k: Int = DefaultRelK): DataFrame = {
+      nQueries: Int = DefaultRelQueries, k: Int = DefaultRelK)
+      (implicit scope: Scope): DataFrame =
     // `chems` feeds four consumers (tot, qarcs, num, and tot's three
-    // join sites) — persist + a LogicalRDD leaf, exactly the pageRank
-    // discipline above: without the cut the final plan embeds ~5 copies
-    // of the caller's whole upstream arc-build tree (Catalyst
-    // re-analyzes each per action, and the arc aggregation re-executes
-    // where exchange reuse does not apply)
-    val chemsPlan = edges.filter(col("src") > 0)
-      .select(col("src").as("cid"), col("dst").as("node"), col("support"))
-      .persist()
-    val chems = edges.sparkSession.createDataFrame(chemsPlan.rdd, chemsPlan.schema)
-    val totPlan = chems.groupBy("cid").agg(sum("support").as("tot")).persist()
-    try {
+    // join sites) — a scope leaf, the pageRank discipline: without the
+    // cut the final plan embeds ~5 copies of the caller's whole
+    // upstream arc-build tree (Catalyst re-analyzes each per action,
+    // and the arc aggregation re-executes where exchange reuse does
+    // not apply). Both caches live in a nested scope: the ≤
+    // nQueries·k result rows are materialized into `scope` before they
+    // release (also when the MaxExactTot require throws).
+    Scope(edges.sparkSession) { local =>
+      val (chems, _) = local.leaf(edges.filter(col("src") > 0)
+        .select(col("src").as("cid"), col("dst").as("node"), col("support")))
+      val tot = local.persist(chems.groupBy("cid").agg(sum("support").as("tot")))
       // bit-exact-replay guard (the pageRank require discipline): the sim
       // ordering divides two exact longs only while den = tot_q + tot_c −
       // num ≤ 2·maxTot stays ≤ 2^53 — beyond that the double cast rounds
       // and near-tie ranks become engine-dependent. Fail loudly instead.
-      // This action also warms BOTH caches from one subtree before the
-      // multi-consumer final job — no separate eager count needed.
-      val maxTotRow = totPlan.agg(max("tot")).head()
+      // This action also warms the tot cache before the multi-consumer
+      // final job.
+      val maxTotRow = tot.agg(max("tot")).head()
       val maxTot = if (maxTotRow.isNullAt(0)) 0L else maxTotRow.getLong(0)
       require(maxTot <= MaxExactTot,
         s"relatedChems exact-arithmetic bound exceeded: max per-chem total " +
           s"support $maxTot > 2^52 — num/den would round in the IEEE " +
           s"division and the rank ordering stops being replayable")
-      val tot = edges.sparkSession.createDataFrame(totPlan.rdd, totPlan.schema)
       val qids = tot.select("cid").orderBy("cid").limit(nQueries)
         .withColumnRenamed("cid", "qcid")
       val qarcs = chems.join(qids, col("cid") === col("qcid"))
@@ -227,16 +212,11 @@ object Graph {
           col("num"), (col("tot_q") + col("tot") - col("num")).as("den"))
       val w = Window.partitionBy("query_cid")
         .orderBy((col("num").cast("double") / col("den")).desc, col("cand_cid"))
-      scored.withColumn("rank", row_number().over(w))
+      scope.leaf(scored.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= k)
-        .select(col("query_cid"), col("rank"), col("cand_cid"), col("num"), col("den"))
-        .localCheckpoint() // ≤ nQueries·k rows; lets the persists release now
-    } finally {
-      // unpersist in finally: the MaxExactTot require throwing must not
-      // leave the full arc projection pinned in executor storage
-      chemsPlan.unpersist(); totPlan.unpersist(); ()
+        .select(col("query_cid"), col("rank"), col("cand_cid"), col("num"),
+          col("den")))._1
     }
-  }
 
   /** Support-weighted PageRank by fixed-point power iteration.
     *
@@ -291,65 +271,61 @@ object Graph {
   val DriverArcThreshold: Long = 1000000L
 
   def pageRank(edges: DataFrame, iters: Int = DefaultIters,
-      driverArcThreshold: Long = DriverArcThreshold): DataFrame = {
+      driverArcThreshold: Long = DriverArcThreshold)(implicit scope: Scope): DataFrame = {
     val arcsPlan = edges
       .join(edges.groupBy(col("src")).agg(sum("support").as("wout")), Seq("src"))
       .select(col("src"), col("dst"), col("support"), col("wout"))
-      .persist()
     // fused size probe + collect: limit(threshold + 1) returns EVERY
     // arc when the graph is at or under the threshold (so the collected
-    // array feeds the driver loop directly — the separate count() job
-    // the old flow paid is gone), and exactly threshold + 1 rows when
-    // it is over (fall through to the distributed loop; which rows came
-    // back is irrelevant, they are discarded). executeTake's incremental
-    // partition scan bounds the probe's cost on the over-threshold side.
+    // array feeds the driver loop directly — no separate count() job),
+    // and exactly threshold + 1 rows when it is over (fall through to
+    // the distributed loop; which rows came back is irrelevant, they
+    // are discarded). executeTake's incremental partition scan bounds
+    // the probe's cost on the over-threshold side.
     val limit = math.min(driverArcThreshold + 1, Int.MaxValue.toLong).toInt
     val probe = arcsPlan
       .select(col("src").cast("long"), col("dst").cast("long"),
         col("support").cast("long"), col("wout").cast("long"))
       .limit(limit).collect()
-    if (probe.length <= driverArcThreshold) {
-      try return pageRankDriver(
+    if (probe.length <= driverArcThreshold)
+      return pageRankDriver(
         probe.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))),
         edges.sparkSession, iters)
-      finally arcsPlan.unpersist()
-    }
     // Cut the LOGICAL lineage at the iteration entry: every chained
     // iteration plan embeds `arcs`, and `arcs` embeds the caller's
     // whole upstream tree — without this cut Catalyst re-analyzes that
     // tree once per iteration per action (measured: 3.8s of pure
     // driver-side planning for 5 iterations over a 153-node graph with
     // the full linking pipeline upstream; 0.9s with a flat leaf). The
-    // LogicalRDD leaf scans the persisted blocks, so executors do the
-    // same work either way.
-    val arcs = edges.sparkSession.createDataFrame(arcsPlan.rdd, arcsPlan.schema)
-    val nodes = arcs.select(col("src").as("node")).distinct()
-    val n = nodes.count()
-    require(n > 0, "pageRank on an empty graph")
-    // beyond PrScale nodes, init = PrScale/n floors to 0 and every rank
-    // degenerates to 0 — fail loudly like the CC convergence guard
-    // (a >2^32-node graph needs a wider fixed-point scale)
-    require(n <= PrScale,
-      s"pageRank fixed-point scale 2^32 cannot represent 1/N for N=$n nodes; raise PrScale")
-    val init = PrScale / n
-    val teleport = (100L - DampNum) * init / 100L
-    var pr = nodes.select(col("node"), lit(init).as("prq"))
-    var i = 0
-    while (i < iters) {
-      pr = arcs
-        .join(pr, arcs("src") === pr("node"))
-        // `div` is Spark's INTEGRAL division — a float `/` here would
-        // round above 2^53 and diverge from the oracle's integer `//`
-        .selectExpr("dst", s"($DampNum * prq * support) div (100 * wout) as flow")
-        .groupBy("dst").agg((lit(teleport) + sum(col("flow"))).as("prq"))
-        .select(col("dst").as("node"), col("prq"))
-      i += 1
-      if (i % CheckpointEvery == 0 && i < iters) pr = pr.localCheckpoint()
+    // leaf scans the persisted blocks, so executors do the same work
+    // either way; it releases once the result is materialized.
+    Scope(edges.sparkSession) { local =>
+      val (arcs, _) = local.leaf(arcsPlan)
+      val nodes = arcs.select(col("src").as("node")).distinct()
+      val n = nodes.count()
+      require(n > 0, "pageRank on an empty graph")
+      // beyond PrScale nodes, init = PrScale/n floors to 0 and every rank
+      // degenerates to 0 — fail loudly like the CC convergence guard
+      // (a >2^32-node graph needs a wider fixed-point scale)
+      require(n <= PrScale,
+        s"pageRank fixed-point scale 2^32 cannot represent 1/N for N=$n nodes; raise PrScale")
+      val init = PrScale / n
+      val teleport = (100L - DampNum) * init / 100L
+      var pr = nodes.select(col("node"), lit(init).as("prq"))
+      var i = 0
+      while (i < iters) {
+        pr = arcs
+          .join(pr, arcs("src") === pr("node"))
+          // `div` is Spark's INTEGRAL division — a float `/` here would
+          // round above 2^53 and diverge from the oracle's integer `//`
+          .selectExpr("dst", s"($DampNum * prq * support) div (100 * wout) as flow")
+          .groupBy("dst").agg((lit(teleport) + sum(col("flow"))).as("prq"))
+          .select(col("dst").as("node"), col("prq"))
+        i += 1
+        if (i % CheckpointEvery == 0 && i < iters) pr = pr.localCheckpoint()
+      }
+      scope.leaf(pr.withColumn("pr", col("prq").cast("double") / lit(PrScale.toDouble)))._1
     }
-    val out = pr.withColumn("pr", col("prq").cast("double") / lit(PrScale.toDouble))
-      .localCheckpoint()
-    arcsPlan.unpersist()
-    out
   }
 
   /** Lineage-cut cadence for the power iteration: plans of ~2 nodes per

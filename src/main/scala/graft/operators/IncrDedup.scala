@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -108,56 +109,9 @@ object IncrDedup {
       threshold: Double = 0.7,
       maxBucket: Int = 128,
       useBroadcast: Boolean = true
-  ): DataFrame =
-    incrementalPairsImpl(indexBands, indexCounts, corpusDocs, delta, idCol,
-      textCol, k, bands, threshold, maxBucket, useBroadcast,
-      persistCand = false)._1
-
-  /** `incrementalPairs` + release handle — same contract as
-    * `Dedup.minhashPairsWithHandle` (the handle matters on the
-    * useBroadcast=false path, where the candidate subplan is persisted
-    * across the Bloom build and the pair joins).
-    */
-  def incrementalPairsWithHandle(
-      indexBands: DataFrame,
-      indexCounts: DataFrame,
-      corpusDocs: DataFrame,
-      delta: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      k: Int = 16,
-      bands: Int = 8,
-      threshold: Double = 0.7,
-      maxBucket: Int = 128,
-      useBroadcast: Boolean = true
-  ): (DataFrame, () => Unit) =
-    incrementalPairsImpl(indexBands, indexCounts, corpusDocs, delta, idCol,
-      textCol, k, bands, threshold, maxBucket, useBroadcast,
-      persistCand = true)
-
-  private def incrementalPairsImpl(
-      indexBands: DataFrame,
-      indexCounts: DataFrame,
-      corpusDocs: DataFrame,
-      delta: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      bands: Int,
-      threshold: Double,
-      maxBucket: Int,
-      useBroadcast: Boolean,
-      persistCand: Boolean
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     val deltaBands = Dedup.minhashBands(delta, idCol, textCol, k, bands)
     val cand = deltaCandidates(indexBands, indexCounts, deltaBands, maxBucket)
-    // the candidate subplan reappears in the spine AND inside every
-    // broadcast branch of the fetch (candIds + both candDoc sides —
-    // measured ~4 evaluations, 269-exchange executed plan at sf0.1
-    // without the cache), so *WithHandle callers get it persisted,
-    // materialized and lineage-cut (Dedup.candMaterializedLeaf — the
-    // leaf is what keeps downstream per-action plan ANALYSIS flat)
-    val (candU, nCand, releaseCand) = Dedup.candMaterializedLeaf(cand, persistCand)
     // verification payload: seen-corpus store ∪ delta, fetched BY ID —
     // O(|candidates|) rows survive the fetch, but the filter pass SCANS
     // the corpus store's (id, text) columns (see the object doc; use
@@ -167,10 +121,13 @@ object IncrDedup {
       .select(col(idCol).cast("long").as("id"), col(textCol).as("txt"))
       .unionByName(delta
         .select(col(idCol).cast("long").as("id"), col(textCol).as("txt")))
-    val (candDocs, side, releaseFetch) =
-      Dedup.fetchCandidatePayload(candU, payload, useBroadcast, nCand)
-    val out = Dedup.verifyCandidatePairs(candU, candDocs, side, threshold, 3)
-    (out, () => { releaseFetch(); releaseCand() })
+    // the candidate subplan reappears in the spine AND inside every
+    // broadcast branch of the fetch (measured ~4 evaluations,
+    // 269-exchange executed plan at sf0.1 without the cache): the fetch
+    // materializes it as a scope leaf first
+    val (candU, candDocs, side) =
+      Dedup.fetchCandidatePayload(cand, payload, useBroadcast)
+    Dedup.verifyCandidatePairs(candU, candDocs, side, threshold, 3)
   }
 
   /** Candidate pairs touching the delta: delta-vs-delta and
@@ -266,58 +223,17 @@ object IncrDedup {
       threshold: Double = 0.7,
       maxBucket: Int = 128,
       useBroadcast: Boolean = true
-  ): DataFrame =
-    incrementalPairsFromIndexImpl(indexBands, indexCounts, indexShingles,
-      delta, idCol, textCol, k, bands, threshold, maxBucket, useBroadcast,
-      persistCand = false)._1
-
-  /** `incrementalPairsFromIndex` + release handle (same contract as
-    * `incrementalPairsWithHandle`).
-    */
-  def incrementalPairsFromIndexWithHandle(
-      indexBands: DataFrame,
-      indexCounts: DataFrame,
-      indexShingles: DataFrame,
-      delta: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      k: Int = 16,
-      bands: Int = 8,
-      threshold: Double = 0.7,
-      maxBucket: Int = 128,
-      useBroadcast: Boolean = true
-  ): (DataFrame, () => Unit) =
-    incrementalPairsFromIndexImpl(indexBands, indexCounts, indexShingles,
-      delta, idCol, textCol, k, bands, threshold, maxBucket, useBroadcast,
-      persistCand = true)
-
-  private def incrementalPairsFromIndexImpl(
-      indexBands: DataFrame,
-      indexCounts: DataFrame,
-      indexShingles: DataFrame,
-      delta: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      bands: Int,
-      threshold: Double,
-      maxBucket: Int,
-      useBroadcast: Boolean,
-      persistCand: Boolean
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     val deltaBands = Dedup.minhashBands(delta, idCol, textCol, k, bands)
     val cand = deltaCandidates(indexBands, indexCounts, deltaBands, maxBucket)
-    // persist + materialize + lineage-cut on the handle path
-    // (Dedup.candMaterializedLeaf — see incrementalPairsImpl)
-    val (candU, nCand, releaseCand) = Dedup.candMaterializedLeaf(cand, persistCand)
     // verification payload: the int-only sidecar ∪ the delta's freshly
     // shingled rows — corpus TEXT appears nowhere in this plan. The
     // verification n is pinned to 3 to mirror the text path's
     // ngramJaccardMemo default, keeping the two paths comparable.
     val payload = indexShingles
       .unionByName(shingleSidecar(delta, idCol, textCol, n = 3))
-    val (candDocs, side, releaseFetch) =
-      Dedup.fetchCandidatePayload(candU, payload, useBroadcast, nCand)
+    val (candU, candDocs, side) =
+      Dedup.fetchCandidatePayload(cand, payload, useBroadcast)
     // same join shape as Dedup.verifyCandidatePairs, over the hash-set
     // payload column with the sorted-merge Jaccard
     // primitive-array UDF params: no per-element boxing (see
@@ -325,14 +241,13 @@ object IncrDedup {
     val jac = udf((x: Array[Long], y: Array[Long]) => Dedup.hashSetJaccard(
       scala.collection.immutable.ArraySeq.unsafeWrapArray(x),
       scala.collection.immutable.ArraySeq.unsafeWrapArray(y)))
-    val out = candU
+    candU
       .join(side(candDocs.select(col("id").as("id_a"), col("shs").as("shs_a"))),
         Seq("id_a"))
       .join(side(candDocs.select(col("id").as("id_b"), col("shs").as("shs_b"))),
         Seq("id_b"))
       .filter(jac(col("shs_a"), col("shs_b")) >= threshold)
       .select("id_a", "id_b")
-    (out, () => { releaseFetch(); releaseCand() })
   }
 
   /** Kept delta ids under seen-corpus semantics: connected components
@@ -342,38 +257,18 @@ object IncrDedup {
     * partitioning (CC is label-propagation to the component min).
     */
   def survivors(delta: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
+      idCol: String = "doc_id")(implicit scope: Scope): DataFrame = {
     val deltaIds = delta.select(col(idCol).cast("long").as("id"))
+    // CC runs over the DUP GRAPH only (Canonicalize.pairComponents):
     // the pairs subplan (LSH + exact verify — the expensive stage) feeds
-    // BOTH the node set and the edge list, and connectedComponents
-    // consumes them eagerly from parallel subtree copies: persist AND
-    // materialize up front so the chain evaluates exactly once (racing
-    // copies in one job each paid the full chain before the cache
-    // filled — measured 3x), and release before returning (the returned
-    // frame references only the checkpointed CC labels, never `pairs`)
-    val p = pairs.persist()
-    // materialize + lineage-cut in ONE analysis pass: the pair chain's
-    // logical plan is deep (LSH + index joins + verify) and each
-    // analysis alone measured ~1.6s of driver time at sf0.1; the old
-    // count-then-planLeaf sequence paid it twice
-    val (pl, nPairs) = Canonicalize.materializedLeaf(p)
-    val labels = try {
-      // CC runs over the DUP GRAPH only (ids appearing in some pair) —
-      // delta docs untouched by any pair are trivially their own
-      // components, and excluding them keeps the iterated node set
-      // O(|dups|), not O(|delta|). The count + endpoint-node hints
-      // collapse the CC driver branch to one collect.
-      val pairIds = pl
-        .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-        .distinct()
-      val nodes = pairIds.select(col("id").as("cid"))
-      val edges = pl.select(col("id_a").as("cid_a"), col("id_b").as("cid_b"))
-      Canonicalize.connectedComponents(nodes, edges,
-        knownEdgeCount = Some(nPairs), nodesArePairEndpoints = true)
-    } finally p.unpersist()
+    // both the node set and the edge list, so it is materialized once
+    // and released before returning (the returned frame references only
+    // the materialized CC labels, never `pairs`)
+    val labels = Canonicalize.pairComponents(
+      pairs.select(col("id_a").as("cid_a"), col("id_b").as("cid_b")))
     // deltas with no pair at all are kept unconditionally; the CC node
-    // set IS the pair-id set, so the checkpointed labels (materialized,
-    // pairs-free lineage) serve as the anti-join side
+    // set IS the pair-id set, so the materialized labels serve as the
+    // anti-join side
     val untouched = deltaIds
       .join(labels.select(col("cid").as("id")), Seq("id"), "left_anti")
       .select(col("id").as(idCol))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.GraftFunctions
+import graft.plans.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -101,64 +102,36 @@ object Lines {
     * was boilerplate). Size-adaptive (see object doc): broadcast-set
     * rewrite when the blocklist fits, distributed anti-join otherwise.
     *
-    * The branch decision needs the blocklist row count, so the auto
-    * form computes the blocklist aggregation once for the count and —
-    * in the rare distributed branch — once more inside the join (the
-    * broadcast branch collects from the cached count run, no second
-    * pass). A deployment holding an at-rest blocklist should call
-    * [[removeBoilerplateDistributed]] with it directly and skip the
-    * decision pass entirely.
+    * The branch decision needs the blocklist row count: the blocklist
+    * aggregation persists in a nested scope for the count and the
+    * broadcast branch's collect (no second pass). In the rare
+    * distributed branch it persists again into `scope` and recomputes
+    * once inside the join, then stays cached across the caller's
+    * actions (each would otherwise recompute the corpus-wide
+    * lineDocFreq aggregation). A deployment holding an at-rest
+    * blocklist should call [[removeBoilerplateDistributed]] with it
+    * directly and skip the decision pass entirely.
     */
   def removeBoilerplate(
       docs: DataFrame, maxDocFreq: Long,
       textCol: String = "text",
       keyCol: String = "doc_id",
-      maxBroadcastBlocklist: Long = DefaultMaxBroadcastBlocklist): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val block = lineDocFreq(docs, textCol, keyCol)
-      .where(col("doc_freq") > maxDocFreq).select("h").persist()
-    val n = block.count()
-    if (n <= maxBroadcastBlocklist) {
-      val hashes = block.as[Long].collect().toSet
-      block.unpersist()
-      removeBoilerplateBroadcast(docs, hashes, textCol)
-    } else {
-      // leave nothing cached behind: the anti-join recomputes the
-      // hash-only aggregation once at action time (disclosed above).
-      // Callers that will run SEVERAL actions on the result should use
-      // removeBoilerplateWithHandle, which keeps the blocklist cached
-      // until they release it.
-      block.unpersist()
-      removeBoilerplateDistributed(docs, block, textCol, keyCol)
-    }
-  }
-
-  /** [[removeBoilerplate]] + release handle: in the distributed branch
-    * the blocklist aggregation stays PERSISTED until the caller's last
-    * action (each action would otherwise recompute the corpus-wide
-    * lineDocFreq aggregation — the multi-action cost the one-shot form
-    * discloses); handle is a no-op in the broadcast branch. Same
-    * contract as the other *WithHandle wrappers.
-    */
-  def removeBoilerplateWithHandle(
-      docs: DataFrame, maxDocFreq: Long,
-      textCol: String = "text",
-      keyCol: String = "doc_id",
       maxBroadcastBlocklist: Long = DefaultMaxBroadcastBlocklist)
-      : (DataFrame, () => Unit) = {
+      (implicit scope: Scope): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val block = lineDocFreq(docs, textCol, keyCol)
-      .where(col("doc_freq") > maxDocFreq).select("h").persist()
-    val n = block.count()
-    if (n <= maxBroadcastBlocklist) {
-      val hashes = block.as[Long].collect().toSet
-      block.unpersist()
-      (removeBoilerplateBroadcast(docs, hashes, textCol), () => ())
-    } else
-      (removeBoilerplateDistributed(docs, block, textCol, keyCol),
-        () => { block.unpersist(); () })
+      .where(col("doc_freq") > maxDocFreq).select("h")
+    val hashes = Scope(spark) { local =>
+      local.persist(block)
+      if (block.count() <= maxBroadcastBlocklist) Some(block.as[Long].collect().toSet)
+      else None
+    }
+    hashes match {
+      case Some(h) => removeBoilerplateBroadcast(docs, h, textCol)
+      case None =>
+        removeBoilerplateDistributed(docs, scope.persist(block), textCol, keyCol)
+    }
   }
 
   /** The broadcast-set rewrite: one zero-exchange projection. */

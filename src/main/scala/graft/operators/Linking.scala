@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.Normalize
 import graft.model.{ChemDictEntry, Sentence, Triple}
+import graft.plans.Scope
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -117,12 +118,6 @@ object Linking {
     * Same broadcast discipline as the triple path (links is
     * A1-gated + dict-joined, then broadcast onto the mention rows).
     */
-  def attachToMentions(
-      annotated: Dataset[Sentence],
-      dict: Dataset[ChemDictEntry],
-      minOccurrences: Int = MinOccurrences
-  ): DataFrame = attachToMentionsWithHandle(annotated, dict, minOccurrences)._1
-
   /** Fused single-pass form of the J2 strict back-attachment: ONE
     * flatMap over the annotated table emits the compact per-mention
     * rows, that dataset persists, and BOTH consumers — the A1
@@ -132,23 +127,19 @@ object Linking {
     * 10^12 pages that doubles the dominant cost of the pipeline's
     * primary artifact. Single-pass is asserted by LinkingSpec with a
     * row accumulator on the annotate subtree.
-    *
-    * Returns the unpersist handle for the compact mention cache (same
-    * contract as `linkTriplesFusedWithHandle`; one-shot Verify queries
-    * tolerate the leak until session stop).
+    * The compact mention cache registers into `scope`.
     */
-  def attachToMentionsWithHandle(
+  def attachToMentions(
       annotated: Dataset[Sentence],
       dict: Dataset[ChemDictEntry],
       minOccurrences: Int = MinOccurrences
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     val spark = annotated.sparkSession
     import spark.implicits._
-    val mentions = annotated.flatMap { s =>
+    val mentions = scope.persist(annotated.flatMap { s =>
       s.ents.iterator.filter(_.label == "CHEM").map(e =>
         (s.url, s.sentId, e.startChar, e.endChar, e.startTok, e.text))
-    }.toDF("url", "sent_id", "start_char", "end_char", "start_tok", "mention")
-      .persist()
+    }.toDF("url", "sent_id", "start_char", "end_char", "start_tok", "mention"))
     // A1 gate computed from the SAME compact rows (groupBy over exact
     // surfaces — identical to mentionCounts over `annotated`)
     val eligible = mentions.groupBy("mention").agg(count(lit(1)).as("occurrences"))
@@ -159,8 +150,7 @@ object Linking {
       .join(broadcast(dictNames(dict)), Seq("name_norm"))
       .join(broadcast(dictProps(dict)), Seq("cid"))
       .drop("name_norm")
-    (mentions.join(broadcast(links), Seq("mention"), "left_outer"),
-      () => { mentions.unpersist(); () })
+    mentions.join(broadcast(links), Seq("mention"), "left_outer")
   }
 
   /** J1+J2 broadcast path: triples ⟕ surface-link table on the exact
@@ -200,35 +190,24 @@ object Linking {
     * persisting full Sentence rows (nested token/ent/rel arrays — the
     * dominant persist cost at 10^12 rows), one flatMap emits compact
     * (mention | triple) rows and only THAT union is persisted. Produces
-    * rows identical to `linkTriples` (asserted by LinkingSpec).
+    * rows identical to `linkTriples` (asserted by LinkingSpec). The
+    * compact cache registers into `scope` (disk-backed MEMORY_AND_DISK
+    * blocks are not reclaimed by storage-memory LRU, so a long-lived
+    * session must release them).
     */
   def linkTriplesFused(
       annotated: Dataset[Sentence],
-      dict: Array[ChemDictEntry],
-      minOccurrences: Int = MinOccurrences
-  ): DataFrame = linkTriplesFusedWithHandle(annotated, dict, minOccurrences)._1
-
-  /** Like `linkTriplesFused` but also returns an unpersist handle the
-    * caller MUST invoke after its action completes: the fused plan
-    * caches the compact (mention|triple) dataset, and disk-backed
-    * MEMORY_AND_DISK blocks are not reclaimed by storage-memory LRU —
-    * a long-lived session invoking this repeatedly without the handle
-    * would accumulate them (Bench uses the handle; one-shot Verify
-    * queries tolerate a single leaked cache until session stop).
-    */
-  def linkTriplesFusedWithHandle(
-      annotated: Dataset[Sentence],
       dictArr: Array[ChemDictEntry],
       minOccurrences: Int = MinOccurrences
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     val spark = annotated.sparkSession
     val dict = dictDs(spark, dictArr)
-    val (combined, eligible, triples) = fusedParts(annotated, minOccurrences)
+    val (eligible, triples) = fusedParts(annotated, minOccurrences)
     val links = eligible
       .join(broadcast(dictNames(dict)), Seq("name_norm"))
       .join(broadcast(dictProps(dict)), Seq("cid"))
       .drop("name_norm", "occurrences")
-    (joinLinks(triples, links), () => { combined.unpersist(); () })
+    joinLinks(triples, links)
   }
 
   /** Shared skeleton of the fused single-pass paths: ONE flatMap over
@@ -240,10 +219,10 @@ object Linking {
   private def fusedParts(
       annotated: Dataset[Sentence],
       minOccurrences: Int
-  ): (Dataset[MentionOrTriple], DataFrame, DataFrame) = {
+  )(implicit scope: Scope): (DataFrame, DataFrame) = {
     val spark = annotated.sparkSession
     import spark.implicits._
-    val combined = annotated.flatMap { s =>
+    val combined = scope.persist(annotated.flatMap { s =>
       val mentions = s.ents.iterator.filter(_.label == "CHEM")
         .map(e => MentionOrTriple(e.text, null))
       val trips =
@@ -251,14 +230,14 @@ object Linking {
           Triples.assemble(s).iterator.map(t => MentionOrTriple(null, t))
         else Iterator.empty
       mentions ++ trips
-    }.persist()
+    })
     val eligible = combined.filter(col("mention").isNotNull)
       .groupBy("mention").agg(count(lit(1)).as("occurrences"))
       .filter(col("occurrences") >= minOccurrences)
       .withColumn("name_norm", chemNormCol(col("mention")))
       .select("mention", "name_norm", "occurrences")
     val triples = combined.filter(col("triple").isNotNull).select("triple.*")
-    (combined, eligible, triples)
+    (eligible, triples)
   }
 
   /** Fused + salted: the broadcast-free large-dict path with the
@@ -271,17 +250,10 @@ object Linking {
       dictArr: Array[ChemDictEntry],
       nSalts: Int = 8,
       minOccurrences: Int = MinOccurrences
-  ): DataFrame = linkTriplesSaltedFusedWithHandle(annotated, dictArr, nSalts, minOccurrences)._1
-
-  def linkTriplesSaltedFusedWithHandle(
-      annotated: Dataset[Sentence],
-      dictArr: Array[ChemDictEntry],
-      nSalts: Int = 8,
-      minOccurrences: Int = MinOccurrences
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     val spark = annotated.sparkSession
     val dict = dictDs(spark, dictArr)
-    val (combined, eligible, triples) = fusedParts(annotated, minOccurrences)
+    val (eligible, triples) = fusedParts(annotated, minOccurrences)
     val links = eligible
       .join(dictNames(dict).hint("shuffle_hash"), Seq("name_norm"))
       .join(dictProps(dict).hint("shuffle_hash"), Seq("cid"))
@@ -290,24 +262,13 @@ object Linking {
     val probe = triples
       .withColumn("head_surface", when(col("headLabel") === "CHEM", col("headText")))
       .withColumn("salt", pmod(hash(col("url")), lit(nSalts)))
-    val out = probe
+    probe
       .hint("shuffle_hash")
       .join(saltedDict,
         probe("head_surface") === saltedDict("mention") && probe("salt") === saltedDict("salt"),
         "left_outer")
       .drop("mention", "head_surface", "salt")
-    (out, () => { combined.unpersist(); () })
   }
-
-  def linkTriplesSaltedTargeted(
-      annotated: Dataset[Sentence],
-      dictArr: Array[ChemDictEntry],
-      nSalts: Int = 8,
-      heavyThreshold: Long = HeavyThreshold,
-      minOccurrences: Int = MinOccurrences
-  ): DataFrame =
-    linkTriplesSaltedTargetedWithHandle(
-      annotated, dictArr, nSalts, heavyThreshold, minOccurrences)._1
 
   /** Occurrence threshold above which a mention surface counts as a
     * head entity (water, NaCl) for salting purposes. The heavy SET is
@@ -332,16 +293,16 @@ object Linking {
     * carrying the single heavy_mention column). Rows identical to
     * `linkTriples` / `linkTriplesSaltedFused` (LinkingSpec).
     */
-  def linkTriplesSaltedTargetedWithHandle(
+  def linkTriplesSaltedTargeted(
       annotated: Dataset[Sentence],
       dictArr: Array[ChemDictEntry],
       nSalts: Int = 8,
       heavyThreshold: Long = HeavyThreshold,
       minOccurrences: Int = MinOccurrences
-  ): (DataFrame, () => Unit) = {
+  )(implicit scope: Scope): DataFrame = {
     val spark = annotated.sparkSession
     val dict = dictDs(spark, dictArr)
-    val (combined, eligible, triples) = fusedParts(annotated, minOccurrences)
+    val (eligible, triples) = fusedParts(annotated, minOccurrences)
     val links = eligible
       .join(dictNames(dict).hint("shuffle_hash"), Seq("name_norm"))
       .join(dictProps(dict).hint("shuffle_hash"), Seq("cid"))
@@ -359,13 +320,12 @@ object Linking {
       .withColumn("salt", when(col("heavy_mention").isNotNull,
         pmod(hash(col("url")), lit(nSalts))).otherwise(lit(0)))
       .drop("heavy_mention")
-    val out = probe
+    probe
       .hint("shuffle_hash")
       .join(saltedDict,
         probe("head_surface") === saltedDict("mention") && probe("salt") === saltedDict("salt"),
         "left_outer")
       .drop("mention", "head_surface", "salt")
-    (out, () => { combined.unpersist(); () })
   }
 
   /** The non-broadcast path for dictionaries too large to broadcast:

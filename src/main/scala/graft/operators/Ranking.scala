@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Scope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -34,31 +35,22 @@ object Ranking {
     * any input partitioning even though the range boundaries themselves
     * come from sampling.
     */
-  def globalRank(df: DataFrame, keys: Seq[Column]): DataFrame =
-    globalRankWithHandle(df, keys)._1
+  def globalRank(df: DataFrame, keys: Seq[Column])(implicit scope: Scope): DataFrame =
+    globalRankWithTotal(df, keys)._1
 
-  /** Like `globalRank` but returns the unpersist handle for the
-    * range-partitioned intermediate: the prefix offsets were counted
-    * from THAT materialization, so it must stay persisted until the
-    * caller's action completes (recomputing it could resample different
-    * range boundaries and misalign the offsets). Same contract as
-    * `Linking.linkTriplesFusedWithHandle`.
+  /** `globalRank` + the exact total row count N, which the offset
+    * collect already knows — callers that need N (bucketing) must not
+    * pay a second full scan to recount it. The range-partitioned
+    * intermediate registers into `scope`: the prefix offsets were
+    * counted from THAT materialization, so it must stay persisted until
+    * the caller's action completes (recomputing it could resample
+    * different range boundaries and misalign the offsets).
     */
-  def globalRankWithHandle(df: DataFrame, keys: Seq[Column]): (DataFrame, () => Unit) = {
-    val (out, _, release) = globalRankWithTotalAndHandle(df, keys)
-    (out, release)
-  }
-
-  /** `globalRankWithHandle` + the exact total row count N, which the
-    * offset collect already knows — callers that need N (bucketing)
-    * must not pay a second full scan to recount it.
-    */
-  def globalRankWithTotalAndHandle(
-      df: DataFrame, keys: Seq[Column]): (DataFrame, Long, () => Unit) = {
+  def globalRankWithTotal(
+      df: DataFrame, keys: Seq[Column])(implicit scope: Scope): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val parted = df.repartitionByRange(keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .persist()
+    val parted = scope.persist(df.repartitionByRange(keys: _*)
+      .sortWithinPartitions(keys: _*))
     // per-partition counts: bounded by the partition count — the same
     // "bounded manifest collect" contract as Materialize. Count with a
     // Long: Iterator.size is an Int and a >2^31-row partition would
@@ -82,7 +74,7 @@ object Ranking {
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
       }
     }(enc)
-    (out, counts.map(_._2).sum, () => { parted.unpersist(); () })
+    (out, counts.map(_._2).sum)
   }
 
   /** Equal-frequency buckets 0..n-1 over an exact global rank:
@@ -103,21 +95,11 @@ object Ranking {
     * (doc_id, avg_lp, rank, bucket) with bucket 0=head, 1=middle,
     * 2=tail.
     */
-  def perplexityBuckets(scored: DataFrame, nBuckets: Int = 3): DataFrame =
-    perplexityBucketsWithHandle(scored, nBuckets)._1
-
-  /** `perplexityBuckets` with the rank intermediate's unpersist handle
-    * (release only after the caller's action — the handle contract).
-    * The internal `count()` for N reads the persisted intermediate, so
-    * releasing earlier could resample range boundaries and misalign
-    * the prefix offsets.
-    */
-  def perplexityBucketsWithHandle(
-      scored: DataFrame, nBuckets: Int = 3): (DataFrame, () => Unit) = {
-    val (ranked, n, release) = globalRankWithTotalAndHandle(
+  def perplexityBuckets(scored: DataFrame, nBuckets: Int = 3)
+      (implicit scope: Scope): DataFrame = {
+    val (ranked, n) = globalRankWithTotal(
       scored.select(col("doc_id"), col("avg_lp")),
       Seq(col("avg_lp").desc, col("doc_id").asc))
-    (rankBuckets(ranked, n, nBuckets)
-      .select("doc_id", "avg_lp", "rank", "bucket"), release)
+    rankBuckets(ranked, n, nBuckets).select("doc_id", "avg_lp", "rank", "bucket")
   }
 }

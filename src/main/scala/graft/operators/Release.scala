@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -139,35 +140,30 @@ object Release {
   }
 
   /** The attrition ledger: (doc_id, fate) for EVERY input document,
-    * fate = first killing stage (priority in the object doc). Returns
-    * the frame plus a release handle for the persisted intermediates
-    * (the fused per-row pass and the id-only kill sets) — call it after
-    * the last action on the result. See `ledger` for the one-shot
-    * convenience form.
+    * fate = first killing stage (priority in the object doc). The
+    * persisted intermediates (the fused per-row pass and the id-only
+    * kill sets) register into `scope`.
     */
-  def ledgerWithHandle(docs: DataFrame, idCol: String = "doc_id",
+  def ledger(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", cfg: Config = Config())
-      : (DataFrame, () => Unit) = {
-    val (_, fates, release) = buildWithHandle(docs, idCol, textCol, cfg)
-    (fates, release)
-  }
+      (implicit scope: Scope): DataFrame =
+    build(docs, idCol, textCol, cfg)._2
 
-  /** Shared spine: the persisted fused pass, the ledger, and the
-    * release handle — so `releasedWithHandle` can read redacted text
-    * from the SAME cached projection the ledger used instead of paying
-    * a second corpus-text pass.
+  /** Shared spine: the persisted fused pass and the ledger, so
+    * `released` can read redacted text from the SAME cached projection
+    * the ledger used instead of paying a second corpus-text pass.
     */
-  private def buildWithHandle(docs: DataFrame, idCol: String,
-      textCol: String, cfg: Config)
-      : (DataFrame, DataFrame, () => Unit) = {
+  private def build(docs: DataFrame, idCol: String,
+      textCol: String, cfg: Config)(implicit scope: Scope)
+      : (DataFrame, DataFrame) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val compact = labeled(docs, idCol, textCol, cfg).persist()
+    val compact = scope.persist(labeled(docs, idCol, textCol, cfg))
     val a0 = alive0(compact)
     // keep ids persist: the set feeds alive1 for BOTH the near-dup
     // machinery (several passes) and the final fate join
-    val keep = exactKeepIds(a0).persist()
+    val keep = scope.persist(exactKeepIds(a0))
     val a1 = a0.join(keep, Seq("doc_id"), "left_semi")
     // decontamination is computed over a1, NOT a2: a near-dup-killed
     // doc that is also contaminated resolves to near_dup either way
@@ -182,42 +178,33 @@ object Release {
         cfg.benchRem.toLong)
       .select(col(idCol).cast("long").as("bench_id"), col(textCol).as("red"))
     val contamF = Future {
-      Decontaminate.flagged(a1, bench, "doc_id", "bench_id",
+      scope.persist(Decontaminate.flagged(a1, bench, "doc_id", "bench_id",
         "red", minFracBench = cfg.minFracBench,
         useBroadcast = cfg.useBroadcast)
-        .select("doc_id")
-        .persist()
+        .select("doc_id"))
     }
     // near-dup: minhash-LSH candidates + exact-Jaccard verify, then CC
-    // over the PAIR-TOUCHED ids only (IncrDedup.survivors' discipline:
-    // an untouched doc is trivially its own cluster and can never be
-    // killed, so routing all of alive1 through the label iterations —
-    // what minhashClusters' full-corpus contract does — would put
-    // O(corpus) rows into every CC round for a kill set that is
-    // O(duplicates)); killed = any doc that is not its component's min
-    val (rawPairs, releasePairs) = Dedup.minhashPairsWithHandle(a1,
-      "doc_id", "red", threshold = cfg.nearThreshold,
-      useBroadcast = cfg.useBroadcast)
-    val pairs = rawPairs
-      .select(col("id_a").as("cid_a"), col("id_b").as("cid_b")).persist()
-    // materialize + lineage-cut in ONE analysis pass (the deep pair
-    // chain costs ~1.6s of pure driver analysis per pass — see
-    // Canonicalize.materializedLeaf)
-    val (pl, nPairs) = Canonicalize.materializedLeaf(pairs)
-    val touched = pl.select(col("cid_a").as("cid"))
-      .union(pl.select(col("cid_b").as("cid"))).distinct()
-    // CC materializes its edge list eagerly, so the candidate cache can
-    // release right after; the count above rides in (no re-probe) and
-    // the endpoint-node form collapses the driver branch to one collect
-    val labels =
-      try Canonicalize.connectedComponents(touched, pl,
-        knownEdgeCount = Some(nPairs), nodesArePairEndpoints = true)
-      finally { releasePairs(); pairs.unpersist(); () }
-    val nearKill = labels.filter(col("cluster_id") =!= col("cid"))
-      .select(col("cid").as("doc_id"))
-      .persist()
+    // over the PAIR-TOUCHED ids only (Canonicalize.pairComponents);
+    // killed = any doc that is not its component's min. The candidate
+    // cache lives in a nested scope released right after CC.
+    val labels = Scope(docs.sparkSession) { pairScope =>
+      val pairs = Dedup.minhashPairs(a1, "doc_id", "red",
+        threshold = cfg.nearThreshold, useBroadcast = cfg.useBroadcast)(pairScope)
+      Canonicalize.pairComponents(
+        pairs.select(col("id_a").as("cid_a"), col("id_b").as("cid_b")))
+    }
+    val nearKill = scope.persist(labels.filter(col("cluster_id") =!= col("cid"))
+      .select(col("cid").as("doc_id")))
     val contamKill = Await.result(contamF, Duration.Inf)
-    val fates = compact
+    (compact, fates(compact, keep, nearKill, contamKill))
+  }
+
+  /** (doc_id, fate) from the per-row gate flags and the three kill
+    * sets, first killing stage wins.
+    */
+  private def fates(compact: DataFrame, keep: DataFrame, nearKill: DataFrame,
+      contamKill: DataFrame): DataFrame =
+    compact
       .join(keep.withColumn("x_keep", lit(1)), Seq("doc_id"), "left")
       .join(nearKill.withColumn("x_nd", lit(1)), Seq("doc_id"), "left")
       .join(contamKill.withColumn("x_ct", lit(1)), Seq("doc_id"), "left")
@@ -230,34 +217,20 @@ object Release {
           .when(col("x_nd").isNotNull, "near_dup")
           .when(col("x_ct").isNotNull, "contaminated")
           .otherwise("kept").as("fate"))
-    (compact, fates, () => {
-      compact.unpersist(); keep.unpersist(); nearKill.unpersist()
-      contamKill.unpersist(); ()
-    })
-  }
-
-  /** One-shot ledger (handle dropped): the persisted intermediates
-    * live until session stop — the accepted Verify-query trade
-    * documented on the other *WithHandle convenience wrappers.
-    */
-  def ledger(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", cfg: Config = Config()): DataFrame =
-    ledgerWithHandle(docs, idCol, textCol, cfg)._1
 
   /** The released corpus: (doc_id, clean_text) for fate == kept, with
     * clean_text the redacted form — the raw column never ships.
     */
-  def releasedWithHandle(docs: DataFrame, idCol: String = "doc_id",
+  def released(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", cfg: Config = Config())
-      : (DataFrame, () => Unit) = {
-    val (compact, fates, release) = buildWithHandle(docs, idCol, textCol, cfg)
+      (implicit scope: Scope): DataFrame = {
+    val (compact, fates) = build(docs, idCol, textCol, cfg)
     val kept = fates.filter(col("fate") === "kept").select("doc_id")
     // red is non-null for every kept doc by construction (kept ⊂ alive0);
     // compact is the persisted fused pass — no second text scan
-    val out = compact
+    compact
       .join(kept, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("red").as("clean_text"))
-    (out, release)
   }
 
   /** Per-fate attrition counts — the release report row. */
@@ -310,7 +283,7 @@ object Release {
 
   /** The attrition ledger for ONE crawl delta against the at-rest
     * index: (doc_id, fate) for every delta document, same fate
-    * vocabulary and first-kill priority as the batch [[ledgerWithHandle]].
+    * vocabulary and first-kill priority as the batch [[ledger]].
     * Per-crawl cost is O(delta) text work — the delta is the job's ONLY
     * text input (near-dup verification runs off the int-only shingle
     * sidecar; exact dedup exchanges 16-byte hashes; decontam grams are
@@ -323,65 +296,46 @@ object Release {
     * drops all its delta members; previously-kept seen docs are never
     * retracted.
     */
-  def incrementalLedgerWithHandle(delta: DataFrame, idx: Index,
+  def incrementalLedger(delta: DataFrame, idx: Index,
       idCol: String = "doc_id", textCol: String = "text",
-      cfg: Config = Config()): (DataFrame, () => Unit) = {
+      cfg: Config = Config())(implicit scope: Scope): DataFrame = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val compact = labeled(delta, idCol, textCol, cfg).persist()
+    val compact = scope.persist(labeled(delta, idCol, textCol, cfg))
     val a0 = alive0(compact)
     // exact vs seen ∪ within-delta: the within-delta min survives its
     // group unless the group's hash is already seen
     val hashed = a0.select(col("doc_id"), md5(col("red")).as("h"))
-    val keep = hashed
+    val keep = scope.persist(hashed
       .join(hashed.groupBy("h").agg(min(col("doc_id")).as("keep_id")), Seq("h"))
       .filter(col("doc_id") === col("keep_id"))
       .join(idx.exactHashes, Seq("h"), "left_anti")
-      .select("doc_id")
-      .persist()
+      .select("doc_id"))
     val a1 = a0.join(keep, Seq("doc_id"), "left_semi")
     // decontam over a1 instead of a2 + thread overlap — same
     // row-identical argument and same §2.6 rationale as the batch
-    // ledger (buildWithHandle)
+    // ledger (build)
     val contamF = Future {
-      Decontaminate.flagged(a1,
+      scope.persist(Decontaminate.flagged(a1,
         idx.bench.select(col("bench_id"), col("text").as("red")),
         "doc_id", "bench_id", "red", minFracBench = cfg.minFracBench,
         useBroadcast = cfg.useBroadcast)
-        .select("doc_id")
-        .persist()
+        .select("doc_id"))
     }
     // near-dup vs the band index, verified off the int-only sidecar —
-    // NO seen-text input (IncrDedup.incrementalPairsFromIndex)
-    val (pairs, releasePairs) = IncrDedup.incrementalPairsFromIndexWithHandle(
-      idx.bands, idx.counts, idx.shingles, a1, "doc_id", "red",
-      threshold = cfg.nearThreshold, useBroadcast = cfg.useBroadcast)
-    // survivors materializes the pair chain eagerly (checkpointed CC
-    // labels), so the candidate cache can release right after
-    val kept =
-      try IncrDedup.survivors(a1, pairs)
-      finally releasePairs()
-    val nearKill = a1.select("doc_id")
-      .join(kept, Seq("doc_id"), "left_anti")
-      .persist()
+    // NO seen-text input (IncrDedup.incrementalPairsFromIndex). The
+    // candidate cache lives in a nested scope: survivors materializes
+    // the pair chain eagerly, so it releases right after
+    val kept = Scope(delta.sparkSession) { pairScope =>
+      val pairs = IncrDedup.incrementalPairsFromIndex(
+        idx.bands, idx.counts, idx.shingles, a1, "doc_id", "red",
+        threshold = cfg.nearThreshold, useBroadcast = cfg.useBroadcast)(pairScope)
+      IncrDedup.survivors(a1, pairs)
+    }
+    val nearKill = scope.persist(a1.select("doc_id")
+      .join(kept, Seq("doc_id"), "left_anti"))
     val contamKill = Await.result(contamF, Duration.Inf)
-    val fates = compact
-      .join(keep.withColumn("x_keep", lit(1)), Seq("doc_id"), "left")
-      .join(nearKill.withColumn("x_nd", lit(1)), Seq("doc_id"), "left")
-      .join(contamKill.withColumn("x_ct", lit(1)), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("is_bench"), "bench")
-          .when(!col("lang_ok"), "lang")
-          .when(!col("quality_ok"), "quality")
-          .when(!col("rep_ok"), "repetition")
-          .when(col("x_keep").isNull, "exact_dup")
-          .when(col("x_nd").isNotNull, "near_dup")
-          .when(col("x_ct").isNotNull, "contaminated")
-          .otherwise("kept").as("fate"))
-    (fates, () => {
-      compact.unpersist(); keep.unpersist(); nearKill.unpersist()
-      contamKill.unpersist(); ()
-    })
+    fates(compact, keep, nearKill, contamKill)
   }
 }

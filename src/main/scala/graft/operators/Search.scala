@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Scope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -72,6 +73,11 @@ object Search {
     * term order (deterministic IEEE fold); ties break on doc_id.
     *
     * partial(t, d) = idf(t) * (tf*(k1+1)) / (tf + k1*((1-b) + b*(dl*N)/T))
+    *
+    * The postings pass persists into `scope`: the inverted index feeds
+    * BOTH the idf statistics and the scoring join, and without the
+    * persist the corpus-sized postings build would run twice (the
+    * double-annotate shape the linking fusion removed).
     */
   def bm25TopK(
       docs: DataFrame,
@@ -80,29 +86,10 @@ object Search {
       k1: Double = 1.2,
       b: Double = 0.75,
       textCol: String = "text",
-      keyCol: String = "doc_id"): DataFrame =
-    bm25TopKWithHandle(docs, queries, k, k1, b, textCol, keyCol)._1
-    // one-shot callers leak the postings persist until session stop —
-    // same accepted trade as the fused linking paths; Bench and
-    // long-lived callers use the handle
-
-  /** [[bm25TopK]] plus the unpersist handle for the shared postings
-    * pass. The inverted index feeds BOTH the idf statistics and the
-    * scoring join; without the persist the corpus-sized postings
-    * build would run twice (the double-annotate shape the linking
-    * fusion removed).
-    */
-  def bm25TopKWithHandle(
-      docs: DataFrame,
-      queries: Seq[(Int, Seq[String])],
-      k: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75,
-      textCol: String = "text",
-      keyCol: String = "doc_id"): (DataFrame, () => Unit) = {
+      keyCol: String = "doc_id")(implicit scope: Scope): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val post = postings(docs, textCol, keyCol).persist()
+    val post = scope.persist(postings(docs, textCol, keyCol))
     // N and T are two scalars — a bounded driver-side aggregate, like
     // the ANN centroid collect
     val (n, t) = docs
@@ -138,10 +125,9 @@ object Search {
         aggregate(sort_array(col("ps")), lit(0.0),
           (acc, x) => acc + x.getField("partial")))
       .drop("ps")
-    val ranked = scored
+    scored
       .withColumn("rank", row_number().over(
         Window.partitionBy("qid").orderBy(desc("score"), asc("doc_id"))))
       .where(col("rank") <= k)
-    (ranked, () => { post.unpersist(); () })
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,7 +26,7 @@ import org.apache.spark.sql.functions._
   *    bounds EXPECTED cluster size (paper uses ~sqrt(N) clusters),
   *    and a HUB cell (every embedding of a template page family
   *    landing in one Voronoi cell) is capped by `maxCellSize` in
-  *    three deterministic steps (see `pairsFromAssignedWithHandle`):
+  *    three deterministic steps (see `pairsFromAssigned`):
   *    exact-vector groups collapse to one representative first (the
   *    bit-identical hub no quantizer can separate — within-group
   *    pairs are emitted by construction through a distributed
@@ -94,9 +95,9 @@ object SemDedup {
       corpus: DataFrame, cents: Array[(Int, Array[Float])],
       threshold: Double = DefaultThreshold,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxCellSize: Int = DefaultMaxCellSize): DataFrame =
-    pairsFromAssigned(
-      assignedVectors(corpus, cents, idCol, vecCol), threshold, maxCellSize)
+      maxCellSize: Int = DefaultMaxCellSize)(implicit scope: Scope): DataFrame =
+    pairsFromAssigned(scope.persist(assignedVectors(corpus, cents, idCol, vecCol)),
+      threshold, maxCellSize)
 
   /** (id, cell, cent_cos, v): the one corpus projection every SemDeDup
     * stage reads — assignment, keep-rule key, and the vector payload in
@@ -210,41 +211,29 @@ object SemDedup {
     *     member) table — cosines are equal across an exact group, so
     *     the expansion reproduces exactly the member-level pair set.
     *
-    * The assignment projection is PERSISTED here (it feeds the size
-    * probe, the pair aggregation and — on the hub path — every
-    * trainer pass; the one-shot `pairs()` entry point leaks the cache
-    * until session stop, the accepted convenience-wrapper trade, while
-    * `survivorsWithHandle` passes the same frame and releases it).
+    * Callers pass the assignment projection PERSISTED (it feeds the
+    * size probe, the pair aggregation and — on the hub path — every
+    * trainer pass); the hub path's exact-group cache registers into
+    * `scope`.
     */
   private def pairsFromAssigned(
       assigned: DataFrame, threshold: Double,
-      maxCellSize: Int = DefaultMaxCellSize): DataFrame =
-    pairsFromAssignedWithHandle(assigned, threshold, maxCellSize)._1
-    // one-shot form: the hub path's exact-group cache (and the
-    // assignment persist) live until session stop — the accepted
-    // convenience-wrapper trade; survivorsWithHandle uses the handle
-
-  private def pairsFromAssignedWithHandle(
-      assigned: DataFrame, threshold: Double,
-      maxCellSize: Int = DefaultMaxCellSize): (DataFrame, () => Unit) = {
+      maxCellSize: Int)(implicit scope: Scope): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    assigned.persist()
     val sizes = assigned.groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .as[(Int, Long)].collect() // nlist-bounded by construction
     val oversize = sizes.filter(_._2 > maxCellSize).map(_._1).toSet
     if (oversize.isEmpty)
-      return (pairsWithin(assigned.withColumn("scell", lit(0)), threshold),
-        () => ())
+      return pairsWithin(assigned.withColumn("scell", lit(0)), threshold)
     val small = assigned
       .filter(!col("cell").isin(oversize.toSeq: _*))
       .withColumn("scell", lit(0))
     val big = assigned.filter(col("cell").isin(oversize.toSeq: _*))
     // exact-vector groups of the oversize cells (identical vectors
     // share cell and cent_cos by determinism of the assignment)
-    val groups = big.groupBy(col("cell"), col("v"))
-      .agg(min(col("id")).as("gid"), collect_list(col("id")).as("members"))
-      .persist()
+    val groups = scope.persist(big.groupBy(col("cell"), col("v"))
+      .agg(min(col("id")).as("gid"), collect_list(col("id")).as("members")))
     val reps = groups.select(col("gid").as("id"), col("cell"), col("v"))
     val repsSub = withSubcells(reps, maxCellSize)
     // salt guarantee over still-oversize rep groups (bounded probe:
@@ -290,42 +279,30 @@ object SemDedup {
         Seq("cell", "b"))
       .select(col("cell"), least(col("ma"), col("mb")).as("a"),
         greatest(col("ma"), col("mb")).as("b"))
-    (pairsWithin(small, threshold)
+    pairsWithin(small, threshold)
       .unionByName(within)
-      .unionByName(cross),
-      () => { groups.unpersist(); () })
+      .unionByName(cross)
   }
-
-  def survivors(
-      corpus: DataFrame, cents: Array[(Int, Array[Float])],
-      threshold: Double = DefaultThreshold,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      maxCellSize: Int = DefaultMaxCellSize): DataFrame =
-    survivorsWithHandle(corpus, cents, threshold, idCol, vecCol, maxCellSize)._1
 
   /** Survivor ids after semantic dedup: every near-dup component
     * (connected components over `pairs`) keeps ONLY the member with the
     * lowest (cent_cos, id); documents in no pair survive untouched.
-    * ONE corpus pass (the shared assigned projection is persisted and
-    * feeds the pair build, the keep-rule join, and the survivor
-    * anti-join); the returned handle releases both persists after the
-    * caller's action.
+    * ONE corpus pass: the shared assigned projection persists into
+    * `scope` and feeds the pair build, the keep-rule join, and the
+    * survivor anti-join; the pairs become a `scope` leaf (CC, keeper
+    * and anti-join all read it), and the pair-build intermediates (hub
+    * path's exact-group cache) release as soon as the pairs are
+    * materialized.
     */
-  def survivorsWithHandle(
+  def survivors(
       corpus: DataFrame, cents: Array[(Int, Array[Float])],
       threshold: Double = DefaultThreshold,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxCellSize: Int = DefaultMaxCellSize): (DataFrame, () => Unit) = {
-    val assigned = assignedVectors(corpus, cents, idCol, vecCol).persist()
-    val (p0raw, releasePairBuild) =
-      pairsFromAssignedWithHandle(assigned, threshold, maxCellSize)
-    val p0 = p0raw.persist()
-    // materialize (CC + keeper + anti-join all read the cache) and
-    // lineage-cut in ONE analysis pass (Canonicalize.materializedLeaf);
-    // the pair-build intermediates (hub path's exact-group cache)
-    // release as soon as the pairs are materialized
-    val (p, nPairs) = Canonicalize.materializedLeaf(p0)
-    releasePairBuild()
+      maxCellSize: Int = DefaultMaxCellSize)(implicit scope: Scope): DataFrame = {
+    val assigned = scope.persist(assignedVectors(corpus, cents, idCol, vecCol))
+    val (p, nPairs) = Scope(corpus.sparkSession) { build =>
+      scope.leaf(pairsFromAssigned(assigned, threshold, maxCellSize)(build))
+    }
     val members = p.select(col("a").as("cid"))
       .union(p.select(col("b").as("cid"))).distinct()
     val cc = Canonicalize.connectedComponents(
@@ -340,8 +317,7 @@ object SemDedup {
       .select(col("k.cid").as("keep_id"))
     val dropped = members
       .join(keepers, members("cid") === keepers("keep_id"), "left_anti")
-    val out = assigned.select(col("id"))
+    assigned.select(col("id"))
       .join(dropped, col("id") === dropped("cid"), "left_anti")
-    (out, () => { p0.unpersist(); assigned.unpersist(); () })
   }
 }

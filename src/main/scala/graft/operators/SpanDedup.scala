@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,10 +28,10 @@ import scala.util.hashing.MurmurHash3
   * is small). The rewrite joins per-doc flagged starts to the corpus —
   * broadcast by default (flagged docs << corpus; the corpus side never
   * shuffles, plan-asserted), `useBroadcast=false` switches to a shuffled
-  * join for flag-heavy corpora. `removeDupSpansWithHandle` persists the
-  * window subplan across its two consumers (the flag aggregation and the
-  * occurrence semi-join) — the single-pass discipline of the linking /
-  * minhash `*WithHandle` variants.
+  * join for flag-heavy corpora. The window subplan persists into the
+  * caller's `Scope` across its two consumers (the flag aggregation and
+  * the occurrence semi-join) — the single-pass discipline of the linking
+  * and minhash operators.
   *
   * Output contract (disclosed): `clean_text` is the kept-token stream
   * joined by single spaces — whitespace-normalized for every document,
@@ -150,26 +151,8 @@ object SpanDedup {
   def removeDupSpans(
       docs: DataFrame, k: Int,
       idCol: String = "doc_id", textCol: String = "text",
-      useBroadcast: Boolean = true): DataFrame =
-    removeImpl(docs, k, idCol, textCol, useBroadcast, persistWindows = false)._1
-
-  /** [[removeDupSpans]] with the window subplan persisted across its two
-    * consumers (flag aggregation + occurrence semi-join); call the
-    * returned handle after the result is consumed.
-    */
-  def removeDupSpansWithHandle(
-      docs: DataFrame, k: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      useBroadcast: Boolean = true): (DataFrame, () => Unit) =
-    removeImpl(docs, k, idCol, textCol, useBroadcast, persistWindows = true)
-
-  private def removeImpl(
-      docs: DataFrame, k: Int,
-      idCol: String, textCol: String,
-      useBroadcast: Boolean,
-      persistWindows: Boolean): (DataFrame, () => Unit) = {
-    val w0 = windows(docs, k, idCol, textCol)
-    val w = if (persistWindows) w0.persist() else w0
+      useBroadcast: Boolean = true)(implicit scope: Scope): DataFrame = {
+    val w = scope.persist(windows(docs, k, idCol, textCol))
     val perDoc = dupStartsOf(w)
       .groupBy(col("doc_id").as("cut_doc"))
       .agg(sort_array(collect_list(col("pos"))).as("cut_starts"))
@@ -195,10 +178,9 @@ object SpanDedup {
         b.result()
       }
     }
-    val out = docs
+    docs
       .join(cuts, docs(idCol) === cuts("cut_doc"), "left")
       .withColumn("clean_text", cleanUdf(col(textCol), col("cut_starts")))
       .drop("cut_doc", "cut_starts")
-    (out, () => { if (persistWindows) { w.unpersist(); () } })
   }
 }

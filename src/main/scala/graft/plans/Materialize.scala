@@ -555,12 +555,6 @@ object Materialize {
     */
   val StageTriplesUpsert = "triples_upsert"
 
-  private def probed[A](label: String)(f: => A): A =
-    if (sys.env.contains("GRAFT_PROBE")) {
-      val t0 = System.nanoTime(); val a = f
-      println(f"[mprobe] $label%-16s ${(System.nanoTime() - t0) / 1e9}%.2f s"); a
-    } else f
-
   /** Post-commit lineage append: one row per affected bucket with its
     * current count. Guards the all-buckets-emptied case (no readable
     * parquet left under data/) the same way the bootstrap path does —
@@ -783,7 +777,7 @@ object Materialize {
       outDir: String,
       buckets: Int = 16,
       mergeOnRead: Boolean = false
-  ): IncrementalStats = {
+  ): IncrementalStats = Scope(spark) { scope =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val b = resolveBuckets(spark, outDir, buckets)
@@ -796,17 +790,14 @@ object Materialize {
     // contract): it feeds both the version-marking join and the
     // applied-page extraction, and without the persist the per-url
     // window would re-read and re-shuffle the whole batch source twice.
-    val latest = newPages.toDF()
+    val latest = scope.persist(newPages.toDF()
       .withColumn("rn", row_number().over(
         Window.partitionBy("url").orderBy(col("warc_ts").desc,
           xxhash64(col("html")).desc, xxhash64(col("text"), col("lang")).desc)))
       .filter(col("rn") === 1).drop("rn")
       .withColumn("warc_ts_ms",
         (col("warc_ts").cast("double") * 1000).cast("long"))
-      .withColumn("bucket", pmod(hash(col("url")), lit(b)).cast("int"))
-      .persist()
-
-    def probe[A](label: String)(f: => A): A = probed(label)(f)
+      .withColumn("bucket", pmod(hash(col("url")), lit(b)).cast("int")))
 
     // versions pruning needs the batch's bucket set (bounded-size
     // collect: at most B values). Computed from `latest`, whose
@@ -815,8 +806,8 @@ object Materialize {
     // probing the cache here saves a second pass over the batch
     // source (r6: the old raw-side probe re-read/re-generated the
     // whole batch once more per update)
-    val batchBuckets = probe("bucketPrune")(latest
-      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet)
+    val batchBuckets = latest
+      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
     // one committed-batch snapshot pins the whole operation (stale
     // rejection + COW fold + drop) to a single consistent view
     val committed = committedBatchIds(spark, outDir)
@@ -825,67 +816,64 @@ object Materialize {
     // mark rather than filter: one cached compact table serves the
     // applied/stale split, the stats, and the batch id — one Spark job
     // instead of four
-    val marked = latest
+    val marked = scope.persist(latest
       .join(stored.select(col("url"), col("warc_ts_ms").as("stored_ms")),
         Seq("url"), "left_outer")
       .withColumn("is_applied",
         col("stored_ms").isNull || col("warc_ts_ms") > col("stored_ms"))
-      .select("url", "warc_ts_ms", "bucket", "is_applied").persist()
-    try {
-      // the second hash lane sums the xxhash64 HALVES separately: a
-      // direct sum of 64-bit hashes overflows long (ANSI error in
-      // Spark 4) after ~2^31 magnitude; each half-sum is bounded by
-      // n*2^32 and stays order-independent
-      val xx = xxhash64(col("url"), col("warc_ts_ms"))
-      val stats = probe("stats")(marked.groupBy("bucket", "is_applied")
-        .agg(count(lit(1)).as("n"),
-          sum(hash(col("url"), col("warc_ts_ms")).cast("long")).as("h"),
-          max("warc_ts_ms").as("m"),
-          sum(shiftright(xx, 32)).as("h2hi"),
-          sum(xx.bitwiseAND(lit(0xffffffffL))).as("h2lo")).collect())
-      val appliedStats = stats.filter(_.getBoolean(1))
-      val affected = appliedStats.map(_.getInt(0)).toSet
-      val nApplied = appliedStats.map(_.getLong(2)).sum
-      val nStale = stats.filterNot(_.getBoolean(1)).map(_.getLong(2)).sum
-      if (affected.isEmpty) return IncrementalStats(0L, nStale, Set.empty)
-      // deterministic content-derived batch id (order-independent).
-      // TWO independent hash-family sums (32-bit murmur + xxhash64) plus
-      // max ts and row count: a collision must defeat all four at once —
-      // a single 32-bit sum is not collision-resistant across the
-      // continuous batch stream this mode targets, and an id collision
-      // with an un-compacted earlier batch would silently Overwrite
-      // that batch's delta dir while its tombstones stay live.
-      val h2 = appliedStats.map(_.getLong(5)).sum ^
-        java.lang.Long.rotateLeft(appliedStats.map(_.getLong(6)).sum, 17)
-      val batchId =
-        java.lang.Long.toHexString(appliedStats.map(_.getLong(3)).sum) +
-          java.lang.Long.toHexString(h2) + "-" +
-          java.lang.Long.toHexString(appliedStats.map(_.getLong(4)).max) + "-" +
-          java.lang.Long.toHexString(nApplied)
+      .select("url", "warc_ts_ms", "bucket", "is_applied"))
+    // the second hash lane sums the xxhash64 HALVES separately: a
+    // direct sum of 64-bit hashes overflows long (ANSI error in
+    // Spark 4) after ~2^31 magnitude; each half-sum is bounded by
+    // n*2^32 and stays order-independent
+    val xx = xxhash64(col("url"), col("warc_ts_ms"))
+    val stats = marked.groupBy("bucket", "is_applied")
+      .agg(count(lit(1)).as("n"),
+        sum(hash(col("url"), col("warc_ts_ms")).cast("long")).as("h"),
+        max("warc_ts_ms").as("m"),
+        sum(shiftright(xx, 32)).as("h2hi"),
+        sum(xx.bitwiseAND(lit(0xffffffffL))).as("h2lo")).collect()
+    val appliedStats = stats.filter(_.getBoolean(1))
+    val affected = appliedStats.map(_.getInt(0)).toSet
+    val nApplied = appliedStats.map(_.getLong(2)).sum
+    val nStale = stats.filterNot(_.getBoolean(1)).map(_.getLong(2)).sum
+    if (affected.isEmpty) return IncrementalStats(0L, nStale, Set.empty)
+    // deterministic content-derived batch id (order-independent).
+    // TWO independent hash-family sums (32-bit murmur + xxhash64) plus
+    // max ts and row count: a collision must defeat all four at once —
+    // a single 32-bit sum is not collision-resistant across the
+    // continuous batch stream this mode targets, and an id collision
+    // with an un-compacted earlier batch would silently Overwrite
+    // that batch's delta dir while its tombstones stay live.
+    val h2 = appliedStats.map(_.getLong(5)).sum ^
+      java.lang.Long.rotateLeft(appliedStats.map(_.getLong(6)).sum, 17)
+    val batchId =
+      java.lang.Long.toHexString(appliedStats.map(_.getLong(3)).sum) +
+        java.lang.Long.toHexString(h2) + "-" +
+        java.lang.Long.toHexString(appliedStats.map(_.getLong(4)).max) + "-" +
+        java.lang.Long.toHexString(nApplied)
 
-      val appliedKeys = marked.filter(col("is_applied")).drop("is_applied")
-      // applied PAGE rows (html et al.) for the extraction pipeline:
-      // semi-join the (persisted) batch against the cached applied keys
-      val appliedPages = latest
-        .join(appliedKeys.select("url"), Seq("url"), "left_semi")
-        .drop("warc_ts_ms", "bucket").as[Page]
-      // new rows carry seq = their crawl's warc_ts_ms (the per-url
-      // version order tombstones resolve against). No broadcast hint:
-      // appliedKeys is O(delta) — 10^8 urls for a 1% batch at the
-      // 10^10-url scale this mode targets, far past any broadcast
-      // limit; AQE upgrades small deltas to broadcast at runtime.
-      val fresh = withBucket(Pipeline.run(appliedPages).toDF(), b)
-        .join(appliedKeys.select(col("url"),
-          col("warc_ts_ms").as("seq")), Seq("url"))
+    val appliedKeys = marked.filter(col("is_applied")).drop("is_applied")
+    // applied PAGE rows (html et al.) for the extraction pipeline:
+    // semi-join the (persisted) batch against the cached applied keys
+    val appliedPages = latest
+      .join(appliedKeys.select("url"), Seq("url"), "left_semi")
+      .drop("warc_ts_ms", "bucket").as[Page]
+    // new rows carry seq = their crawl's warc_ts_ms (the per-url
+    // version order tombstones resolve against). No broadcast hint:
+    // appliedKeys is O(delta) — 10^8 urls for a 1% batch at the
+    // 10^10-url scale this mode targets, far past any broadcast
+    // limit; AQE upgrades small deltas to broadcast at runtime.
+    val fresh = withBucket(Pipeline.run(appliedPages).toDF(), b)
+      .join(appliedKeys.select(col("url"),
+        col("warc_ts_ms").as("seq")), Seq("url"))
 
-      if (mergeOnRead)
-        probe("morCommit")(morCommit(spark, outDir, fresh, appliedKeys,
-          batchId, nApplied))
-      else
-        cowCommit(spark, outDir, b, fresh, appliedKeys, stored, affected,
-          committed)
-      IncrementalStats(nApplied, nStale, affected)
-    } finally { marked.unpersist(); latest.unpersist(); () }
+    if (mergeOnRead)
+      morCommit(spark, outDir, fresh, appliedKeys, batchId, nApplied)
+    else
+      cowCommit(spark, outDir, b, fresh, appliedKeys, stored, affected,
+        committed)
+    IncrementalStats(nApplied, nStale, affected)
   }
 
   /** Merge-on-read commit: delta + tombstones under a deterministic
@@ -897,7 +885,6 @@ object Materialize {
       fresh: DataFrame, appliedKeys: DataFrame,
       batchId: String, nApplied: Long): Unit = {
     import spark.implicits._
-    def probe[A](label: String)(f: => A): A = probed(s"mor.$label")(f)
     val t0 = System.currentTimeMillis()
 
     // partition-align every partitioned write or each shuffle partition
@@ -923,17 +910,17 @@ object Materialize {
     // overwrite (same id → same dir) without its list-and-rename
     // commit overhead; reading the delta/versions ROOT still discovers
     // batch= as a partition column from the directory name
-    probe("delta")(aligned(fresh)
+    aligned(fresh)
       .withColumn("url", countUdf(col("url"), col("bucket")))
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"${deltaPath(outDir)}/batch=$batchId"))
+      .parquet(s"${deltaPath(outDir)}/batch=$batchId")
     // the versions batch IS the tombstone set (url, warc_ts_ms,
     // bucket): one sidecar serves stale rejection (max over all
     // batches) AND read resolution (non-base batches only) — one
     // write instead of two
-    probe("versions")(aligned(appliedKeys)
+    aligned(appliedKeys)
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"${versionsPath(outDir)}/batch=$batchId"))
+      .parquet(s"${versionsPath(outDir)}/batch=$batchId")
     // the _SUCCESS marker IS the commit record every reader gates on
     // (committedBatchIds) — if the committer was configured not to
     // write it (marksuccessfuljobs=false), every batch would read as
@@ -947,13 +934,13 @@ object Materialize {
         "marksuccessfuljobs) for merge-on-read commits to be visible")
 
     val t1 = System.currentTimeMillis()
-    probe("lineage")(acc.value.toSeq.sortBy(_._1).toDF("bucket", "rows")
+    acc.value.toSeq.sortBy(_._1).toDF("bucket", "rows")
       .withColumn("stage", lit(s"${StageTriples}_delta"))
       .withColumn("startedAtMs", lit(t0))
       .withColumn("finishedAtMs", lit(t1))
       .select("stage", "bucket", "rows", "startedAtMs", "finishedAtMs")
       .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(manifestPath(outDir)))
+      .write.mode(SaveMode.Append).parquet(manifestPath(outDir))
   }
 
   /** Copy-on-write commit: rewrite affected buckets (survivors keep
@@ -982,12 +969,12 @@ object Materialize {
     // answers this without another listing.
     val hasTombs = committed.nonEmpty
     val prior = readTriplesWithSeqOriginOpt(spark, outDir, Some(committed))
-    // the affected buckets' resolved rows feed TWO actions (the staged
-    // survivors write and the kill-horizon aggregate) — persist once
-    // instead of resolving base+delta+tombstones twice
-    val liveOpt = prior.map(
-      _.filter(col("bucket").isin(affected.toSeq: _*)).persist())
-    try {
+    Scope(spark) { scope =>
+      // the affected buckets' resolved rows feed TWO actions (the staged
+      // survivors write and the kill-horizon aggregate) — persist once
+      // instead of resolving base+delta+tombstones twice
+      val liveOpt = prior.map(p =>
+        scope.persist(p.filter(col("bucket").isin(affected.toSeq: _*))))
       val survivors = liveOpt match {
         case Some(live) =>
           val healed = if (hasDeltas) healFold(live) else live.drop("origin")
@@ -1025,7 +1012,7 @@ object Materialize {
         if (hasTombs) foldKillHorizonMs(spark, outDir, affected, committed)
         else 0L
       raiseHorizonMs(spark, outDir, math.max(killCow, killFold))
-    } finally liveOpt.foreach { l => l.unpersist(); () }
+    }
 
     commitStaged(spark, outDir, affected, committed)
     appendLineage(spark, outDir, StageTriplesUpsert, affected, t0,
@@ -1273,12 +1260,11 @@ object Materialize {
     val remainingL = (only -- doneL)
     if (remainingT.isEmpty && remainingL.isEmpty && entitiesDone) return
 
-    // ONE NER pass: the annotated sentence table feeds both the triple
-    // write and the linking join — and only when some stage needs it
-    lazy val sents = Pipeline.annotate(Pipeline.sentences(pages),
-      ChemDict.entries.flatMap(_.synonyms)).persist()
-    val needSents = remainingT.nonEmpty || remainingL.nonEmpty
-    try {
+    Scope(spark) { implicit scope =>
+      // ONE NER pass: the annotated sentence table feeds both the triple
+      // write and the linking join — and only when some stage needs it
+      lazy val sents = scope.persist(Pipeline.annotate(Pipeline.sentences(pages),
+        ChemDict.entries.flatMap(_.synonyms)))
       if (remainingT.nonEmpty) {
         val todo = sents
           .withColumn("bucket", pmod(hash(col("url")), lit(b)))
@@ -1305,6 +1291,6 @@ object Materialize {
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$StageEntities/data")
         writeEntitiesMeta(spark, outDir, dHash)
       }
-    } finally if (needSents) sents.unpersist()
+    }
   }
 }

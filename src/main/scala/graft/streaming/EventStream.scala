@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model.Page
-import graft.plans.Pipeline
+import graft.plans.{Pipeline, Scope}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -288,22 +288,22 @@ object EventStream {
         import s.implicits._
         // persist the parsed pages (same rationale as the binaryFile
         // path: the commit takes multiple actions over its input)
-        val pages = graft.sources.Warc
-          .fetchRecords(batch, maxPayload, splitBytes)
-          .select("url", "warc_ts", "html")
-          .as[(String, java.sql.Timestamp, Array[Byte])]
-          .map { case (url, ts, body) =>
-            val text = graft.functions.Html.extractText(body)
-            Page(url, ts, body, text,
-              graft.operators.TextStats.detectLang(text))
-          }.persist()
-        try {
+        Scope(s) { scope =>
+          val pages = scope.persist(graft.sources.Warc
+            .fetchRecords(batch, maxPayload, splitBytes)
+            .select("url", "warc_ts", "html")
+            .as[(String, java.sql.Timestamp, Array[Byte])]
+            .map { case (url, ts, body) =>
+              val text = graft.functions.Html.extractText(body)
+              Page(url, ts, body, text,
+                graft.operators.TextStats.detectLang(text))
+            })
           if (!pages.isEmpty) {
             graft.plans.Materialize.incrementalUpdate(
               s, pages, tableDir, buckets, mergeOnRead = true)
             ()
           }
-        } finally { pages.unpersist(); () }
+        }
       }
       .start()
   }
@@ -334,16 +334,16 @@ object EventStream {
         // dominate per-shard cost, and incrementalUpdate's commit takes
         // multiple actions over its input — without the cache each one
         // re-parses every shard
-        val pages = batch.flatMap { case (path, bytes) =>
-          graft.sources.Warc.parsePages(bytes, path, maxPayload, lenientTail)
-        }.persist()
-        try {
+        Scope(s) { scope =>
+          val pages = scope.persist(batch.flatMap { case (path, bytes) =>
+            graft.sources.Warc.parsePages(bytes, path, maxPayload, lenientTail)
+          })
           if (!pages.isEmpty) {
             graft.plans.Materialize.incrementalUpdate(
               s, pages, tableDir, buckets, mergeOnRead = true)
             ()
           }
-        } finally { pages.unpersist(); () }
+        }
       }
       .start()
   }

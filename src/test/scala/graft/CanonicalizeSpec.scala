@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** J5: min-hash blocking + connected-components vs the dictionary's
   * gold clusters (FIXTURES.md §2).
   */
-class CanonicalizeSpec extends AnyFunSuite {
+class CanonicalizeSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
 
@@ -68,6 +68,24 @@ class CanonicalizeSpec extends AnyFunSuite {
         driverEdgeThreshold = 0L).collect()
     }
     assert(e.getMessage.contains("did not converge"))
+  }
+
+  test("CC endpoint-node form fails LOUDLY on a null pair endpoint (no silent row loss)") {
+    import spark.implicits._
+    // node 1's only pair has a null partner: the endpoint-node fast path
+    // would drop that edge and, with no node join to backfill, node 1
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, null), (2L, 3L))
+      .toDF("cid_a", "cid_b")
+    val nodes = Seq(1L, 2L, 3L).toDF("cid")
+    val e = intercept[IllegalArgumentException] {
+      Canonicalize.connectedComponents(nodes, pairs,
+        nodesArePairEndpoints = true).collect()
+    }
+    assert(e.getMessage.contains("null endpoint"))
+    // the node-set form backfills node 1 as its own cluster
+    val labels = Canonicalize.connectedComponents(nodes, pairs)
+      .as[(Long, Long)].collect().toMap
+    assert(labels == Map(1L -> 1L, 2L -> 2L, 3L -> 2L))
   }
 
   test("CC converges and is idempotent (labels = min cid of component)") {

@@ -4,7 +4,7 @@ import graft.operators.Decontaminate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class DecontaminateSpec extends AnyFunSuite {
+class DecontaminateSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
 
@@ -75,14 +75,8 @@ class DecontaminateSpec extends AnyFunSuite {
     val c = docs.filter(col("doc_id") % 20 =!= 7)
     val bcast = Decontaminate.overlap(c, b, useBroadcast = true)
       .orderBy("doc_id", "bench_id").collect().toSeq
-    // the handle variant: deterministic Bloom-broadcast release after
-    // the last action (a repeated-sweep session must not rely on
-    // driver-GC timing to drop the sketch blocks)
-    val (bloomDf, release) =
-      Decontaminate.overlapWithHandle(c, b, useBroadcast = false)
-    val bloom =
-      try bloomDf.orderBy("doc_id", "bench_id").collect().toSeq
-      finally release()
+    val bloom = Decontaminate.overlap(c, b, useBroadcast = false)
+      .orderBy("doc_id", "bench_id").collect().toSeq
     assert(bcast == bloom)
     assert(bcast.nonEmpty, "sf0.001 split should contain planted contamination")
   }

@@ -4,7 +4,7 @@ import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
   private lazy val docs = spark.read
@@ -103,9 +103,8 @@ class DedupSpec extends AnyFunSuite {
   test("jaccard non-broadcast path returns identical pairs") {
     import spark.implicits._
     val bc = Dedup.jaccardPairs(docs, threshold = 0.5).as[(Long, Long)].collect().toSet
-    val (df, release) = Dedup.jaccardPairsWithHandle(docs, threshold = 0.5,
-      useBroadcast = false)
-    val nb = try df.as[(Long, Long)].collect().toSet finally release()
+    val nb = Dedup.jaccardPairs(docs, threshold = 0.5, useBroadcast = false)
+      .as[(Long, Long)].collect().toSet
     assert(bc == nb)
   }
 

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * degree stats, and the fixed-point PageRank (bit-equality against an
   * in-test BigInt reference of the same integer recurrence).
   */
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with ScopePerTest {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 

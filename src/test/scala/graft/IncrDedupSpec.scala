@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Incremental dedup against the seen-corpus band index: batch-exact
   * pairs, chunking invariance, seen-semantics survivors.
   */
-class IncrDedupSpec extends AnyFunSuite {
+class IncrDedupSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
   private lazy val docs = spark.read

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rewrite, the all-boilerplate edge, partition invariance, and the
   * zero-exchange rewrite plan.
   */
-class LinesSpec extends AnyFunSuite {
+class LinesSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
 

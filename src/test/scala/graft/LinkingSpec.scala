@@ -1,13 +1,13 @@
 package graft
 
 import graft.operators.Linking
-import graft.plans.Pipeline
+import graft.plans.{Pipeline, Scope}
 import graft.sources.{ChemDict, PageGen}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** J1/J2/A1 semantics + broadcast-vs-salted plan equivalence. */
-class LinkingSpec extends AnyFunSuite {
+class LinkingSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
   private val N = 120L
@@ -89,13 +89,11 @@ class LinkingSpec extends AnyFunSuite {
     val instrumented = annotated.map { s => acc.add(1); s }
     val nSentences = annotated.count()
     acc.reset()
-    val (attached, unpersist) = Linking.attachToMentionsWithHandle(
+    val attached = Linking.attachToMentions(
       instrumented, Linking.dictDs(spark, ChemDict.entries))
-    try {
-      attached.collect()
-      assert(acc.value == nSentences,
-        s"annotate subtree ran ${acc.value.toDouble / nSentences}x (expected 1x)")
-    } finally unpersist()
+    attached.collect()
+    assert(acc.value == nSentences,
+      s"annotate subtree ran ${acc.value.toDouble / nSentences}x (expected 1x)")
   }
 
   test("salted join produces identical rows to broadcast join") {
@@ -148,18 +146,15 @@ class LinkingSpec extends AnyFunSuite {
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val a = Linking.linkTriples(triples, annotated, ChemDict.entries)
-      val (b, unpersist) = Linking.linkTriplesSaltedFusedWithHandle(
-        annotated, ChemDict.entries, nSalts = 4)
-      try {
-        b.collect() // finalize adaptive plan
-        val plan = b.queryExecution.executedPlan.toString
-        assert(!plan.contains("BroadcastExchange") && !plan.contains("BroadcastHashJoin"),
-          s"salted-fused path must not broadcast:\n$plan")
-        val cols = a.columns.sorted.toSeq
-        val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
-        val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
-        assert(ka.sameElements(kb))
-      } finally unpersist()
+      val b = Linking.linkTriplesSaltedFused(annotated, ChemDict.entries, nSalts = 4)
+      b.collect() // finalize adaptive plan
+      val plan = b.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastExchange") && !plan.contains("BroadcastHashJoin"),
+        s"salted-fused path must not broadcast:\n$plan")
+      val cols = a.columns.sorted.toSeq
+      val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
+      val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
+      assert(ka.sameElements(kb))
     } finally conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
@@ -188,27 +183,25 @@ class LinkingSpec extends AnyFunSuite {
       // at a splitting threshold, at MaxValue (nothing heavy — everything
       // salt 0) and at 0 (everything heavy — degenerates to full salting):
       // rows must be identical in every regime
-      for (t <- Seq(thr, Long.MaxValue, 0L)) {
-        val (b, unpersist) = Linking.linkTriplesSaltedTargetedWithHandle(
-          annotated, ChemDict.entries, nSalts = 4, heavyThreshold = t)
-        try {
-          b.collect() // finalize adaptive plan
-          val bx = broadcasts(b.queryExecution.executedPlan)
-          // any broadcast in the plan must be the heavy-mention list —
-          // one string column, never dict payload. (With an EMPTY heavy
-          // set AQE's empty-relation propagation removes the join and
-          // its broadcast altogether, so only require presence when
-          // something is heavy.)
-          if (t != Long.MaxValue) assert(bx.nonEmpty, "heavy list should broadcast")
-          bx.foreach { e =>
-            assert(e.child.output.map(_.name) == Seq("heavy_mention"),
-              s"only the heavy list may broadcast, saw: ${e.child.output.map(_.name)}")
-          }
-          val cols = a.columns.sorted.toSeq
-          val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
-          val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
-          assert(ka.sameElements(kb), s"row mismatch at heavyThreshold=$t")
-        } finally unpersist()
+      for (t <- Seq(thr, Long.MaxValue, 0L)) Scope(spark) { round =>
+        val b = Linking.linkTriplesSaltedTargeted(
+          annotated, ChemDict.entries, nSalts = 4, heavyThreshold = t)(round)
+        b.collect() // finalize adaptive plan
+        val bx = broadcasts(b.queryExecution.executedPlan)
+        // any broadcast in the plan must be the heavy-mention list —
+        // one string column, never dict payload. (With an EMPTY heavy
+        // set AQE's empty-relation propagation removes the join and
+        // its broadcast altogether, so only require presence when
+        // something is heavy.)
+        if (t != Long.MaxValue) assert(bx.nonEmpty, "heavy list should broadcast")
+        bx.foreach { e =>
+          assert(e.child.output.map(_.name) == Seq("heavy_mention"),
+            s"only the heavy list may broadcast, saw: ${e.child.output.map(_.name)}")
+        }
+        val cols = a.columns.sorted.toSeq
+        val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
+        val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
+        assert(ka.sameElements(kb), s"row mismatch at heavyThreshold=$t")
       }
     } finally conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }

@@ -11,7 +11,7 @@ import java.nio.file.Files
   * pruning away the heavy binary/text columns, predicate pushdown,
   * broadcast join selection).
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
 
@@ -37,13 +37,13 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q2_join plans a broadcast hash join") {
-    val df = SparkEntry.queries("q2_join")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries(scope)("q2_join")(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"no broadcast join:\n$plan")
   }
 
   test("q1_agg uses partial aggregation (map-side combine)") {
-    val df = SparkEntry.queries("q1_agg")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries(scope)("q1_agg")(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate"), s"no hash agg:\n$plan")
     assert("HashAggregate".r.findAllIn(plan).size >= 2, "no partial agg stage")
@@ -170,7 +170,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("relational queries stay inside whole-stage codegen") {
-    val df = SparkEntry.queries("q8_filter_project")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries(scope)("q8_filter_project")(spark, "/root/testdata/sf0.001")
     df.collect() // finalize the adaptive plan (codegen spans appear in the final plan)
     val plan = df.queryExecution.executedPlan.toString
     // "*(n)" is the WholeStageCodegen marker in the compact plan string

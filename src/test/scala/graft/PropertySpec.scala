@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Uses scalacheck's engine directly (no scalatest-plus bridge in the
   * offline cache).
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
   private lazy val gaz = new ChemGazetteer(ChemDict.entries.flatMap(_.synonyms))

@@ -1,11 +1,12 @@
 package graft
 
 import graft.operators.Ranking
+import graft.plans.Scope
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed exact global ranking + CCNet perplexity buckets. */
-class RankingSpec extends AnyFunSuite {
+class RankingSpec extends AnyFunSuite with ScopePerTest {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
@@ -65,22 +66,14 @@ class RankingSpec extends AnyFunSuite {
     assert(!plan.contains("Window"), s"global rank must not use a window:\n$plan")
   }
 
-  test("unpersist handle releases the range-partitioned cache") {
+  test("scope close releases the range-partitioned cache") {
     val df = scored(50)
-    val (r, release) = Ranking.globalRankWithHandle(
-      df, Seq(col("avg_lp").desc, col("doc_id").asc))
-    assert(r.count() === 50)
-    release()
-  }
-
-  test("perplexityBucketsWithHandle matches the handle-free variant") {
-    val df = scored(80)
-    val expect = Ranking.perplexityBuckets(df)
-      .select("doc_id", "rank", "bucket").as[(Long, Long, Int)].collect().toSet
-    val (b, release) = Ranking.perplexityBucketsWithHandle(df)
-    try {
-      val got = b.select("doc_id", "rank", "bucket").as[(Long, Long, Int)].collect().toSet
-      assert(got === expect)
-    } finally release()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Scope(spark) { s =>
+      val r = Ranking.globalRank(df, Seq(col("avg_lp").desc, col("doc_id").asc))(s)
+      assert(r.count() === 50)
+      assert(spark.sparkContext.getPersistentRDDs.keySet !== before)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * released artifact, threshold dials, partition invariance, and the
   * zero-exchange plan shape of the fused per-row pass.
   */
-class ReleaseSpec extends AnyFunSuite {
+class ReleaseSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
 
@@ -51,9 +51,8 @@ class ReleaseSpec extends AnyFunSuite {
     df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
   test("fate ledger: every stage exercised, first-kill priority") {
-    val (fates, release) = Release.ledgerWithHandle(corpus())
+    val fates = Release.ledger(corpus())
     val m = fatesMap(fates)
-    release()
     assert(m == Map(
       1L -> "kept", 2L -> "lang", 3L -> "quality", 4L -> "quality",
       5L -> "repetition", 6L -> "kept", 8L -> "exact_dup",
@@ -64,16 +63,14 @@ class ReleaseSpec extends AnyFunSuite {
   test("redaction happens before dedup: docs differing only in PII are duplicates") {
     // 6 and 8 share a body and differ only in the planted email — raw
     // texts are distinct, redacted texts identical; min id survives
-    val (fates, release) = Release.ledgerWithHandle(corpus())
+    val fates = Release.ledger(corpus())
     val m = fatesMap(fates)
-    release()
     assert(m(6L) == "kept" && m(8L) == "exact_dup")
   }
 
   test("released corpus = kept rows with the redacted text, raw column gone") {
-    val (rel, release) = Release.releasedWithHandle(corpus())
+    val rel = Release.released(corpus())
     val rows = rel.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    release()
     assert(rows.keySet == Set(1L, 6L, 9L))
     assert(rows(6L) == en("xd6") + " contact <EMAIL> now")
     assert(rows(1L) == en("alpha1"))
@@ -81,28 +78,24 @@ class ReleaseSpec extends AnyFunSuite {
   }
 
   test("stats reports the full attrition") {
-    val (fates, release) = Release.ledgerWithHandle(corpus())
+    val fates = Release.ledger(corpus())
     val s = Release.stats(fates).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    release()
     assert(s == Map("kept" -> 3L, "lang" -> 2L, "quality" -> 2L,
       "repetition" -> 1L, "exact_dup" -> 1L, "near_dup" -> 1L,
       "contaminated" -> 1L, "bench" -> 1L))
   }
 
   test("threshold dials: a stricter near-dup bar keeps the J=0.91 pair") {
-    val (fates, release) = Release.ledgerWithHandle(corpus(),
+    val fates = Release.ledger(corpus(),
       cfg = Release.Config(nearThreshold = 0.99))
     val m = fatesMap(fates)
-    release()
     assert(m(10L) == "kept")
   }
 
   test("ledger is partition-invariant") {
-    val (f1, r1) = Release.ledgerWithHandle(corpus().repartition(7))
-    val m1 = fatesMap(f1); r1()
-    val (f2, r2) = Release.ledgerWithHandle(corpus().repartition(2))
-    val m2 = fatesMap(f2); r2()
+    val m1 = fatesMap(Release.ledger(corpus().repartition(7)))
+    val m2 = fatesMap(Release.ledger(corpus().repartition(2)))
     assert(m1 == m2)
   }
 
@@ -122,9 +115,8 @@ class ReleaseSpec extends AnyFunSuite {
       110L -> en("xx110x"), // within-delta exact pair: min kept
       111L -> en("xx110x") // exact_dup (within delta)
     ).toDF("doc_id", "text")
-    val (fates, release) = Release.incrementalLedgerWithHandle(delta, idx)
+    val fates = Release.incrementalLedger(delta, idx)
     val m = fatesMap(fates)
-    release()
     assert(m == Map(
       101L -> "exact_dup", 102L -> "exact_dup", 103L -> "near_dup",
       104L -> "kept", 105L -> "lang", 106L -> "contaminated",
@@ -139,9 +131,8 @@ class ReleaseSpec extends AnyFunSuite {
     // though its closest seen match never shipped
     val idx = Release.buildIndex(corpus())
     val delta = Seq(201L -> en("nd9", "tail four")).toDF("doc_id", "text")
-    val (fates, release) = Release.incrementalLedgerWithHandle(delta, idx)
+    val fates = Release.incrementalLedger(delta, idx)
     val m = fatesMap(fates)
-    release()
     assert(m(201L) == "near_dup")
   }
 

@@ -1,0 +1,116 @@
+package graft
+
+import graft.plans.Scope
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
+
+/** The one scoped-materialization mechanism: release order, close
+  * semantics, and the one-job leaf.
+  */
+class ScopeSpec extends AnyFunSuite {
+  private lazy val spark = SparkSpec.spark
+
+  private def frame(tag: Int): DataFrame =
+    spark.range(0, 200, 1, 4).selectExpr("id", s"id * $tag as v")
+
+  private def cached(df: DataFrame): Boolean =
+    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+
+  /** Persist `df` into `s`, materialize it, return its cached RDD id. */
+  private def persistedRdd(s: Scope, df: DataFrame): Int = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    s.persist(df).count()
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"expected one new cached RDD, got $added")
+    added.head
+  }
+
+  test("close releases in reverse registration order, exactly once") {
+    val unpersisted = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = {
+        unpersisted.add(e.rddId); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val s = new Scope(spark)
+      val ids = Seq(1, 2, 3).map(t => persistedRdd(s, frame(t)))
+      s.close()
+      eventually(timeout(10.seconds)) {
+        import scala.jdk.CollectionConverters._
+        assert(unpersisted.asScala.toSeq.filter(ids.contains) == ids.reverse)
+      }
+      s.close() // idempotent: nothing released twice, no error
+      Thread.sleep(200)
+      import scala.jdk.CollectionConverters._
+      assert(unpersisted.asScala.count(ids.contains) == ids.size)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("registering on a closed scope fails") {
+    val s = new Scope(spark)
+    s.close()
+    intercept[IllegalArgumentException](s.persist(frame(4)))
+  }
+
+  test("release happens when the body throws") {
+    val df = frame(5)
+    intercept[IllegalStateException] {
+      Scope(spark) { s =>
+        s.persist(df).count()
+        assert(cached(df))
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(!cached(df))
+  }
+
+  test("leaf materializes with exactly one job and plans over a LogicalRDD") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    Scope(spark) { s =>
+      val df = frame(6).filter("id % 3 = 0")
+      spark.sparkContext.addSparkListener(listener)
+      val (leaf, n) = try s.leaf(df) finally {
+        Thread.sleep(200) // let the listener bus drain
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(jobs.get == 1)
+      assert(n == 67)
+      assert(cached(df))
+      assert(leaf.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+      assert(leaf.count() == n)
+    }
+  }
+
+  test("an inner scope releases before its outer scope") {
+    val outerDf = frame(7)
+    val innerDf = frame(8)
+    Scope(spark) { outer =>
+      outer.persist(outerDf).count()
+      Scope(spark) { inner =>
+        inner.persist(innerDf).count()
+        assert(cached(outerDf) && cached(innerDf))
+      }
+      assert(cached(outerDf) && !cached(innerDf))
+    }
+    assert(!cached(outerDf))
+  }
+
+  test("broadcasts are destroyed on close") {
+    val s = new Scope(spark)
+    val b = s.broadcast(Set(1, 2, 3))
+    assert(spark.sparkContext.parallelize(1 to 4).filter(b.value.contains).count() == 3)
+    s.close()
+    intercept[org.apache.spark.SparkException](b.value)
+  }
+}

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a driver-side brute force (same fold order), rank semantics,
   * partition invariance, and the broadcast-only query plan.
   */
-class SearchSpec extends AnyFunSuite {
+class SearchSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
 
@@ -122,8 +122,7 @@ class SearchSpec extends AnyFunSuite {
       case e: ShuffleExchangeLike => e +: p.children.flatMap(exchanges)
       case _ => p.children.flatMap(exchanges)
     }
-    val (q, done) = Search.bm25TopKWithHandle(
-      corpus(), Seq(1 -> Seq("needle", "beta")), k = 5)
+    val q = Search.bm25TopK(corpus(), Seq(1 -> Seq("needle", "beta")), k = 5)
     q.count()
     val plan = q.queryExecution.executedPlan
     assert(plan.toString.contains("BroadcastHashJoin"),
@@ -157,6 +156,5 @@ class SearchSpec extends AnyFunSuite {
         s"broadcast carries $rows rows — idf must be bounded by the " +
           s"query term set:\n$plan")
     }
-    done()
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** SemDeDup: cluster assignment, within-cluster pair semantics, the
   * keep-lowest-centroid-cosine survivor rule, and the one-exchange plan.
   */
-class SemDedupSpec extends AnyFunSuite {
+class SemDedupSpec extends AnyFunSuite with ScopePerTest {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ingest adapter vs the generator's page table, and the file-level
   * parallelism contract.
   */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with ScopePerTest {
   private lazy val spark = SparkSpec.spark
 
   private def gzMembers(recs: Array[Byte]*): Array[Byte] = {
@@ -338,21 +338,17 @@ class WarcSpec extends AnyFunSuite {
     // the real pipeline: released (redacted) corpus -> WET shards
     val fx = SparkEntry.releaseFixture(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
-    val (released, rel) = graft.operators.Release.releasedWithHandle(fx)
-    val docs = released.select(
+    val docs = scope.persist(graft.operators.Release.released(fx).select(
       concat(lit("https://wet.example/doc/"),
         lpad(col("doc_id").cast("string"), 8, "0")).as("url"),
       (lit(1700000000L) + col("doc_id")).cast("timestamp").as("warc_ts"),
-      col("clean_text").as("text")).persist()
-    val exp = try {
-      val n = Warc.writeWet(docs.repartition(3), dir)
-      assert(n === 3)
-      docs.as[(String, java.sql.Timestamp, String)].collect().sortBy(_._1).toSeq
-    } finally rel()
+      col("clean_text").as("text")))
+    val n = Warc.writeWet(docs.repartition(3), dir)
+    assert(n === 3)
+    val exp = docs.as[(String, java.sql.Timestamp, String)].collect().sortBy(_._1).toSeq
     val got = Warc.readWet(spark, s"$dir/*.warc.wet.gz")
       .as[(String, java.sql.Timestamp, String)].collect().sortBy(_._1).toSeq
     assert(got === exp)
-    docs.unpersist()
     // a WET shard holds warcinfo + conversion records only: the
     // response reader finds nothing in it
     assert(Warc.read(spark, s"$dir/*.warc.wet.gz").count() === 0)
