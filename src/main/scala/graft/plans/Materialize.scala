@@ -3,6 +3,7 @@ package graft.plans
 import graft.model.{Page, Sentence, Triple}
 import graft.operators.{Canonicalize, Linking}
 import graft.sources.ChemDict
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,56 +12,63 @@ import org.apache.spark.sql.functions._
   * boundaries (north rule).
   *
   * No Iceberg runtime jar exists in this sandbox (documented deviation,
-  * BASELINE.md): the layout is Iceberg-like partitioned Parquet plus
-  * self-written manifest/lineage tables:
+  * BASELINE.md), so the table format reproduces Iceberg's COMMIT MODEL
+  * instead of its jar — immutable data directories plus an append-only
+  * snapshot log that names the live ones:
   *
-  *   out/
-  *     triples/data/bucket=[b]/part-....parquet  (hash-partitioned by url)
-  *     triples/manifest/part-....parquet         (stage,bucket,rows,t0,t1)
-  *     linked/data/, entities/data/              (graph tables)
+  *   out/triples/
+  *     data/batch=<id>/bucket=<b>/part-*.parquet      base rows (seq = crawl version)
+  *     delta/batch=<id>/bucket=<b>/part-*.parquet     merge-on-read rows
+  *     versions/batch=<id>/bucket=<b>/part-*.parquet  per-url versions
+  *     snapshots/v<N>                                 the commit log
+  *     manifest/part-*.parquet                        lineage (stage,bucket,rows,t0,t1)
+  *     table_meta.json                                bucket count + dict hash
+  *   out/linked/{data,snapshots,manifest}/, out/entities/data/
+  *
+  * Every writer — bootstrap (`runResumable`, `materializeGraph`), the
+  * copy-on-write and merge-on-read `incrementalUpdate`, and `compact` —
+  * writes its files under a FRESH `batch=<id>` name, then publishes
+  * them in [[commit]]: one temp-file + rename to `v<N+1>`. A crash
+  * anywhere before the rename leaves only unnamed (invisible) dirs;
+  * after it the write is complete. Readers and resume decisions read
+  * only the latest snapshot, so there is exactly one crash rule.
   *
   * Resume semantics = the reference's `processed` flag + file-exists
   * skip (cprex/corpus/corpus.py:199-214, chemrxiv.py:126-127) lifted to
-  * partition granularity: a completed bucket is recorded in the
-  * manifest; on restart, pages whose bucket is already manifested are
-  * skipped (an anti-join against the manifest — cheap: manifest has one
-  * row per bucket, broadcast).
+  * partition granularity: the snapshot records the bootstrap-completed
+  * buckets, and a restart skips pages whose bucket is already done.
   *
   * Scale note: bucket count B is the resume granularity; at 10^12 docs
   * you'd set B ~ 10^5 so one bucket ≈ 10^7 docs. Writes stream through
-  * — no collect; lineage rows come from the same pass's per-bucket
-  * counts (one extra narrow aggregation per stage).
+  * — no collect; lineage row counts come from an accumulator filled by
+  * the write itself.
   */
 object Materialize {
 
   val StageTriples = "triples"
+  val StageLinked = "linked"
+  val StageEntities = "entities"
 
   def withBucket(df: DataFrame, buckets: Int): DataFrame =
     df.withColumn("bucket", pmod(hash(col("url")), lit(buckets)))
 
   def manifestPath(outDir: String): String = s"$outDir/$StageTriples/manifest"
   def dataPath(outDir: String): String = s"$outDir/$StageTriples/data"
+  def deltaPath(outDir: String): String = s"$outDir/$StageTriples/delta"
+  def versionsPath(outDir: String): String = s"$outDir/$StageTriples/versions"
   def metaPath(outDir: String): String = s"$outDir/$StageTriples/table_meta.json"
 
-  /** Record the table's bucket count B and the dictionary content hash
-    * next to the manifest (Iceberg table-metadata analog). The
-    * bucket-pruning predicate in `readTriplesForUrl` MUST use the same
-    * B the table was written with — a caller-supplied mismatch would
-    * compute pmod(hash(url), B') pointing at the wrong partition and
-    * silently return zero rows. The dict hash guards resume
-    * consistency: triples (gazetteer) and linked (cid join) both
-    * depend on the dictionary, so resuming manifested buckets under a
-    * DIFFERENT dictionary would silently mix annotation vintages.
-    */
-  private def writeMeta(spark: SparkSession, outDir: String, buckets: Int,
-      dictHash: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(metaPath(outDir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) {
-      val out = fs.create(path, true)
-      out.write(s"""{"buckets":$buckets,"dict_hash":"$dictHash"}""".getBytes("UTF-8"))
-      out.close()
-    }
+  private def fsOf(spark: SparkSession, p: String): FileSystem =
+    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  private def writeText(fs: FileSystem, p: Path, s: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(s.getBytes("UTF-8")) finally out.close()
   }
 
   /** The bucket count every write/resume/read path must agree on: once
@@ -74,63 +82,294 @@ object Materialize {
     * First call records the requested B + current dict hash.
     */
   private def resolveBuckets(spark: SparkSession, outDir: String, requested: Int): Int = {
-    val path = new org.apache.hadoop.fs.Path(metaPath(outDir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val path = new Path(metaPath(outDir))
+    val fs = fsOf(spark, metaPath(outDir))
     val dh = dictHash(ChemDict.entries)
     if (fs.exists(path)) {
-      val in = fs.open(path)
-      val meta = scala.io.Source.fromInputStream(in).mkString
-      in.close()
-      """"dict_hash"\s*:\s*"([0-9a-f]+)"""".r.findFirstMatchIn(meta).foreach { m =>
+      """"dict_hash"\s*:\s*"([0-9a-f]+)"""".r.findFirstMatchIn(readText(fs, path)).foreach { m =>
         require(m.group(1) == dh,
           s"dictionary changed since this table was written ($outDir): " +
             "completed buckets hold old-dict annotations — materialize to a fresh outDir")
       }
       tableBuckets(spark, outDir)
-    } else { writeMeta(spark, outDir, requested, dh); requested }
+    } else {
+      writeText(fs, path, s"""{"buckets":$requested,"dict_hash":"$dh"}""")
+      requested
+    }
   }
 
   /** Bucket count the table was written with (from table_meta.json). */
   def tableBuckets(spark: SparkSession, outDir: String): Int = {
-    val path = new org.apache.hadoop.fs.Path(metaPath(outDir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val path = new Path(metaPath(outDir))
+    val fs = fsOf(spark, metaPath(outDir))
     require(fs.exists(path), s"no table metadata at ${metaPath(outDir)}")
-    val in = fs.open(path)
-    val s = scala.io.Source.fromInputStream(in).mkString
-    in.close()
+    val s = readText(fs, path)
     """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(s) match {
       case Some(m) => m.group(1).toInt
       case None => sys.error(s"malformed table metadata: $s")
     }
   }
 
-  /** Buckets already completed in a previous run (empty on first run). */
-  def completedBuckets(spark: SparkSession, outDir: String): Set[Int] =
-    completedBucketsAt(spark, manifestPath(outDir), StageTriples)
+  // ------------------------------------------------------------------
+  // snapshot log
+  // ------------------------------------------------------------------
 
-  /** The manifest is an append-only lineage LOG shared by every job
-    * that touches the stage (bootstrap, incremental upserts, deltas,
-    * compactions), so resume decisions must filter to the BOOTSTRAP
-    * stage rows: an incremental update landing in a never-bootstrapped
-    * bucket records `triples_upsert`/`triples_delta` lineage for it,
-    * and counting that as "bootstrapped" would make a resumed bootstrap
-    * skip the bucket forever — silent loss of every base-crawl page
-    * hashing there.
+  /** Entry kinds: base rows, merge-on-read rows, merge-on-read versions
+    * (tombstones: a row is live iff its seq is not below the newest
+    * tombstone of its url) and consolidated versions (kill nothing —
+    * folded rows carry their version as seq).
     */
-  private def completedBucketsAt(spark: SparkSession, manifest: String,
-      stage: String): Set[Int] = {
-    val path = new org.apache.hadoop.fs.Path(manifest)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Set.empty
-    else spark.read.parquet(manifest)
-      .filter(col("stage") === stage)
-      .select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
+  private[graft] val Data = "data"
+  private[graft] val Delta = "delta"
+  private[graft] val Tomb = "tomb"
+  private[graft] val VBase = "vbase"
+
+  private def rootOf(kind: String): String =
+    if (kind == Tomb || kind == VBase) "versions" else kind
+
+  /** One live bucket directory: `<root of kind>/batch=<id>/bucket=<bucket>`. */
+  private[graft] final case class Entry(kind: String, id: String, bucket: Int)
+
+  /** One table state. Bootstrap ADDS entries (a bucket may hold the rows
+    * of several writes — e.g. an upsert into a never-bootstrapped bucket
+    * before the bootstrap resumes), copy-on-write and compact REPLACE a
+    * bucket's whole entry set. `done` = bootstrap-completed buckets;
+    * `horizonMs` = the time-travel retention floor.
+    */
+  private[graft] final case class Snapshot(version: Long, entries: Set[Entry],
+      done: Set[Int], horizonMs: Long, schemas: Map[String, String]) {
+    def restrict(buckets: Set[Int]): Snapshot =
+      copy(entries = entries.filter(e => buckets(e.bucket)))
+    def of(kinds: String*): Set[Entry] = entries.filter(e => kinds.contains(e.kind))
+    def render: String =
+      (Seq(s"horizon $horizonMs", ("done" +: done.toSeq.sorted.map(_.toString)).mkString(" ")) ++
+        schemas.toSeq.sorted.map { case (root, json) => s"schema $root $json" } ++
+        entries.toSeq.sortBy(e => (e.kind, e.id, e.bucket))
+          .map(e => s"${e.kind} ${e.id} ${e.bucket}")).mkString("\n")
   }
 
+  private val Empty = Snapshot(0L, Set.empty, Set.empty, 0L, Map.empty)
+
+  private val SnapshotName = """v(\d+)""".r
+
+  private def parseSnapshot(version: Long, text: String): Snapshot =
+    text.split("\n").map(_.split(" ").toList).foldLeft(Empty.copy(version = version)) {
+      case (s, "horizon" :: h :: Nil) => s.copy(horizonMs = h.toLong)
+      case (s, "schema" :: root :: json) => s.copy(schemas = s.schemas + (root -> json.mkString(" ")))
+      case (s, "done" :: bs) => s.copy(done = bs.map(_.toInt).toSet)
+      case (s, k :: id :: b :: Nil) => s.copy(entries = s.entries + Entry(k, id, b.toInt))
+      case (_, l) => sys.error(s"malformed snapshot v$version line: ${l.mkString(" ")}")
+    }
+
+  /** The latest committed state of a stage dir (empty before the first
+    * commit). A stage that holds data but no snapshot log was written by
+    * the pre-snapshot table format, whose crash states this reader cannot
+    * interpret — it fails loudly rather than reading as empty.
+    */
+  private[graft] def latestSnapshot(spark: SparkSession, stageDir: String): Snapshot = {
+    val fs = fsOf(spark, stageDir)
+    val dir = new Path(s"$stageDir/snapshots")
+    if (!fs.exists(dir)) {
+      require(!Seq("data", "delta", "versions").exists(r => fs.exists(new Path(s"$stageDir/$r"))),
+        s"$stageDir holds data but no snapshots/ — a table written before the " +
+          "snapshot-log format; re-materialize it into a fresh outDir")
+      Empty
+    } else {
+      val vs = fs.listStatus(dir).map(_.getPath.getName).collect {
+        case SnapshotName(n) => n.toLong
+      }
+      if (vs.isEmpty) Empty
+      else parseSnapshot(vs.max, readText(fs, new Path(dir, s"v${vs.max}")))
+    }
+  }
+
+  /** Writer entry: the latest snapshot, with the log dir created BEFORE
+    * the first data write so a crashed first commit can never look like
+    * a pre-snapshot table.
+    */
+  private def openStage(spark: SparkSession, stageDir: String): Snapshot = {
+    val snap = latestSnapshot(spark, stageDir)
+    val fs = fsOf(spark, stageDir)
+    val dir = new Path(s"$stageDir/snapshots")
+    if (!fs.exists(dir)) fs.mkdirs(dir)
+    snap
+  }
+
+  private def freshId(): String =
+    f"c${System.currentTimeMillis()}%x${java.util.concurrent.ThreadLocalRandom.current().nextLong()}%016x"
+
+  /** THE commit point of every write. Publishes `read` minus `remove`
+    * plus the `written` entries (and their schemas, the `done` buckets
+    * and the raised horizon) as `v<N+1>` with one temp-file + rename —
+    * HDFS and this build's local file system refuse a rename onto an
+    * existing file; the existence check narrows the race on file systems
+    * that would overwrite. A writer that loses the race re-reads the
+    * latest snapshot and retries only if everything it replaces is still
+    * live — so a compact racing a committing stream never drops the
+    * stream's new batch, and never folds state someone else already
+    * replaced. Then deletes what this commit superseded and every
+    * snapshot file before the previous one.
+    */
+  private def commit(spark: SparkSession, stageDir: String, read: Snapshot,
+      written: Seq[Written], remove: Set[Entry] = Set.empty,
+      done: Set[Int] = Set.empty, horizonMs: Long = 0L): Snapshot = {
+    val fs = fsOf(spark, stageDir)
+    val dir = new Path(s"$stageDir/snapshots")
+    @scala.annotation.tailrec
+    def attempt(cur: Snapshot): Snapshot = {
+      require(remove.subsetOf(cur.entries) && (done & cur.done).isEmpty,
+        s"a concurrent commit to $stageDir replaced state this write " +
+          "folded or bootstrapped — rerun it")
+      val next = Snapshot(cur.version + 1, cur.entries -- remove ++ written.flatMap(_.entries),
+        cur.done ++ done, math.max(cur.horizonMs, horizonMs),
+        cur.schemas ++ written.map(w => rootOf(w.kind) -> w.schema))
+      val tmp = new Path(dir, s".pending-${freshId()}")
+      writeText(fs, tmp, next.render)
+      val v = new Path(dir, s"v${next.version}")
+      if (!fs.exists(v) && fs.rename(tmp, v)) next
+      else { fs.delete(tmp, false); attempt(latestSnapshot(spark, stageDir)) }
+    }
+    val next = attempt(read)
+    (remove -- next.entries).groupBy(e => (rootOf(e.kind), e.id)).foreach {
+      case ((root, id), gone) =>
+        val idDir = new Path(s"$stageDir/$root/batch=$id")
+        if (next.entries.exists(e => rootOf(e.kind) == root && e.id == id))
+          gone.foreach(e => fs.delete(new Path(idDir, s"bucket=${e.bucket}"), true))
+        else fs.delete(idDir, true)
+    }
+    fs.listStatus(dir).map(_.getPath).foreach { p =>
+      p.getName match {
+        case SnapshotName(n) if n.toLong < next.version - 1 => fs.delete(p, false)
+        case _ =>
+      }
+    }
+    next
+  }
+
+  /** Unnamed-dir GC waits at least this long after a dir's last
+    * modification (default 1h): a writer whose files are written but
+    * whose snapshot is not yet published looks exactly like a crashed
+    * one, and deleting its dirs would make its commit name missing
+    * files. Any grace comfortably above the longest write closes the
+    * race — the same contract as Iceberg's orphan-file retention.
+    */
+  val DefaultGcGraceMs: Long = 60L * 60 * 1000
+
+  /** Delete the dirs and snapshot temp files no snapshot names that are
+    * older than [[DefaultGcGraceMs]] — what crashed writers leave behind.
+    */
+  private def gcOrphans(spark: SparkSession, stageDir: String, snap: Snapshot): Unit = {
+    val fs = fsOf(spark, stageDir)
+    val cutoff = System.currentTimeMillis() - DefaultGcGraceMs
+    def list(p: Path) = if (fs.exists(p)) fs.listStatus(p).toSeq else Nil
+    for (root <- Seq("data", "delta", "versions")) {
+      val live = snap.entries.filter(e => rootOf(e.kind) == root)
+        .groupBy(_.id).map { case (id, es) => s"batch=$id" -> es.map(e => s"bucket=${e.bucket}") }
+      list(new Path(s"$stageDir/$root")).foreach { d =>
+        val unnamed = live.get(d.getPath.getName) match {
+          case None => Seq(d)
+          case Some(buckets) => list(d.getPath).filter(b => b.isDirectory && !buckets(b.getPath.getName))
+        }
+        unnamed.filter(_.getModificationTime < cutoff).foreach(u => fs.delete(u.getPath, true))
+      }
+    }
+    list(new Path(s"$stageDir/snapshots"))
+      .filter(s => s.getPath.getName.startsWith(".pending-") && s.getModificationTime < cutoff)
+      .foreach(s => fs.delete(s.getPath, false))
+  }
+
+  /** Per-bucket row-count accumulator: commit entries and lineage counts
+    * collected DURING a write instead of a read-back job.
+    */
+  private class BucketCountAcc
+      extends org.apache.spark.util.AccumulatorV2[Int, Map[Int, Long]] {
+    private val m = scala.collection.mutable.Map.empty[Int, Long]
+    def isZero: Boolean = m.isEmpty
+    def copy(): BucketCountAcc = {
+      val c = new BucketCountAcc; c.m ++= m; c
+    }
+    def reset(): Unit = m.clear()
+    def add(v: Int): Unit = m(v) = m.getOrElse(v, 0L) + 1
+    def merge(o: org.apache.spark.util.AccumulatorV2[Int, Map[Int, Long]]): Unit =
+      o.value.foreach { case (k, n) => m(k) = m.getOrElse(k, 0L) + n }
+    def value: Map[Int, Long] = m.toMap
+  }
+
+  /** One write's result: its snapshot entries (the buckets it wrote
+    * rows into), rows per bucket, and its data schema — recorded in the
+    * snapshot so readers skip the parquet schema-inference job.
+    */
+  private final case class Written(kind: String, id: String, counts: Map[Int, Long],
+      schema: String) {
+    def entries: Set[Entry] = counts.keySet.map(Entry(kind, id, _))
+  }
+
+  /** Write `df` bucket-partitioned under the fresh `<root>/batch=<id>`,
+    * counting rows per bucket DURING the write (write actions apply each
+    * successful task's accumulator updates exactly once). No success
+    * marker: visibility is the snapshot commit.
+    */
+  private def write(spark: SparkSession, df: DataFrame, stageDir: String,
+      kind: String, id: String): Written = {
+    val acc = new BucketCountAcc
+    spark.sparkContext.register(acc, s"rows:$kind")
+    val counted = udf((b: Int) => { acc.add(b); b }).asNondeterministic()
+    df.withColumn("bucket", counted(col("bucket").cast("int")))
+      .write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .partitionBy("bucket").parquet(s"$stageDir/${rootOf(kind)}/batch=$id")
+    Written(kind, id, acc.value,
+      org.apache.spark.sql.types.StructType(df.schema.filterNot(_.name == "bucket")).json)
+  }
+
+  /** Post-commit lineage append: one row per bucket. The commit has
+    * already succeeded — lineage is a log, not the commit record.
+    */
+  private def appendLineage(spark: SparkSession, stageDir: String, stage: String,
+      rows: Map[Int, Long], t0: Long): Unit = if (rows.nonEmpty) {
+    import spark.implicits._
+    rows.toSeq.sorted.toDF("bucket", "rows")
+      .withColumn("stage", lit(stage))
+      .withColumn("startedAtMs", lit(t0))
+      .withColumn("finishedAtMs", lit(System.currentTimeMillis()))
+      .select("stage", "bucket", "rows", "startedAtMs", "finishedAtMs")
+      .coalesce(1)
+      .write.mode(SaveMode.Append)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(s"$stageDir/manifest")
+  }
+
+  /** The rows of the snapshot's `kinds` entries (all under one root):
+    * ONE read of the root with the recorded schema, pruned to the named
+    * (batch, bucket) dirs by partition filters — never one path per dir
+    * (above 32 paths every read launches a listing job).
+    */
+  private def readEntries(spark: SparkSession, stageDir: String, snap: Snapshot,
+      kinds: String*): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructType}
+    val es = snap.of(kinds: _*)
+    val root = rootOf(kinds.head)
+    if (es.isEmpty) None
+    else Some(spark.read
+      .schema(DataType.fromJson(snap.schemas(root)).asInstanceOf[StructType]
+        .add("batch", StringType).add("bucket", IntegerType))
+      .parquet(s"$stageDir/$root")
+      .filter(col("bucket").isin(es.map(_.bucket).toSeq.sorted: _*) &&
+        concat_ws("/", col("batch"), col("bucket").cast("string"))
+          .isin(es.map(e => s"${e.id}/${e.bucket}").toSeq.sorted: _*))
+      .drop("batch"))
+  }
+
+  // ------------------------------------------------------------------
+  // bootstrap
+  // ------------------------------------------------------------------
+
+  /** Buckets already completed in a previous run (empty on first run). */
+  def completedBuckets(spark: SparkSession, outDir: String): Set[Int] =
+    latestSnapshot(spark, s"$outDir/$StageTriples").done
+
   /** Run the triple-extraction pipeline over `pages`, materializing
-    * results partitioned by bucket, skipping buckets already in the
-    * manifest. Returns the number of buckets processed this run.
+    * results partitioned by bucket, skipping buckets already completed.
+    * Returns the number of buckets processed this run.
     */
   def runResumable(
       spark: SparkSession,
@@ -140,9 +379,9 @@ object Materialize {
       onlyBuckets: Option[Set[Int]] = None // test hook: simulate partial run
   ): Int = {
     val b = resolveBuckets(spark, outDir, buckets)
-    val done = completedBuckets(spark, outDir)
-
-    val attempted = onlyBuckets.getOrElse((0 until b).toSet) -- done
+    val stageDir = s"$outDir/$StageTriples"
+    val snap = openStage(spark, stageDir)
+    val attempted = onlyBuckets.getOrElse((0 until b).toSet) -- snap.done
     if (attempted.isEmpty) return 0 // true no-op: no job submitted
 
     // resume filter: drop pages of completed buckets BEFORE any work
@@ -153,59 +392,29 @@ object Materialize {
 
     // bootstrap rows carry an explicit seq=0 (crawl-version epoch): every
     // triples data file then has the SAME schema as incrementally-written
-    // ones. Without it, a partial fold leaves the table with MIXED
-    // schemas (some files with seq, some without) and non-merged parquet
-    // schema inference may pick a no-seq file — zeroing every row's
-    // version and making post-snapshot rows visible to time travel.
-    appendBucketedWithManifest(spark,
-      Pipeline.run(remaining).toDF().withColumn("seq", lit(0L)), b,
-      s"$outDir/$StageTriples", StageTriples, attempted)
+    // ones
+    bootstrap(spark, stageDir, StageTriples, snap,
+      Pipeline.run(remaining).toDF().withColumn("seq", lit(0L)), b, attempted)
   }
 
-  /** Append stage rows bucketed by url-hash, then record lineage rows
-    * for every ATTEMPTED bucket — including row-count-0 buckets, which
-    * have no data directory but must still be manifested as complete or
-    * a resume would retry them forever. The lineage pass selects ONLY
-    * the `bucket` partition column — the scan reads zero data columns
-    * (values come from directory names, row counts from parquet
-    * footers), so it is metadata-cost, not a second pass over the data.
+  /** Write stage rows bucketed by url-hash under a fresh dir, commit them
+    * with the attempted buckets marked done — including row-count-0
+    * buckets, which have no data directory but are complete — then
+    * append their lineage rows.
     */
-  private def appendBucketedWithManifest(
-      spark: SparkSession,
-      rows: DataFrame,
-      buckets: Int,
-      stageDir: String,
-      stage: String,
-      attempted: Set[Int]
-  ): Int = {
-    import spark.implicits._
+  private def bootstrap(spark: SparkSession, stageDir: String, stage: String,
+      snap: Snapshot, rows: DataFrame, buckets: Int, attempted: Set[Int]): Int = {
     val t0 = System.currentTimeMillis()
-    withBucket(rows, buckets).write.mode(SaveMode.Append)
-      .partitionBy("bucket")
-      .parquet(s"$stageDir/data")
-
-    val t1 = System.currentTimeMillis()
-    // an all-empty append leaves no readable parquet under data/ — the
-    // manifest must still record the attempted buckets (rows=0)
-    val counts =
-      try spark.read.parquet(s"$stageDir/data")
-        .select(col("bucket").cast("int").as("bucket"))
-        .filter(col("bucket").isin(attempted.toSeq: _*))
-        .groupBy("bucket").agg(count(lit(1)).as("rows"))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          Seq.empty[(Int, Long)].toDF("bucket", "rows")
-      }
-    val doneNow = attempted.toSeq.sorted.toDF("bucket")
-      .join(counts, Seq("bucket"), "left_outer")
-      .withColumn("rows", coalesce(col("rows"), lit(0L)))
-      .withColumn("stage", lit(stage))
-      .withColumn("startedAtMs", lit(t0))
-      .withColumn("finishedAtMs", lit(t1))
-      .select("stage", "bucket", "rows", "startedAtMs", "finishedAtMs")
-    doneNow.write.mode(SaveMode.Append).parquet(s"$stageDir/manifest")
+    val w = write(spark, withBucket(rows, buckets), stageDir, Data, freshId())
+    commit(spark, stageDir, snap, Seq(w), done = attempted)
+    appendLineage(spark, stageDir, stage,
+      attempted.map(bk => bk -> w.counts.getOrElse(bk, 0L)).toMap, t0)
     attempted.size
   }
+
+  // ------------------------------------------------------------------
+  // reads
+  // ------------------------------------------------------------------
 
   /** Read the materialized triple table — all completed buckets, with
     * any outstanding merge-on-read deltas/tombstones RESOLVED (see
@@ -222,488 +431,135 @@ object Materialize {
     * with warc_ts_ms in (seq, asOfMs] supersedes it — i.e. exactly the
     * latest-crawl-wins state the table had once every batch with
     * versions <= asOfMs (and none after) was applied. Because batch
-    * visibility is the versions write and stale redelivery is a no-op,
+    * visibility is the snapshot swap and stale redelivery is a no-op,
     * the snapshot is independent of batch arrival ORDER — it is a pure
     * function of (content, asOfMs), spec-asserted.
     *
     * Retention = the compaction horizon, exactly like Iceberg snapshot
     * expiration: `compact()` (and COW upserts, which rewrite rows in
     * place and inline-compact affected buckets) physically removes
-    * superseded rows and consolidates their versions into batch=base.
-    * The horizon is the newest version whose fold actually REMOVED an
-    * older row — an asOfMs below it is an EXPIRED snapshot and fails
+    * superseded rows. The horizon is the newest version whose fold
+    * actually REMOVED an older row, committed in the same snapshot as
+    * the fold — an asOfMs below it is an EXPIRED snapshot and fails
     * loudly: the folded rows carry seq = their version, so an older
     * asOfMs would filter them out while their superseded predecessors
     * no longer exist — the read would silently return a state the
-    * table never had (re-crawled urls absent entirely). Iceberg errors
-    * on expired snapshot ids for the same reason. Folds that remove
-    * nothing (append-only batches: every url new) do NOT raise the
-    * horizon — every pre-fold snapshot is still exactly
-    * reconstructable (the new rows simply filter out by seq) and still
-    * serves. History is complete for every snapshot at or above the
-    * horizon.
+    * table never had. Folds that remove nothing (append-only batches)
+    * do NOT raise the horizon — every pre-fold snapshot is still
+    * exactly reconstructable and still serves.
     */
   def readTriplesAsOf(spark: SparkSession, outDir: String, asOfMs: Long): DataFrame = {
-    val horizon = readHorizonMs(spark, outDir)
-    require(asOfMs >= horizon,
+    val snap = latestSnapshot(spark, s"$outDir/$StageTriples")
+    require(asOfMs >= snap.horizonMs,
       s"expired snapshot: asOfMs=$asOfMs predates the compaction " +
-        s"horizon $horizon — superseded rows below it were physically " +
+        s"horizon ${snap.horizonMs} — superseded rows below it were physically " +
         s"removed (compact()/COW), so that table state no longer exists")
-    resolveAsOfOpt(spark, outDir, asOfMs)
+    resolve(spark, outDir, snap, asOfMs)
       .getOrElse(sys.error(s"no triple data under $outDir"))
-      .drop("origin").drop("seq")
-  }
-
-  /** Guarded parquet read shared by every sidecar/data reader: None
-    * when the path is absent OR exists with no inferable schema — the
-    * state a crash early in a write job leaves behind (`_temporary`
-    * only). ONLY the read itself is guarded; downstream column
-    * resolution errors (a genuinely corrupt sidecar) stay loud.
-    */
-  private def readParquetOpt(spark: SparkSession, p: String): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else try Some(spark.read.parquet(p))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
-  }
-
-  /** The snapshot-retention floor, stored as marker files
-    * `horizon/h_<ms>` next to the data (max filename wins): raising it
-    * is an atomic empty-file CREATE — never a read-modify-rewrite of
-    * table metadata that a crash could corrupt — and reading it is an
-    * O(1) directory listing instead of a scan over the consolidated
-    * versions sidecar (O(table urls) at target scale). Monotone by
-    * construction. 0 when no fold ever removed a row.
-    *
-    * Every fold creates the directory even when it removes nothing, so
-    * the dir's EXISTENCE marks a marker-era table. A table folded
-    * before markers existed (consolidated `versions/batch=base`
-    * present, no horizon dir) cannot distinguish removing folds from
-    * append-only ones — for it the floor falls back to the
-    * conservative pre-marker rule, the max version ever consolidated
-    * into base (over-rejects append-only history rather than silently
-    * serving states that removing folds destroyed).
-    */
-  def horizonPath(outDir: String): String = s"$outDir/$StageTriples/horizon"
-
-  private def readHorizonMs(spark: SparkSession, outDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(horizonPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      fs.listStatus(p).map(_.getPath.getName)
-        .collect { case n if n.startsWith("h_") => n.stripPrefix("h_").toLong }
-        .foldLeft(0L)(math.max)
-    else {
-      // legacy fallback: pre-marker folds left no record of what they
-      // removed — the consolidated base's max version is the loudest
-      // safe floor. Self-migrating: the scanned value is materialized
-      // as a marker (best effort — a read-only reader still gets the
-      // value) so the O(table-urls) scan runs once, not per read.
-      val base = new org.apache.hadoop.fs.Path(
-        s"${versionsPath(outDir)}/batch=$BaseBatch")
-      if (!fs.exists(base)) 0L
-      else {
-        val legacy = readParquetOpt(spark, base.toString).map { v =>
-          val row = v.agg(max("warc_ts_ms")).head()
-          if (row.isNullAt(0)) 0L else row.getLong(0)
-        }.getOrElse(0L)
-        if (legacy > 0) try writeHorizonMarker(fs, p, legacy)
-        catch { case _: java.io.IOException => () }
-        legacy
-      }
-    }
-  }
-
-  /** MARKER FIRST, never an empty dir: `fs.create` makes parent dirs,
-    * so the directory can never exist without its floor — an empty
-    * horizon dir would read as 0 and silently serve destroyed states
-    * (the exact inversion of the raise-before-fold invariant).
-    */
-  private def writeHorizonMarker(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, h: Long): Unit = {
-    fs.create(new org.apache.hadoop.fs.Path(dir, s"h_$h"), true).close()
-  }
-
-  /** Raise the retention floor BEFORE the fold commits (a crash between
-    * the raise and the fold over-rejects — conservative — never the
-    * reverse, which would silently serve a state the table never had).
-    * Called by every fold, including h=0 ones: creating the horizon dir
-    * is what opts the table out of the legacy conservative fallback.
-    */
-  private def raiseHorizonMs(spark: SparkSession, outDir: String, h: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(horizonPath(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // readHorizonMs self-migrates a legacy floor into a marker before
-    // the dir's existence switches the read rule; only a floor-0 table
-    // gets a bare mkdirs (an empty dir correctly reads as 0 there)
-    val current = readHorizonMs(spark, outDir)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    if (h <= 0 || h <= current) return
-    writeHorizonMarker(fs, dir, h)
-    // best-effort GC of superseded markers (readers take the max anyway)
-    fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.startsWith("h_") &&
-        p.getName.stripPrefix("h_").toLong < h)
-      .foreach(p => fs.delete(p, false))
-  }
-
-  /** The horizon contribution of folding the given buckets' outstanding
-    * tombstones: over all PHYSICALLY PRESENT rows (base or committed
-    * delta) being removed, the newest FIRST-superseding version — each
-    * killed row's smallest tombstone above its seq, because the row's
-    * visibility range ends exactly there; attributing the kill to the
-    * url's newest tombstone would over-raise the floor past states
-    * that remain reconstructable. A tombstone that kills nothing — a
-    * brand-new url's own version row — expires no snapshot: pre-fold
-    * states never contained that url. One broadcast-join aggregate
-    * over the affected buckets, run only at fold time (compaction
-    * cadence, not read cadence).
-    */
-  private def foldKillHorizonMs(spark: SparkSession, outDir: String,
-      affected: Set[Int], committed: Set[String]): Long = {
-    val dead = readParquetOpt(spark, versionsPath(outDir)).map {
-      _.filter(col("batch") =!= lit(BaseBatch) &&
-          col("batch").isin(committed.toSeq: _*))
-        .filter(col("bucket").isin(affected.toSeq: _*))
-        .select(col("url"), col("warc_ts_ms"))
-    }
-    if (dead.isEmpty) return 0L
-    val baseRows = readParquetOpt(spark, dataPath(outDir)).map { b =>
-      val s = if (b.columns.contains("seq")) b else b.withColumn("seq", lit(0L))
-      s.select(col("url"), coalesce(col("seq"), lit(0L)).as("seq"), col("bucket"))
-    }
-    val deltaRows = readParquetOpt(spark, deltaPath(outDir)).map {
-      _.filter(col("batch").isin(committed.toSeq: _*))
-        .select(col("url"), coalesce(col("seq"), lit(0L)).as("seq"), col("bucket"))
-    }
-    val rows = (baseRows, deltaRows) match {
-      case (Some(a), Some(d)) => Some(a.unionByName(d))
-      case (a, d) => a.orElse(d)
-    }
-    rows.map { r =>
-      val row = r.filter(col("bucket").isin(affected.toSeq: _*))
-        .join(broadcast(dead.get), Seq("url"))
-        .filter(col("seq") < col("warc_ts_ms"))
-        .groupBy(col("url"), col("seq"))
-        .agg(min("warc_ts_ms").as("first_killer"))
-        .agg(max("first_killer")).head()
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    }.getOrElse(0L)
+      .drop("seq")
   }
 
   /** Resolution variant that keeps the internal per-row crawl sequence
-    * (warc_ts_ms of the crawl that produced the row; 0 for rows that
-    * predate incremental updates) — the COW rewrite and `compact` need
-    * it to fold deltas into the base without losing version info.
+    * (warc_ts_ms of the crawl that produced the row; 0 for bootstrap
+    * rows): the full row identity the commit specs compare.
     */
-  private def readTriplesWithSeq(spark: SparkSession, outDir: String): DataFrame =
-    readTriplesWithSeqOpt(spark, outDir)
+  private[graft] def readTriplesWithSeq(spark: SparkSession, outDir: String): DataFrame =
+    resolve(spark, outDir, latestSnapshot(spark, s"$outDir/$StageTriples"), Long.MaxValue)
       .getOrElse(sys.error(s"no triple data under $outDir"))
 
-  private def readTriplesWithSeqOpt(
-      spark: SparkSession, outDir: String): Option[DataFrame] =
-    readTriplesWithSeqOriginOpt(spark, outDir).map(_.drop("origin"))
+  /** Base + delta rows the snapshot names, tombstones NOT applied. */
+  private def rowsOf(spark: SparkSession, outDir: String, snap: Snapshot): Option[DataFrame] = {
+    val stageDir = s"$outDir/$StageTriples"
+    (readEntries(spark, stageDir, snap, Data) ++ readEntries(spark, stageDir, snap, Delta))
+      .reduceOption(_.unionByName(_))
+  }
 
-  /** Like [[readTriplesWithSeqOpt]] but rows carry an `origin` column
-    * (`b` = base table, `d` = un-compacted delta) — the crash-heal fold
-    * in compact/COW needs to distinguish the two storages.
+  /** The rows of `rows` live as of `asOfMs`: crawled by then and not
+    * superseded by a tombstone (the versions of un-compacted batches) of
+    * their url up to then. Tombstone volume is bounded by the deltas
+    * since the last compaction — broadcastable by contract.
     */
-  private def readTriplesWithSeqOriginOpt(
-      spark: SparkSession, outDir: String,
-      committedSnap: Option[Set[String]] = None): Option[DataFrame] =
-    resolveAsOfOpt(spark, outDir, Long.MaxValue, committedSnap)
+  private def live(spark: SparkSession, outDir: String, snap: Snapshot,
+      rows: DataFrame, asOfMs: Long): DataFrame = {
+    val visible = rows.filter(col("seq") <= asOfMs)
+    readEntries(spark, s"$outDir/$StageTriples", snap, Tomb) match {
+      case None => visible
+      case Some(v) =>
+        val dead = v.filter(col("warc_ts_ms") <= asOfMs)
+          .groupBy("url").agg(max("warc_ts_ms").as("upto_ms"))
+        visible.join(broadcast(dead), Seq("url"), "left_outer")
+          .filter(col("upto_ms").isNull || col("seq") >= col("upto_ms"))
+          .drop("upto_ms")
+    }
+  }
 
-  /** The one resolution routine behind both the current-state read
-    * (asOfMs = Long.MaxValue) and the time-travel read: rows newer than
-    * asOfMs are invisible, and only tombstones up to asOfMs apply.
-    * `committedSnap` lets a maintenance operation (compact/COW) pin ONE
-    * committed-batch snapshot across its whole read-fold-drop sequence —
-    * recomputing it per step would let a batch that commits mid-fold be
-    * half-included.
+  /** The one resolution routine behind the current-state read
+    * (asOfMs = Long.MaxValue), the time-travel read and the folds. */
+  private def resolve(spark: SparkSession, outDir: String, snap: Snapshot,
+      asOfMs: Long): Option[DataFrame] =
+    rowsOf(spark, outDir, snap).map(live(spark, outDir, snap, _, asOfMs))
+
+  private def emptyTriples(spark: SparkSession, buckets: Int): DataFrame =
+    withBucket(spark.emptyDataset[Triple](
+      org.apache.spark.sql.Encoders.product[Triple]).toDF(), buckets)
+      .withColumn("seq", lit(0L))
+
+  private def bucketOf(url: String, buckets: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
+    Pmod(new Murmur3Hash(Seq(Literal(url))), Literal(buckets)).eval().asInstanceOf[Int]
+  }
+
+  /** J6-analog (doi→docs lookup, cprex/corpus/corpus.py:114-134): fetch
+    * one url's triples via partition pruning — the bucket is computable
+    * from the url, so the scans touch exactly that bucket's directories
+    * (PartitionFilters in the plan; asserted in ResumeSpec), tombstones
+    * included. At 10^12 rows with B=10^5 buckets this reads 1/B of the
+    * table. B comes from the table's own metadata (never caller-supplied:
+    * a mismatched B would prune to the wrong partition and silently
+    * return zero rows).
     */
-  private def resolveAsOfOpt(
-      spark: SparkSession, outDir: String, asOfMs: Long,
-      committedSnap: Option[Set[String]] = None): Option[DataFrame] = {
-    def read(p: String): Option[DataFrame] = readParquetOpt(spark, p)
-    val base = read(dataPath(outDir)).map { b0 =>
-      val b = if (b0.columns.contains("seq")) b0 else b0.withColumn("seq", lit(0L))
-      b.withColumn("origin", lit("b"))
-    }
-    // COMMIT GATE: a delta batch is visible only once its versions
-    // batch is FULLY written (its job's _SUCCESS marker exists —
-    // committedBatchIds) — morCommit writes delta first, versions
-    // second, so the versions job commit is the commit point. A crash
-    // before or DURING the versions write leaves an invisible
-    // (uncommitted) delta dir: without this gate its rows would be live
-    // with no tombstone (or a partial one) killing the old rows of the
-    // same urls, violating latest-crawl-wins. Uncommitted dirs are
-    // replay-overwritten by redelivery (same content-derived id) or
-    // GC'd by compact(). The same gate applies to the TOMBSTONES below:
-    // a half-written versions dir must not kill anything either, or a
-    // concurrent reader mid-commit would see rows vanish before the
-    // batch becomes visible.
-    val committed = committedSnap.getOrElse(committedBatchIds(spark, outDir))
-    val delta = read(deltaPath(outDir)).map { d =>
-      d.filter(col("batch").isin(committed.toSeq: _*)).drop("batch")
-        .withColumn("origin", lit("d"))
-    }
-    val withDelta = (base, delta) match {
-      case (Some(b), Some(d)) => Some(b.unionByName(d, allowMissingColumns = true))
-      case (Some(b), None) => Some(b)
-      case (None, Some(d)) => Some(d)
-      case (None, None) => None
-    }
-    withDelta.map { wd =>
-      val visible = wd.withColumn("seq", coalesce(col("seq"), lit(0L)))
-        .filter(col("seq") <= asOfMs) // rows crawled after the snapshot
-      read(versionsPath(outDir)) match {
-        case None => visible
-        case Some(v) =>
-          // tombstones ARE the versions rows of un-compacted batches
-          // (batch != base): a row is live iff its seq is not below the
-          // newest applied version of its url — restricted to versions
-          // within the snapshot for time travel. Volume is bounded by
-          // the deltas since the last compaction (compact()/COW
-          // consolidate into batch=base, which kills nothing —
-          // compacted rows carry seq = their version) — broadcastable
-          // by contract.
-          val dead = v.filter(col("batch").isin(committed.toSeq: _*))
-            .filter(col("warc_ts_ms") <= asOfMs)
-            .groupBy("url").agg(max("warc_ts_ms").as("upto_ms"))
-          visible.join(broadcast(dead), Seq("url"), "left_outer")
-            .filter(col("upto_ms").isNull || col("seq") >= col("upto_ms"))
-            .drop("upto_ms")
-      }
-    }
+  def readTriplesForUrl(spark: SparkSession, outDir: String, url: String): DataFrame = {
+    val buckets = tableBuckets(spark, outDir)
+    val bk = bucketOf(url, buckets)
+    val snap = latestSnapshot(spark, s"$outDir/$StageTriples").restrict(Set(bk))
+    resolve(spark, outDir, snap, Long.MaxValue).getOrElse(emptyTriples(spark, buckets))
+      .filter(col("bucket") === bk && col("url") === url)
+      .drop("seq")
+  }
+
+  /** The linked triple table of `materializeGraph` (latest snapshot). */
+  def readLinked(spark: SparkSession, outDir: String): DataFrame = {
+    val stageDir = s"$outDir/$StageLinked"
+    readEntries(spark, stageDir, latestSnapshot(spark, stageDir), Data)
+      .getOrElse(sys.error(s"no linked data under $outDir"))
   }
 
   // ------------------------------------------------------------------
   // incremental update (latest-crawl-wins upsert)
   // ------------------------------------------------------------------
 
-  def versionsPath(outDir: String): String = s"$outDir/$StageTriples/versions"
-  def deltaPath(outDir: String): String = s"$outDir/$StageTriples/delta"
-  private def stagingPath(outDir: String): String = s"$outDir/$StageTriples/.staging"
-
-  /** Crash-heal fold: collapse the double-count a crashed half-commit
-    * leaves behind WITHOUT erasing legitimate duplicate rows. A
-    * fold-into-base (compact, or COW inline compaction) that crashed
-    * after the base overwrite but before the delta-dir drop leaves
-    * every row of the folded batch live TWICE — once in base, once in
-    * delta — and ONLY then can a live base row equal a live delta row
-    * including `seq` (a re-crawled url's old base rows sit below the
-    * delta's tombstone; folded rows carry their version as seq). So the
-    * correct multiplicity per identical-row group is max(base copies,
-    * delta copies): k legitimate duplicates (a sentence stating the
-    * same fact twice) live in one origin are (k,0)/(0,k) → k, a
-    * half-committed fold is (k,k) → k. A plain dropDuplicates would
-    * turn every legitimate k into 1, silently changing row multiplicity
-    * vs a full recompute.
-    */
-  private[graft] def healFold(df: DataFrame): DataFrame = {
-    val dataCols = df.columns.filter(_ != "origin").map(col)
-    df.groupBy(dataCols: _*)
-      .agg(sum(when(col("origin") === "b", 1L).otherwise(0L)).as("cb"),
-        sum(when(col("origin") === "d", 1L).otherwise(0L)).as("cd"))
-      .withColumn("copy_n", explode(expr("sequence(1, greatest(cb, cd))")))
-      .drop("cb", "cd", "copy_n")
-  }
-
-  /** Names of the `batch=<id>` directories under a delta/versions root. */
-  private def batchIdsUnder(spark: SparkSession, root: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).filter(_.isDirectory)
-      .map(_.getPath.getName.stripPrefix("batch=")).toSet
-  }
-
-  /** Batch ids whose VERSIONS write JOB completed — the `_SUCCESS`
-    * marker Spark's committer drops at job commit is the commit record.
-    * Directory existence is NOT enough: the batch dir appears at job
-    * start and part-files land as tasks commit, so a concurrent reader
-    * (or a crash mid-write) would otherwise observe a HALF-WRITTEN
-    * tombstone set — some re-crawled urls' old rows killed, others
-    * still live next to the already-visible delta rows. Gating every
-    * consumer (delta visibility, tombstone resolution, stale
-    * rejection, compaction fold) on the marker makes the versions
-    * `_SUCCESS` creation the single atomic commit point.
-    * `batch=base` is excluded by construction: it is written by
-    * dynamic partition overwrite (whose `_SUCCESS` lands at the
-    * versions ROOT) and is never a delta gate nor a tombstone source.
-    */
-  private def committedBatchIds(spark: SparkSession, outDir: String): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(versionsPath(outDir))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Set.empty
-    else fs.listStatus(root).filter(_.isDirectory)
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("batch="))
-      .toSet - BaseBatch
-  }
-
-  /** Versions batch holding the consolidated (compacted) per-url
-    * versions — excluded from tombstone resolution (compacted data rows
-    * carry their version as seq, so consolidated versions kill nothing).
-    */
-  val BaseBatch = "base"
-
-  /** Lineage stage name for COW upsert rewrites — distinct from the
-    * bootstrap stage so `completedBuckets` never mistakes an upserted
-    * bucket for a bootstrapped one.
-    */
+  /** Lineage stage name for COW upsert rewrites. */
   val StageTriplesUpsert = "triples_upsert"
-
-  /** Post-commit lineage append: one row per affected bucket with its
-    * current count. Guards the all-buckets-emptied case (no readable
-    * parquet left under data/) the same way the bootstrap path does —
-    * the commit has already succeeded at that point and must not throw.
-    */
-  private def appendLineage(spark: SparkSession, outDir: String,
-      stage: String, affected: Set[Int], t0: Long, t1: Long): Unit = {
-    import spark.implicits._
-    val counts =
-      try spark.read.parquet(dataPath(outDir))
-        .select(col("bucket").cast("int").as("bucket"))
-        .filter(col("bucket").isin(affected.toSeq: _*))
-        .groupBy("bucket").agg(count(lit(1)).as("rows"))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          Seq.empty[(Int, Long)].toDF("bucket", "rows")
-      }
-    affected.toSeq.sorted.toDF("bucket")
-      .join(counts, Seq("bucket"), "left_outer")
-      .withColumn("rows", coalesce(col("rows"), lit(0L)))
-      .withColumn("stage", lit(stage))
-      .withColumn("startedAtMs", lit(t0))
-      .withColumn("finishedAtMs", lit(t1))
-      .select("stage", "bucket", "rows", "startedAtMs", "finishedAtMs")
-      .write.mode(SaveMode.Append).parquet(manifestPath(outDir))
-  }
-
-  /** Commit a staged bucket rewrite — the shared protocol of cowCommit
-    * and compact (one implementation, one place to fix): dynamically
-    * overwrite the staged data partitions into the base, drop affected
-    * bucket dirs the staged data did not mention (pure deletes), fold
-    * away the affected buckets' outstanding delta dirs, consolidate
-    * staged versions into batch=base and drop those buckets'
-    * un-compacted version dirs, then remove staging.
-    *
-    * `foldBatches` is the committed-batch snapshot whose content the
-    * staged rewrite actually folded: ONLY those batch dirs lose their
-    * affected-bucket subdirs. A batch that committed (or is still
-    * mid-commit) after the fold read must keep both its delta rows and
-    * its tombstones — dropping them here would permanently lose a
-    * committed batch that was never part of the fold.
-    */
-  private def commitStaged(spark: SparkSession, outDir: String,
-      affected: Set[Int], foldBatches: Set[String]): Unit = {
-    val staging = stagingPath(outDir)
-    val fsData = new org.apache.hadoop.fs.Path(dataPath(outDir))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Partition-dir RENAMES, not a second Spark write: the staged files
-    // were produced by this fold's own write job — re-reading and
-    // dynamic-overwriting them into the final path (the pre-r6 flow)
-    // read and wrote the whole affected-bucket set a SECOND time, plus
-    // a distinct-collect job to find pure-delete buckets. The staged
-    // layout already matches the final one (partitionBy("bucket")), so
-    // the commit is delete-dst + rename-src per affected bucket —
-    // metadata ops. The crash window (dst deleted, src not yet renamed)
-    // is the same shape as dynamic partition overwrite's own
-    // commit-time delete+rename, only narrower because no job runs
-    // between them; a crash mid-commit is healed the same way as
-    // before (re-run compact: still-present deltas + healFold).
-    def stagedSubdirs(p: org.apache.hadoop.fs.Path, prefix: String) =
-      if (!fsData.exists(p)) Array.empty[org.apache.hadoop.fs.Path]
-      else fsData.listStatus(p).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith(prefix))
-    def replace(src: org.apache.hadoop.fs.Path, dstDir: String): Unit = {
-      val dst = new org.apache.hadoop.fs.Path(dstDir, src.getName)
-      if (fsData.exists(dst)) fsData.delete(dst, true)
-      fsData.mkdirs(dst.getParent)
-      require(fsData.rename(src, dst), s"commit rename $src -> $dst failed")
-    }
-    // an all-empty staged union (every affected row re-crawled into
-    // zero triples) leaves no staged bucket dirs — every affected
-    // partition is then a pure delete
-    val stagedData = stagedSubdirs(
-      new org.apache.hadoop.fs.Path(s"$staging/data"), "bucket=")
-    val written = stagedData
-      .map(_.getName.stripPrefix("bucket=").toInt).toSet
-    (affected -- written).foreach { bk =>
-      fsData.delete(new org.apache.hadoop.fs.Path(
-        s"${dataPath(outDir)}/bucket=$bk"), true)
-    }
-    stagedData.foreach(replace(_, dataPath(outDir)))
-    // the rewrite folded the affected buckets' outstanding deltas
-    // into the base — drop them (folded batches only)
-    dropBucketDirsUnderBatches(spark, deltaPath(outDir), affected, foldBatches)
-    // versions: consolidated rows land in batch=base (bucket dirs
-    // renamed in under their batch dir), then the affected buckets'
-    // un-compacted batch rows (now folded) drop. Staged versions may
-    // be legitimately absent. foldBatches never contains BaseBatch, so
-    // the consolidated batch is safe.
-    stagedSubdirs(new org.apache.hadoop.fs.Path(s"$staging/versions"), "batch=")
-      .foreach { bdir =>
-        stagedSubdirs(bdir, "bucket=").foreach(
-          replace(_, s"${versionsPath(outDir)}/${bdir.getName}"))
-      }
-    dropBucketDirsUnderBatches(spark, versionsPath(outDir), affected, foldBatches)
-    fsData.delete(new org.apache.hadoop.fs.Path(staging), true)
-  }
-
-  /** Per-bucket row-count accumulator: lineage counts collected DURING
-    * the delta write instead of a read-back job.
-    */
-  private class BucketCountAcc
-      extends org.apache.spark.util.AccumulatorV2[Int, Map[Int, Long]] {
-    private val m = scala.collection.mutable.Map.empty[Int, Long]
-    def isZero: Boolean = m.isEmpty
-    def copy(): BucketCountAcc = {
-      val c = new BucketCountAcc; c.m ++= m; c
-    }
-    def reset(): Unit = m.clear()
-    def add(v: Int): Unit = m(v) = m.getOrElse(v, 0L) + 1
-    def merge(o: org.apache.spark.util.AccumulatorV2[Int, Map[Int, Long]]): Unit =
-      o.value.foreach { case (k, n) => m(k) = m.getOrElse(k, 0L) + n }
-    def value: Map[Int, Long] = m.toMap
-  }
 
   final case class IncrementalStats(appliedUrls: Long, staleUrls: Long,
       affectedBuckets: Set[Int])
 
   /** Per-url crawl versions currently recorded for the given buckets —
     * (url, warc_ts_ms, bucket) with warc_ts_ms RESOLVED to the max per
-    * url (merge-on-read appends version rows; max is the current
-    * version — identity for copy-on-write tables, which store one row
-    * per url). Partition-pruned to exactly those bucket directories.
-    * Empty when the table predates incremental updates
-    * (runResumable-bootstrapped tables have no versions sidecar —
-    * every incoming url then counts as newer, which is the correct
-    * default for a table whose rows all came from one crawl batch).
+    * url over the un-compacted and consolidated versions. Partition-
+    * pruned to exactly those bucket directories. Empty when the table
+    * has no incremental history (runResumable-bootstrapped tables have
+    * no versions — every incoming url then counts as newer, which is the
+    * correct default for a table whose rows all came from one crawl).
     */
   def readVersions(spark: SparkSession, outDir: String,
-      buckets: Set[Int], committedSnap: Option[Set[String]] = None): DataFrame = {
+      buckets: Set[Int], snap: Option[Snapshot] = None): DataFrame = {
     import spark.implicits._
-    val empty = Seq.empty[(String, Long, Int)].toDF("url", "warc_ts_ms", "bucket")
-    // only COMMITTED batches (plus the consolidated base) count as
-    // stored versions: a half-written versions dir of a crashed
-    // commit would otherwise stale-reject its own redelivery — the
-    // batch could then never commit, losing its data permanently.
-    // readParquetOpt guards ONLY absence / no inferable schema (the
-    // states a crashed write leaves); a resolvable-but-corrupt sidecar
-    // (missing columns) must fail loudly, or stale rejection silently
-    // turns off and an old batch redelivery rolls the table back.
-    readParquetOpt(spark, versionsPath(outDir)).map { v =>
-      val committed = committedSnap.getOrElse(committedBatchIds(spark, outDir))
-      v.filter(col("batch") === lit(BaseBatch) ||
-          col("batch").isin(committed.toSeq: _*))
-        .filter(col("bucket").isin(buckets.toSeq: _*))
-        .groupBy(col("url"), col("bucket").cast("int").as("bucket"))
-        .agg(max("warc_ts_ms").as("warc_ts_ms"))
+    val s = snap.getOrElse(latestSnapshot(spark, s"$outDir/$StageTriples")).restrict(buckets)
+    readEntries(spark, s"$outDir/$StageTriples", s, Tomb, VBase).map {
+      _.groupBy("url", "bucket").agg(max("warc_ts_ms").as("warc_ts_ms"))
         .select("url", "warc_ts_ms", "bucket")
-    }.getOrElse(empty)
+    }.getOrElse(Seq.empty[(String, Long, Int)].toDF("url", "warc_ts_ms", "bucket"))
   }
 
   /** Incremental graph maintenance — the only operation mode that
@@ -736,15 +592,15 @@ object Materialize {
     *    delta/batch=<id>/bucket=N and the batch's version rows under
     *    versions/batch=<id>/bucket=N; NOTHING existing is rewritten —
     *    write cost is O(delta) regardless of scatter, two write jobs
-    *    total (the versions rows double as the tombstone set: a row is
-    *    live iff seq >= the newest non-base version of its url;
-    *    non-base versions are bounded by deltas since last compaction,
-    *    so the resolution join broadcasts). `compact()` folds deltas
-    *    into the base and consolidates versions into batch=base (which
-    *    kills nothing — compacted rows carry their version as seq).
-    *    The batch id is a deterministic content hash, so a crash-replay
-    *    of the same batch dynamic-overwrites its own partitions —
-    *    idempotent, not duplicating.
+    *    total (the versions rows double as the tombstone set).
+    *    `compact()` folds deltas into the base and consolidates
+    *    versions (which then kill nothing — compacted rows carry their
+    *    version as seq).
+    *
+    * Either way the write becomes visible in ONE snapshot commit; a
+    * crash before it leaves unnamed dirs, and redelivering the batch
+    * applies it afresh (its versions were never committed, so it is
+    * not stale); a crash after it makes the redelivery a stale no-op.
     *
     * Cost scales with the delta, not the table: the versions read is
     * partition-pruned to pmod(hash(url), B) of batch urls
@@ -759,17 +615,6 @@ object Materialize {
     * warehouse pattern: base table incrementally maintained, derived
     * tables refreshed on their own schedule from the updated base —
     * re-run the linked stage into a fresh stage dir when lag matters.
-    *
-    * Commit discipline (no Iceberg runtime in this sandbox — manifest
-    * append is the commit record, same deviation as the rest of this
-    * file): the union of survivors + new triples is staged under
-    * .staging first (you cannot overwrite a path you are reading), then
-    * dynamically overwrites exactly the affected data partitions, then
-    * versions, then the lineage append. Every pre-versions crash window
-    * is idempotent: versions still hold the OLD warc_ts, so re-running
-    * the same batch re-applies and rewrites the same partitions to the
-    * same bytes; once versions are written the data partitions are
-    * already fully updated.
     */
   def incrementalUpdate(
       spark: SparkSession,
@@ -781,12 +626,11 @@ object Materialize {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val b = resolveBuckets(spark, outDir, buckets)
+    val snap = openStage(spark, s"$outDir/$StageTriples")
 
     // newest row per url within the batch (a batch may carry several
-    // crawls of one url); equal-ts ties break on content hash so a
-    // crash REPLAY picks the same winner — the batch id hashes only
-    // (url, warc_ts), and a nondeterministic winner would commit
-    // DIFFERENT content under the SAME id. Persisted (O(delta) by
+    // crawls of one url); equal-ts ties break on content hash so every
+    // delivery order commits the SAME winner. Persisted (O(delta) by
     // contract): it feeds both the version-marking join and the
     // applied-page extraction, and without the persist the per-url
     // window would re-read and re-shuffle the whole batch source twice.
@@ -800,58 +644,25 @@ object Materialize {
       .withColumn("bucket", pmod(hash(col("url")), lit(b)).cast("int")))
 
     // versions pruning needs the batch's bucket set (bounded-size
-    // collect: at most B values). Computed from `latest`, whose
-    // materialization the stats pass pays moments later anyway — the
-    // per-url dedup cannot change the bucket SET (same urls), and
-    // probing the cache here saves a second pass over the batch
-    // source (r6: the old raw-side probe re-read/re-generated the
-    // whole batch once more per update)
+    // collect: at most B values), computed from the cached `latest`
     val batchBuckets = latest
       .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
-    // one committed-batch snapshot pins the whole operation (stale
-    // rejection + COW fold + drop) to a single consistent view
-    val committed = committedBatchIds(spark, outDir)
-    val stored = readVersions(spark, outDir, batchBuckets, Some(committed))
+    val stored = readVersions(spark, outDir, batchBuckets, Some(snap))
 
     // mark rather than filter: one cached compact table serves the
-    // applied/stale split, the stats, and the batch id — one Spark job
-    // instead of four
+    // applied/stale split and the stats
     val marked = scope.persist(latest
       .join(stored.select(col("url"), col("warc_ts_ms").as("stored_ms")),
         Seq("url"), "left_outer")
       .withColumn("is_applied",
         col("stored_ms").isNull || col("warc_ts_ms") > col("stored_ms"))
       .select("url", "warc_ts_ms", "bucket", "is_applied"))
-    // the second hash lane sums the xxhash64 HALVES separately: a
-    // direct sum of 64-bit hashes overflows long (ANSI error in
-    // Spark 4) after ~2^31 magnitude; each half-sum is bounded by
-    // n*2^32 and stays order-independent
-    val xx = xxhash64(col("url"), col("warc_ts_ms"))
-    val stats = marked.groupBy("bucket", "is_applied")
-      .agg(count(lit(1)).as("n"),
-        sum(hash(col("url"), col("warc_ts_ms")).cast("long")).as("h"),
-        max("warc_ts_ms").as("m"),
-        sum(shiftright(xx, 32)).as("h2hi"),
-        sum(xx.bitwiseAND(lit(0xffffffffL))).as("h2lo")).collect()
+    val stats = marked.groupBy("bucket", "is_applied").agg(count(lit(1)).as("n")).collect()
     val appliedStats = stats.filter(_.getBoolean(1))
     val affected = appliedStats.map(_.getInt(0)).toSet
     val nApplied = appliedStats.map(_.getLong(2)).sum
     val nStale = stats.filterNot(_.getBoolean(1)).map(_.getLong(2)).sum
     if (affected.isEmpty) return IncrementalStats(0L, nStale, Set.empty)
-    // deterministic content-derived batch id (order-independent).
-    // TWO independent hash-family sums (32-bit murmur + xxhash64) plus
-    // max ts and row count: a collision must defeat all four at once —
-    // a single 32-bit sum is not collision-resistant across the
-    // continuous batch stream this mode targets, and an id collision
-    // with an un-compacted earlier batch would silently Overwrite
-    // that batch's delta dir while its tombstones stay live.
-    val h2 = appliedStats.map(_.getLong(5)).sum ^
-      java.lang.Long.rotateLeft(appliedStats.map(_.getLong(6)).sum, 17)
-    val batchId =
-      java.lang.Long.toHexString(appliedStats.map(_.getLong(3)).sum) +
-        java.lang.Long.toHexString(h2) + "-" +
-        java.lang.Long.toHexString(appliedStats.map(_.getLong(4)).max) + "-" +
-        java.lang.Long.toHexString(nApplied)
 
     val appliedKeys = marked.filter(col("is_applied")).drop("is_applied")
     // applied PAGE rows (html et al.) for the extraction pipeline:
@@ -868,25 +679,18 @@ object Materialize {
       .join(appliedKeys.select(col("url"),
         col("warc_ts_ms").as("seq")), Seq("url"))
 
-    if (mergeOnRead)
-      morCommit(spark, outDir, fresh, appliedKeys, batchId, nApplied)
-    else
-      cowCommit(spark, outDir, b, fresh, appliedKeys, stored, affected,
-        committed)
+    if (mergeOnRead) morCommit(spark, outDir, snap, fresh, appliedKeys, nApplied)
+    else cowCommit(spark, outDir, snap, b, fresh, appliedKeys, stored, affected)
     IncrementalStats(nApplied, nStale, affected)
   }
 
-  /** Merge-on-read commit: delta + tombstones under a deterministic
-    * content-derived batch id (crash replay dynamic-overwrites the same
-    * partitions — idempotent), versions appended last (duplicates from
-    * a replay are harmless: readVersions max-resolves).
+  /** Merge-on-read commit: delta rows + the batch's versions (its
+    * tombstones) under one fresh id, published by one snapshot commit.
     */
-  private def morCommit(spark: SparkSession, outDir: String,
-      fresh: DataFrame, appliedKeys: DataFrame,
-      batchId: String, nApplied: Long): Unit = {
-    import spark.implicits._
+  private def morCommit(spark: SparkSession, outDir: String, snap: Snapshot,
+      fresh: DataFrame, appliedKeys: DataFrame, nApplied: Long): Unit = {
     val t0 = System.currentTimeMillis()
-
+    val stageDir = s"$outDir/$StageTriples"
     // partition-align every partitioned write or each shuffle partition
     // writes one tiny file into every bucket dir it touches
     // (~parallelism x buckets files per batch — the classic small-files
@@ -896,305 +700,123 @@ object Materialize {
     // bucket. Either way the exchange moves O(delta) rows.
     def aligned(df: DataFrame): DataFrame =
       if (nApplied <= 50000) df.repartition(1) else df.repartition(col("bucket"))
-
-    // lineage counts collected DURING the delta write via accumulator
-    // (write actions apply each successful task's updates exactly once)
-    // instead of a read-back job; the side-effect rides a kept data
-    // column so projection pruning cannot elide it
-    val acc = new BucketCountAcc
-    spark.sparkContext.register(acc, "delta_bucket_rows")
-    val countUdf = udf((url: String, bucket: Int) => { acc.add(bucket); url })
-
-    // write DIRECTLY into the explicit batch=<id> directory with a
-    // plain overwrite: replay-idempotent like dynamic partition
-    // overwrite (same id → same dir) without its list-and-rename
-    // commit overhead; reading the delta/versions ROOT still discovers
-    // batch= as a partition column from the directory name
-    aligned(fresh)
-      .withColumn("url", countUdf(col("url"), col("bucket")))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"${deltaPath(outDir)}/batch=$batchId")
-    // the versions batch IS the tombstone set (url, warc_ts_ms,
-    // bucket): one sidecar serves stale rejection (max over all
-    // batches) AND read resolution (non-base batches only) — one
-    // write instead of two
-    aligned(appliedKeys)
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"${versionsPath(outDir)}/batch=$batchId")
-    // the _SUCCESS marker IS the commit record every reader gates on
-    // (committedBatchIds) — if the committer was configured not to
-    // write it (marksuccessfuljobs=false), every batch would read as
-    // uncommitted forever; fail the commit loudly instead
-    val okPath = new org.apache.hadoop.fs.Path(
-      s"${versionsPath(outDir)}/batch=$batchId/_SUCCESS")
-    require(okPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(okPath),
-      "versions commit marker missing after the write — the committer " +
-        "must emit _SUCCESS (mapreduce.fileoutputcommitter." +
-        "marksuccessfuljobs) for merge-on-read commits to be visible")
-
-    val t1 = System.currentTimeMillis()
-    acc.value.toSeq.sortBy(_._1).toDF("bucket", "rows")
-      .withColumn("stage", lit(s"${StageTriples}_delta"))
-      .withColumn("startedAtMs", lit(t0))
-      .withColumn("finishedAtMs", lit(t1))
-      .select("stage", "bucket", "rows", "startedAtMs", "finishedAtMs")
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(manifestPath(outDir))
+    val id = freshId()
+    val rows = write(spark, aligned(fresh), stageDir, Delta, id)
+    val vers = write(spark, aligned(appliedKeys), stageDir, Tomb, id)
+    commit(spark, stageDir, snap, Seq(rows, vers))
+    appendLineage(spark, stageDir, s"${StageTriples}_delta", rows.counts, t0)
   }
 
   /** Copy-on-write commit: rewrite affected buckets (survivors keep
     * their seq; outstanding deltas/tombstones of those buckets fold in
-    * — inline compaction), staged first, versions last so every
-    * pre-versions crash window replays idempotently.
+    * — inline compaction).
     */
-  private def cowCommit(spark: SparkSession, outDir: String, b: Int,
+  private def cowCommit(spark: SparkSession, outDir: String, snap: Snapshot, b: Int,
       fresh: DataFrame, appliedKeys: DataFrame, stored: DataFrame,
-      affected: Set[Int], committed: Set[String]): Unit = {
-    import spark.implicits._
+      affected: Set[Int]): Unit = Scope(spark) { scope =>
     val t0 = System.currentTimeMillis()
-    // survivors: affected buckets' current LIVE rows minus re-crawled
-    // urls (bucket predicate prunes to those partition dirs);
-    // bootstrapping an empty table has no survivors. healFold only when
-    // outstanding deltas exist (its groupBy is pure cost on a clean
-    // table). No broadcast hint on the O(delta) key set — 10^8 urls for
-    // a 1% batch at target scale; AQE upgrades small deltas at runtime.
-    val hasDeltas = batchIdsUnder(spark, deltaPath(outDir)).nonEmpty
-    // outstanding COMMITTED tombstones can exist with NO delta dir (a
-    // re-crawl that extracted zero triples writes versions buckets but
-    // no delta buckets) — the inline fold still physically removes the
-    // rows they killed, so the horizon pass keys off tombstones, not
-    // delta dirs. committedBatchIds IS the set of tombstone batches
-    // (versions dirs with _SUCCESS, minus base), so the pinned snapshot
-    // answers this without another listing.
-    val hasTombs = committed.nonEmpty
-    val prior = readTriplesWithSeqOriginOpt(spark, outDir, Some(committed))
-    Scope(spark) { scope =>
-      // the affected buckets' resolved rows feed TWO actions (the staged
-      // survivors write and the kill-horizon aggregate) — persist once
-      // instead of resolving base+delta+tombstones twice
-      val liveOpt = prior.map(p =>
-        scope.persist(p.filter(col("bucket").isin(affected.toSeq: _*))))
-      val survivors = liveOpt match {
-        case Some(live) =>
-          val healed = if (hasDeltas) healFold(live) else live.drop("origin")
-          healed.join(appliedKeys.select("url"), Seq("url"), "left_anti")
-        case None =>
-          withBucket(spark.emptyDataset[Triple].toDF(), b)
-            .withColumn("seq", lit(0L))
-      }
-      val union = survivors.unionByName(fresh.select(survivors.columns.map(col): _*))
-
-      // stage → commit (cannot overwrite the path being read)
-      val staging = stagingPath(outDir)
-      union.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(s"$staging/data")
-      val newVersions = appliedKeys
-        .unionByName(stored.join(appliedKeys.select("url"),
-          Seq("url"), "left_anti"))
-        .withColumn("batch", lit(BaseBatch))
-      newVersions.repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("batch", "bucket")
-        .parquet(s"$staging/versions")
-
-      // retention floor: the rewrite physically removes (a) re-crawled
-      // urls' live rows — killed by this batch's own new versions — and
-      // (b) already-superseded rows swept out by the inline fold. Append-
-      // only batches (every url new) kill nothing and expire no snapshot.
-      val killCow = liveOpt.map { live =>
-        val row = live
-          .join(appliedKeys.select(col("url"), col("warc_ts_ms").as("new_ms")),
-            Seq("url"))
-          .agg(max("new_ms")).head()
-        if (row.isNullAt(0)) 0L else row.getLong(0)
-      }.getOrElse(0L)
-      val killFold =
-        if (hasTombs) foldKillHorizonMs(spark, outDir, affected, committed)
-        else 0L
-      raiseHorizonMs(spark, outDir, math.max(killCow, killFold))
-    }
-
-    commitStaged(spark, outDir, affected, committed)
-    appendLineage(spark, outDir, StageTriplesUpsert, affected, t0,
-      System.currentTimeMillis())
+    val snapA = snap.restrict(affected)
+    // the affected buckets' rows feed TWO actions (the survivors write
+    // and the kill-horizon aggregate) — persist once. No broadcast hint
+    // on the O(delta) key set; AQE upgrades small deltas at runtime.
+    val raw = rowsOf(spark, outDir, snapA).map(scope.persist(_))
+    val survivors = raw.map(live(spark, outDir, snapA, _, Long.MaxValue)
+      .join(appliedKeys.select("url"), Seq("url"), "left_anti"))
+      .getOrElse(emptyTriples(spark, b))
+    val union = survivors.unionByName(fresh.select(survivors.columns.map(col): _*))
+    val newVersions = appliedKeys
+      .unionByName(stored.filter(col("bucket").isin(affected.toSeq: _*))
+        .join(appliedKeys.select("url"), Seq("url"), "left_anti"))
+      .repartition(col("bucket"))
+    // the rewrite physically removes (a) re-crawled urls' live rows —
+    // killed by this batch's own versions — and (b) already-superseded
+    // rows swept out by the inline fold; append-only batches kill nothing
+    val killers = readEntries(spark, s"$outDir/$StageTriples", snapA, Tomb)
+      .map(_.select("url", "warc_ts_ms").unionByName(appliedKeys.select("url", "warc_ts_ms")))
+      .getOrElse(appliedKeys)
+    val horizon = raw.map(killHorizonMs(_, killers)).getOrElse(0L)
+    fold(spark, outDir, snap, affected, Some(union), newVersions, horizon,
+      StageTriplesUpsert, t0)
   }
 
-  /** Delete `bucket=<bk>` subdirectories for the given buckets under
-    * the named `batch=<id>` directories of a delta/versions root, then
-    * prune batch dirs (and the root) that became empty.
+  /** The horizon contribution of physically removing `rows`' superseded
+    * members: over every row some killer version supersedes, the newest
+    * FIRST-superseding version — each killed row's visibility range ends
+    * exactly there; attributing the kill to the url's newest version
+    * would over-raise the floor past states that remain
+    * reconstructable. A killer that supersedes nothing — a brand-new
+    * url's own version row — expires no snapshot.
     */
-  private def dropBucketDirsUnderBatches(spark: SparkSession, root: String,
-      buckets: Set[Int], onlyBatches: Set[String]): Unit = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return
-    fs.listStatus(rootPath).filter(_.isDirectory)
-      .filter(d => onlyBatches.contains(
-        d.getPath.getName.stripPrefix("batch=")))
-      .foreach { batchDir =>
-        buckets.foreach { bk =>
-          val p = new org.apache.hadoop.fs.Path(batchDir.getPath, s"bucket=$bk")
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-        if (fs.listStatus(batchDir.getPath)
-          .forall(s => !s.isDirectory)) // only stray markers left
-          fs.delete(batchDir.getPath, true)
-      }
-    if (fs.listStatus(rootPath).isEmpty) fs.delete(rootPath, true)
+  private def killHorizonMs(rows: DataFrame, killers: DataFrame): Long = {
+    val r = rows.select("url", "seq")
+      .join(killers.select("url", "warc_ts_ms"), Seq("url"))
+      .filter(col("seq") < col("warc_ts_ms"))
+      .groupBy("url", "seq").agg(min("warc_ts_ms").as("first_killer"))
+      .agg(max("first_killer")).head()
+    if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
-  /** Uncommitted-batch GC waits at least this long after the batch
-    * dirs' last modification (default 1h): a writer whose morCommit is
-    * still in flight — delta written, versions job running, `_SUCCESS`
-    * not yet dropped — looks exactly like a crashed commit, and GC'ing
-    * it would destroy a batch whose commit then succeeds (checkpoint
-    * advances, batch never redelivered — permanent loss). Any grace
-    * comfortably above the longest expected commit duration closes the
-    * race; tests that synthesize crash states pass 0.
+  /** The fold shared by COW and compact: the affected buckets' whole
+    * state (base, deltas, tombstones, consolidated versions) is replaced
+    * by one rewrite under a fresh id, together with the horizon its
+    * removals raise, in one snapshot commit.
     */
-  val DefaultGcGraceMs: Long = 60L * 60 * 1000
+  private def fold(spark: SparkSession, outDir: String, snap: Snapshot,
+      affected: Set[Int], rows: Option[DataFrame], versions: DataFrame,
+      horizonMs: Long, stage: String, t0: Long): Unit = {
+    val stageDir = s"$outDir/$StageTriples"
+    val id = freshId()
+    val data = rows.map(write(spark, _, stageDir, Data, id))
+    val vers = write(spark, versions, stageDir, VBase, id)
+    commit(spark, stageDir, snap, data.toSeq :+ vers, remove = snap.restrict(affected).entries,
+      horizonMs = horizonMs)
+    appendLineage(spark, stageDir, stage,
+      affected.map(bk => bk -> data.flatMap(_.counts.get(bk)).getOrElse(0L)).toMap, t0)
+  }
 
   /** Fold all outstanding merge-on-read deltas and tombstones into the
     * base table — the periodic maintenance job that keeps the MoR read
     * path cheap (the tombstone broadcast is bounded by deltas since the
-    * last compaction). Rewrites only buckets that have outstanding
-    * COMMITTED delta/tombstone state; exact-duplicate rows (possible
-    * only from a crash-replayed half-commit) are healed via healFold —
-    * a full-row shuffle, disclosed and bounded to the affected buckets;
-    * a crash inside compact() itself is healed by re-running it.
-    * Returns the compacted bucket set.
+    * last compaction). Rewrites only buckets with outstanding delta/
+    * tombstone entries and returns that bucket set; a crash inside
+    * compact() leaves the previous snapshot live and is recovered by
+    * re-running it. Also collects crashed writers' unnamed dirs older
+    * than [[DefaultGcGraceMs]].
     *
-    * Safe to run concurrently with a committing stream: one committed
-    * snapshot pins the fold, drops touch only folded batches, and
-    * uncommitted-dir GC is grace-gated (see [[DefaultGcGraceMs]]) plus
-    * re-checked against the commit marker immediately before each
-    * delete — versions half first, so a straggler versions job whose
-    * dir vanishes fails its own commit (and redelivers) rather than
-    * committing tombstones whose delta was GC'd.
+    * Safe to run concurrently with a committing stream: the fold is
+    * computed from one snapshot and commits only if every entry it
+    * replaces is still live; a batch the stream commits meanwhile stays
+    * live next to the folded base.
     */
-  def compact(spark: SparkSession, outDir: String,
-      gcGraceMs: Long = DefaultGcGraceMs): Set[Int] = {
-    val fs = new org.apache.hadoop.fs.Path(dataPath(outDir))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def bucketsUnder(root: String, onlyBatches: Set[String]): Set[Int] = {
-      val p = new org.apache.hadoop.fs.Path(root)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).filter(_.isDirectory)
-        .filter(d => onlyBatches.contains(
-          d.getPath.getName.stripPrefix("batch=")))
-        .flatMap(batchDir =>
-          fs.listStatus(batchDir.getPath).map(_.getPath.getName)
-            .filter(_.startsWith("bucket="))
-            .map(_.stripPrefix("bucket=").toInt)).toSet
-    }
-    // GC uncommitted batches first (crash window between the delta
-    // write and the versions job COMMIT): the _SUCCESS-gated commit
-    // point hides them from every reader, their tombstones never took
-    // effect, and a redelivery rewrites the same dirs — folding them
-    // would resurrect an uncommitted batch. Both halves go: the delta
-    // dir AND any half-written versions dir (partial part-files, no
-    // _SUCCESS) of the same crashed commit. Grace-gated: an in-flight
-    // commit younger than gcGraceMs is NOT a crash and must survive.
-    val committed = committedBatchIds(spark, outDir)
-    val now = System.currentTimeMillis()
-    val uncommitted = (batchIdsUnder(spark, deltaPath(outDir)) ++
-      (batchIdsUnder(spark, versionsPath(outDir)) - BaseBatch)) -- committed
-    uncommitted.foreach { id =>
-      val vDir = new org.apache.hadoop.fs.Path(
-        s"${versionsPath(outDir)}/batch=$id")
-      val dDir = new org.apache.hadoop.fs.Path(
-        s"${deltaPath(outDir)}/batch=$id")
-      val age = Seq(vDir, dDir).filter(fs.exists)
-        .map(p => now - fs.getFileStatus(p).getModificationTime)
-        .foldLeft(Long.MaxValue)(math.min)
-      val ok = new org.apache.hadoop.fs.Path(vDir, "_SUCCESS")
-      // ONE marker observation decides both halves (a second look after
-      // deleting vDir would be vacuously "absent" — the marker lived
-      // inside it). This re-check narrows the commit-vs-GC race to the
-      // instant between the observation and the deletes; it cannot
-      // close it — no filesystem-only protocol can — which is why the
-      // grace window is the real guarantee: correctness requires
-      // gcGraceMs > the longest possible commit duration, same contract
-      // as Iceberg's orphan-file retention vs job runtime.
-      if (age >= gcGraceMs && !fs.exists(ok)) {
-        if (fs.exists(vDir)) fs.delete(vDir, true)
-        if (fs.exists(dDir)) fs.delete(dDir, true)
-      }
-    }
-    for (root <- Seq(deltaPath(outDir), versionsPath(outDir))) {
-      val p = new org.apache.hadoop.fs.Path(root)
-      if (fs.exists(p) && fs.listStatus(p).isEmpty) fs.delete(p, true)
-    }
-
-    // fold COMMITTED state only — an uncommitted batch still inside its
-    // grace window neither marks buckets affected nor loses its dirs
-    val affected = bucketsUnder(deltaPath(outDir), committed) ++
-      bucketsUnder(versionsPath(outDir), committed)
+  def compact(spark: SparkSession, outDir: String): Set[Int] = {
+    val stageDir = s"$outDir/$StageTriples"
+    val snap = latestSnapshot(spark, stageDir)
+    gcOrphans(spark, stageDir, snap)
+    val affected = snap.of(Delta, Tomb).map(_.bucket)
     if (affected.isEmpty) return Set.empty
     val t0 = System.currentTimeMillis()
-
-    // the kill-horizon aggregate reads only (url, seq, bucket) columns
-    // of base+delta+versions — independent of the staged writes below,
-    // so it runs on a driver thread OVERLAPPING them (guide §2.6); its
-    // result is awaited before the raise, which still happens strictly
-    // BEFORE the fold commits (crash ⇒ over-reject, never silent wrong
-    // time travel); folds that remove no row — append-only batches —
-    // leave the floor untouched
-    val killF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(foldKillHorizonMs(spark, outDir, affected, committed))
+    Scope(spark) { scope =>
+      val snapA = snap.restrict(affected)
+      // repartition by bucket: compaction's whole point is few large
+      // files per bucket — one output partition per bucket (B is sized
+      // so a bucket fits a task)
+      val raw = rowsOf(spark, outDir, snapA).map(scope.persist(_))
+      val resolved = raw.map(live(spark, outDir, snapA, _, Long.MaxValue)
+        .repartition(col("bucket")))
+      val versions = readVersions(spark, outDir, affected, Some(snap))
+        .repartition(col("bucket"))
+      val horizon = (raw, readEntries(spark, stageDir, snapA, Tomb)) match {
+        case (Some(r), Some(t)) => killHorizonMs(r, broadcast(t))
+        case _ => 0L
+      }
+      fold(spark, outDir, snap, affected, resolved, versions, horizon, "compact", t0)
     }
-
-    // repartition by bucket: compaction's whole point is few large
-    // files per bucket — one output partition per bucket (B is sized so
-    // a bucket fits a task). healFold (not dropDuplicates) collapses
-    // crash-half-commit double counts while preserving legitimate
-    // duplicate-row multiplicity.
-    val resolved = healFold(
-      readTriplesWithSeqOriginOpt(spark, outDir, Some(committed))
-        .getOrElse(sys.error(s"no triple data under $outDir"))
-        .filter(col("bucket").isin(affected.toSeq: _*)))
-      .repartition(col("bucket"))
-    val staging = stagingPath(outDir)
-    resolved.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$staging/data")
-    readVersions(spark, outDir, affected, Some(committed))
-      .withColumn("batch", lit(BaseBatch))
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch", "bucket")
-      .parquet(s"$staging/versions")
-
-    raiseHorizonMs(spark, outDir, {
-      import scala.concurrent.Await
-      import scala.concurrent.duration.Duration
-      Await.result(killF, Duration.Inf)
-    })
-
-    commitStaged(spark, outDir, affected, committed)
-    appendLineage(spark, outDir, "compact", affected, t0,
-      System.currentTimeMillis())
     affected
   }
 
-  /** J6-analog (doi→docs lookup, cprex/corpus/corpus.py:114-134): fetch
-    * one url's triples via partition pruning — the bucket predicate is
-    * computable from the url, so the scan touches exactly one bucket
-    * directory (PartitionFilters in the plan; asserted in ResumeSpec).
-    * At 10^12 rows with B=10^5 buckets this reads 1/B of the table.
-    * B comes from the table's own metadata (never caller-supplied: a
-    * mismatched B would prune to the wrong partition and silently
-    * return zero rows).
-    */
-  def readTriplesForUrl(spark: SparkSession, outDir: String, url: String): DataFrame = {
-    val buckets = tableBuckets(spark, outDir)
-    readTriples(spark, outDir)
-      .filter(col("bucket") === pmod(hash(lit(url)), lit(buckets)) &&
-        col("url") === url)
-  }
-
-  val StageLinked = "linked"
-  val StageEntities = "entities"
+  // ------------------------------------------------------------------
+  // graph
+  // ------------------------------------------------------------------
 
   /** Content hash of the dictionary the entity table was built from —
     * recorded in entities/table_meta.json so an unchanged dict skips
@@ -1214,32 +836,18 @@ object Materialize {
   private def entitiesMetaPath(outDir: String) = s"$outDir/$StageEntities/table_meta.json"
 
   private def entitiesUpToDate(spark: SparkSession, outDir: String, hash: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(entitiesMetaPath(outDir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) false
-    else {
-      val in = fs.open(path)
-      val s = scala.io.Source.fromInputStream(in).mkString
-      in.close()
-      s.contains(s""""dict_hash":"$hash"""")
-    }
-  }
-
-  private def writeEntitiesMeta(spark: SparkSession, outDir: String, hash: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(entitiesMetaPath(outDir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    out.write(s"""{"dict_hash":"$hash"}""".getBytes("UTF-8"))
-    out.close()
+    val path = new Path(entitiesMetaPath(outDir))
+    val fs = fsOf(spark, entitiesMetaPath(outDir))
+    fs.exists(path) && readText(fs, path).contains(s""""dict_hash":"$hash"""")
   }
 
   /** Materialize the full graph: triples + linked triple table +
     * canonical entity table + lineage. ALL three stages are resumable:
-    * triples and linked at manifest/bucket granularity (append-only,
-    * completed buckets are never re-scanned or re-joined), the entity
-    * table by dictionary content hash (an unchanged dict skips the CC
-    * loop). A rerun over a fully materialized graph submits NO Spark
-    * jobs at all (asserted in ResumeSpec via a job listener).
+    * triples and linked at bucket granularity (completed buckets are
+    * never re-scanned or re-joined), the entity table by dictionary
+    * content hash (an unchanged dict skips the CC loop). A rerun over a
+    * fully materialized graph reads two snapshot files and submits NO
+    * Spark job (asserted in ResumeSpec via a job listener).
     */
   def materializeGraph(
       spark: SparkSession,
@@ -1250,14 +858,15 @@ object Materialize {
   ): Unit = {
     import spark.implicits._
     val b = resolveBuckets(spark, outDir, buckets)
-    val doneT = completedBuckets(spark, outDir)
-    val doneL = completedBucketsAt(spark, s"$outDir/$StageLinked/manifest",
-      StageLinked)
+    val triplesDir = s"$outDir/$StageTriples"
+    val linkedDir = s"$outDir/$StageLinked"
+    val snapT = openStage(spark, triplesDir)
+    val snapL = openStage(spark, linkedDir)
     val dHash = dictHash(ChemDict.entries)
     val entitiesDone = entitiesUpToDate(spark, outDir, dHash)
     val only: Set[Int] = onlyBuckets.getOrElse((0 until b).toSet)
-    val remainingT = (only -- doneT)
-    val remainingL = (only -- doneL)
+    val remainingT = only -- snapT.done
+    val remainingL = only -- snapL.done
     if (remainingT.isEmpty && remainingL.isEmpty && entitiesDone) return
 
     Scope(spark) { implicit scope =>
@@ -1271,25 +880,25 @@ object Materialize {
           .filter(col("bucket").isin(remainingT.toSeq: _*))
           .drop("bucket").as[Sentence]
         // seq=0 for the same schema-uniformity invariant as runResumable
-        appendBucketedWithManifest(spark,
-          Pipeline.triples(todo).toDF().withColumn("seq", lit(0L)), b,
-          s"$outDir/$StageTriples", StageTriples, remainingT)
+        bootstrap(spark, triplesDir, StageTriples, snapT,
+          Pipeline.triples(todo).toDF().withColumn("seq", lit(0L)), b, remainingT)
       }
       if (remainingL.nonEmpty) {
         // link ONLY the still-unlinked buckets' triples; the A1 gate +
         // dict join (surface links) is corpus-global, computed from the
         // full annotated table as always
-        val todo = readTriples(spark, outDir)
-          .filter(col("bucket").isin(remainingL.toSeq: _*))
-          .drop("bucket").as[Triple]
+        val snapNow = latestSnapshot(spark, triplesDir).restrict(remainingL)
+        val todo = resolve(spark, outDir, snapNow, Long.MaxValue)
+          .getOrElse(emptyTriples(spark, b))
+          .drop("seq", "bucket").as[Triple]
         val linked = Linking.linkTriples(todo, sents, ChemDict.entries)
-        appendBucketedWithManifest(spark, linked, b,
-          s"$outDir/$StageLinked", StageLinked, remainingL)
+        bootstrap(spark, linkedDir, StageLinked, snapL, linked, b, remainingL)
       }
       if (!entitiesDone) {
         Canonicalize.entityTable(spark, ChemDict.entries)
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$StageEntities/data")
-        writeEntitiesMeta(spark, outDir, dHash)
+        writeText(fsOf(spark, entitiesMetaPath(outDir)), new Path(entitiesMetaPath(outDir)),
+          s"""{"dict_hash":"$dHash"}""")
       }
     }
   }

@@ -176,7 +176,7 @@ object EventStream {
       .dropDuplicatesWithinWatermark("text_hash")
 
   /** Stream pages → triples using the batch pipeline per micro-batch.
-    * Checkpointed — restart-safe like the batch manifest path.
+    * Checkpointed — restart-safe like the batch resume path.
     */
   def streamTriples(
       spark: SparkSession, pagesDir: String, outDir: String, checkpointDir: String
@@ -196,10 +196,10 @@ object EventStream {
     * (`Materialize.incrementalUpdate`), so the continuously-updated KG
     * inherits the batch path's whole safety story —
     *
-    *  - Structured Streaming's foreachBatch is AT-LEAST-ONCE; the
-    *    content-derived batch id makes a replayed micro-batch
-    *    dynamic-overwrite its own partitions (idempotent commits →
-    *    exactly-once TABLE state);
+    *  - Structured Streaming's foreachBatch is AT-LEAST-ONCE; a
+    *    micro-batch becomes visible in one snapshot commit, so a replay
+    *    of a committed batch is a stale no-op and a replay of a crashed
+    *    one applies it afresh (exactly-once TABLE state);
     *  - repeated or out-of-order crawls of a url are stale no-ops
     *    (versions sidecar), so replays and late file discovery cannot
     *    regress a url to older content;
@@ -207,17 +207,16 @@ object EventStream {
     *    batch scatters over buckets (merge-on-read), which is the only
     *    viable shape for a stream of small batches; run `compact()` on
     *    whatever schedule read-amplification warrants — it is safe
-    *    concurrent with the committing stream (one committed-batch
-    *    snapshot pins its fold, drops touch only folded batches, and
-    *    uncommitted-dir GC is grace-gated, so keep
+    *    concurrent with the committing stream (its fold commits only if
+    *    every entry it replaces is still live, so a batch committed
+    *    meanwhile stays live; unnamed-dir GC is grace-gated, so keep
     *    `Materialize.DefaultGcGraceMs` above the longest micro-batch
-    *    commit);
+    *    write);
     *  - `readTriples` serves the live table and `readTriplesAsOf`
     *    time-travels it while the stream keeps committing: a batch
-    *    becomes visible atomically at its versions job's _SUCCESS
-    *    marker (the commit record every reader gates delta rows AND
-    *    tombstones on), so a reader mid-commit sees the pre-batch
-    *    state, never a half-applied one.
+    *    becomes visible atomically at the rename that publishes its
+    *    snapshot — a reader mid-commit sees the pre-batch state, never
+    *    a half-applied one.
     *
     * The table may start empty (first micro-batch bootstraps) or from
     * a `runResumable` bootstrap.
@@ -250,7 +249,7 @@ object EventStream {
     * derives them, and the parsed pages commit through the SAME
     * merge-on-read path — so the whole safety story above (idempotent
     * replay, stale no-ops, O(micro-batch) write amplification, atomic
-    * visibility at the versions marker) carries over unchanged.
+    * visibility at the snapshot swap) carries over unchanged.
     *
     * `lenientTail = true` is the DEFAULT here — the operational setting
     * for a directory fed by real crawlers: a damaged or non-atomically-

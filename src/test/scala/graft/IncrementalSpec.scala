@@ -24,6 +24,56 @@ class IncrementalSpec extends AnyFunSuite {
 
   import TripleFixtures.{tripleKeys, recrawl}
 
+  private def batchDirs(root: String): Seq[java.io.File] =
+    Option(new java.io.File(root).listFiles()).toSeq.flatten.filter(_.isDirectory)
+
+  private def rmRec(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rmRec); f.delete(); ()
+  }
+
+  private def copyRec(src: java.io.File, dst: java.io.File): Unit =
+    if (src.isDirectory) {
+      dst.mkdirs(); src.listFiles().foreach(f => copyRec(f, new java.io.File(dst, f.getName)))
+    } else Files.copy(src.toPath, dst.toPath)
+
+  /** A bootstrapped table under the crash-injecting `faulty:` scheme
+    * (see [[FaultyFs]]): its local dir and its uri.
+    */
+  private def faultyTable(tag: String, base: Seq[Page]): (java.io.File, String) = {
+    FaultyFs.install(spark)
+    val dir = Files.createTempDirectory(tag).toFile
+    val d = FaultyFs.uri(dir)
+    Materialize.runResumable(spark, ds(base), d, B)
+    (dir, d)
+  }
+
+  /** Crash `op` on `dir` before the first counted FS op whose log line
+    * matches `at` — a process killed at that instant. A crash-free run
+    * on a copy finds the op's position.
+    */
+  private def crashAt(dir: java.io.File, at: String)(op: String => Unit): Unit = {
+    val probe = Files.createTempDirectory("graft-incr-probe").toFile
+    rmRec(probe)
+    copyRec(dir, probe)
+    FaultyFs.arm(Long.MaxValue)
+    op(FaultyFs.uri(probe))
+    val k = FaultyFs.log.indexWhere(_.matches(at)) + 1
+    FaultyFs.disarm()
+    rmRec(probe)
+    assert(k > 0, s"no op matches $at")
+    FaultyFs.arm(k)
+    val crashed = try { op(FaultyFs.uri(dir)); false } catch { case _: Exception => true }
+    FaultyFs.disarm()
+    assert(crashed, s"no crash injected at op $k")
+  }
+
+  /** The first counted op of the versions write: the delta rows are
+    * written, the batch's versions (its tombstones) are not.
+    */
+  private val versionsWrite = """\w+ .*/triples/versions/batch=.*"""
+  /** The snapshot swap: delta and versions are fully written, unnamed. */
+  private val snapshotSwap = """rename .*/triples/snapshots/v\d+"""
+
   test("bootstrap + recrawl/new batch == full recompute over the latest world") {
     val dir = Files.createTempDirectory("graft-incr").toString
     val base = (0L until 40L).map(PageGen.genPage(_).page)
@@ -149,11 +199,12 @@ class IncrementalSpec extends AnyFunSuite {
     val compacted = Materialize.compact(spark, dirM)
     assert(compacted == sM.affectedBuckets)
     assert(tripleKeys(Materialize.readTriples(spark, dirM)) == expect)
-    assert(!new java.io.File(Materialize.deltaPath(dirM)).exists())
-    val vBatches = new java.io.File(Materialize.versionsPath(dirM))
-      .listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(vBatches == Set(s"batch=${Materialize.BaseBatch}"),
-      s"expected only the consolidated versions batch, got $vBatches")
+    assert(batchDirs(Materialize.deltaPath(dirM)).isEmpty)
+    val snap = Materialize.latestSnapshot(spark, s"$dirM/triples")
+    assert(snap.of(Materialize.Delta, Materialize.Tomb).isEmpty)
+    val vBatches = batchDirs(Materialize.versionsPath(dirM)).map(_.getName).toSet
+    assert(vBatches == snap.of(Materialize.VBase).map(e => s"batch=${e.id}"),
+      s"expected only the consolidated versions batches, got $vBatches")
     assert(Materialize.compact(spark, dirM).isEmpty) // idempotent no-op
 
     // a later MoR batch after compaction still resolves
@@ -167,25 +218,31 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("MoR crash replay is idempotent: wiping versions and re-applying the same batch changes nothing") {
-    val dir = Files.createTempDirectory("graft-incr-replay").toString
     val base = (0L until 20L).map(PageGen.genPage(_).page)
-    Materialize.runResumable(spark, ds(base), dir, B)
     val batch = Seq(recrawl(4, 504, tsPlusDays = 30), PageGen.genPage(20).page)
-    Materialize.incrementalUpdate(spark, ds(batch), dir, B, mergeOnRead = true)
-    val keys = tripleKeys(Materialize.readTriples(spark, dir))
-    // simulate a crash that committed delta+tombstones but lost the
-    // versions append: the replayed batch must land on the SAME batch id
-    // and dynamic-overwrite its own partitions, not duplicate them
-    def rmRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmRec); f.delete(); ()
+    val (dir, d) = faultyTable("graft-incr-replay", base)
+    // the crash-free result of applying the batch once
+    val (_, ref) = faultyTable("graft-incr-replay-ref", base)
+    Materialize.incrementalUpdate(spark, ds(batch), ref, B, mergeOnRead = true)
+    val keys = tripleKeys(Materialize.readTriples(spark, ref))
+    val rows = Materialize.readTriples(spark, ref).count()
+    // a crash that wrote the delta rows but lost the versions write:
+    // the replayed batch must apply exactly once, not duplicate them
+    crashAt(dir, versionsWrite) { t =>
+      Materialize.incrementalUpdate(spark, ds(batch), t, B, mergeOnRead = true)
     }
-    rmRec(new java.io.File(Materialize.versionsPath(dir)))
-    val s = Materialize.incrementalUpdate(spark, ds(batch), dir, B, mergeOnRead = true)
-    assert(s.appliedUrls == 2) // versions gone → batch re-applies
-    assert(tripleKeys(Materialize.readTriples(spark, dir)) == keys)
+    val s = Materialize.incrementalUpdate(spark, ds(batch), d, B, mergeOnRead = true)
+    assert(s.appliedUrls == 2) // versions never committed → batch re-applies
+    assert(tripleKeys(Materialize.readTriples(spark, d)) == keys)
     // and row MULTIPLICITY is unchanged too (no duplicate delta rows)
-    assert(Materialize.readTriples(spark, dir).count() ==
-      Materialize.readTriples(spark, dir).distinct().count())
+    assert(Materialize.readTriples(spark, d).count() == rows)
+    assert(Materialize.readTriples(spark, d).count() ==
+      Materialize.readTriples(spark, d).distinct().count())
+    // a second replay, after the commit, is a stale no-op
+    assert(Materialize.incrementalUpdate(spark, ds(batch), d, B,
+      mergeOnRead = true).appliedUrls == 0)
+    assert(tripleKeys(Materialize.readTriples(spark, d)) == keys)
+    assert(Materialize.readTriples(spark, d).count() == rows)
   }
 
   test("mixed modes: COW after MoR inline-compacts the buckets it rewrites") {
@@ -205,27 +262,26 @@ class IncrementalSpec extends AnyFunSuite {
     assert(tripleKeys(Materialize.readTriples(spark, dir)) ==
       tripleKeys(Pipeline.run(ds(world)).toDF()))
     // the COW-rewritten buckets carry no outstanding delta or
-    // un-compacted versions-batch dirs
+    // un-compacted versions, neither in the snapshot nor on disk
+    val snap = Materialize.latestSnapshot(spark, s"$dir/triples")
     for (bk <- s.affectedBuckets) {
-      def noBucketDir(root: String, excludeBase: Boolean) = {
-        val r = new java.io.File(root)
-        !r.exists() || r.listFiles().filter(_.isDirectory)
-          .filterNot(bd => excludeBase &&
-            bd.getName == s"batch=${Materialize.BaseBatch}")
-          .forall(bd => !new java.io.File(bd, s"bucket=$bk").exists())
-      }
-      assert(noBucketDir(Materialize.deltaPath(dir), excludeBase = false),
+      assert(snap.restrict(Set(bk)).of(Materialize.Delta, Materialize.Tomb).isEmpty,
+        s"outstanding delta or tombstones for bucket $bk")
+      val consolidated = snap.restrict(Set(bk)).of(Materialize.VBase).map(e => s"batch=${e.id}")
+      assert(batchDirs(Materialize.deltaPath(dir))
+        .forall(bd => !new java.io.File(bd, s"bucket=$bk").exists()),
         s"delta leftover for bucket $bk")
-      assert(noBucketDir(Materialize.versionsPath(dir), excludeBase = true),
+      assert(batchDirs(Materialize.versionsPath(dir))
+        .filterNot(bd => consolidated(bd.getName))
+        .forall(bd => !new java.io.File(bd, s"bucket=$bk").exists()),
         s"un-compacted versions leftover for bucket $bk")
     }
   }
 
   test("an incremental update into a never-bootstrapped bucket does not poison bootstrap resume") {
-    // the manifest is a shared lineage log: upsert lineage rows landing
-    // in a bucket the bootstrap never finished must NOT make resume
-    // skip it (stage-filtered completedBuckets) — silent loss of every
-    // base page hashing there otherwise
+    // an upsert landing in a bucket the bootstrap never finished must
+    // NOT make resume skip it (only bootstrap commits mark a bucket
+    // done) — silent loss of every base page hashing there otherwise
     val dir = Files.createTempDirectory("graft-incr-resume").toString
     val base = (0L until 40L).map(PageGen.genPage(_).page)
     import org.apache.spark.sql.functions._
@@ -251,87 +307,35 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("MoR commit gate: a delta batch without its versions write is invisible and GC'd, not half-applied") {
-    val dir = Files.createTempDirectory("graft-incr-gate").toString
     val base = (0L until 20L).map(PageGen.genPage(_).page)
-    Materialize.runResumable(spark, ds(base), dir, B)
-    val keys0 = tripleKeys(Materialize.readTriples(spark, dir))
+    val (dir, d) = faultyTable("graft-incr-gate", base)
+    val keys0 = tripleKeys(Materialize.readTriples(spark, d))
     val batch = Seq(recrawl(4, 504, tsPlusDays = 30), PageGen.genPage(20).page)
-    Materialize.incrementalUpdate(spark, ds(batch), dir, B, mergeOnRead = true)
-    // crash window: delta committed, versions write lost
-    def rmRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmRec); f.delete(); ()
+    // crash window: delta written, versions write lost
+    crashAt(dir, versionsWrite) { t =>
+      Materialize.incrementalUpdate(spark, ds(batch), t, B, mergeOnRead = true)
     }
-    rmRec(new java.io.File(Materialize.versionsPath(dir)))
-    // the uncommitted delta must be INVISIBLE: without the gate the new
-    // rows would be live with no tombstone killing url 4's old rows —
-    // both crawls of url 4 returned at once
-    assert(tripleKeys(Materialize.readTriples(spark, dir)) == keys0,
+    val deltas = batchDirs(Materialize.deltaPath(dir.getPath))
+    assert(deltas.nonEmpty, "precondition: the crash left the delta batch behind")
+    // the uncommitted delta must be INVISIBLE: otherwise the new rows
+    // would be live with no tombstone killing url 4's old rows — both
+    // crawls of url 4 returned at once
+    assert(tripleKeys(Materialize.readTriples(spark, d)) == keys0,
       "uncommitted delta rows leaked into the read path")
-    // compact GCs the uncommitted dir instead of folding it (grace 0:
-    // the test synthesizes a crash, so age-gating is waived)
-    assert(Materialize.compact(spark, dir, gcGraceMs = 0L).isEmpty)
-    assert(!new java.io.File(Materialize.deltaPath(dir)).exists(),
+    // compact GCs the unnamed dir instead of folding it, once it is
+    // older than the GC grace (aged here: the crash is synthesized)
+    val old = System.currentTimeMillis() - Materialize.DefaultGcGraceMs - 60000L
+    deltas.foreach(_.setLastModified(old))
+    assert(Materialize.compact(spark, d).isEmpty)
+    assert(batchDirs(Materialize.deltaPath(dir.getPath)).isEmpty,
       "compact must GC uncommitted delta batches")
-    assert(tripleKeys(Materialize.readTriples(spark, dir)) == keys0)
+    assert(tripleKeys(Materialize.readTriples(spark, d)) == keys0)
     // redelivery then applies cleanly
-    val s = Materialize.incrementalUpdate(spark, ds(batch), dir, B, mergeOnRead = true)
+    val s = Materialize.incrementalUpdate(spark, ds(batch), d, B, mergeOnRead = true)
     assert(s.appliedUrls == 2)
     val world = base.filterNot(_.url == batch.head.url) ++ batch
-    assert(tripleKeys(Materialize.readTriples(spark, dir)) ==
+    assert(tripleKeys(Materialize.readTriples(spark, d)) ==
       tripleKeys(Pipeline.run(ds(world)).toDF()))
-  }
-
-  test("healFold preserves legitimate duplicate multiplicity while healing half-commit double counts") {
-    import spark.implicits._
-    // k copies in ONE origin are legitimate → k survive; equal copies
-    // in BOTH origins exist only via a half-committed fold → k, not 2k
-    // and not 1 (dropDuplicates would give 1)
-    val rows = Seq(
-      ("u1", 10L, "b"), ("u1", 10L, "b"),             // 2 legit base copies
-      ("u2", 20L, "d"), ("u2", 20L, "d"), ("u2", 20L, "d"), // 3 legit delta copies
-      ("u3", 30L, "b"), ("u3", 30L, "d"),             // folded once: (1,1) → 1
-      ("u4", 40L, "b"), ("u4", 40L, "b"), ("u4", 40L, "d"), ("u4", 40L, "d") // folded pair: (2,2) → 2
-    ).toDF("url", "seq", "origin")
-    val healed = Materialize.healFold(rows)
-      .groupBy("url").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(healed == Map("u1" -> 2L, "u2" -> 3L, "u3" -> 1L, "u4" -> 2L))
-  }
-
-  test("compact heals a crashed half-commit (folded base + undropped delta) without changing multiplicity") {
-    val dir = Files.createTempDirectory("graft-incr-heal").toString
-    val base = (0L until 20L).map(PageGen.genPage(_).page)
-    Materialize.runResumable(spark, ds(base), dir, B)
-    val batch = Seq(recrawl(4, 504, tsPlusDays = 30), PageGen.genPage(20).page)
-    Materialize.incrementalUpdate(spark, ds(batch), dir, B, mergeOnRead = true)
-    val world = base.filterNot(_.url == batch.head.url) ++ batch
-    val expectKeys = tripleKeys(Pipeline.run(ds(world)).toDF())
-    val expectCount = Pipeline.run(ds(world)).count()
-
-    // snapshot the un-compacted delta + versions state
-    def copyRec(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs(); src.listFiles().foreach(f => copyRec(f, new java.io.File(dst, f.getName)))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-    }
-    val tmp = Files.createTempDirectory("graft-heal-snap").toFile
-    copyRec(new java.io.File(Materialize.deltaPath(dir)), new java.io.File(tmp, "delta"))
-    copyRec(new java.io.File(Materialize.versionsPath(dir)), new java.io.File(tmp, "versions"))
-
-    Materialize.compact(spark, dir)
-    // recreate the crash state: base already holds the folded rows, but
-    // the delta + un-compacted versions dirs were never dropped
-    copyRec(new java.io.File(tmp, "delta"), new java.io.File(Materialize.deltaPath(dir)))
-    def rmRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmRec); f.delete(); ()
-    }
-    rmRec(new java.io.File(Materialize.versionsPath(dir)))
-    copyRec(new java.io.File(tmp, "versions"), new java.io.File(Materialize.versionsPath(dir)))
-    // re-running compact (the documented healing step) restores exact
-    // keys AND multiplicity
-    assert(Materialize.compact(spark, dir).nonEmpty)
-    assert(tripleKeys(Materialize.readTriples(spark, dir)) == expectKeys)
-    assert(Materialize.readTriples(spark, dir).count() == expectCount)
   }
 
   test("equal-ts ties within a batch break deterministically (replay commits identical content)") {
@@ -377,9 +381,9 @@ class IncrementalSpec extends AnyFunSuite {
     Materialize.incrementalUpdate(spark, ds(Seq(gone)), dir, B)
     assert(Materialize.readTriples(spark, dir)
       .filter(col("url") === loner.get).count() == 0)
-    val bkDir = new java.io.File(
-      s"${Materialize.dataPath(dir)}/bucket=${bucketOf(loner.get)}")
-    assert(!bkDir.exists() || bkDir.listFiles().forall(!_.getName.endsWith(".parquet")),
+    val bkDirs = batchDirs(Materialize.dataPath(dir))
+      .map(new java.io.File(_, s"bucket=${bucketOf(loner.get)}"))
+    assert(bkDirs.forall(d => !d.exists() || d.listFiles().forall(!_.getName.endsWith(".parquet"))),
       "a fully-emptied bucket partition must not keep stale parquet files")
   }
 
@@ -461,37 +465,13 @@ class IncrementalSpec extends AnyFunSuite {
     assert(tripleKeys(Materialize.readTriplesAsOf(spark, dir, tV1)) == snap1)
     assert(tripleKeys(Materialize.readTriplesAsOf(spark, dir, Long.MaxValue)) == snap1)
     assert(tripleKeys(Materialize.readTriples(spark, dir)) == snap1)
-    // legacy tables (folded before horizon markers existed) must not
-    // silently lose the floor: with the marker dir gone the read falls
-    // back to the conservative pre-marker rule (max consolidated
-    // version) and still rejects the expired snapshot
-    def rmRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmRec); f.delete(); ()
-    }
-    rmRec(new java.io.File(Materialize.horizonPath(dir)))
-    val e2 = intercept[IllegalArgumentException] {
-      Materialize.readTriplesAsOf(spark, dir, t0)
-    }
-    assert(e2.getMessage.contains("expired snapshot"),
-      "legacy fallback must keep rejecting snapshots below the pre-marker floor")
-    // the fallback self-migrates: the scanned floor is materialized as
-    // a marker so the O(table) scan runs once, and the dir can never
-    // exist empty (marker-first) — the floor survives the migration
-    val hDir = new java.io.File(Materialize.horizonPath(dir))
-    assert(hDir.exists() && hDir.listFiles().exists(_.getName.startsWith("h_")),
-      "legacy fallback must materialize its floor as a marker")
-    val e3 = intercept[IllegalArgumentException] {
-      Materialize.readTriplesAsOf(spark, dir, t0)
-    }
-    assert(e3.getMessage.contains("expired snapshot"))
   }
 
   test("horizon survives a zero-triple tombstone whose delta dir was pruned before the fold") {
     // a re-crawl that extracts ZERO triples commits a tombstone with no
-    // delta bucket dirs; once another commit prunes the empty delta
-    // batch dir, a later COW fold of the tombstone's bucket physically
-    // removes the dead rows with NO delta dirs present — the horizon
-    // pass must key off tombstones, not delta dirs, or time travel
+    // delta rows; a later COW fold of the tombstone's bucket physically
+    // removes the dead rows with NO delta rows present — the horizon
+    // pass must key off tombstones, not delta rows, or time travel
     // below the kill silently serves a state missing the url entirely
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft-incr-zombstone").toString
@@ -508,14 +488,13 @@ class IncrementalSpec extends AnyFunSuite {
       warc_ts = new Timestamp(uPage.warc_ts.getTime + 2000L * 86400000L))
     assert(Materialize.incrementalUpdate(spark, ds(Seq(v1)), dir, B,
       mergeOnRead = true).appliedUrls == 1)
-    // v2 (COW, EARLIER ts than v1, different bucket): its commit prunes
-    // the empty delta batch dir of v1
+    // v2 (COW, EARLIER ts than v1, different bucket)
     val wPage = base.find(p => p.url != uPage.url && bucketOf(p.url) != bkU).get
     val v2 = recrawl(base.indexOf(wPage).toLong, 555, tsPlusDays = 1000)
     assert(Materialize.incrementalUpdate(spark, ds(Seq(v2)), dir, B)
       .appliedUrls == 1)
-    assert(!new java.io.File(Materialize.deltaPath(dir)).exists(),
-      "precondition: the zero-triple batch's empty delta dir is pruned")
+    assert(Materialize.latestSnapshot(spark, s"$dir/triples").of(Materialize.Delta).isEmpty,
+      "precondition: the zero-triple batch committed tombstones only")
     // v3 (COW): a brand-new url hashing into U's bucket — its fold
     // physically removes U's dead rows while contributing no kill of
     // its own (new url, no prior rows)
@@ -538,51 +517,54 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("MoR commit gate: a half-written versions dir (no _SUCCESS) is uncommitted — no partial tombstones, redelivery applies") {
-    val dir = Files.createTempDirectory("graft-incr-halfv").toString
     val base = (0L until 20L).map(PageGen.genPage(_).page)
-    Materialize.runResumable(spark, ds(base), dir, B)
-    val keys0 = tripleKeys(Materialize.readTriples(spark, dir))
+    val (dir, d) = faultyTable("graft-incr-halfv", base)
+    val keys0 = tripleKeys(Materialize.readTriples(spark, d))
     val batch = Seq(recrawl(4, 504, tsPlusDays = 30), PageGen.genPage(20).page)
-    Materialize.incrementalUpdate(spark, ds(batch), dir, B, mergeOnRead = true)
-    // crash DURING the versions job: part-files present, job never
-    // committed — simulated by removing only the _SUCCESS marker
-    val vRoot = new java.io.File(Materialize.versionsPath(dir))
-    val vBatch = vRoot.listFiles().filter(_.isDirectory)
-      .filterNot(_.getName == s"batch=${Materialize.BaseBatch}").head
-    assert(new java.io.File(vBatch, "_SUCCESS").delete())
-    // the batch must be fully invisible: delta rows gated out AND its
+    // crash after the versions write, before the snapshot names it:
+    // part-files present, batch never committed
+    crashAt(dir, snapshotSwap) { t =>
+      Materialize.incrementalUpdate(spark, ds(batch), t, B, mergeOnRead = true)
+    }
+    val vBatches = batchDirs(Materialize.versionsPath(dir.getPath))
+    assert(vBatches.nonEmpty, "precondition: the crash left the versions batch behind")
+    // the batch must be fully invisible: delta rows out AND its
     // tombstones inert (a dir-existence gate would kill url 4's old
     // rows while the batch itself stays dark)
-    assert(tripleKeys(Materialize.readTriples(spark, dir)) == keys0,
+    assert(tripleKeys(Materialize.readTriples(spark, d)) == keys0,
       "a half-committed versions write leaked into the read path")
-    // stale rejection must not count the half-written versions either —
+    val crashed = Files.createTempDirectory("graft-incr-halfv-gc").toFile
+    rmRec(crashed)
+    copyRec(dir, crashed)
+    // stale rejection must not count the uncommitted versions either —
     // otherwise this very redelivery would be dropped and the batch
-    // could never commit; same content → same batch id → clean rewrite
-    val s = Materialize.incrementalUpdate(spark, ds(batch), dir, B, mergeOnRead = true)
+    // could never commit
+    val s = Materialize.incrementalUpdate(spark, ds(batch), d, B, mergeOnRead = true)
     assert(s.appliedUrls == 2, "redelivery was stale-rejected by an uncommitted versions dir")
     val world = base.filterNot(_.url == batch.head.url) ++ batch
-    assert(tripleKeys(Materialize.readTriples(spark, dir)) ==
+    assert(tripleKeys(Materialize.readTriples(spark, d)) ==
       tripleKeys(Pipeline.run(ds(world)).toDF()))
-    // and the crash state is also GC-able: recreate it, then compact
-    val vBatch2 = vRoot.listFiles().filter(_.isDirectory)
-      .filterNot(_.getName == s"batch=${Materialize.BaseBatch}").head
-    assert(new java.io.File(vBatch2, "_SUCCESS").delete())
-    // within the GC grace window the same state is INDISTINGUISHABLE
-    // from an in-flight commit and must survive compact untouched —
-    // GC'ing it would destroy a batch whose commit succeeds a moment
-    // later (checkpoint advances, never redelivered: permanent loss)
-    assert(Materialize.compact(spark, dir).isEmpty)
-    assert(vBatch2.exists() &&
-      new java.io.File(Materialize.deltaPath(dir)).exists(),
+    // and the crash state is GC-able. Within the GC grace window it is
+    // INDISTINGUISHABLE from an in-flight commit and must survive
+    // compact untouched — GC'ing it would destroy a batch whose commit
+    // succeeds a moment later (checkpoint advances, never redelivered:
+    // permanent loss)
+    val c = FaultyFs.uri(crashed)
+    def halves = batchDirs(Materialize.deltaPath(crashed.getPath)) ++
+      batchDirs(Materialize.versionsPath(crashed.getPath))
+    val orphans = halves
+    assert(orphans.size == 2)
+    assert(Materialize.compact(spark, c).isEmpty)
+    assert(orphans.forall(_.exists()),
       "compact must not GC an uncommitted batch inside the grace window")
-    assert(tripleKeys(Materialize.readTriples(spark, dir)) == keys0)
-    // past the grace (0 here) the crashed halves are GC'd
-    assert(Materialize.compact(spark, dir, gcGraceMs = 0L).isEmpty)
-    assert(!new java.io.File(Materialize.deltaPath(dir)).exists(),
-      "compact must GC the delta half of an uncommitted batch")
-    assert(!vBatch2.exists(),
-      "compact must GC the half-written versions dir of an uncommitted batch")
-    assert(tripleKeys(Materialize.readTriples(spark, dir)) == keys0)
+    assert(tripleKeys(Materialize.readTriples(spark, c)) == keys0)
+    // past the grace the crashed halves are GC'd
+    val old = System.currentTimeMillis() - Materialize.DefaultGcGraceMs - 60000L
+    orphans.foreach(_.setLastModified(old))
+    assert(Materialize.compact(spark, c).isEmpty)
+    assert(halves.isEmpty,
+      "compact must GC both halves (delta and versions) of an uncommitted batch")
+    assert(tripleKeys(Materialize.readTriples(spark, c)) == keys0)
   }
 
   test("time travel: folds that remove no row (append-only batches) expire no snapshot") {
@@ -628,8 +610,8 @@ class IncrementalSpec extends AnyFunSuite {
   test("a versions root holding only a zero-part-file crashed batch does not crash-loop the redelivery") {
     // crash early in the FIRST-ever versions job: the batch dir exists
     // with only _temporary inside — no readable parquet anywhere under
-    // versions/. readVersions must treat that as "no stored versions"
-    // (so the redelivery applies), not throw schema-inference errors
+    // versions/. No snapshot names it, so the redelivery must treat it
+    // as "no stored versions" and apply, not throw schema-inference errors
     val dir = Files.createTempDirectory("graft-incr-novparq").toString
     val base = (0L until 12L).map(PageGen.genPage(_).page)
     Materialize.runResumable(spark, ds(base), dir, B)

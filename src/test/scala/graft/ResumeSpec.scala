@@ -77,7 +77,7 @@ class ResumeSpec extends AnyFunSuite {
     val pages = PageGen.pages(spark, 60)
     Materialize.materializeGraph(spark, pages, dir, buckets = 4)
     val triples = Materialize.readTriples(spark, dir)
-    val linked = spark.read.parquet(s"$dir/linked/data")
+    val linked = Materialize.readLinked(spark, dir)
     val entities = spark.read.parquet(s"$dir/entities/data")
     assert(triples.count() > 0)
     // linked rows = triple rows (left-outer link preserves cardinality)
@@ -114,7 +114,7 @@ class ResumeSpec extends AnyFunSuite {
     val pages = PageGen.pages(spark, 60)
 
     def linkedKeys(dir: String): Set[String] =
-      spark.read.parquet(s"$dir/linked/data")
+      Materialize.readLinked(spark, dir)
         .selectExpr("concat_ws('|', url, sentId, headText, valueText, cast(cid as string))")
         .collect().map(_.getString(0)).toSet
 
@@ -131,8 +131,8 @@ class ResumeSpec extends AnyFunSuite {
 
     // a rerun over the fully materialized graph must do no stage work:
     // no triple re-scan, no linking join, no CC rebuild. Direct
-    // evidence: every data file untouched (mtime), and the only Spark
-    // jobs are the two one-row-per-bucket manifest reads.
+    // evidence: every data file untouched (mtime), and no Spark job at
+    // all — resume reads the two stages' latest snapshot files.
     def mtimes(sub: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -153,8 +153,29 @@ class ResumeSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
     val afterFiles = mtimes("triples/data") ++ mtimes("linked/data") ++ mtimes("entities/data")
     assert(afterFiles == beforeFiles, "rerun touched materialized data files")
-    // each tiny manifest read costs ~3 jobs (file listing + schema +
-    // the distinct-collect); stage work would be dozens
-    assert(jobs.get() <= 8, s"complete rerun submitted ${jobs.get()} jobs (manifest reads only expected)")
+    assert(jobs.get() == 0, s"complete rerun submitted ${jobs.get()} jobs (none expected)")
+  }
+
+  test("a table without a snapshot log fails loudly instead of reading as empty") {
+    // the layout before the snapshot log: bucket dirs straight under
+    // data/, no snapshots/ — its crash states are not interpretable
+    val dir = Files.createTempDirectory("graft-old-layout").toString
+    val pages = PageGen.pages(spark, 20)
+    Materialize.runResumable(spark, pages, dir, 4)
+    Materialize.readTriples(spark, dir).drop("bucket").write
+      .parquet(s"$dir/triples/old/data/bucket=0")
+    def rmRec(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rmRec); f.delete(); ()
+    }
+    Seq("data", "snapshots", "manifest").foreach(d => rmRec(new java.io.File(s"$dir/triples/$d")))
+    assert(new java.io.File(s"$dir/triples/old/data").renameTo(new java.io.File(s"$dir/triples/data")))
+    for ((name, call) <- Seq[(String, () => Any)](
+        "readTriples" -> (() => Materialize.readTriples(spark, dir)),
+        "runResumable" -> (() => Materialize.runResumable(spark, pages, dir, 4)),
+        "incrementalUpdate" -> (() => Materialize.incrementalUpdate(spark, pages, dir, 4)),
+        "compact" -> (() => Materialize.compact(spark, dir)))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("re-materialize it into a fresh outDir"), s"$name: ${e.getMessage}")
+    }
   }
 }
