@@ -20,6 +20,8 @@ import org.apache.spark.sql.functions._
   *     data/batch=<id>/bucket=<b>/part-*.parquet      base rows (seq = crawl version)
   *     delta/batch=<id>/bucket=<b>/part-*.parquet     merge-on-read rows
   *     versions/batch=<id>/bucket=<b>/part-*.parquet  per-url versions
+  *       (one parquet file per bucket per write: [[write]] hash-distributes
+  *       by bucket, the Iceberg `write.distribution-mode=hash` analog)
   *     snapshots/v<N>                                 the commit log
   *     manifest/part-*.parquet                        lineage (stage,bucket,rows,t0,t1)
   *     table_meta.json                                bucket count + dict hash
@@ -124,7 +126,7 @@ object Materialize {
   private[graft] val Tomb = "tomb"
   private[graft] val VBase = "vbase"
 
-  private def rootOf(kind: String): String =
+  private[graft] def rootOf(kind: String): String =
     if (kind == Tomb || kind == VBase) "versions" else kind
 
   /** One live bucket directory: `<root of kind>/batch=<id>/bucket=<bucket>`. */
@@ -305,7 +307,11 @@ object Materialize {
   }
 
   /** Write `df` bucket-partitioned under the fresh `<root>/batch=<id>`,
-    * counting rows per bucket DURING the write (write actions apply each
+    * one file per bucket per write: rows are hash-distributed by bucket
+    * first (Iceberg's `write.distribution-mode=hash`), so one task writes
+    * each bucket instead of every upstream task opening a small file in
+    * every bucket; no partition count, so AQE can coalesce. Rows per
+    * bucket are counted DURING the write (write actions apply each
     * successful task's accumulator updates exactly once). No success
     * marker: visibility is the snapshot commit.
     */
@@ -314,7 +320,8 @@ object Materialize {
     val acc = new BucketCountAcc
     spark.sparkContext.register(acc, s"rows:$kind")
     val counted = udf((b: Int) => { acc.add(b); b }).asNondeterministic()
-    df.withColumn("bucket", counted(col("bucket").cast("int")))
+    df.repartition(col("bucket"))
+      .withColumn("bucket", counted(col("bucket").cast("int")))
       .write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .partitionBy("bucket").parquet(s"$stageDir/${rootOf(kind)}/batch=$id")
     Written(kind, id, acc.value,
@@ -679,7 +686,7 @@ object Materialize {
       .join(appliedKeys.select(col("url"),
         col("warc_ts_ms").as("seq")), Seq("url"))
 
-    if (mergeOnRead) morCommit(spark, outDir, snap, fresh, appliedKeys, nApplied)
+    if (mergeOnRead) morCommit(spark, outDir, snap, fresh, appliedKeys)
     else cowCommit(spark, outDir, snap, b, fresh, appliedKeys, stored, affected)
     IncrementalStats(nApplied, nStale, affected)
   }
@@ -688,21 +695,12 @@ object Materialize {
     * tombstones) under one fresh id, published by one snapshot commit.
     */
   private def morCommit(spark: SparkSession, outDir: String, snap: Snapshot,
-      fresh: DataFrame, appliedKeys: DataFrame, nApplied: Long): Unit = {
+      fresh: DataFrame, appliedKeys: DataFrame): Unit = {
     val t0 = System.currentTimeMillis()
     val stageDir = s"$outDir/$StageTriples"
-    // partition-align every partitioned write or each shuffle partition
-    // writes one tiny file into every bucket dir it touches
-    // (~parallelism x buckets files per batch — the classic small-files
-    // problem). Small batches funnel through ONE post-shuffle writer
-    // task (repartition, NOT coalesce — coalesce would collapse the
-    // upstream extraction to one task too); large ones shuffle by
-    // bucket. Either way the exchange moves O(delta) rows.
-    def aligned(df: DataFrame): DataFrame =
-      if (nApplied <= 50000) df.repartition(1) else df.repartition(col("bucket"))
     val id = freshId()
-    val rows = write(spark, aligned(fresh), stageDir, Delta, id)
-    val vers = write(spark, aligned(appliedKeys), stageDir, Tomb, id)
+    val rows = write(spark, fresh, stageDir, Delta, id)
+    val vers = write(spark, appliedKeys, stageDir, Tomb, id)
     commit(spark, stageDir, snap, Seq(rows, vers))
     appendLineage(spark, stageDir, s"${StageTriples}_delta", rows.counts, t0)
   }
@@ -727,7 +725,6 @@ object Materialize {
     val newVersions = appliedKeys
       .unionByName(stored.filter(col("bucket").isin(affected.toSeq: _*))
         .join(appliedKeys.select("url"), Seq("url"), "left_anti"))
-      .repartition(col("bucket"))
     // the rewrite physically removes (a) re-crawled urls' live rows —
     // killed by this batch's own versions — and (b) already-superseded
     // rows swept out by the inline fold; append-only batches kill nothing
@@ -797,14 +794,9 @@ object Materialize {
     val t0 = System.currentTimeMillis()
     Scope(spark) { scope =>
       val snapA = snap.restrict(affected)
-      // repartition by bucket: compaction's whole point is few large
-      // files per bucket — one output partition per bucket (B is sized
-      // so a bucket fits a task)
       val raw = rowsOf(spark, outDir, snapA).map(scope.persist(_))
-      val resolved = raw.map(live(spark, outDir, snapA, _, Long.MaxValue)
-        .repartition(col("bucket")))
+      val resolved = raw.map(live(spark, outDir, snapA, _, Long.MaxValue))
       val versions = readVersions(spark, outDir, affected, Some(snap))
-        .repartition(col("bucket"))
       val horizon = (raw, readEntries(spark, stageDir, snapA, Tomb)) match {
         case (Some(r), Some(t)) => killHorizonMs(r, broadcast(t))
         case _ => 0L

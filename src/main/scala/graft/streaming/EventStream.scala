@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   *  - `windowedEventCounts`: watermarked tumbling-window aggregation
   *    over an events directory (file source).
   *  - `streamTriples`: page stream → foreachBatch(full KG pipeline) →
-  *    append sink. Each micro-batch reuses the exact batch dataflow, so
-  *    stream output ≡ batch output on the same rows (asserted in
-  *    StreamingSpec).
+  *    one `batch=<id>` dir per micro-batch. Each micro-batch reuses the
+  *    exact batch dataflow, so stream output ≡ batch output on the same
+  *    rows (asserted in StreamingSpec).
   */
 /** One pending session interval for `EventStream.userSessions`
   * (top-level: encoder codegen requires a publicly constructible
@@ -176,7 +176,10 @@ object EventStream {
       .dropDuplicatesWithinWatermark("text_hash")
 
   /** Stream pages → triples using the batch pipeline per micro-batch.
-    * Checkpointed — restart-safe like the batch resume path.
+    * Checkpointed — restart-safe like the batch resume path: each
+    * micro-batch OVERWRITES its own `outDir/batch=<batchId>`, so a batch
+    * the checkpoint replays after a crash (foreachBatch is at-least-once)
+    * replaces its earlier output instead of appending it twice.
     */
   def streamTriples(
       spark: SparkSession, pagesDir: String, outDir: String, checkpointDir: String
@@ -185,8 +188,8 @@ object EventStream {
     spark.readStream.schema(pageSchema).parquet(pagesDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Pipeline.run(batch.as[Page]).write.mode("append").parquet(outDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        Pipeline.run(batch.as[Page]).write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
       .start()
   }

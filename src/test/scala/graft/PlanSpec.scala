@@ -54,13 +54,15 @@ class PlanSpec extends AnyFunSuite with ScopePerTest {
   import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   import org.apache.spark.sql.types.{ArrayType, BinaryType, StringType}
 
-  private def exchanges(p: SparkPlan): Seq[ShuffleExchangeLike] = p match {
-    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-    case q: QueryStageExec => exchanges(q.plan)
-    case e: ShuffleExchangeLike =>
-      e +: p.children.flatMap(exchanges)
-    case _ => p.children.flatMap(exchanges)
+  /** Every node of a plan, adaptive and query-stage wrappers opened. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case _ => p +: p.children.flatMap(nodes)
   }
+
+  private def exchanges(p: SparkPlan): Seq[ShuffleExchangeLike] =
+    nodes(p).collect { case e: ShuffleExchangeLike => e }
 
   private def isWide(dt: org.apache.spark.sql.types.DataType): Boolean =
     dt == StringType || dt == BinaryType || dt.isInstanceOf[ArrayType]
@@ -167,6 +169,67 @@ class PlanSpec extends AnyFunSuite with ScopePerTest {
     // mention-count aggregation
     val exs = exchanges(df.queryExecution.executedPlan)
     assert(exs.size <= 2, s"unexpected exchanges (${exs.size}): probe side must not shuffle")
+  }
+
+  import org.apache.spark.sql.catalyst.expressions.Attribute
+  import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+  import org.apache.spark.sql.execution.QueryExecution
+  import org.apache.spark.sql.execution.command.DataWritingCommandExec
+  import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+  import org.apache.spark.sql.util.QueryExecutionListener
+
+  /** The executed plan of every table-data write `op` runs (the
+    * `batch=<id>` dirs), keyed by output path. The op's lineage append
+    * is its last write, so its arrival drains the async listener bus.
+    */
+  private def tableWrites(op: => Unit): Seq[(String, SparkPlan)] = {
+    val data = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
+    val lineage = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        nodes(qe.executedPlan).foreach {
+          case w: DataWritingCommandExec => w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand =>
+              val path = i.outputPath.toString
+              if (path.contains("/batch=")) data.add(path -> w.child)
+              else if (path.endsWith("/manifest")) lineage.incrementAndGet()
+            case _ =>
+          }
+          case _ =>
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      op
+      val deadline = System.currentTimeMillis() + 30000
+      while (lineage.get() == 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(lineage.get() == 1, "the op's lineage write never reached the listener")
+    data.toArray(Array.empty[(String, SparkPlan)]).toSeq
+  }
+
+  private def isBucketHash(e: ShuffleExchangeLike): Boolean = e.outputPartitioning match {
+    case HashPartitioning(Seq(a: Attribute), _) => a.name == "bucket"
+    case _ => false
+  }
+
+  test("table writes hash-distribute by bucket exactly once per written frame: bootstrap and compact") {
+    import graft.plans.Materialize
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-plan-table").toString
+    val boot = tableWrites(
+      Materialize.runResumable(spark, PageGen.pages(spark, 40, partitions = 8), dir, 8))
+    Materialize.incrementalUpdate(spark,
+      spark.createDataset((0L until 8L).map(i => TripleFixtures.recrawl(i, 500 + i, 1))),
+      dir, 8, mergeOnRead = true)
+    val comp = tableWrites(Materialize.compact(spark, dir))
+    assert(boot.size == 1, s"bootstrap writes: ${boot.map(_._1)}")
+    assert(comp.size == 2, s"compact writes: ${comp.map(_._1)}")
+    (boot ++ comp).foreach { case (path, plan) =>
+      val n = exchanges(plan).count(isBucketHash)
+      assert(n == 1, s"$path: $n hashpartitioning(bucket) exchanges, expected exactly 1:\n$plan")
+    }
   }
 
   test("relational queries stay inside whole-stage codegen") {

@@ -15,9 +15,13 @@ object TripleFixtures {
     * distinguishes two extractions.
     */
   def tripleKeys(df: org.apache.spark.sql.DataFrame): Set[String] =
+    tripleKeyBag(df).toSet
+
+  /** The same identity as a sorted multiset: duplicated rows show. */
+  def tripleKeyBag(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.selectExpr(
       "concat_ws('|', url, sentId, headLabel, headText, propType, valueText, unit)")
-      .collect().map(_.getString(0)).toSet
+      .collect().map(_.getString(0)).toSeq.sorted
 
   /** Deterministic "re-crawl with changed content" of page i: the body
     * of page `contentFrom` under page i's url, warc_ts shifted forward.
