@@ -129,11 +129,10 @@ object Bpe {
     * rewrite, increment the new ones) and the best pair comes from an
     * ordered set updated in O(log P) per count change. The naive
     * recount form — re-walk EVERY word's symbol stream per merge,
-    * O(numMerges × total symbols) — is kept as
-    * [[trainFromCountsRecount]], the spec's equality reference; at the
-    * 1M-word cap with thousands of merges the recount loop is the
-    * difference between minutes and tractable (BpeSpec measures the
-    * fixture-scale ratio).
+    * O(numMerges × total symbols) — is kept in BpeSpec as the equality
+    * reference; at the 1M-word cap with thousands of merges the recount
+    * loop is the difference between minutes and tractable (BpeSpec
+    * measures the fixture-scale ratio).
     */
   def trainFromCounts(
       wc: Seq[(String, Long)],
@@ -200,37 +199,6 @@ object Bpe {
               words(wi) = nw
             }
           }
-          step += 1
-        }
-      }
-    }
-    merges.toSeq
-  }
-
-  /** The reference recount trainer (pre-r6 implementation): rebuilds
-    * the full pair-count table from every word per merge. Kept as the
-    * brute-force equality baseline for the incremental trainer.
-    */
-  private[graft] def trainFromCountsRecount(
-      wc: Seq[(String, Long)],
-      numMerges: Int,
-      minPairFreq: Long = 2L): Seq[(String, String)] = {
-    var words: Array[(Vector[String], Long)] =
-      wc.sortBy(_._1).map { case (w, n) => (w.map(_.toString).toVector, n) }.toArray
-    val merges = mutable.ArrayBuffer.empty[(String, String)]
-    var step = 0
-    var stop = false
-    while (step < numMerges && !stop) {
-      val counts = mutable.Map.empty[(String, String), Long]
-      for ((syms, n) <- words; i <- 0 until syms.length - 1)
-        counts.updateWith((syms(i), syms(i + 1)))(c => Some(c.getOrElse(0L) + n))
-      if (counts.isEmpty) stop = true
-      else {
-        val (pair, cnt) = counts.minBy { case ((l, r), c) => (-c, l, r) }
-        if (cnt < minPairFreq) stop = true
-        else {
-          merges += pair
-          words = words.map { case (syms, n) => (mergePair(syms, pair._1, pair._2), n) }
           step += 1
         }
       }

@@ -605,22 +605,10 @@ object Dedup {
 
   // ---------- embedding cosine ----------
 
-  /** Cosine similarity of two float vectors as a Column expression —
-    * zip_with/aggregate higher-order functions. NOTE (r6): HOFs are
-    * CodegenFallback in Spark — each element evaluates through an
-    * interpreted lambda — so the scoring hot paths use
-    * [[cosineFloatUdf]] instead (same bits, ~20x less per-element
-    * overhead; equality is spec-asserted). This form remains the
-    * executable specification of the arithmetic.
-    */
-  def cosineCol(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-    val na = sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x * x))
-    val nb = sqrt(aggregate(b, lit(0.0d), (acc, x) => acc + x * x))
-    dot / (na * nb)
-  }
-
-  /** BIT-IDENTICAL reimplementation of [[cosineCol]] as a
+  /** Cosine similarity of two float vectors: a BIT-IDENTICAL
+    * reimplementation of the zip_with/aggregate Column form (kept in
+    * SimilaritySpec as the executable spec; higher-order functions are
+    * CodegenFallback in Spark, ~20x this UDF's per-element cost) as a
     * primitive-array UDF: per dim the product/squares are FLOAT
     * multiplies (zip_with's element type) widened to double and
     * accumulated left-to-right from a 0.0 seed, norms the same way,
@@ -629,7 +617,7 @@ object Dedup {
     * dedup_embedding_pairs oracles) hash-match exactly as before.
     * Array (not Seq) parameters decode via toFloatArray — no boxing.
     *
-    * One divergence: a ZERO-NORM vector. Under ANSI mode `cosineCol`
+    * One divergence: a ZERO-NORM vector. Under ANSI mode the Column form
     * raises DIVIDE_BY_ZERO on the zero divisor, while this UDF
     * returns NaN (plain IEEE 0/0 or x/0 in the JVM), and NaN fails
     * every `>= threshold` filter — so a zero embedding silently drops

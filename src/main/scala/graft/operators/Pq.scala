@@ -298,7 +298,7 @@ object Pq {
   /** Exact cosine in DOUBLE precision with left-associated dim-order
     * folds — every op is *, /, sqrt or +, so a SQL oracle with spelled
     * chains reproduces the bits (the float-precision
-    * [[Dedup.cosineCol]] cannot be replayed exactly cross-engine; the
+    * [[Dedup.cosineFloatUdf]] cannot be replayed exactly cross-engine; the
     * rerank stage needs exact replay because it RANKS by the value).
     */
   def cosineExact(a: org.apache.spark.sql.Column,

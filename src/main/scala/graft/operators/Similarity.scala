@@ -18,7 +18,7 @@ import scala.util.hashing.MurmurHash3
   *
   * Cosine scoring uses [[Dedup.cosineFloatUdf]] — a primitive-array
   * UDF bit-identical to the zip_with/aggregate Column form
-  * ([[Dedup.cosineCol]], kept as the executable spec): higher-order
+  * (kept as the executable spec in SimilaritySpec): higher-order
   * functions are CodegenFallback in Spark, so the "pure Column" form
   * actually evaluated an interpreted lambda per element — measured
   * ~20x the UDF's cost on the pair-verify hot path.

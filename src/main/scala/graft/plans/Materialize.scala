@@ -60,8 +60,24 @@ object Materialize {
   def versionsPath(outDir: String): String = s"$outDir/$StageTriples/versions"
   def metaPath(outDir: String): String = s"$outDir/$StageTriples/table_meta.json"
 
+  /** The session's file system: the driver-side commit path (snapshot
+    * swap, `table_meta.json`, `snapshots/`) stays on it, because the
+    * swap relies on it refusing a rename onto an existing file.
+    */
   private def fsOf(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Writer options of every table write job. Spark copies them into the
+    * job's Hadoop conf: `file:` paths go through [[NioLocalFileSystem]]
+    * (no `chmod` process per created file or dir; Hadoop caches file
+    * systems by scheme, not by conf, so the job bypasses the cache or
+    * `fs.file.impl` would be ignored), and no `_SUCCESS` marker is
+    * written — visibility is the snapshot commit.
+    */
+  private[graft] val TableWriteOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true",
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
 
   private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -322,7 +338,7 @@ object Materialize {
     val counted = udf((b: Int) => { acc.add(b); b }).asNondeterministic()
     df.repartition(col("bucket"))
       .withColumn("bucket", counted(col("bucket").cast("int")))
-      .write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .write.options(TableWriteOptions)
       .partitionBy("bucket").parquet(s"$stageDir/${rootOf(kind)}/batch=$id")
     Written(kind, id, acc.value,
       org.apache.spark.sql.types.StructType(df.schema.filterNot(_.name == "bucket")).json)
@@ -340,8 +356,7 @@ object Materialize {
       .withColumn("finishedAtMs", lit(System.currentTimeMillis()))
       .select("stage", "bucket", "rows", "startedAtMs", "finishedAtMs")
       .coalesce(1)
-      .write.mode(SaveMode.Append)
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .write.options(TableWriteOptions).mode(SaveMode.Append)
       .parquet(s"$stageDir/manifest")
   }
 
@@ -888,7 +903,8 @@ object Materialize {
       }
       if (!entitiesDone) {
         Canonicalize.entityTable(spark, ChemDict.entries)
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$StageEntities/data")
+          .write.options(TableWriteOptions).mode(SaveMode.Overwrite)
+          .parquet(s"$outDir/$StageEntities/data")
         writeText(fsOf(spark, entitiesMetaPath(outDir)), new Path(entitiesMetaPath(outDir)),
           s"""{"dict_hash":"$dHash"}""")
       }

@@ -189,7 +189,8 @@ object EventStream {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pipeline.run(batch.as[Page]).write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        Pipeline.run(batch.as[Page]).write.options(graft.plans.Materialize.TableWriteOptions)
+          .mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
       .start()
   }

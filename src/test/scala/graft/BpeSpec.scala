@@ -17,6 +17,37 @@ class BpeSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSpec.spark
 
+  /** The reference recount trainer (pre-r6 implementation): rebuilds
+    * the full pair-count table from every word per merge. Kept as the
+    * brute-force equality baseline for the incremental trainer.
+    */
+  private def trainFromCountsRecount(
+      wc: Seq[(String, Long)],
+      numMerges: Int,
+      minPairFreq: Long = 2L): Seq[(String, String)] = {
+    var words: Array[(Vector[String], Long)] =
+      wc.sortBy(_._1).map { case (w, n) => (w.map(_.toString).toVector, n) }.toArray
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    var step = 0
+    var stop = false
+    while (step < numMerges && !stop) {
+      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
+      for ((syms, n) <- words; i <- 0 until syms.length - 1)
+        counts.updateWith((syms(i), syms(i + 1)))(c => Some(c.getOrElse(0L) + n))
+      if (counts.isEmpty) stop = true
+      else {
+        val (pair, cnt) = counts.minBy { case ((l, r), c) => (-c, l, r) }
+        if (cnt < minPairFreq) stop = true
+        else {
+          merges += pair
+          words = words.map { case (syms, n) => (Bpe.mergePair(syms, pair._1, pair._2), n) }
+          step += 1
+        }
+      }
+    }
+    merges.toSeq
+  }
+
   private def df(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "text")
@@ -92,7 +123,7 @@ class BpeSpec extends AnyFunSuite {
     // equality on the classic fixture
     val fixture = Seq("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
     assert(Bpe.trainFromCounts(fixture, 10) ==
-      Bpe.trainFromCountsRecount(fixture, 10))
+      trainFromCountsRecount(fixture, 10))
     // equality on random corpora (several seeds, small alphabet so
     // merges interact heavily; includes minPairFreq early stops)
     for (seed <- 1 to 5) {
@@ -100,7 +131,7 @@ class BpeSpec extends AnyFunSuite {
       val words = (0 until 300).map(_ =>
         (0 until (1 + rnd.nextInt(12))).map(_ => ('a' + rnd.nextInt(4)).toChar).mkString)
       val wc = words.groupBy(identity).map { case (w, g) => w -> g.size.toLong }.toSeq
-      assert(Bpe.trainFromCounts(wc, 50) == Bpe.trainFromCountsRecount(wc, 50),
+      assert(Bpe.trainFromCounts(wc, 50) == trainFromCountsRecount(wc, 50),
         s"trainers diverged at seed $seed")
     }
     // speedup probe at a size where the recount term shows (not a hard
@@ -113,7 +144,7 @@ class BpeSpec extends AnyFunSuite {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
     val (mi, ti) = t(Bpe.trainFromCounts(big, 200))
-    val (mr, tr) = t(Bpe.trainFromCountsRecount(big, 200))
+    val (mr, tr) = t(trainFromCountsRecount(big, 200))
     assert(mi == mr)
     info(f"incremental $ti%.2fs vs recount $tr%.2fs (x${tr / ti}%.1f) on ${big.size} words / 200 merges")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +13,18 @@ class SimilaritySpec extends AnyFunSuite {
   private val K = 10
 
   private lazy val queries = emb.orderBy("vec_id").limit(20).cache()
+
+  /** Cosine similarity of two float vectors as a Column expression —
+    * zip_with/aggregate higher-order functions, the executable
+    * specification of `Dedup.cosineFloatUdf`'s arithmetic (HOFs are
+    * CodegenFallback in Spark, so the scoring paths use the UDF).
+    */
+  private def cosineCol(a: Column, b: Column): Column = {
+    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
+    val na = sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x * x))
+    val nb = sqrt(aggregate(b, lit(0.0d), (acc, x) => acc + x * x))
+    dot / (na * nb)
+  }
 
   test("brute-force top-k: k rows per query, ranked by descending cosine") {
     import spark.implicits._
@@ -179,7 +192,7 @@ class SimilaritySpec extends AnyFunSuite {
       .crossJoin(rows.select(col("vec_id").as("ib"), col("embedding").as("vb")))
       .filter(col("ia") < col("ib") && (col("ia") + col("ib")) % 37 === 0)
     val both = paired.select(
-      graft.operators.Dedup.cosineCol(col("va"), col("vb")).as("hof"),
+      cosineCol(col("va"), col("vb")).as("hof"),
       graft.operators.Dedup.cosineFloatUdf(col("va"), col("vb")).as("udf"))
       .as[(Double, Double)].collect()
     assert(both.nonEmpty)
