@@ -1,5 +1,5 @@
 package graft
-import graft.plans.Scope
+import graft.plans.{Materialize, Scope}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -21,7 +21,9 @@ object Verify {
     val names = Scope(spark)(SparkEntry.queries(_).keys.toSeq)
     names.foreach { name =>
       try Scope(spark) { scope =>
+        // fork-free like the table writes; the dump keeps its _SUCCESS
         SparkEntry.queries(scope)(name)(spark, sfDir).coalesce(1).write
+          .options(Materialize.ForkFreeWriteOptions)
           .mode("overwrite").parquet(s"$outDir/$name")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -30,7 +30,10 @@ import org.apache.spark.sql.functions._
   *    and wrapped in LogicalRDD leaves so each iteration plans over a
   *    flat leaf instead of re-analyzing the caller's whole upstream
   *    subtree, while keeping lineage-based recompute (SURVEY.md §4.2;
-  *    see connectedComponents for the measured re-planning cost).
+  *    see connectedComponents for the measured re-planning cost);
+  *  - a dictionary that already lives on the driver (`ChemDict.entries`)
+  *    runs the same blocking rule and a union-find there
+  *    ([[entityTable]]) instead of shuffling it.
   */
 object Canonicalize {
 
@@ -83,15 +86,32 @@ object Canonicalize {
     val spark = dict.sparkSession
     import spark.implicits._
     dict.map(e => (e.cid, Normalize.chemNorm(e.canonicalName)))
-      .flatMap { case (cid, name) =>
-        val mh = Normalize.minhash(Normalize.shingles(name), MinhashK)
-        val rows = MinhashK / Bands
-        (0 until Bands).map { b =>
-          val bandHash = java.util.Arrays.hashCode(mh.slice(b * rows, (b + 1) * rows))
-          (b, bandHash, cid, name)
-        }
-      }.toDF("band", "band_hash", "cid", "name")
+      .flatMap { case (cid, name) => bandKeys(name).map { case (b, h) => (b, h, cid, name) } }
+      .toDF("band", "band_hash", "cid", "name")
   }
+
+  /** The blocking rule, as plain functions shared by the distributed
+    * form ([[bandedNames]], [[candidatePairs]]) and the driver form
+    * ([[entityTable]]):
+    *  - `bandKeys`: the `Bands` (band, band_hash) LSH keys of one
+    *    chemNorm'd name;
+    *  - `keepsBucket`: a bucket of `n` names is blocked on only when
+    *    `1 < n <= maxBucket` (larger ones are degenerate and dropped);
+    *  - `similar`: both Jaccard verifications of a candidate pair.
+    */
+  def bandKeys(name: String): Seq[(Int, Int)] = {
+    val mh = Normalize.minhash(Normalize.shingles(name), MinhashK)
+    val rows = MinhashK / Bands
+    (0 until Bands).map(b => (b, java.util.Arrays.hashCode(mh.slice(b * rows, (b + 1) * rows))))
+  }
+
+  val MaxBucket = 64
+
+  def keepsBucket(n: Long, maxBucket: Int): Boolean = n > 1 && n <= maxBucket
+
+  def similar(x: String, y: String): Boolean =
+    Normalize.jaccard(Normalize.shingles(x), Normalize.shingles(y)) >= JaccardThreshold &&
+      Normalize.jaccard(x.split(' ').toSet, y.split(' ').toSet) >= TokenJaccardThreshold
 
   /** Candidate same-entity pairs (cidA < cidB) from LSH blocking +
     * Jaccard verification. The dictionary arrives as a distributed
@@ -101,24 +121,22 @@ object Canonicalize {
     */
   def candidatePairs(
       dict: Dataset[ChemDictEntry],
-      maxBucket: Int = 64
+      maxBucket: Int = MaxBucket
   ): DataFrame = {
     val banded = bandedNames(dict)
 
     // cap degenerate buckets before the self-join
+    val keep = udf((n: Long) => keepsBucket(n, maxBucket))
     val bucketSizes = banded.groupBy("band", "band_hash")
       .agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBucket && col("n") > 1)
+      .filter(keep(col("n")))
     val pruned = banded.join(bucketSizes, Seq("band", "band_hash"), "left_semi")
 
     val a = pruned.select(col("band"), col("band_hash"),
       col("cid").as("cid_a"), col("name").as("name_a"))
     val b = pruned.select(col("band"), col("band_hash"),
       col("cid").as("cid_b"), col("name").as("name_b"))
-    val similarUdf = udf { (x: String, y: String) =>
-      Normalize.jaccard(Normalize.shingles(x), Normalize.shingles(y)) >= JaccardThreshold &&
-        Normalize.jaccard(x.split(' ').toSet, y.split(' ').toSet) >= TokenJaccardThreshold
-    }
+    val similarUdf = udf((x: String, y: String) => similar(x, y))
     a.join(b, Seq("band", "band_hash"))
       .filter(col("cid_a") < col("cid_b"))
       .filter(similarUdf(col("name_a"), col("name_b")))
@@ -258,34 +276,12 @@ object Canonicalize {
     }
   }
 
-  /** The small-graph CC path: collect the (bounded) edge list, run
-    * min-label union-find on the driver, and resolve EVERY node's
-    * label with one broadcast left join (nodes stay distributed —
-    * only the ≤ 2·|edges| component map rides the broadcast). Same
-    * fixpoint as the distributed loop: union always keeps the smaller
-    * root, so each tree's root is its component minimum by induction,
-    * and `find` is order-independent — bit-identical labels for any
-    * edge arrival order or partitioning. Returned labels are
-    * materialized like the loop's, so callers release their pair caches
-    * right after.
+  /** Min-label union-find over an edge list: (endpoint, component
+    * minimum) for every endpoint. Union always keeps the smaller root,
+    * so each tree's root is its component minimum by induction, and
+    * `find` is order-independent — the same labels for any edge order.
     */
-  private def connectedComponentsDriver(nodes: DataFrame, pairs: DataFrame,
-      nodesArePairEndpoints: Boolean)(implicit scope: Scope): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val rows = pairs.select(col("cid_a").cast("long"), col("cid_b").cast("long"))
-      .collect()
-    // null endpoints: the distributed equi-joins drop such edges
-    // silently, and the node join below backfills their nodes; the
-    // endpoint-node form has no node join, so there a dropped edge
-    // would silently drop its non-null endpoint from the output
-    val edges = rows.collect {
-      case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
-    }
-    require(!nodesArePairEndpoints || edges.length == rows.length,
-      s"connectedComponents: ${rows.length - edges.length} pair(s) with a null " +
-        "endpoint — nodesArePairEndpoints would lose their nodes; filter them " +
-        "or pass the node set")
+  def unionFind(edges: Iterable[(Long, Long)]): scala.collection.Map[Long, Long] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x0: Long): Long = {
       var x = x0
@@ -305,7 +301,35 @@ object Canonicalize {
       }
     }
     val ids = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
-    val labelMap = ids.iterator.map(id => (id, find(id))).toSeq
+    scala.collection.mutable.LongMap.from(ids.iterator.map(id => (id, find(id))))
+  }
+
+  /** The small-graph CC path: collect the (bounded) edge list, run
+    * [[unionFind]] on the driver, and resolve EVERY node's label with
+    * one broadcast left join (nodes stay distributed — only the
+    * ≤ 2·|edges| component map rides the broadcast). Same fixpoint as
+    * the distributed loop, and bit-identical labels for any edge
+    * arrival order or partitioning. Returned labels are materialized
+    * like the loop's, so callers release their pair caches right after.
+    */
+  private def connectedComponentsDriver(nodes: DataFrame, pairs: DataFrame,
+      nodesArePairEndpoints: Boolean)(implicit scope: Scope): DataFrame = {
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    val rows = pairs.select(col("cid_a").cast("long"), col("cid_b").cast("long"))
+      .collect()
+    // null endpoints: the distributed equi-joins drop such edges
+    // silently, and the node join below backfills their nodes; the
+    // endpoint-node form has no node join, so there a dropped edge
+    // would silently drop its non-null endpoint from the output
+    val edges = rows.collect {
+      case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
+    }
+    require(!nodesArePairEndpoints || edges.length == rows.length,
+      s"connectedComponents: ${rows.length - edges.length} pair(s) with a null " +
+        "endpoint — nodesArePairEndpoints would lose their nodes; filter them " +
+        "or pass the node set")
+    val labelMap = unionFind(edges).toSeq
     // endpoint-node callers: the label map IS the answer — nodes ==
     // endpoints means no backfill rows exist and nothing distributed
     // remains to resolve, so skip the guard job, the node join and the
@@ -351,29 +375,30 @@ object Canonicalize {
         knownEdgeCount = Some(nPairs), nodesArePairEndpoints = true)
     }
 
-  /** Full canonicalization: dict → clustered entity table. The label
-    * back-attachment is a JOIN on cid, not a broadcast of a
-    * driver-built map — the dict never has to exist on the driver, and
-    * Catalyst still picks a broadcast join automatically when the dict
-    * is actually small.
+  /** Full canonicalization: dict → clustered entity table (clusterId =
+    * the minimum cid of the entry's component; an entry in no candidate
+    * pair is its own cluster). The dictionary is a driver array, so the
+    * blocking, the verification and the union-find run on the driver
+    * with the same rule as the distributed [[candidatePairs]] +
+    * [[pairComponents]] (the broadcast-small-side choice SparkER makes
+    * for blocking indexes): no job until the caller's action, which
+    * reads one local relation.
     */
-  def entityTable(dict: Dataset[ChemDictEntry])(implicit scope: Scope)
-      : Dataset[CanonicalEntity] = {
-    val spark = dict.sparkSession
+  def entityTable(spark: SparkSession, dict: Array[ChemDictEntry]): Dataset[CanonicalEntity] = {
     import spark.implicits._
-    val labels = pairComponents(candidatePairs(dict))
-    dict.toDF()
-      .join(labels, Seq("cid"), "left")
-      .select(coalesce(col("cluster_id"), col("cid")).as("clusterId"),
-        col("cid"),
-        col("canonicalName"), col("synonyms").as("memberNames"),
-        col("molecularFormula"), col("molecularWeight"))
-      .as[CanonicalEntity]
-  }
-
-  def entityTable(spark: SparkSession, dict: Array[ChemDictEntry])(implicit scope: Scope)
-      : Dataset[CanonicalEntity] = {
-    import spark.implicits._
-    entityTable(spark.createDataset(dict.toIndexedSeq))
+    val pairs = dict.toSeq
+      .flatMap { e =>
+        val name = Normalize.chemNorm(e.canonicalName)
+        bandKeys(name).map(_ -> (e.cid, name))
+      }
+      .groupMap(_._1)(_._2).valuesIterator
+      .filter(m => keepsBucket(m.size, MaxBucket))
+      .flatMap(m => for ((ca, na) <- m; (cb, nb) <- m if ca < cb && similar(na, nb))
+        yield (ca, cb))
+      .toSet
+    val labels = unionFind(pairs)
+    spark.createDataset(dict.toIndexedSeq.map(e => CanonicalEntity(
+      labels.getOrElse(e.cid, e.cid), e.cid, e.canonicalName, e.synonyms,
+      e.molecularFormula, e.molecularWeight)))
   }
 }

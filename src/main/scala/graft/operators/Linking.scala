@@ -76,38 +76,6 @@ object Linking {
         "canonical_smiles", "iupac_name")
   }
 
-  /** The per-SURFACE link table: (mention, cid, properties...) for every
-    * exact mention surface that (a) occurs >= minOccurrences times (the
-    * reference's Counter over ent.text is by exact surface,
-    * linker.py:149-153) and (b) resolves in the dictionary via
-    * chem_norm. This mirrors the reference's `properties` dict keyed by
-    * surface (linker.py:155) and its back-attachment by exact text
-    * (linker.py:160-161).
-    */
-  /** @param useBroadcast true = broadcast the dictionary sides (the
-    *   default when the dict fits executor memory); false = every dict
-    *   join is a shuffled hash join — the path for dictionaries too
-    *   large to broadcast, which must contain NO broadcast anywhere
-    *   (asserted by LinkingSpec under autoBroadcastJoinThreshold=-1).
-    */
-  private def surfaceLinks(
-      annotated: Dataset[Sentence],
-      dict: Dataset[ChemDictEntry],
-      minOccurrences: Int,
-      useBroadcast: Boolean
-  ): DataFrame = {
-    def side(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
-    val eligible = mentionCounts(annotated)
-      .filter(col("occurrences") >= minOccurrences)
-      .withColumn("name_norm", chemNormCol(col("mention")))
-      .select("mention", "name_norm")
-    eligible
-      .join(side(dictNames(dict)), Seq("name_norm"))
-      .join(side(dictProps(dict)), Seq("cid"))
-      .drop("name_norm")
-  }
-
   /** J2 strict form (linker.py:157-162): back-attach linked properties
     * to EVERY CHEM mention of the annotated sentence table — the
     * reference re-walks all docs after linking and sets `ent._.props`
@@ -153,27 +121,6 @@ object Linking {
     mentions.join(broadcast(links), Seq("mention"), "left_outer")
   }
 
-  /** J1+J2 broadcast path: triples ⟕ surface-link table on the exact
-    * head surface (CHEM heads only; non-CHEM heads pass through
-    * unlinked, as in the reference where only CHEM ents carry props).
-    */
-  def linkTriples(
-      triples: Dataset[Triple],
-      annotated: Dataset[Sentence],
-      dict: Dataset[ChemDictEntry],
-      minOccurrences: Int
-  ): DataFrame =
-    joinLinks(triples.toDF(),
-      surfaceLinks(annotated, dict, minOccurrences, useBroadcast = true))
-
-  def linkTriples(
-      triples: Dataset[Triple],
-      annotated: Dataset[Sentence],
-      dict: Array[ChemDictEntry],
-      minOccurrences: Int = MinOccurrences
-  ): DataFrame =
-    linkTriples(triples, annotated, dictDs(annotated.sparkSession, dict), minOccurrences)
-
   private def joinLinks(triples: DataFrame, links: DataFrame): DataFrame =
     triples
       .withColumn("head_surface", when(col("headLabel") === "CHEM", col("headText")))
@@ -190,7 +137,8 @@ object Linking {
     * persisting full Sentence rows (nested token/ent/rel arrays — the
     * dominant persist cost at 10^12 rows), one flatMap emits compact
     * (mention | triple) rows and only THAT union is persisted. Produces
-    * rows identical to `linkTriples` (asserted by LinkingSpec). The
+    * rows identical to the two-pass reference form kept in LinkingSpec
+    * (triples ⟕ links of a separate mention count). The
     * compact cache registers into `scope` (disk-backed MEMORY_AND_DISK
     * blocks are not reclaimed by storage-memory LRU, so a long-lived
     * session must release them).
@@ -200,9 +148,21 @@ object Linking {
       dictArr: Array[ChemDictEntry],
       minOccurrences: Int = MinOccurrences
   )(implicit scope: Scope): DataFrame = {
-    val spark = annotated.sparkSession
-    val dict = dictDs(spark, dictArr)
     val (eligible, triples) = fusedParts(annotated, minOccurrences)
+    linkEligible(triples, eligible, dictArr)
+  }
+
+  /** J1+J2 broadcast path: `triples` ⟕ the surface-link table of the
+    * A1-`eligible` mentions (a [[fusedParts]] result) on the exact head
+    * surface — CHEM heads only; non-CHEM heads pass through unlinked, as
+    * in the reference where only CHEM ents carry props. The link table
+    * mirrors the reference's `properties` dict keyed by surface
+    * (linker.py:155) and its back-attachment by exact text
+    * (linker.py:160-161).
+    */
+  def linkEligible(triples: DataFrame, eligible: DataFrame,
+      dictArr: Array[ChemDictEntry]): DataFrame = {
+    val dict = dictDs(triples.sparkSession, dictArr)
     val links = eligible
       .join(broadcast(dictNames(dict)), Seq("name_norm"))
       .join(broadcast(dictProps(dict)), Seq("cid"))
@@ -210,13 +170,15 @@ object Linking {
     joinLinks(triples, links)
   }
 
-  /** Shared skeleton of the fused single-pass paths: ONE flatMap over
-    * the annotated table emits compact (mention | triple) rows; only
-    * that union persists. Both subtrees of the final plan scan
-    * `combined`: the first scan (A1 groupBy) populates the cache within
-    * the caller's action, the second (triples) reads it.
+  /** Shared skeleton of the fused single-pass paths and of
+    * `Materialize.materializeGraph`: ONE flatMap over the annotated
+    * table emits compact (mention | triple) rows; only that union
+    * persists (into `scope`). Returns the A1-eligible surfaces
+    * (mention, name_norm, occurrences) and the triples, both scans of
+    * that cache: the first action over either populates it, every
+    * later one reads it.
     */
-  private def fusedParts(
+  def fusedParts(
       annotated: Dataset[Sentence],
       minOccurrences: Int
   )(implicit scope: Scope): (DataFrame, DataFrame) = {
@@ -243,7 +205,8 @@ object Linking {
   /** Fused + salted: the broadcast-free large-dict path with the
     * single-annotate-pass plan shape of `linkTriplesFused` (previously
     * the salted driver query recomputed the annotate stage twice).
-    * Identical rows to `linkTriplesSalted`/`linkTriples` (LinkingSpec).
+    * Identical rows to `linkTriplesFused` and to the two-pass reference
+    * forms kept in LinkingSpec.
     */
   def linkTriplesSaltedFused(
       annotated: Dataset[Sentence],
@@ -291,7 +254,7 @@ object Linking {
     * bounded heavy list. The ONLY broadcast in the plan is that list —
     * never the dictionary (plan-asserted: exactly one BroadcastExchange
     * carrying the single heavy_mention column). Rows identical to
-    * `linkTriples` / `linkTriplesSaltedFused` (LinkingSpec).
+    * `linkTriplesSaltedFused` and the LinkingSpec reference forms.
     */
   def linkTriplesSaltedTargeted(
       annotated: Dataset[Sentence],
@@ -327,43 +290,4 @@ object Linking {
         "left_outer")
       .drop("mention", "head_surface", "salt")
   }
-
-  /** The non-broadcast path for dictionaries too large to broadcast:
-    * NO broadcast anywhere in the plan (every dict join is a shuffled
-    * hash join — LinkingSpec asserts zero BroadcastExchange under
-    * autoBroadcastJoinThreshold=-1) plus explicit salting of the
-    * skewed probe side. Produces identical rows to `linkTriples`
-    * (asserted by LinkingSpec).
-    */
-  def linkTriplesSalted(
-      triples: Dataset[Triple],
-      annotated: Dataset[Sentence],
-      dict: Dataset[ChemDictEntry],
-      nSalts: Int,
-      minOccurrences: Int
-  ): DataFrame = {
-    val links = surfaceLinks(annotated, dict, minOccurrences, useBroadcast = false)
-    // dict side exploded ×nSalts
-    val saltedDict = links.withColumn("salt", explode(lit((0 until nSalts).toArray)))
-    // probe side: deterministic salt from url hash spreads head entities
-    val probe = triples.toDF()
-      .withColumn("head_surface", when(col("headLabel") === "CHEM", col("headText")))
-      .withColumn("salt", pmod(hash(col("url")), lit(nSalts)))
-    probe
-      .hint("shuffle_hash")
-      .join(saltedDict,
-        probe("head_surface") === saltedDict("mention") && probe("salt") === saltedDict("salt"),
-        "left_outer")
-      .drop("mention", "head_surface", "salt")
-  }
-
-  def linkTriplesSalted(
-      triples: Dataset[Triple],
-      annotated: Dataset[Sentence],
-      dict: Array[ChemDictEntry],
-      nSalts: Int = 8,
-      minOccurrences: Int = MinOccurrences
-  ): DataFrame =
-    linkTriplesSalted(triples, annotated, dictDs(annotated.sparkSession, dict),
-      nSalts, minOccurrences)
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.model.{Page, Sentence, Triple}
+import graft.model.{Page, Triple}
 import graft.operators.{Canonicalize, Linking}
 import graft.sources.ChemDict
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -67,17 +67,21 @@ object Materialize {
   private def fsOf(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Writer options of every table write job. Spark copies them into the
-    * job's Hadoop conf: `file:` paths go through [[NioLocalFileSystem]]
-    * (no `chmod` process per created file or dir; Hadoop caches file
+  /** Writer options that send a write job's `file:` paths through
+    * [[NioLocalFileSystem]] (no `chmod` process per created file or dir).
+    * Spark copies them into the job's Hadoop conf; Hadoop caches file
     * systems by scheme, not by conf, so the job bypasses the cache or
-    * `fs.file.impl` would be ignored), and no `_SUCCESS` marker is
-    * written — visibility is the snapshot commit.
+    * `fs.file.impl` would be ignored.
     */
-  private[graft] val TableWriteOptions: Map[String, String] = Map(
+  private[graft] val ForkFreeWriteOptions: Map[String, String] = Map(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-    "fs.file.impl.disable.cache" -> "true",
-    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** Writer options of every table write job: fork-free, and no
+    * `_SUCCESS` marker — visibility is the snapshot commit.
+    */
+  private[graft] val TableWriteOptions: Map[String, String] =
+    ForkFreeWriteOptions + ("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
 
   private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -852,9 +856,19 @@ object Materialize {
     * canonical entity table + lineage. ALL three stages are resumable:
     * triples and linked at bucket granularity (completed buckets are
     * never re-scanned or re-joined), the entity table by dictionary
-    * content hash (an unchanged dict skips the CC loop). A rerun over a
+    * content hash (an unchanged dict skips the rebuild). A rerun over a
     * fully materialized graph reads two snapshot files and submits NO
     * Spark job (asserted in ResumeSpec via a job listener).
+    *
+    * One annotate pass feeds both page-dependent stages, cached as the
+    * compact (mention | triple) rows of `Linking.fusedParts`, never as
+    * full sentences: the triples stage writes the cached triples, and
+    * the linked stage counts the A1 gate over the cached mentions and
+    * links the cached triples of every bucket this run committed. Only
+    * buckets whose triples an earlier write committed are read back
+    * from the table, so a resumed build links exactly what a fresh one
+    * does. The entity table is built on the driver, where the
+    * dictionary already is (`Canonicalize.entityTable`).
     */
   def materializeGraph(
       spark: SparkSession,
@@ -863,7 +877,6 @@ object Materialize {
       buckets: Int = 16,
       onlyBuckets: Option[Set[Int]] = None // test hook: simulate partial run
   ): Unit = {
-    import spark.implicits._
     val b = resolveBuckets(spark, outDir, buckets)
     val triplesDir = s"$outDir/$StageTriples"
     val linkedDir = s"$outDir/$StageLinked"
@@ -877,29 +890,31 @@ object Materialize {
     if (remainingT.isEmpty && remainingL.isEmpty && entitiesDone) return
 
     Scope(spark) { implicit scope =>
-      // ONE NER pass: the annotated sentence table feeds both the triple
-      // write and the linking join — and only when some stage needs it
-      lazy val sents = scope.persist(Pipeline.annotate(Pipeline.sentences(pages),
-        ChemDict.entries.flatMap(_.synonyms)))
-      if (remainingT.nonEmpty) {
-        val todo = sents
-          .withColumn("bucket", pmod(hash(col("url")), lit(b)))
-          .filter(col("bucket").isin(remainingT.toSeq: _*))
-          .drop("bucket").as[Sentence]
+      // only when some page-dependent stage needs it
+      lazy val (eligible, cached) = Linking.fusedParts(
+        Pipeline.annotate(Pipeline.sentences(pages), ChemDict.entries.flatMap(_.synonyms)),
+        Linking.MinOccurrences)
+      def inBuckets(df: DataFrame, bs: Set[Int]): DataFrame =
+        withBucket(df, b).filter(col("bucket").isin(bs.toSeq: _*)).drop("bucket")
+      if (remainingT.nonEmpty)
         // seq=0 for the same schema-uniformity invariant as runResumable
         bootstrap(spark, triplesDir, StageTriples, snapT,
-          Pipeline.triples(todo).toDF().withColumn("seq", lit(0L)), b, remainingT)
-      }
+          inBuckets(cached, remainingT).withColumn("seq", lit(0L)), b, remainingT)
       if (remainingL.nonEmpty) {
-        // link ONLY the still-unlinked buckets' triples; the A1 gate +
-        // dict join (surface links) is corpus-global, computed from the
-        // full annotated table as always
-        val snapNow = latestSnapshot(spark, triplesDir).restrict(remainingL)
-        val todo = resolve(spark, outDir, snapNow, Long.MaxValue)
-          .getOrElse(emptyTriples(spark, b))
-          .drop("seq", "bucket").as[Triple]
-        val linked = Linking.linkTriples(todo, sents, ChemDict.entries)
-        bootstrap(spark, linkedDir, StageLinked, snapL, linked, b, remainingL)
+        // a bucket this run bootstrapped holds exactly the cached
+        // triples, unless an earlier write (an upsert ahead of the
+        // bootstrap) already put rows in it; the A1 gate is corpus-global
+        val fresh = remainingL & remainingT -- snapT.entries.map(_.bucket)
+        val stored = remainingL -- fresh
+        val fromTable =
+          if (stored.isEmpty) None
+          else resolve(spark, outDir, latestSnapshot(spark, triplesDir).restrict(stored),
+            Long.MaxValue).map(_.drop("seq", "bucket"))
+        val todo = (Option.when(fresh.nonEmpty)(inBuckets(cached, fresh)) ++ fromTable)
+          .reduceOption(_.unionByName(_))
+          .getOrElse(emptyTriples(spark, b).drop("seq", "bucket"))
+        bootstrap(spark, linkedDir, StageLinked, snapL,
+          Linking.linkEligible(todo, eligible, ChemDict.entries), b, remainingL)
       }
       if (!entitiesDone) {
         Canonicalize.entityTable(spark, ChemDict.entries)

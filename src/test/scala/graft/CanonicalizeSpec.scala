@@ -1,7 +1,11 @@
 package graft
 
+import graft.model.{CanonicalEntity, ChemDictEntry}
 import graft.operators.Canonicalize
+import graft.plans.Scope
 import graft.sources.ChemDict
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{coalesce, col}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** J5: min-hash blocking + connected-components vs the dictionary's
@@ -10,6 +14,38 @@ import org.scalatest.funsuite.AnyFunSuite
 class CanonicalizeSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
+
+  /** Distributed reference form of `Canonicalize.entityTable`: LSH
+    * self-join blocking ([[Canonicalize.candidatePairs]]), CC over the
+    * pair graph ([[Canonicalize.pairComponents]]) and a join back onto
+    * the dictionary. The driver form must produce its rows.
+    */
+  private def entityTableDistributed(dict: Dataset[ChemDictEntry])(implicit scope: Scope)
+      : Dataset[CanonicalEntity] = {
+    import spark.implicits._
+    val labels = Canonicalize.pairComponents(Canonicalize.candidatePairs(dict))
+    dict.toDF()
+      .join(labels, Seq("cid"), "left")
+      .select(coalesce(col("cluster_id"), col("cid")).as("clusterId"),
+        col("cid"),
+        col("canonicalName"), col("synonyms").as("memberNames"),
+        col("molecularFormula"), col("molecularWeight"))
+      .as[CanonicalEntity]
+  }
+
+  private def rows(t: Dataset[CanonicalEntity]): Seq[String] =
+    t.collect().map(e => (e.clusterId, e.cid, e.canonicalName, e.memberNames.toSeq,
+      e.molecularFormula, e.molecularWeight).toString).toSeq.sorted
+
+  private def entry(cid: Long, name: String): ChemDictEntry =
+    ChemDictEntry(cid, name, Array(name), "C", 1.0, "C", name)
+
+  private def assertDriverMatchesDistributed(dict: Array[ChemDictEntry]): Map[Long, Long] = {
+    import spark.implicits._
+    val driver = Canonicalize.entityTable(spark, dict)
+    assert(rows(driver) == rows(entityTableDistributed(spark.createDataset(dict.toIndexedSeq))))
+    driver.collect().map(e => e.cid -> e.clusterId).toMap
+  }
 
   test("entity table merges gold near-duplicate families exactly") {
     import spark.implicits._
@@ -98,5 +134,37 @@ class CanonicalizeSpec extends AnyFunSuite with ScopePerTest {
     t1.groupBy(_._2).foreach { case (cluster, members) =>
       assert(cluster == members.map(_._1).min)
     }
+  }
+
+  test("driver entity table equals the distributed reference: the fixture dictionary") {
+    val labels = assertDriverMatchesDistributed(ChemDict.entries)
+    assert(labels.size == ChemDict.entries.length)
+    assert(labels.values.toSet.size < labels.size, "fixture must merge something")
+  }
+
+  test("driver entity table equals the distributed reference: the bucket cap") {
+    // 64 copies of one name fill every one of its band buckets exactly
+    // to the cap (kept: one cluster); 65 copies of another overflow all
+    // of theirs (dropped: no pair, every copy its own cluster)
+    val kept = (1L to 64L).map(entry(_, "sodium benzoate hydrate"))
+    val dropped = (101L to 165L).map(entry(_, "potassium sorbate anhydrous"))
+    val labels = assertDriverMatchesDistributed((kept ++ dropped).toArray)
+    assert(kept.map(e => labels(e.cid)).toSet == Set(1L))
+    assert(dropped.forall(e => labels(e.cid) == e.cid))
+  }
+
+  test("driver entity table equals the distributed reference: a multi-hop chain") {
+    // each name differs from the next by one letter, so neighbours pass
+    // both Jaccard checks while the ends share no token: only the
+    // transitive union joins them
+    val words = Array("methyl", "propyl", "butanol", "sulfate", "chloride", "nitrate")
+    val chain = words.indices.scanLeft(words.mkString(" ")) { (name, i) =>
+      name.split(' ').updated(i, words(i).updated(0, 'x')).mkString(" ")
+    }
+    val dict = chain.zipWithIndex.map { case (n, i) => entry(10L + i, n) }.toArray
+    val ends = (chain.head.split(' ').toSet, chain.last.split(' ').toSet)
+    assert((ends._1 & ends._2).isEmpty, "chain ends must not pair directly")
+    val labels = assertDriverMatchesDistributed(dict)
+    assert(dict.map(e => labels(e.cid)).toSet == Set(10L))
   }
 }

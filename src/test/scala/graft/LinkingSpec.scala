@@ -1,8 +1,10 @@
 package graft
 
+import graft.model.{ChemDictEntry, Sentence, Triple}
 import graft.operators.Linking
 import graft.plans.{Pipeline, Scope}
 import graft.sources.{ChemDict, PageGen}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,10 +20,64 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
   }
   private lazy val triples = Pipeline.triples(annotated).cache()
 
+  // Two-pass reference forms: the A1 gate counts mentions over the
+  // annotated table apart from the triples, and the per-surface link
+  // table (A1-gated surfaces ⋈ dictionary) joins the triples on the
+  // exact CHEM head surface. Every fused and salted path in `main` must
+  // produce their rows.
+
+  /** (cid, mention, properties...) for every surface with at least
+    * `minOccurrences` occurrences that resolves via chem_norm;
+    * `useBroadcast = false` makes every dictionary join a shuffled hash
+    * join (the large-dictionary shape).
+    */
+  private def surfaceLinks(annotated: Dataset[Sentence], dict: Dataset[ChemDictEntry],
+      minOccurrences: Int, useBroadcast: Boolean): DataFrame = {
+    def side(df: DataFrame): DataFrame =
+      if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
+    Linking.mentionCounts(annotated)
+      .filter(col("occurrences") >= minOccurrences)
+      .withColumn("name_norm", Linking.chemNormCol(col("mention")))
+      .select("mention", "name_norm")
+      .join(side(Linking.dictNames(dict)), Seq("name_norm"))
+      .join(side(Linking.dictProps(dict)), Seq("cid"))
+      .drop("name_norm")
+  }
+
+  /** Broadcast form: triples ⟕ surface links on the CHEM head surface. */
+  private def linkTriples(triples: Dataset[Triple], annotated: Dataset[Sentence],
+      dict: Array[ChemDictEntry]): DataFrame = {
+    val links = surfaceLinks(annotated, Linking.dictDs(spark, dict), Linking.MinOccurrences,
+      useBroadcast = true)
+    triples.toDF()
+      .withColumn("head_surface", when(col("headLabel") === "CHEM", col("headText")))
+      .join(broadcast(links), col("head_surface") === links("mention"), "left_outer")
+      .drop("mention", "head_surface")
+  }
+
+  /** Broadcast-free form: shuffled dictionary joins, the link table
+    * exploded ×nSalts and the probe side salted by url hash.
+    */
+  private def linkTriplesSalted(triples: Dataset[Triple], annotated: Dataset[Sentence],
+      dict: Array[ChemDictEntry], nSalts: Int): DataFrame = {
+    val links = surfaceLinks(annotated, Linking.dictDs(spark, dict), Linking.MinOccurrences,
+      useBroadcast = false)
+    val saltedDict = links.withColumn("salt", explode(lit((0 until nSalts).toArray)))
+    val probe = triples.toDF()
+      .withColumn("head_surface", when(col("headLabel") === "CHEM", col("headText")))
+      .withColumn("salt", pmod(hash(col("url")), lit(nSalts)))
+    probe
+      .hint("shuffle_hash")
+      .join(saltedDict,
+        probe("head_surface") === saltedDict("mention") && probe("salt") === saltedDict("salt"),
+        "left_outer")
+      .drop("mention", "head_surface", "salt")
+  }
+
   test("A1 gate: only mentions with count >= 3 link (linker.py:138-155)") {
     import spark.implicits._
     val counts = Linking.mentionCounts(annotated)
-    val linked = Linking.linkTriples(triples, annotated, ChemDict.entries)
+    val linked = linkTriples(triples, annotated, ChemDict.entries)
     // every linked CHEM head must have surface count >= 3
     val linkedHeads = linked
       .filter(col("headLabel") === "CHEM" && col("cid").isNotNull)
@@ -42,7 +98,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
 
   test("J1: heads resolve to the right CID via chem_norm") {
     import spark.implicits._
-    val linked = Linking.linkTriples(triples, annotated, ChemDict.entries)
+    val linked = linkTriples(triples, annotated, ChemDict.entries)
     val waterRows = linked.filter(col("headText") === "water" && col("cid").isNotNull)
     if (waterRows.count() > 0)
       assert(waterRows.select("cid").distinct().as[Long].collect().toSeq == Seq(1L))
@@ -65,7 +121,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
     attached.filter(col("cid").isNotNull).select("mention").distinct()
       .as[String].collect().foreach(m => assert(counts(m) >= 3, s"linked-but-rare: $m"))
     // the per-mention cid matches what the triple-head path links
-    val tripleCids = Linking.linkTriples(triples, annotated, ChemDict.entries)
+    val tripleCids = linkTriples(triples, annotated, ChemDict.entries)
       .filter(col("headLabel") === "CHEM" && col("cid").isNotNull)
       .select(col("headText"), col("cid")).distinct()
       .as[(String, Long)].collect().toMap
@@ -97,8 +153,8 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
   }
 
   test("salted join produces identical rows to broadcast join") {
-    val a = Linking.linkTriples(triples, annotated, ChemDict.entries)
-    val b = Linking.linkTriplesSalted(triples, annotated, ChemDict.entries, nSalts = 4)
+    val a = linkTriples(triples, annotated, ChemDict.entries)
+    val b = linkTriplesSalted(triples, annotated, ChemDict.entries, nSalts = 4)
     assert(a.columns.sorted.sameElements(b.columns.sorted))
     val cols = a.columns.sorted.toSeq
     val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
@@ -107,7 +163,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
   }
 
   test("fused single-pass path produces identical rows to the two-pass path") {
-    val a = Linking.linkTriples(triples, annotated, ChemDict.entries)
+    val a = linkTriples(triples, annotated, ChemDict.entries)
     val b = Linking.linkTriplesFused(annotated, ChemDict.entries)
     assert(a.columns.sorted.sameElements(b.columns.sorted))
     val cols = a.columns.sorted.toSeq
@@ -125,8 +181,8 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
     val saved = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val a = Linking.linkTriples(triples, annotated, ChemDict.entries)
-      val b = Linking.linkTriplesSalted(triples, annotated, ChemDict.entries, nSalts = 4)
+      val a = linkTriples(triples, annotated, ChemDict.entries)
+      val b = linkTriplesSalted(triples, annotated, ChemDict.entries, nSalts = 4)
       b.collect() // finalize adaptive plan
       val plan = b.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastExchange") && !plan.contains("BroadcastHashJoin"),
@@ -145,7 +201,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
     val saved = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val a = Linking.linkTriples(triples, annotated, ChemDict.entries)
+      val a = linkTriples(triples, annotated, ChemDict.entries)
       val b = Linking.linkTriplesSaltedFused(annotated, ChemDict.entries, nSalts = 4)
       b.collect() // finalize adaptive plan
       val plan = b.queryExecution.executedPlan.toString
@@ -179,7 +235,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
     val saved = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val a = Linking.linkTriples(triples, annotated, ChemDict.entries)
+      val a = linkTriples(triples, annotated, ChemDict.entries)
       // at a splitting threshold, at MaxValue (nothing heavy — everything
       // salt 0) and at 0 (everything heavy — degenerates to full salting):
       // rows must be identical in every regime
@@ -207,7 +263,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
   }
 
   test("broadcast path plans a BroadcastHashJoin with no shuffle on the probe side") {
-    val linked = Linking.linkTriples(triples, annotated, ChemDict.entries)
+    val linked = linkTriples(triples, annotated, ChemDict.entries)
     val plan = linked.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
   }

@@ -72,10 +72,36 @@ class ResumeSpec extends AnyFunSuite {
       "partition filters must not be empty")
   }
 
+  /** Run `body` and count the Spark jobs it submits. */
+  private def countJobs(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(1000) // listener bus is async; drain before asserting
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   test("materializeGraph: single annotate pass feeds triple write, linking and entity table") {
+    import spark.implicits._
     val dir = Files.createTempDirectory("graft-mat-graph").toString
     val pages = PageGen.pages(spark, 60)
-    Materialize.materializeGraph(spark, pages, dir, buckets = 4)
+    // every page row the build reads passes this accumulator: one
+    // annotate pass reads each page once
+    val pageReads = spark.sparkContext.longAccumulator("page-reads")
+    val counted = pages.map { p => pageReads.add(1); p }
+    val jobs = countJobs(Materialize.materializeGraph(spark, counted, dir, buckets = 4))
+    assert(pageReads.value == 60, s"the graph build read ${pageReads.value} page rows for 60 pages")
+    // the triples write (the annotate pass fills the compact cache inside
+    // it), the linked write from that cache and one local entity-table
+    // write, over 60 pages in 4 buckets
+    assert(jobs == 13, s"the graph build ran $jobs jobs")
     val triples = Materialize.readTriples(spark, dir)
     val linked = Materialize.readLinked(spark, dir)
     val entities = spark.read.parquet(s"$dir/entities/data")
@@ -128,6 +154,28 @@ class ResumeSpec extends AnyFunSuite {
     Materialize.materializeGraph(spark, pages, dirB, buckets = 4)
     assert(linkedKeys(dirB) == linkedKeys(dirA))
     assert(linkedKeys(dirB).nonEmpty)
+    // bucket 0's triples committed by an earlier write: the linked stage
+    // reads that bucket back from the table and links the other buckets
+    // from this run's cache — the same linked rows
+    val dirC = Files.createTempDirectory("graft-mat-res-c").toString
+    Materialize.runResumable(spark, pages, dirC, 4, Some(Set(0)))
+    Materialize.materializeGraph(spark, pages, dirC, buckets = 4)
+    assert(linkedKeys(dirC) == linkedKeys(dirA))
+    // an upsert into buckets before their bootstrap: their live table
+    // rows are no longer this run's triples, so they link from the table
+    // too — the same linked rows as upserting after a full bootstrap
+    import spark.implicits._
+    val recrawls = (0L until 10L).map(i => TripleFixtures.recrawl(i, 500 + i, 30)).toDS()
+    val dirD = Files.createTempDirectory("graft-mat-res-d").toString
+    Materialize.runResumable(spark, pages, dirD, 4, Some(Set(0)))
+    Materialize.incrementalUpdate(spark, recrawls, dirD, 4, mergeOnRead = true)
+    Materialize.materializeGraph(spark, pages, dirD, buckets = 4)
+    val dirE = Files.createTempDirectory("graft-mat-res-e").toString
+    Materialize.runResumable(spark, pages, dirE, 4)
+    Materialize.incrementalUpdate(spark, recrawls, dirE, 4, mergeOnRead = true)
+    Materialize.materializeGraph(spark, pages, dirE, buckets = 4)
+    assert(linkedKeys(dirD) == linkedKeys(dirE))
+    assert(linkedKeys(dirD) != linkedKeys(dirA))
 
     // a rerun over the fully materialized graph must do no stage work:
     // no triple re-scan, no linking join, no CC rebuild. Direct
@@ -140,20 +188,10 @@ class ResumeSpec extends AnyFunSuite {
     }
     val beforeFiles = mtimes("triples/data") ++ mtimes("linked/data") ++ mtimes("entities/data")
     assert(beforeFiles.nonEmpty)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Materialize.materializeGraph(spark, pages, dirB, buckets = 4)
-      Thread.sleep(1000) // listener bus is async; drain before asserting
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = countJobs(Materialize.materializeGraph(spark, pages, dirB, buckets = 4))
     val afterFiles = mtimes("triples/data") ++ mtimes("linked/data") ++ mtimes("entities/data")
     assert(afterFiles == beforeFiles, "rerun touched materialized data files")
-    assert(jobs.get() == 0, s"complete rerun submitted ${jobs.get()} jobs (none expected)")
+    assert(jobs == 0, s"complete rerun submitted $jobs jobs (none expected)")
   }
 
   test("a table without a snapshot log fails loudly instead of reading as empty") {
