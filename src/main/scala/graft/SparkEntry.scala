@@ -716,14 +716,14 @@ object SparkEntry {
     "line_clean" -> ((s, dir) =>
       Lines.removeBoilerplate(lineFixture(docs(s, dir)), maxDocFreq = 50)
         .select("doc_id", "clean_text").orderBy("doc_id")),
-    // the DISTRIBUTED branch of the size-adaptive strike (broadcast
-    // ceiling forced to 0): same oracle as line_clean — the two
-    // branches implement one function, and this row proves it at the
-    // driver gate, not just in the spec
-    "line_clean_dist" -> ((s, dir) =>
-      Lines.removeBoilerplate(lineFixture(docs(s, dir)), maxDocFreq = 50,
-        maxBroadcastBlocklist = 0L)
-        .select("doc_id", "clean_text").orderBy("doc_id")),
+    // the DISTRIBUTED branch of the size-adaptive strike: same oracle
+    // as line_clean — the two branches implement one function, and
+    // this row proves it at the driver gate, not just in the spec
+    "line_clean_dist" -> { (s, dir) =>
+      val fixture = lineFixture(docs(s, dir))
+      Lines.removeBoilerplateDistributed(fixture, Lines.blocklist(fixture, maxDocFreq = 50))
+        .select("doc_id", "clean_text").orderBy("doc_id")
+    },
 
     // ---------- bigram LM quality scoring (KenLM/CCNet-style) -------
     // reference slice = doc_id % 10 == 3; counts are integer (fully

@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.Normalize
 import graft.model.{CanonicalEntity, ChemDictEntry}
 import graft.plans.Scope
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** J5: entity canonicalization — connected components over a
@@ -143,8 +143,52 @@ object Canonicalize {
       .select("cid_a", "cid_b").distinct()
   }
 
-  /** Connected components by min-label propagation WITH pointer
-    * jumping. Each iteration does two monotone steps:
+  /** Connected components of the pair graph: (cid, cluster_id = min
+    * cid of its component) for every node.
+    *
+    * Small graphs (the usual output of pair verification) take the
+    * driver branch: the edge list (16 B per edge) comes back through
+    * [[Scope.collectWithin]] and a union-find labels it, skipping the
+    * distributed loop's per-iteration cost (~2s for a 200-edge graph at
+    * local[32]). The NODE set is never collected: it can be O(dict) even
+    * when edges are few. Larger graphs run
+    * [[connectedComponentsDistributed]].
+    *
+    * Contract notes shared by both branches:
+    *  - `nodes` must cover every pair endpoint (all in-tree callers
+    *    derive nodes FROM pairs, so this holds by construction); the
+    *    driver branch require-fails on a violation, because the two
+    *    branches would otherwise disagree on edges bridging through a
+    *    missing node (the distributed joins drop them silently).
+    *  - Callers should persist (and materialize) `pairs` before the
+    *    call: the bounded collect plus, above the budget, the
+    *    distributed loop evaluate it more than once, and every in-tree
+    *    caller already passes a persisted leaf-cut frame.
+    *  - `nodesArePairEndpoints = true` asserts nodes == the exact pair
+    *    endpoint set (what all in-tree callers construct). The driver
+    *    branch then RETURNS THE LOCAL LABEL MAP directly as a
+    *    driver-built DataFrame — the coverage-guard job, the node
+    *    resolution join and the materializing job all collapse away
+    *    (4 jobs → 1 collect). Output rows are identical by
+    *    construction: every endpoint appears in the union-find label
+    *    map, and there are no non-endpoint nodes to backfill. A pair
+    *    with a null endpoint breaks that equality (its non-null end
+    *    would have no label row), so this form require-fails on one.
+    *  - The returned labels are materialized: a driver-built frame, or
+    *    a leaf registered in `scope`, so callers may release their pair
+    *    caches right after the call.
+    */
+  def connectedComponents(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 40,
+      nodesArePairEndpoints: Boolean = false)(implicit scope: Scope): DataFrame =
+    Scope.collectWithin(
+      pairs.select(col("cid_a").cast("long"), col("cid_b").cast("long")), 16L) match {
+      case Some(rows) => connectedComponentsDriver(nodes, rows, nodesArePairEndpoints)
+      case None => connectedComponentsDistributed(nodes, pairs, maxIter)
+    }
+
+  /** The distributed branch of [[connectedComponents]]: min-label
+    * propagation WITH pointer jumping. Each iteration does two monotone
+    * steps:
     *
     *  1. neighbor-min: label(v) := min(label(v), min over neighbors'
     *     labels) — the classic propagation, O(diameter) alone;
@@ -163,56 +207,9 @@ object Canonicalize {
     * instead (a diameter needing > 2^40 jumps does not exist).
     * Returns (cid, cluster_id = min cid of component).
     */
-  /** Edge count at or below which CC runs as a driver-side union-find
-    * instead of the distributed label loop. The dup/synonym graph is
-    * the OUTPUT of pair verification — usually minuscule next to the
-    * corpus — and the distributed loop's fixed per-iteration cost
-    * (driver planning + a multi-job round trip, ~2s for a 200-edge
-    * graph at local[32]) dwarfs a bounded collect. 1M edges ≈ 50 MB on
-    * the driver; the NODE set is never collected (it can be O(dict)
-    * even when edges are few — labels for untouched nodes resolve in
-    * the distributed join below), so the threshold bounds exactly the
-    * collected bytes. Above it, the O(log diameter) loop runs
-    * unchanged — the 10^12-doc shape where a crawl's dup graph can be
-    * arbitrarily large.
-    */
-  val DriverEdgeThreshold: Long = 1000000L
-
-  /** Contract notes shared by both branches:
-    *  - `nodes` must cover every pair endpoint (all in-tree callers
-    *    derive nodes FROM pairs, so this holds by construction); the
-    *    driver branch require-fails on a violation, because the two
-    *    branches would otherwise disagree on edges bridging through a
-    *    missing node (the distributed joins drop them silently).
-    *  - Callers should persist (and materialize) `pairs` before the
-    *    call: the size probe plus the chosen branch evaluate it 2-3
-    *    times, and every in-tree caller already passes a persisted
-    *    leaf-cut frame.
-    *  - `knownEdgeCount`: callers that already counted `pairs` (every
-    *    in-tree caller counts to materialize its cache) pass the count
-    *    and skip the internal size-probe job — one driver round trip
-    *    less per call (guide §1.2: remove work, then tune).
-    *  - `nodesArePairEndpoints = true` asserts nodes == the exact pair
-    *    endpoint set (what all in-tree callers construct). The driver
-    *    branch then RETURNS THE LOCAL LABEL MAP directly as a
-    *    driver-built DataFrame — the coverage-guard job, the node
-    *    resolution join and the materializing job all collapse away
-    *    (4 jobs → 1 collect). Output rows are identical by
-    *    construction: every endpoint appears in the union-find label
-    *    map, and there are no non-endpoint nodes to backfill. A pair
-    *    with a null endpoint breaks that equality (its non-null end
-    *    would have no label row), so this form require-fails on one.
-    *  - The returned labels are materialized: a driver-built frame, or
-    *    a leaf registered in `scope`, so callers may release their pair
-    *    caches right after the call.
-    */
-  def connectedComponents(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 40,
-      driverEdgeThreshold: Long = DriverEdgeThreshold,
-      knownEdgeCount: Option[Long] = None,
-      nodesArePairEndpoints: Boolean = false)(implicit scope: Scope): DataFrame = {
+  private[graft] def connectedComponentsDistributed(nodes: DataFrame, pairs: DataFrame,
+      maxIter: Int = 40)(implicit scope: Scope): DataFrame = {
     val spark = nodes.sparkSession
-    if (knownEdgeCount.getOrElse(pairs.count()) <= driverEdgeThreshold)
-      return connectedComponentsDriver(nodes, pairs, nodesArePairEndpoints)
     // every iteration plans over scope leaves (Scope.leaf): a cached
     // frame keeps its full ANALYZED lineage, and every iteration's
     // action would re-run analysis over that subtree on the driver —
@@ -304,20 +301,18 @@ object Canonicalize {
     scala.collection.mutable.LongMap.from(ids.iterator.map(id => (id, find(id))))
   }
 
-  /** The small-graph CC path: collect the (bounded) edge list, run
-    * [[unionFind]] on the driver, and resolve EVERY node's label with
+  /** The small-graph CC path: [[unionFind]] over the collected edge
+    * rows on the driver, then resolve EVERY node's label with
     * one broadcast left join (nodes stay distributed — only the
     * ≤ 2·|edges| component map rides the broadcast). Same fixpoint as
     * the distributed loop, and bit-identical labels for any edge
     * arrival order or partitioning. Returned labels are materialized
     * like the loop's, so callers release their pair caches right after.
     */
-  private def connectedComponentsDriver(nodes: DataFrame, pairs: DataFrame,
+  private def connectedComponentsDriver(nodes: DataFrame, rows: Array[Row],
       nodesArePairEndpoints: Boolean)(implicit scope: Scope): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val rows = pairs.select(col("cid_a").cast("long"), col("cid_b").cast("long"))
-      .collect()
     // null endpoints: the distributed equi-joins drop such edges
     // silently, and the node join below backfills their nodes; the
     // endpoint-node form has no node join, so there a dropped edge
@@ -363,16 +358,15 @@ object Canonicalize {
     * The pairs are materialized once as a leaf in a nested scope (CC
     * reads them from several subtrees, and the producer is typically
     * the deep LSH + verify chain) and released as soon as the labels
-    * exist; the edge count rides into CC (no size probe) and the
-    * endpoint-node form collapses the driver branch to one collect.
+    * exist; the endpoint-node form collapses the driver branch to one
+    * collect.
     */
   def pairComponents(pairs: DataFrame)(implicit scope: Scope): DataFrame =
     Scope(pairs.sparkSession) { pairScope =>
-      val (pl, nPairs) = pairScope.leaf(pairs)
+      val (pl, _) = pairScope.leaf(pairs)
       val touched = pl.select(col("cid_a").as("cid"))
         .union(pl.select(col("cid_b").as("cid"))).distinct()
-      connectedComponents(touched, pl,
-        knownEdgeCount = Some(nPairs), nodesArePairEndpoints = true)
+      connectedComponents(touched, pl, nodesArePairEndpoints = true)
     }
 
   /** Full canonicalization: dict → clustered entity table (clusterId =

@@ -141,11 +141,11 @@ object Classify {
     * aggregation exchange carries (doc_id, li) ints instead of label
     * strings. Outputs are bit-identical (same lwq longs summed per
     * (doc, label), same counts); the scale discipline is unchanged —
-    * no exchange carries text or tokens (plan-asserted). The
-    * degenerate case of a prior label with NO backoff row (a label
-    * whose every training doc had zero tokens — its resolved lwq is
-    * null under both formulations) falls back to the reference join
-    * formulation rather than encoding null array slots.
+    * no exchange carries text or tokens (plan-asserted). A prior label
+    * with NO backoff row (a label whose every training doc had zero
+    * tokens) gets a null slot in every array, which `sum` skips exactly
+    * as the reference join formulation (ClassifySpec) skips its null
+    * lwq: such a label scores null.
     */
   def score(
       docs: DataFrame, nb: DataFrame, pr: DataFrame,
@@ -160,14 +160,12 @@ object Classify {
     val labelIdx = labels.zipWithIndex.toMap
     val backoffByLabel = rows.filter(_._2 == Backoff)
       .map(r => r._1 -> r._3).toMap
-    if (!labels.forall(backoffByLabel.contains))
-      return scoreViaJoins(docs, rows, priorRows, textCol, keyCol)
-    val backoffArr = labels.map(backoffByLabel).toSeq
+    val backoffArr = labels.map(backoffByLabel.get).toSeq
     val lut = rows.iterator
       .filter(r => r._2 != Backoff && labelIdx.contains(r._1))
       .toSeq.groupBy(_._2).iterator.map { case (w, rs) =>
         val m = rs.map(r => r._1 -> r._3).toMap
-        (w, labels.map(l => m.getOrElse(l, backoffByLabel(l))).toSeq)
+        (w, labels.map(l => m.get(l).orElse(backoffByLabel.get(l))).toSeq)
       }.toSeq.toDF("w", "lwqs")
     val prior = priorRows.zipWithIndex
       .map { case ((l, p), i) => (i, l, p) }.toSeq
@@ -179,34 +177,6 @@ object Classify {
       .groupBy("doc_id", "li")
       .agg(count(lit(1)).as("n_tokens"), sum(col("lwq_r")).as("sum_lwq"))
       .join(broadcast(prior), Seq("li"))
-      .withColumn("score",
-        col("lp_prior") + col("sum_lwq").cast("double") / lit(Shift))
-      .select("doc_id", "label", "n_tokens", "sum_lwq", "score")
-  }
-
-  /** Reference formulation of [[score]] — the degenerate-label fallback
-    * (and the spec's equality baseline): per-occurrence crossJoin with
-    * the priors plus two broadcast joins resolving each (label, token).
-    */
-  private[graft] def scoreViaJoins(
-      docs: DataFrame, rows: Array[(String, String, Long)],
-      priorRows: Array[(String, Double)],
-      textCol: String, keyCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val seen = rows.filter(_._2 != Backoff).toSeq.toDF("label", "w", "lwq_seen")
-    val backoff = rows.filter(_._2 == Backoff)
-      .map(r => (r._1, r._3)).toSeq.toDF("label", "lwq_backoff")
-    val prior = priorRows.toSeq.toDF("label", "lp_prior")
-    tokens(docs, textCol, keyCol)
-      .crossJoin(broadcast(prior))
-      .join(broadcast(seen), Seq("label", "w"), "left")
-      .join(broadcast(backoff), Seq("label"), "left")
-      .withColumn("lwq_r", coalesce(col("lwq_seen"), col("lwq_backoff")))
-      .groupBy("doc_id", "label")
-      .agg(count(lit(1)).as("n_tokens"),
-        max(col("lp_prior")).as("lp_prior"),
-        sum(col("lwq_r")).as("sum_lwq"))
       .withColumn("score",
         col("lp_prior") + col("sum_lwq").cast("double") / lit(Shift))
       .select("doc_id", "label", "n_tokens", "sum_lwq", "score")

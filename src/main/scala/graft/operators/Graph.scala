@@ -257,40 +257,38 @@ object Graph {
     * Returns (node, prq, pr) where pr = prq / 2^32 exactly (a power-of-
     * two IEEE division — exact, so the double column is as replayable
     * as the integer one).
-    */
-  /** Arc count at or below which the power iteration runs on the
-    * driver (same fixed-point integer recurrence — long sums are
+    *
+    * Small graphs take the driver branch: the wout-joined arc list
+    * (32 B per arc) comes back through [[Scope.collectWithin]] and the
+    * same fixed-point integer recurrence runs in memory (long sums are
     * order-independent, so the result is BIT-IDENTICAL to the
-    * distributed loop) instead of paying the loop's per-iteration
-    * fixed cost (~0.66s/round of planning + job round trips for a
-    * 153-node graph at local[32]). 1M arcs ≈ 64 MB collected; above
-    * it the distributed loop runs unchanged — the web-graph shape.
-    * The CC threshold's reasoning applies verbatim
-    * (`Canonicalize.DriverEdgeThreshold`).
+    * distributed loop) instead of paying the loop's per-iteration fixed
+    * cost (~0.66s/round of planning + job round trips for a 153-node
+    * graph at local[32]). Larger graphs run [[pageRankDistributed]].
     */
-  val DriverArcThreshold: Long = 1000000L
-
-  def pageRank(edges: DataFrame, iters: Int = DefaultIters,
-      driverArcThreshold: Long = DriverArcThreshold)(implicit scope: Scope): DataFrame = {
-    val arcsPlan = edges
-      .join(edges.groupBy(col("src")).agg(sum("support").as("wout")), Seq("src"))
-      .select(col("src"), col("dst"), col("support"), col("wout"))
-    // fused size probe + collect: limit(threshold + 1) returns EVERY
-    // arc when the graph is at or under the threshold (so the collected
-    // array feeds the driver loop directly — no separate count() job),
-    // and exactly threshold + 1 rows when it is over (fall through to
-    // the distributed loop; which rows came back is irrelevant, they
-    // are discarded). executeTake's incremental partition scan bounds
-    // the probe's cost on the over-threshold side.
-    val limit = math.min(driverArcThreshold + 1, Int.MaxValue.toLong).toInt
-    val probe = arcsPlan
+  def pageRank(edges: DataFrame, iters: Int = DefaultIters)
+      (implicit scope: Scope): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val arcs = woutArcs(edges)
       .select(col("src").cast("long"), col("dst").cast("long"),
         col("support").cast("long"), col("wout").cast("long"))
-      .limit(limit).collect()
-    if (probe.length <= driverArcThreshold)
-      return pageRankDriver(
-        probe.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))),
-        edges.sparkSession, iters)
+      .as[(Long, Long, Long, Long)]
+    Scope.collectWithin(arcs, 32L) match {
+      case Some(small) => pageRankDriver(small, spark, iters)
+      case None => pageRankDistributed(edges, iters)
+    }
+  }
+
+  /** (src, dst, support, wout): every arc with its source's out-weight. */
+  private def woutArcs(edges: DataFrame): DataFrame =
+    edges
+      .join(edges.groupBy(col("src")).agg(sum("support").as("wout")), Seq("src"))
+      .select(col("src"), col("dst"), col("support"), col("wout"))
+
+  /** The distributed branch of [[pageRank]]: join-based power iteration. */
+  private[graft] def pageRankDistributed(edges: DataFrame, iters: Int = DefaultIters)
+      (implicit scope: Scope): DataFrame = {
     // Cut the LOGICAL lineage at the iteration entry: every chained
     // iteration plan embeds `arcs`, and `arcs` embeds the caller's
     // whole upstream tree — without this cut Catalyst re-analyzes that
@@ -300,7 +298,7 @@ object Graph {
     // leaf scans the persisted blocks, so executors do the same work
     // either way; it releases once the result is materialized.
     Scope(edges.sparkSession) { local =>
-      val (arcs, _) = local.leaf(arcsPlan)
+      val (arcs, _) = local.leaf(woutArcs(edges))
       val nodes = arcs.select(col("src").as("node")).distinct()
       val n = nodes.count()
       require(n > 0, "pageRank on an empty graph")

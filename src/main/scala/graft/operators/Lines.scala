@@ -24,14 +24,15 @@ import org.apache.spark.sql.functions._
   * memory at 1e12 docs), so a fixed collect-and-broadcast is the one
   * structure in this family that breaks at 100 TB.
   *
-  *  - Blocklists up to `maxBroadcastBlocklist` rows (the common case:
-  *    a single crawl slice, a per-domain shard) COLLECT and BROADCAST;
+  *  - Blocklists that fit one bounded driver collect
+  *    ([[Scope.collectWithin]], 8 B per hash; the common
+  *    case: a single crawl slice, a per-domain shard) BROADCAST;
   *    the rewrite is then a ZERO-EXCHANGE per-document projection — an
   *    in-row filter of the split lines against the broadcast hash set
   *    (set membership is O(1) per line — a Column `array_contains`
   *    scan would be O(|blocklist|) per line, unacceptable at the
   *    ~1e6-entry blocklists a web corpus produces).
-  *  - Above the threshold the strike goes DISTRIBUTED and the driver
+  *  - Larger blocklists go DISTRIBUTED and the driver
   *    never sees the blocklist: LEFT-ANTI join of the exploded
   *    (doc, pos, h) line table against the blocklist frame (both sides
   *    shuffle on the 8-byte hash only), then an order-preserving
@@ -42,8 +43,8 @@ import org.apache.spark.sql.functions._
   *
   * Both branches implement the SAME function — rows-identical by
   * property test under multiple partitionings (LinesSpec) — so the
-  * threshold is purely an execution choice, like AQE picking a
-  * broadcast join.
+  * branch is purely an execution choice, like AQE picking a broadcast
+  * join.
   *
   * Hash-collision caveat (disclosed, standard for hash-keyed dedup):
   * two distinct normalized lines colliding in 64 bits are counted —
@@ -76,38 +77,23 @@ object Lines {
       .select("h", "doc_id").distinct()
       .groupBy("h").agg(count(lit(1)).as("doc_freq"))
 
-  /** The boilerplate blocklist: hashes of lines in more than
-    * `maxDocFreq` distinct documents (strict >). Bounded collect (see
-    * class doc).
+  /** The boilerplate blocklist frame `(h)`: hashes of lines in more
+    * than `maxDocFreq` distinct documents (strict >).
     */
-  def boilerplateHashes(
+  def blocklist(
       docs: DataFrame, maxDocFreq: Long,
       textCol: String = "text",
-      keyCol: String = "doc_id"): Set[Long] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+      keyCol: String = "doc_id"): DataFrame =
     lineDocFreq(docs, textCol, keyCol)
-      .where(col("doc_freq") > maxDocFreq)
-      .select("h").as[Long].collect().toSet
-  }
-
-  /** Default broadcast ceiling for the blocklist: 4M hashes ≈ 32 MB of
-    * longs — comfortably under executor broadcast budgets, far above
-    * any single-slice blocklist seen in practice.
-    */
-  val DefaultMaxBroadcastBlocklist: Long = 4L << 20
+      .where(col("doc_freq") > maxDocFreq).select("h")
 
   /** Strike boilerplate lines from every document: `clean_text` keeps
     * the surviving lines in original order (empty string if every line
-    * was boilerplate). Size-adaptive (see object doc): broadcast-set
-    * rewrite when the blocklist fits, distributed anti-join otherwise.
-    *
-    * The branch decision needs the blocklist row count: the blocklist
-    * aggregation persists in a nested scope for the count and the
-    * broadcast branch's collect (no second pass). In the rare
-    * distributed branch it persists again into `scope` and recomputes
-    * once inside the join, then stays cached across the caller's
-    * actions (each would otherwise recompute the corpus-wide
+    * was boilerplate). Size-adaptive (see object doc): the blocklist
+    * comes back through [[Scope.collectWithin]] and rides a broadcast
+    * set; a larger one persists into `scope` for the distributed
+    * anti-join, which recomputes it once and keeps it cached across the
+    * caller's actions (each would otherwise recompute the corpus-wide
     * lineDocFreq aggregation). A deployment holding an at-rest
     * blocklist should call [[removeBoilerplateDistributed]] with it
     * directly and skip the decision pass entirely.
@@ -115,20 +101,13 @@ object Lines {
   def removeBoilerplate(
       docs: DataFrame, maxDocFreq: Long,
       textCol: String = "text",
-      keyCol: String = "doc_id",
-      maxBroadcastBlocklist: Long = DefaultMaxBroadcastBlocklist)
+      keyCol: String = "doc_id")
       (implicit scope: Scope): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val block = lineDocFreq(docs, textCol, keyCol)
-      .where(col("doc_freq") > maxDocFreq).select("h")
-    val hashes = Scope(spark) { local =>
-      local.persist(block)
-      if (block.count() <= maxBroadcastBlocklist) Some(block.as[Long].collect().toSet)
-      else None
-    }
-    hashes match {
-      case Some(h) => removeBoilerplateBroadcast(docs, h, textCol)
+    val block = blocklist(docs, maxDocFreq, textCol, keyCol)
+    Scope.collectWithin(block.as[Long], 8L) match {
+      case Some(h) => removeBoilerplateBroadcast(docs, h.toSet, textCol)
       case None =>
         removeBoilerplateDistributed(docs, scope.persist(block), textCol, keyCol)
     }

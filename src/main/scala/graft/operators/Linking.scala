@@ -198,7 +198,10 @@ object Linking {
       .filter(col("occurrences") >= minOccurrences)
       .withColumn("name_norm", chemNormCol(col("mention")))
       .select("mention", "name_norm", "occurrences")
-    val triples = combined.filter(col("triple").isNotNull).select("triple.*")
+    // a typed projection, not `select("triple.*")`: fields of the
+    // nullable struct column would all read nullable, and the triple
+    // table would record a different schema than `Pipeline.run` writes
+    val triples = combined.filter(col("triple").isNotNull).map(_.triple).toDF()
     (eligible, triples)
   }
 

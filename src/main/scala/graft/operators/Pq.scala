@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.plans.Scope
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
@@ -78,29 +79,28 @@ object Pq {
     * deterministic Lloyd iterations over the normalized subvectors.
     * Returns (sub, code) -> centroid (doubles); m*ksub rows — rides as
     * a broadcast value.
+    * A training set that fits the driver ([[Scope.collectWithin]],
+    * 8 + 4·dim B per row) trains in memory, replaying
+    * [[codebooksDistributed]] bit-exactly (PqSpec branch parity).
     */
   def codebooks(
       corpus: DataFrame, m: Int, ksub: Int, iters: Int = TrainIters,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      driverTrainThreshold: Long = Similarity.DriverTrainThreshold)
+      idCol: String = "vec_id", vecCol: String = "embedding")
     : Array[(Int, Int, Array[Double])] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val raw = corpus
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
-    // driver branch (Similarity.DriverTrainThreshold discipline): one
-    // bounded limit-probe collect replaces the head() dim probe, the
-    // sample job and `iters` full assign-shuffle-collect rounds; the
-    // in-memory loop replays the distributed accumulation bit-exactly
-    // (PqSpec branch parity)
-    if (driverTrainThreshold > 0) {
-      val probe = raw.limit(driverTrainThreshold.toInt + 1).collect()
-      if (probe.length <= driverTrainThreshold)
-        return codebooksDriver(probe, m, ksub, iters)
+    val raw = Similarity.idVectors(corpus, idCol, vecCol)
+    val dim = Similarity.vectorWidth(raw)
+    Scope.collectWithin(raw, 8L + 4L * dim) match {
+      case Some(rows) => codebooksDriver(rows, m, ksub, iters)
+      case None => codebooksDistributed(raw, dim, m, ksub, iters)
     }
+  }
+
+  /** The distributed branch of [[codebooks]] over vectors `dim` wide. */
+  private[graft] def codebooksDistributed(raw: Dataset[(Long, Array[Float])], dim: Int,
+      m: Int, ksub: Int, iters: Int = TrainIters): Array[(Int, Int, Array[Double])] = {
+    val spark = raw.sparkSession
+    import spark.implicits._
     val base = raw.map { case (id, v) => (id, normalize(v)) }
-    val dim = base.head()._2.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m
 

@@ -300,14 +300,14 @@ object SemDedup {
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxCellSize: Int = DefaultMaxCellSize)(implicit scope: Scope): DataFrame = {
     val assigned = scope.persist(assignedVectors(corpus, cents, idCol, vecCol))
-    val (p, nPairs) = Scope(corpus.sparkSession) { build =>
+    val (p, _) = Scope(corpus.sparkSession) { build =>
       scope.leaf(pairsFromAssigned(assigned, threshold, maxCellSize)(build))
     }
     val members = p.select(col("a").as("cid"))
       .union(p.select(col("b").as("cid"))).distinct()
     val cc = Canonicalize.connectedComponents(
       members, p.select(col("a").as("cid_a"), col("b").as("cid_b")),
-      knownEdgeCount = Some(nPairs), nodesArePairEndpoints = true)
+      nodesArePairEndpoints = true)
     val withKey = cc.join(
       assigned.select(col("id"), col("cent_cos")),
       cc("cid") === col("id"))

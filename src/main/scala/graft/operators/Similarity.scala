@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column}
+import graft.plans.Scope
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
@@ -103,48 +104,52 @@ object Similarity {
   }
 
   /** TRAINED coarse-quantizer centroids: seeded-sample init + `iters`
-    * distributed Lloyd iterations (assign each corpus vector to its
-    * nearest centroid, recompute each cell's mean). Determinism at any
-    * parallelism: the per-cell mean is accumulated SEQUENTIALLY in
+    * Lloyd iterations (assign each corpus vector to its nearest
+    * centroid, recompute each cell's mean). Empty cells keep their
+    * previous centroid. A training set that fits the driver
+    * ([[Scope.collectWithin]], 8 + 4·dim B per row) trains in memory,
+    * replaying [[ivfCentroidsDistributed]] BIT-EXACTLY (SimilaritySpec
+    * branch parity) without its 1 sample job + `iters` rounds of jobs.
+    */
+  def ivfCentroidsTrained(
+      corpus: DataFrame, nlist: Int, iters: Int = IvfTrainIters,
+      idCol: String = "vec_id", vecCol: String = "embedding"
+  ): Array[(Int, Array[Float])] = {
+    val base = idVectors(corpus, idCol, vecCol)
+    Scope.collectWithin(base, 8L + 4L * vectorWidth(base)) match {
+      case Some(rows) => lloydDriver(rows, nlist, iters)
+      case None => ivfCentroidsDistributed(corpus, nlist, iters, idCol, vecCol)
+    }
+  }
+
+  /** (id, vector) rows of a corpus. */
+  private[graft] def idVectors(corpus: DataFrame, idCol: String,
+      vecCol: String): Dataset[(Long, Array[Float])] = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+      .as[(Long, Array[Float])]
+  }
+
+  /** The width of the first vector (0 when empty): one probe job. */
+  private[graft] def vectorWidth(vectors: Dataset[(Long, Array[Float])]): Int =
+    vectors.head(1).headOption.fold(0)(_._2.length)
+
+  /** The distributed branch of [[ivfCentroidsTrained]]. Determinism at
+    * any parallelism: the per-cell mean is accumulated SEQUENTIALLY in
     * id-order after a repartition-by-cell + in-partition sort — float
     * summation order is fixed, so the centroids (and therefore the
     * ann_ivf_cells/probes dumps each Verify query recomputes) are
     * bit-identical run to run. Cost per iteration is one corpus pass +
     * one int-keyed shuffle of the vectors; the collect is nlist-bounded.
-    * Empty cells keep their previous centroid.
     */
-  /** Corpus-row count at or below which Lloyd training runs on the
-    * driver from ONE bounded collect (same fixpoint discipline as
-    * `Canonicalize.DriverEdgeThreshold` / `Graph.DriverArcThreshold`):
-    * the distributed trainer pays 1 sample job + `iters` full
-    * assign-shuffle-collect rounds — ~4-5 driver round trips whose
-    * per-job latency dwarfs the arithmetic on any training set that
-    * fits the driver, which is ALWAYS true of the second-level hub-cell
-    * trainers and of every sandbox-scale corpus. The branch is probed
-    * with limit(threshold + 1) — one incremental-scan job, no count —
-    * and the in-memory loop replays the distributed accumulation
-    * BIT-EXACTLY (same murmur sample order, per-cell double sums in
-    * ascending-id order, same (x / n).toFloat mean), asserted by
-    * SimilaritySpec branch-parity tests. Collected bytes ≈ rows × dim ×
-    * 4; at 64-dim the cap is ~17 MB — callers with very fat vectors can
-    * pass driverTrainThreshold = 0 to force the distributed path.
-    */
-  val DriverTrainThreshold: Long = 65536L
-
-  def ivfCentroidsTrained(
+  private[graft] def ivfCentroidsDistributed(
       corpus: DataFrame, nlist: Int, iters: Int = IvfTrainIters,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      driverTrainThreshold: Long = DriverTrainThreshold
+      idCol: String = "vec_id", vecCol: String = "embedding"
   ): Array[(Int, Array[Float])] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val base = corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
-    if (driverTrainThreshold > 0) {
-      val probe = base.limit(driverTrainThreshold.toInt + 1).collect()
-      if (probe.length <= driverTrainThreshold)
-        return lloydDriver(probe, nlist, iters)
-    }
+    val base = idVectors(corpus, idCol, vecCol)
     var cents = ivfCentroidsSampled(corpus, nlist, idCol, vecCol)
     var it = 0
     while (it < iters) {

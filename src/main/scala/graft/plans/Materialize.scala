@@ -917,7 +917,8 @@ object Materialize {
           Linking.linkEligible(todo, eligible, ChemDict.entries), b, remainingL)
       }
       if (!entitiesDone) {
-        Canonicalize.entityTable(spark, ChemDict.entries)
+        // one file: a local relation scans with one task per core
+        Canonicalize.entityTable(spark, ChemDict.entries).coalesce(1)
           .write.options(TableWriteOptions).mode(SaveMode.Overwrite)
           .parquet(s"$outDir/$StageEntities/data")
         writeText(fsOf(spark, entitiesMetaPath(outDir)), new Path(entitiesMetaPath(outDir)),

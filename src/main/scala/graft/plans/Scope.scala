@@ -75,4 +75,26 @@ object Scope {
     val s = new Scope(spark)
     try body(s) finally s.close()
   }
+
+  /** Byte budget of one bounded driver collect ([[collectWithin]]). */
+  val DriverBytes: Long = 32L << 20
+
+  /** The bounded driver branch every small-input operator takes (the
+    * broadcast-the-small-side choice SparkER makes for blocking): ONE
+    * `limit(n + 1).collect()` with `n = DriverBytes / rowBytes`, so the
+    * cap is a byte budget whatever the row width. `Some(rows)` when the
+    * whole input came back (at most `n` rows), `None` when it is larger
+    * — the caller then runs its distributed form and the `n + 1`
+    * probe rows are dropped. The probe is also the collect, so a small
+    * input costs no count job. The input is read as one partition: over
+    * several, Spark's limit scans them in rounds of 1, 4, 16, …
+    * partitions, one job per round, and each task of a round may ship
+    * up to `n + 1` rows; one partition makes it one job that never
+    * holds more than `n + 1` rows.
+    */
+  def collectWithin[T](ds: Dataset[T], rowBytes: Long): Option[Array[T]] = {
+    val n = DriverBytes / rowBytes
+    val rows = ds.coalesce(1).limit((n + 1).toInt).collect()
+    if (rows.length <= n) Some(rows) else None
+  }
 }

@@ -81,11 +81,11 @@ class CanonicalizeSpec extends AnyFunSuite with ScopePerTest {
     val pairs = ((0 until n - 1).map(i => (i.toLong, (i + 1).toLong)) ++
       (200 until 230).map(i => (i.toLong, (i + 1).toLong)))
       .toDF("cid_a", "cid_b")
-    // threshold 0 pins the DISTRIBUTED loop (this test exists to prove
-    // the pointer-jumping loop converges on high diameter; the default
-    // threshold would take the driver union-find on a graph this small)
-    val labels = Canonicalize.connectedComponents(nodes, pairs,
-      driverEdgeThreshold = 0L)
+    // the DISTRIBUTED loop (this test exists to prove the
+    // pointer-jumping loop converges on high diameter;
+    // connectedComponents would take the driver union-find on a graph
+    // this small)
+    val labels = Canonicalize.connectedComponentsDistributed(nodes, pairs)
       .as[(Long, Long)].collect().toMap
     (0 until n).foreach(i => assert(labels(i.toLong) == 0L, s"node $i"))
     (200 until 231).foreach(i => assert(labels(i.toLong) == 200L, s"node $i"))
@@ -100,8 +100,7 @@ class CanonicalizeSpec extends AnyFunSuite with ScopePerTest {
     val nodes = (0L until 40L).toDF("cid")
     val pairs = (0 until 39).map(i => (i.toLong, (i + 1).toLong)).toDF("cid_a", "cid_b")
     val e = intercept[IllegalArgumentException] {
-      Canonicalize.connectedComponents(nodes, pairs, maxIter = 2,
-        driverEdgeThreshold = 0L).collect()
+      Canonicalize.connectedComponentsDistributed(nodes, pairs, maxIter = 2).collect()
     }
     assert(e.getMessage.contains("did not converge"))
   }

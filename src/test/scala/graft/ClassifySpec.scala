@@ -70,8 +70,41 @@ class ClassifySpec extends AnyFunSuite {
     assert(Classify.score(df(Seq((10L, "", "?"))), nb, pr).count() == 0)
   }
 
-  test("score formulations agree: array-LUT fast path == join reference, bit-exact") {
+  /** Reference formulation of [[Classify.score]]: per-occurrence
+    * crossJoin with the priors plus two broadcast joins resolving each
+    * (label, token).
+    */
+  private def scoreViaJoins(docs: DataFrame, nb: DataFrame, pr: DataFrame): DataFrame = {
     import spark.implicits._
+    val rows = nb.select(col("label"), col("token"), col("lwq"))
+      .as[(String, String, Long)].collect()
+    val seen = rows.filter(_._2 != Classify.Backoff).toSeq.toDF("label", "w", "lwq_seen")
+    val backoff = rows.filter(_._2 == Classify.Backoff)
+      .map(r => (r._1, r._3)).toSeq.toDF("label", "lwq_backoff")
+    val prior = pr.select(col("label"), col("lp_prior"))
+    Classify.tokens(docs)
+      .crossJoin(broadcast(prior))
+      .join(broadcast(seen), Seq("label", "w"), "left")
+      .join(broadcast(backoff), Seq("label"), "left")
+      .withColumn("lwq_r", coalesce(col("lwq_seen"), col("lwq_backoff")))
+      .groupBy("doc_id", "label")
+      .agg(count(lit(1)).as("n_tokens"),
+        max(col("lp_prior")).as("lp_prior"),
+        sum(col("lwq_r")).as("sum_lwq"))
+      .withColumn("score",
+        col("lp_prior") + col("sum_lwq").cast("double") / lit(Classify.Shift))
+      .select("doc_id", "label", "n_tokens", "sum_lwq", "score")
+  }
+
+  /** Score rows sorted by (doc, label), the score as its bits; a null
+    * sum or score stays None.
+    */
+  private def flat(x: DataFrame) = x.collect()
+    .map(r => (r.getLong(0), r.getString(1), r.getLong(2), Option(r.get(3)),
+      Option(r.get(4)).map(d => java.lang.Double.doubleToLongBits(d.asInstanceOf[Double]))))
+    .sortBy(r => (r._1, r._2)).toList
+
+  test("score formulations agree: array-LUT fast path == join reference, bit-exact") {
     // dup-heavy random corpus: repeated tokens, OOV tokens, tokens seen
     // for only one label — every resolution branch exercised
     val tr = df((0 until 60).map(i =>
@@ -80,16 +113,22 @@ class ClassifySpec extends AnyFunSuite {
       (100L + i, s"w${i % 7} w${i % 7} w${i % 11} only${i % 2} oov$i", "?")))
     val nb = Classify.nbTable(Classify.counts(tr), Classify.vocabSize(tr))
     val pr = Classify.priors(tr)
-    val rows = nb.select(col("label"), col("token"), col("lwq"))
-      .as[(String, String, Long)].collect()
-    val priorRows = pr.select(col("label"), col("lp_prior"))
-      .as[(String, Double)].collect().sortBy(_._1)
-    def flat(x: DataFrame) = x
-      .as[(Long, String, Long, Long, Double)].collect().sortBy(r => (r._1, r._2))
-      .map(r => (r._1, r._2, r._3, r._4, java.lang.Double.doubleToLongBits(r._5)))
-      .toList
-    assert(flat(Classify.score(d, nb, pr)) ==
-      flat(Classify.scoreViaJoins(d, rows, priorRows, "text", "doc_id")))
+    assert(flat(Classify.score(d, nb, pr)) == flat(scoreViaJoins(d, nb, pr)))
+  }
+
+  test("score: a label with no backoff row scores null, bit-exact to the join reference") {
+    // every training doc of label E has empty text: E has a prior but
+    // no counts, so neither seen nor backoff rows
+    val tr = df(Seq((1L, "aa bb", "A"), (2L, "bb cc", "B"), (3L, "", "E"), (4L, "", "E")))
+    val d = df(Seq((10L, "aa zz", "?"), (11L, "cc cc bb", "?")))
+    val nb = Classify.nbTable(Classify.counts(tr), Classify.vocabSize(tr))
+    val pr = Classify.priors(tr)
+    val got = flat(Classify.score(d, nb, pr))
+    assert(got == flat(scoreViaJoins(d, nb, pr)))
+    // E still counts each doc's tokens; its sum and score are null, and
+    // the other labels score as usual
+    assert(got.filter(_._2 == "E") == List((10L, "E", 2L, None, None), (11L, "E", 3L, None, None)))
+    assert(got.count(r => r._2 != "E" && r._4.nonEmpty && r._5.nonEmpty) == 4)
   }
 
   test("prediction: separable fixture classifies held-out docs; ties break by label") {

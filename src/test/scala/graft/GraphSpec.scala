@@ -88,12 +88,13 @@ class GraphSpec extends AnyFunSuite with ScopePerTest {
     val edges = Graph.propertyEdges(fixture)
     val arcs = edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val expected = referencePr(arcs, Graph.DefaultIters)
-    // default threshold → driver loop; threshold 0 pins the
-    // distributed iteration — both must be bit-equal to the reference
+    // pageRank takes the driver loop on a graph this small;
+    // pageRankDistributed is the distributed iteration — both must be
+    // bit-equal to the reference
     val got = Graph.pageRank(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expected)
-    val gotDist = Graph.pageRank(edges, driverArcThreshold = 0L).collect()
+    val gotDist = Graph.pageRankDistributed(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotDist === expected)
     // pr double column is the exact power-of-two division
@@ -104,11 +105,11 @@ class GraphSpec extends AnyFunSuite with ScopePerTest {
 
   test("pageRank: partition-invariant (integer sums are order-free)") {
     val edges = Graph.propertyEdges(fixture)
-    // threshold 0 pins the distributed loop — partition invariance is
-    // its property to prove (the driver loop never sees partitions)
-    val a = Graph.pageRank(edges, driverArcThreshold = 0L).collect()
+    // partition invariance is the distributed loop's property to prove
+    // (the driver loop never sees partitions)
+    val a = Graph.pageRankDistributed(edges).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Graph.pageRank(edges.repartition(7), driverArcThreshold = 0L).collect()
+    val b = Graph.pageRankDistributed(edges.repartition(7)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a === b)
   }

@@ -129,11 +129,11 @@ class LinesSpec extends AnyFunSuite with ScopePerTest {
       .as[(Long, String)].collect().sortBy(_._1).toList
     for (parts <- Seq(3, 23)) {
       val in = d.repartition(parts)
-      // maxBroadcastBlocklist = 0 forces the distributed branch on the
-      // SAME input the broadcast branch handles
+      // the distributed branch on the SAME input the broadcast branch
+      // handles
       val bcast = collectClean(Lines.removeBoilerplate(in, 10))
       val dist = collectClean(
-        Lines.removeBoilerplate(in, 10, maxBroadcastBlocklist = 0L))
+        Lines.removeBoilerplateDistributed(in, Lines.blocklist(in, 10)))
       assert(bcast == dist, s"branch divergence at $parts partitions")
       // and the explicit at-rest-blocklist entry point agrees too
       val block = Lines.lineDocFreq(in).where(col("doc_freq") > 10).select("h")
@@ -154,7 +154,7 @@ class LinesSpec extends AnyFunSuite with ScopePerTest {
     }
     import spark.implicits._
     val d = df((0 until 60).map(i => (i.toLong, s"body $i\nfooter ${i % 2}")))
-    val q = Lines.removeBoilerplate(d, 10, maxBroadcastBlocklist = 0L)
+    val q = Lines.removeBoilerplateDistributed(d, Lines.blocklist(d, 10))
     q.count()
     val js = joins(q.queryExecution.executedPlan)
     assert(js.exists(_.joinType.sql == "LEFT ANTI"),

@@ -43,7 +43,7 @@ class NoCacheLeakSpec extends AnyFunSuite {
       Dedup.minhashClusters(docs, threshold = 0.5).count() },
     "Canonicalize.connectedComponents(distributed)" -> { implicit s =>
       val (pairs, nodes) = pairGraph
-      Canonicalize.connectedComponents(nodes, pairs, driverEdgeThreshold = 0L).count() },
+      Canonicalize.connectedComponentsDistributed(nodes, pairs).count() },
     "Canonicalize.connectedComponents(driver)" -> { implicit s =>
       val (pairs, nodes) = pairGraph
       Canonicalize.connectedComponents(nodes, pairs).count() },
@@ -61,7 +61,7 @@ class NoCacheLeakSpec extends AnyFunSuite {
     "Graph.propertyEdges + pageRank + relatedChems" -> { implicit s =>
       val edges = Graph.propertyEdges(Linking.linkTriplesFused(annotated, ChemDict.entries))
       Graph.pageRank(edges).count()
-      Graph.pageRank(edges, driverArcThreshold = 0L).count()
+      Graph.pageRankDistributed(edges).count()
       Graph.relatedChems(edges).count() },
     "Ranking.globalRank" -> { implicit s =>
       Ranking.globalRank(docs, Seq(col("doc_id"))).count() },
@@ -77,7 +77,9 @@ class NoCacheLeakSpec extends AnyFunSuite {
     "SpanDedup.removeDupSpans" -> { implicit s =>
       SpanDedup.removeDupSpans(docs, k = 8).agg(sum(length(col("clean_text")))).collect() },
     "Lines.removeBoilerplate" -> { implicit s =>
-      Lines.removeBoilerplate(docs, maxDocFreq = 2, maxBroadcastBlocklist = 0L)
+      Lines.removeBoilerplate(docs, maxDocFreq = 2)
+        .agg(sum(length(col("clean_text")))).collect()
+      Lines.removeBoilerplateDistributed(docs, Lines.blocklist(docs, maxDocFreq = 2))
         .agg(sum(length(col("clean_text")))).collect() },
     "IncrDedup.incrementalPairs + survivors" -> { implicit s =>
       val b = IncrDedup.bandIndex(corpus)

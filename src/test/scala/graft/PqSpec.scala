@@ -137,8 +137,8 @@ class PqSpec extends AnyFunSuite {
         (s, c, v.map(java.lang.Double.doubleToLongBits).toList)
       }.sortBy(r => (r._1, r._2)).toList
     val viaDriver = Pq.codebooks(emb, M, Ksub)
-    val viaDistributed = Pq.codebooks(emb, M, Ksub,
-      driverTrainThreshold = 0L)
+    val raw = Similarity.idVectors(emb, "vec_id", "embedding")
+    val viaDistributed = Pq.codebooksDistributed(raw, Similarity.vectorWidth(raw), M, Ksub)
     assert(flat(viaDriver) == flat(viaDistributed))
   }
 }

@@ -149,16 +149,16 @@ class PropertySpec extends AnyFunSuite with ScopePerTest {
         // min of component = fully-compressed root under min-union
         var r = i.toInt; while (parent(r) != r) r = parent(r); r.toLong
       }).toMap
-      // thr=0 forces the distributed label loop; the default takes the
-      // size-adaptive driver union-find — both must match the reference
-      for (parts <- Seq(1, 7); thr <- Seq(0L, Canonicalize.DriverEdgeThreshold)) {
+      // the distributed label loop and the size-adaptive driver
+      // union-find must both match the reference
+      for (parts <- Seq(1, 7); distributed <- Seq(true, false)) {
         val nodesDf = nodes.toDF("cid").repartition(parts)
         val pairsDf = edges.toDF("cid_a", "cid_b").repartition(parts)
-        val got = Canonicalize.connectedComponents(nodesDf, pairsDf,
-          driverEdgeThreshold = thr)
+        val got = (if (distributed) Canonicalize.connectedComponentsDistributed(nodesDf, pairsDf)
+          else Canonicalize.connectedComponents(nodesDf, pairsDf))
           .as[(Long, Long)].collect().toMap
         assert(got == expected,
-          s"n=$n parts=$parts thr=$thr: ${got.toSeq.diff(expected.toSeq).take(3)}")
+          s"n=$n parts=$parts distributed=$distributed: ${got.toSeq.diff(expected.toSeq).take(3)}")
       }
     }
   }

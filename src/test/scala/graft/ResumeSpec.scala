@@ -109,11 +109,26 @@ class ResumeSpec extends AnyFunSuite {
     // linked rows = triple rows (left-outer link preserves cardinality)
     assert(linked.count() == triples.count())
     assert(entities.count() == graft.sources.ChemDict.entries.length)
+    val entityFiles = new java.io.File(s"$dir/entities/data").list().filter(_.endsWith(".parquet"))
+    assert(entityFiles.length == 1, s"entity table in ${entityFiles.mkString(", ")}")
     // rerun is a no-op for the triple stage (all buckets manifested) and
     // produces identical linked output
     val before = tripleKeys(triples)
     Materialize.materializeGraph(spark, pages, dir, buckets = 4)
     assert(tripleKeys(Materialize.readTriples(spark, dir)) == before)
+  }
+
+  test("runResumable and materializeGraph record the same triple-table schema") {
+    val pages = PageGen.pages(spark, 20)
+    val dirA = Files.createTempDirectory("graft-schema-a").toString
+    val dirB = Files.createTempDirectory("graft-schema-b").toString
+    Materialize.runResumable(spark, pages, dirA, 4)
+    Materialize.materializeGraph(spark, pages, dirB, 4)
+    def schemaLine(dir: String) = Materialize
+      .latestSnapshot(spark, s"$dir/${Materialize.StageTriples}").schemas(Materialize.Data)
+    assert(schemaLine(dirA) == schemaLine(dirB))
+    assert(tripleKeys(Materialize.readTriples(spark, dirA)) ==
+      tripleKeys(Materialize.readTriples(spark, dirB)))
   }
 
   test("resume fails loudly when the dictionary changed since the table was written") {

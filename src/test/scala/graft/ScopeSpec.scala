@@ -70,26 +70,60 @@ class ScopeSpec extends AnyFunSuite {
     assert(!cached(df))
   }
 
-  test("leaf materializes with exactly one job and plans over a LogicalRDD") {
+  /** `body`'s result and the number of Spark jobs it submitted. */
+  private def withJobs[A](body: => A): (A, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
     }
+    spark.sparkContext.addSparkListener(listener)
+    val a = try body finally {
+      Thread.sleep(200) // let the listener bus drain
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    (a, jobs.get)
+  }
+
+  test("leaf materializes with exactly one job and plans over a LogicalRDD") {
     Scope(spark) { s =>
       val df = frame(6).filter("id % 3 = 0")
-      spark.sparkContext.addSparkListener(listener)
-      val (leaf, n) = try s.leaf(df) finally {
-        Thread.sleep(200) // let the listener bus drain
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      assert(jobs.get == 1)
+      val ((leaf, n), jobs) = withJobs(s.leaf(df))
+      assert(jobs == 1)
       assert(n == 67)
       assert(cached(df))
       assert(leaf.queryExecution.analyzed.isInstanceOf[LogicalRDD])
       assert(leaf.count() == n)
     }
+  }
+
+  test("collectWithin: the verdict depends on bytes, not rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{array_repeat, col, lit}
+    // 768-dim (id, vector) rows: just over the budget gives None
+    val wideBytes = 8L + 4L * 768
+    val overBudget = Scope.DriverBytes / wideBytes + 1
+    assert(overBudget * wideBytes > Scope.DriverBytes)
+    val wide = spark.range(0, overBudget, 1, 4)
+      .select(col("id"), array_repeat(lit(0.5f), 768).as("v")).as[(Long, Array[Float])]
+    assert(Scope.collectWithin(wide, wideBytes).isEmpty)
+    // eight times as many 8-byte rows, far under the budget: Some, whole
+    val narrow = spark.range(0, 8 * overBudget, 1, 4).as[Long]
+    assert(Scope.collectWithin(narrow, 8L).map(_.sorted.toSeq) ==
+      Some(0L until 8 * overBudget))
+  }
+
+  test("collectWithin: n rows come back whole, n + 1 do not, each in one job") {
+    import spark.implicits._
+    val rowBytes = Scope.DriverBytes / 3 // n = 3
+    val (three, jobs3) = withJobs(
+      Scope.collectWithin(spark.range(0, 3, 1, 4).as[Long], rowBytes))
+    assert(three.map(_.toSeq) == Some(Seq(0L, 1L, 2L)))
+    val (four, jobs4) = withJobs(
+      Scope.collectWithin(spark.range(0, 4, 1, 4).as[Long], rowBytes))
+    assert(four.isEmpty)
+    assert(jobs3 == 1 && jobs4 == 1)
   }
 
   test("an inner scope releases before its outer scope") {

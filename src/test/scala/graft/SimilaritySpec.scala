@@ -204,13 +204,11 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("trainer branch parity: driver Lloyd == distributed Lloyd, bit-exact") {
-    // the driver branch (default threshold) must reproduce the
-    // distributed trainer's centroids BIT-IDENTICALLY — same sample
-    // order, same ascending-id per-cell double accumulation, same
-    // (x / n).toFloat mean
+    // the driver branch must reproduce the distributed trainer's
+    // centroids BIT-IDENTICALLY — same sample order, same ascending-id
+    // per-cell double accumulation, same (x / n).toFloat mean
     val viaDriver = Similarity.ivfCentroidsTrained(clustered, nlist = 8)
-    val viaDistributed = Similarity.ivfCentroidsTrained(clustered, nlist = 8,
-      driverTrainThreshold = 0L)
+    val viaDistributed = Similarity.ivfCentroidsDistributed(clustered, nlist = 8)
     assert(viaDriver.length == viaDistributed.length)
     viaDriver.zip(viaDistributed).foreach { case ((c1, v1), (c2, v2)) =>
       assert(c1 == c2 && v1.sameElements(v2),
