@@ -147,12 +147,13 @@ object Canonicalize {
     * cid of its component) for every node.
     *
     * Small graphs (the usual output of pair verification) take the
-    * driver branch: the edge list (16 B per edge) comes back through
+    * driver branch: the edge list comes back through
     * [[Scope.collectWithin]] and a union-find labels it, skipping the
     * distributed loop's per-iteration cost (~2s for a 200-edge graph at
     * local[32]). The NODE set is never collected: it can be O(dict) even
     * when edges are few. Larger graphs run
-    * [[connectedComponentsDistributed]].
+    * [[connectedComponentsDistributed]]. An edge is priced at 32 B (two
+    * longs, held as a boxed `Row`), so the budget keeps about 1M edges.
     *
     * Contract notes shared by both branches:
     *  - `nodes` must cover every pair endpoint (all in-tree callers
@@ -163,7 +164,9 @@ object Canonicalize {
     *  - Callers should persist (and materialize) `pairs` before the
     *    call: the bounded collect plus, above the budget, the
     *    distributed loop evaluate it more than once, and every in-tree
-    *    caller already passes a persisted leaf-cut frame.
+    *    caller already passes a persisted leaf-cut frame. The collect
+    *    reads `pairs` as one partition (one job; its task reads at most
+    *    the budget's rows from the cache).
     *  - `nodesArePairEndpoints = true` asserts nodes == the exact pair
     *    endpoint set (what all in-tree callers construct). The driver
     *    branch then RETURNS THE LOCAL LABEL MAP directly as a
@@ -180,8 +183,8 @@ object Canonicalize {
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 40,
       nodesArePairEndpoints: Boolean = false)(implicit scope: Scope): DataFrame =
-    Scope.collectWithin(
-      pairs.select(col("cid_a").cast("long"), col("cid_b").cast("long")), 16L) match {
+    Scope.collectWithin(pairs.coalesce(1)
+      .select(col("cid_a").cast("long"), col("cid_b").cast("long")), 32L) match {
       case Some(rows) => connectedComponentsDriver(nodes, rows, nodesArePairEndpoints)
       case None => connectedComponentsDistributed(nodes, pairs, maxIter)
     }

@@ -106,12 +106,22 @@ object Lines {
     val spark = docs.sparkSession
     import spark.implicits._
     val block = blocklist(docs, maxDocFreq, textCol, keyCol)
-    Scope.collectWithin(block.as[Long], 8L) match {
+    removeBoilerplateGiven(docs, block, Scope.collectWithin(block.as[Long], 8L),
+      textCol, keyCol)
+  }
+
+  /** [[removeBoilerplate]] past its bounded collect: `collected` is the
+    * collect's verdict on the blocklist frame `block`.
+    */
+  private[graft] def removeBoilerplateGiven(
+      docs: DataFrame, block: DataFrame, collected: Option[Array[Long]],
+      textCol: String = "text", keyCol: String = "doc_id")
+      (implicit scope: Scope): DataFrame =
+    collected match {
       case Some(h) => removeBoilerplateBroadcast(docs, h.toSet, textCol)
       case None =>
         removeBoilerplateDistributed(docs, scope.persist(block), textCol, keyCol)
     }
-  }
 
   /** The broadcast-set rewrite: one zero-exchange projection. */
   def removeBoilerplateBroadcast(

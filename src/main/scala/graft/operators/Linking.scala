@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.Normalize
 import graft.model.{ChemDictEntry, Sentence, Triple}
 import graft.plans.Scope
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** J1/J2 + A1: PubChem-style entity linking as Spark joins.
@@ -198,10 +198,17 @@ object Linking {
       .filter(col("occurrences") >= minOccurrences)
       .withColumn("name_norm", chemNormCol(col("mention")))
       .select("mention", "name_norm", "occurrences")
-    // a typed projection, not `select("triple.*")`: fields of the
-    // nullable struct column would all read nullable, and the triple
-    // table would record a different schema than `Pipeline.run` writes
-    val triples = combined.filter(col("triple").isNotNull).map(_.triple).toDF()
+    // `triple.*` of the nullable struct column reads every field as
+    // nullable; the primitive fields (never null in a non-null struct)
+    // get a non-null coalesce so the triple table records the schema
+    // `Pipeline.run` writes. A typed `map(_.triple)` records it too, but
+    // builds a Triple per cached row and stops column pruning, so a
+    // downstream that reads four columns still decodes all fourteen
+    val triples = combined.filter(col("triple").isNotNull)
+      .select(Encoders.product[Triple].schema.fields.toSeq.map { f =>
+        val c = col(s"triple.${f.name}")
+        (if (f.nullable) c else coalesce(c, lit(0).cast(f.dataType))).as(f.name)
+      }: _*)
     (eligible, triples)
   }
 

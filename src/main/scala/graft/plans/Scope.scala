@@ -76,7 +76,11 @@ object Scope {
     try body(s) finally s.close()
   }
 
-  /** Byte budget of one bounded driver collect ([[collectWithin]]). */
+  /** Byte budget of one bounded driver collect ([[collectWithin]]). It
+    * counts the bytes a caller prices a row at, not driver heap: the
+    * collected rows hold about 1x (a long array) to 3x (boxed `Row`s)
+    * that price, so a full budget retains at most about 110 MB.
+    */
   val DriverBytes: Long = 32L << 20
 
   /** The bounded driver branch every small-input operator takes (the
@@ -86,15 +90,17 @@ object Scope {
     * whole input came back (at most `n` rows), `None` when it is larger
     * — the caller then runs its distributed form and the `n + 1`
     * probe rows are dropped. The probe is also the collect, so a small
-    * input costs no count job. The input is read as one partition: over
-    * several, Spark's limit scans them in rounds of 1, 4, 16, …
-    * partitions, one job per round, and each task of a round may ship
-    * up to `n + 1` rows; one partition makes it one job that never
-    * holds more than `n + 1` rows.
+    * input costs no count job. Over several partitions Spark's limit
+    * scans them in rounds of 1, 4, 16, … partitions, one job per round,
+    * so the input's upstream stays parallel (each task of a round may
+    * ship up to `n + 1` rows; the driver keeps `n + 1`). A caller whose
+    * input is a persisted leaf may pass it as `coalesce(1)`: one job,
+    * whose one task reads at most `n + 1` cached rows (never over a
+    * shuffle's output: that task would compute the whole reduce side).
     */
   def collectWithin[T](ds: Dataset[T], rowBytes: Long): Option[Array[T]] = {
     val n = DriverBytes / rowBytes
-    val rows = ds.coalesce(1).limit((n + 1).toInt).collect()
+    val rows = ds.limit((n + 1).toInt).collect()
     if (rows.length <= n) Some(rows) else None
   }
 }

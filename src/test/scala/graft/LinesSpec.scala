@@ -129,11 +129,11 @@ class LinesSpec extends AnyFunSuite with ScopePerTest {
       .as[(Long, String)].collect().sortBy(_._1).toList
     for (parts <- Seq(3, 23)) {
       val in = d.repartition(parts)
-      // the distributed branch on the SAME input the broadcast branch
-      // handles
+      // removeBoilerplate's distributed dispatch (a collect that did not
+      // fit) on the SAME input the broadcast branch handles
       val bcast = collectClean(Lines.removeBoilerplate(in, 10))
       val dist = collectClean(
-        Lines.removeBoilerplateDistributed(in, Lines.blocklist(in, 10)))
+        Lines.removeBoilerplateGiven(in, Lines.blocklist(in, 10), None))
       assert(bcast == dist, s"branch divergence at $parts partitions")
       // and the explicit at-rest-blocklist entry point agrees too
       val block = Lines.lineDocFreq(in).where(col("doc_freq") > 10).select("h")

@@ -79,7 +79,7 @@ class NoCacheLeakSpec extends AnyFunSuite {
     "Lines.removeBoilerplate" -> { implicit s =>
       Lines.removeBoilerplate(docs, maxDocFreq = 2)
         .agg(sum(length(col("clean_text")))).collect()
-      Lines.removeBoilerplateDistributed(docs, Lines.blocklist(docs, maxDocFreq = 2))
+      Lines.removeBoilerplateGiven(docs, Lines.blocklist(docs, maxDocFreq = 2), None)
         .agg(sum(length(col("clean_text")))).collect() },
     "IncrDedup.incrementalPairs + survivors" -> { implicit s =>
       val b = IncrDedup.bandIndex(corpus)

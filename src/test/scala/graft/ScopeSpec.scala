@@ -114,16 +114,22 @@ class ScopeSpec extends AnyFunSuite {
       Some(0L until 8 * overBudget))
   }
 
-  test("collectWithin: n rows come back whole, n + 1 do not, each in one job") {
+  test("collectWithin: n rows come back whole, n + 1 do not; one partition is one job") {
     import spark.implicits._
     val rowBytes = Scope.DriverBytes / 3 // n = 3
-    val (three, jobs3) = withJobs(
-      Scope.collectWithin(spark.range(0, 3, 1, 4).as[Long], rowBytes))
-    assert(three.map(_.toSeq) == Some(Seq(0L, 1L, 2L)))
-    val (four, jobs4) = withJobs(
-      Scope.collectWithin(spark.range(0, 4, 1, 4).as[Long], rowBytes))
-    assert(four.isEmpty)
-    assert(jobs3 == 1 && jobs4 == 1)
+    val three = Scope.collectWithin(spark.range(0, 3, 1, 4).as[Long], rowBytes)
+    assert(three.map(_.sorted.toSeq) == Some(Seq(0L, 1L, 2L)))
+    assert(Scope.collectWithin(spark.range(0, 4, 1, 4).as[Long], rowBytes).isEmpty)
+    // a persisted leaf passed as one partition: one job, whole or None
+    Scope(spark) { local =>
+      val (leaf, _) = local.leaf(spark.range(0, 4, 1, 4).toDF())
+      val (four, jobs4) = withJobs(
+        Scope.collectWithin(leaf.coalesce(1).as[Long], rowBytes))
+      val (all, jobsAll) = withJobs(
+        Scope.collectWithin(leaf.coalesce(1).as[Long], Scope.DriverBytes / 4))
+      assert(four.isEmpty && all.map(_.sorted.toSeq) == Some(Seq(0L, 1L, 2L, 3L)))
+      assert(jobs4 == 1 && jobsAll == 1)
+    }
   }
 
   test("an inner scope releases before its outer scope") {
