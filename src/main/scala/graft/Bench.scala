@@ -149,7 +149,7 @@ object Bench {
       "kg_entities_linked" -> (implicit sc => {
         // J2 strict per-mention back-attachment, fused single-pass
         val ann = Pipeline.annotate(Pipeline.sentences(PageGen.pages(spark, nPages)), names)
-        Linking.attachToMentions(ann, Linking.dictDs(spark, ChemDict.entries)).count(); ()
+        Linking.attachToMentions(ann, ChemDict.entries).count(); ()
       }),
       "dedup_minhash" -> (implicit sc => {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -211,7 +211,7 @@ object SparkEntry {
       // J2 strict form: per-CHEM-mention CID back-attachment
       // (linker.py:157-162) — the annotated sentence table a reference
       // consumer reads, with ent._.props analog columns
-      Linking.attachToMentions(annotated(s, dir), Linking.dictDs(s, ChemDict.entries))
+      Linking.attachToMentions(annotated(s, dir), ChemDict.entries)
         .orderBy("url", "sent_id", "start_char")),
     "kg_mention_norms" -> ((s, dir) =>
       // engine-computed chem_norm per distinct CHEM surface — oracle
@@ -247,37 +247,39 @@ object SparkEntry {
     "kg_dict_names" -> ((s, dir) =>
       // dictionary join build side (name_norm -> cid) — input to the
       // kg_linked oracle
-      Linking.dictNames(Linking.dictDs(s, ChemDict.entries))
+      Linking.dictNames(s, ChemDict.entries)
         .orderBy("name_norm")),
     "kg_dict_props" -> ((s, dir) =>
-      Linking.dictProps(Linking.dictDs(s, ChemDict.entries))
+      Linking.dictProps(s, ChemDict.entries)
         .orderBy("cid")),
-    "kg_canon_pairs" -> ((s, dir) =>
+    "kg_canon_pairs" -> ((s, dir) => {
       // LSH-blocked verified candidate pairs — the edge list whose
       // connected components the kg_entity_table oracle recomputes via
       // a recursive CTE; itself oracle-checked from the bands dump
-      Canonicalize.candidatePairs(Linking.dictDs(s, ChemDict.entries))
-        .orderBy("cid_a", "cid_b")),
+      import s.implicits._
+      Canonicalize.candidatePairs(ChemDict.entries).toDF("cid_a", "cid_b")
+        .orderBy("cid_a", "cid_b")
+    }),
     "kg_canon_bands" -> ((s, dir) =>
       // J5 blocking dump (band, band_hash, cid, chemNorm'd name) —
       // oracle input for kg_canon_pairs AND itself oracled since round
       // 4: DuckDB re-shingles every canonical name, rebuilds all 8
       // single-lane minhash values from the dumped per-shingle murmur
       // parameters, and re-derives the 1-element Arrays.hashCode band
-      Canonicalize.bandedNames(Linking.dictDs(s, ChemDict.entries))
+      Canonicalize.bandedNames(s, ChemDict.entries)
         .orderBy("band", "band_hash", "cid")),
     "kg_canon_names" -> ((s, dir) =>
       // (cid, chemNorm'd canonical name) — oracle INPUT for the
       // kg_canon_bands recompute; its own oracle checks agreement with
       // the name column of the bands dump
-      Canonicalize.canonNames(Linking.dictDs(s, ChemDict.entries))
+      Canonicalize.canonNames(s, ChemDict.entries)
         .orderBy("cid")),
     "kg_canon_shingle_hashes" -> ((s, dir) =>
       // per-(shingle, lane) seeded-murmur parameters of the name
       // blocking minhash — oracle INPUT for the kg_canon_bands
       // recompute; its own oracle re-derives the (shingle, lane) key
       // set from kg_canon_names
-      Canonicalize.shingleHashes(Linking.dictDs(s, ChemDict.entries))
+      Canonicalize.shingleHashes(s, ChemDict.entries)
         .orderBy("shingle", "lane")),
     "kg_linked" -> ((s, dir) =>
       // fused single-pass path: annotated feeds BOTH the triple assembly

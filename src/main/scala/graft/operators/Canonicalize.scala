@@ -6,9 +6,9 @@ import graft.plans.Scope
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** J5: entity canonicalization — connected components over a
-  * candidate-pair Dataset built by min-hash blocking on name n-grams
-  * (GraphFrames-free, per the north star).
+/** J5: entity canonicalization — min-hash blocking on name n-grams,
+  * Jaccard verification and connected components (GraphFrames-free,
+  * per the north star).
   *
   * Reference analog: all PubChem synonyms of a compound key to one CID
   * (cprex/pubchem/linker.py:49-53) — i.e. same-CID names are one entity.
@@ -17,23 +17,22 @@ import org.apache.spark.sql.functions._
   * min-hash band over their name 3-gram shingles collides, verified by
   * actual Jaccard >= threshold, then CC merges transitively.
   *
-  * Scale design:
-  *  - blocking: each name emits `bands` (band, hash) keys → self-join
-  *    only within buckets (the classic LSH trick: candidate volume is
-  *    O(sum of bucket²), not O(n²));
-  *  - oversized buckets (degenerate bands — e.g. millions of "...acid"
-  *    names) are CAPPED: buckets above `maxBucket` are dropped and
-  *    logged to lineage rather than exploding a reducer — a deliberate
-  *    recall/cost trade documented for the judge;
-  *  - CC: iterative min-label propagation with pointer jumping and
-  *    early-exit when an iteration changes nothing; inputs are persisted
-  *    and wrapped in LogicalRDD leaves so each iteration plans over a
-  *    flat leaf instead of re-analyzing the caller's whole upstream
-  *    subtree, while keeping lineage-based recompute (SURVEY.md §4.2;
-  *    see connectedComponents for the measured re-planning cost);
-  *  - a dictionary that already lives on the driver (`ChemDict.entries`)
-  *    runs the same blocking rule and a union-find there
-  *    ([[entityTable]]) instead of shuffling it.
+  * The dictionary is a driver array (`ChemDict.entries`), so its
+  * blocking ([[candidatePairs]]), verification and union-find run on
+  * the driver, and the blocking dumps ([[bandedNames]], [[canonNames]],
+  * [[shingleHashes]]) are local relations built there:
+  *  - blocking: each name emits `Bands` (band, hash) keys and names
+  *    pair only within a bucket (the classic LSH trick: candidate volume
+  *    is O(sum of bucket²), not O(n²));
+  *  - oversized buckets (degenerate bands — e.g. thousands of "...acid"
+  *    names) are CAPPED: buckets above `MaxBucket` are dropped, a
+  *    deliberate recall/cost trade.
+  * The distributed blocking plan is kept as a reference in
+  * CanonicalizeSpec. [[connectedComponents]] and [[pairComponents]]
+  * label distributed pair graphs (the dedup operators' near-duplicate
+  * graphs): iterative min-label propagation with pointer jumping over
+  * scope leaves, or a driver union-find when the edges fit
+  * (SURVEY.md §4.2).
   */
 object Canonicalize {
 
@@ -50,21 +49,24 @@ object Canonicalize {
   // extra volume is bounded.
   val Bands = 8
 
-  /** (band, band_hash, cid, name) LSH blocking rows (name already
-    * chemNorm'd) — exposed so the driver can dump them and the
-    * bucket/pair/Jaccard-verify logic becomes SQL-oracle-checkable.
-    */
+  /** (cid, chemNorm'd canonical name) of every entry. */
+  private def names(dict: Array[ChemDictEntry]): Seq[(Long, String)] =
+    dict.toSeq.map(e => (e.cid, Normalize.chemNorm(e.canonicalName)))
+
+  /** (band, band_hash, cid, name) LSH blocking rows of every entry. */
+  private def banded(dict: Array[ChemDictEntry]): Seq[(Int, Int, Long, String)] =
+    names(dict).flatMap { case (cid, name) =>
+      bandKeys(name).map { case (b, h) => (b, h, cid, name) }
+    }
+
   /** Distinct (shingle, lane, h) seeded-murmur values of the
     * name-blocking minhash — oracle INPUT: given these, the
     * kg_canon_bands oracle rebuilds every band row (char-3-gram
     * shingling, per-lane min, single-element Arrays.hashCode) in SQL.
     */
-  def shingleHashes(dict: Dataset[ChemDictEntry]): DataFrame = {
-    val spark = dict.sparkSession
+  def shingleHashes(spark: SparkSession, dict: Array[ChemDictEntry]): DataFrame = {
     import spark.implicits._
-    dict.map(e => Normalize.chemNorm(e.canonicalName))
-      .flatMap(n => Normalize.shingles(n).toSeq)
-      .distinct()
+    names(dict).flatMap(n => Normalize.shingles(n._2)).distinct
       .flatMap(g => (0 until MinhashK).map(j =>
         (g, j, scala.util.hashing.MurmurHash3.stringHash(g, 1000 + j))))
       .toDF("shingle", "lane", "h")
@@ -75,28 +77,25 @@ object Canonicalize {
     * re-minhash every name in SQL without re-deriving chemNorm (which
     * is engine arithmetic, same dump pattern as kg_mention_norms).
     */
-  def canonNames(dict: Dataset[ChemDictEntry]): DataFrame = {
-    val spark = dict.sparkSession
+  def canonNames(spark: SparkSession, dict: Array[ChemDictEntry]): DataFrame = {
     import spark.implicits._
-    dict.map(e => (e.cid, Normalize.chemNorm(e.canonicalName)))
-      .toDF("cid", "name")
+    names(dict).toDF("cid", "name")
   }
 
-  def bandedNames(dict: Dataset[ChemDictEntry]): DataFrame = {
-    val spark = dict.sparkSession
+  /** The (band, band_hash, cid, name) blocking rows — dumped so the
+    * bucket/pair/Jaccard-verify logic is SQL-oracle-checkable.
+    */
+  def bandedNames(spark: SparkSession, dict: Array[ChemDictEntry]): DataFrame = {
     import spark.implicits._
-    dict.map(e => (e.cid, Normalize.chemNorm(e.canonicalName)))
-      .flatMap { case (cid, name) => bandKeys(name).map { case (b, h) => (b, h, cid, name) } }
-      .toDF("band", "band_hash", "cid", "name")
+    banded(dict).toDF("band", "band_hash", "cid", "name")
   }
 
-  /** The blocking rule, as plain functions shared by the distributed
-    * form ([[bandedNames]], [[candidatePairs]]) and the driver form
-    * ([[entityTable]]):
+  /** The blocking rule, as plain functions shared by [[candidatePairs]]
+    * and the distributed reference plan in CanonicalizeSpec:
     *  - `bandKeys`: the `Bands` (band, band_hash) LSH keys of one
     *    chemNorm'd name;
     *  - `keepsBucket`: a bucket of `n` names is blocked on only when
-    *    `1 < n <= maxBucket` (larger ones are degenerate and dropped);
+    *    `1 < n <= MaxBucket` (larger ones are degenerate and dropped);
     *  - `similar`: both Jaccard verifications of a candidate pair.
     */
   def bandKeys(name: String): Seq[(Int, Int)] = {
@@ -107,41 +106,22 @@ object Canonicalize {
 
   val MaxBucket = 64
 
-  def keepsBucket(n: Long, maxBucket: Int): Boolean = n > 1 && n <= maxBucket
+  def keepsBucket(n: Long): Boolean = n > 1 && n <= MaxBucket
 
   def similar(x: String, y: String): Boolean =
     Normalize.jaccard(Normalize.shingles(x), Normalize.shingles(y)) >= JaccardThreshold &&
       Normalize.jaccard(x.split(' ').toSet, y.split(' ').toSet) >= TokenJaccardThreshold
 
-  /** Candidate same-entity pairs (cidA < cidB) from LSH blocking +
-    * Jaccard verification. The dictionary arrives as a distributed
-    * Dataset (a 100M-synonym dump never fits the driver); names stay
-    * where they are computed — only (band, band_hash, cid) rows plus
-    * the in-bucket name pairs move.
+  /** Candidate same-entity pairs (cidA < cidB), distinct, from LSH
+    * blocking + Jaccard verification on the driver: the edge list of
+    * [[entityTable]] and the kg_canon_pairs dump.
     */
-  def candidatePairs(
-      dict: Dataset[ChemDictEntry],
-      maxBucket: Int = MaxBucket
-  ): DataFrame = {
-    val banded = bandedNames(dict)
-
-    // cap degenerate buckets before the self-join
-    val keep = udf((n: Long) => keepsBucket(n, maxBucket))
-    val bucketSizes = banded.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("n"))
-      .filter(keep(col("n")))
-    val pruned = banded.join(bucketSizes, Seq("band", "band_hash"), "left_semi")
-
-    val a = pruned.select(col("band"), col("band_hash"),
-      col("cid").as("cid_a"), col("name").as("name_a"))
-    val b = pruned.select(col("band"), col("band_hash"),
-      col("cid").as("cid_b"), col("name").as("name_b"))
-    val similarUdf = udf((x: String, y: String) => similar(x, y))
-    a.join(b, Seq("band", "band_hash"))
-      .filter(col("cid_a") < col("cid_b"))
-      .filter(similarUdf(col("name_a"), col("name_b")))
-      .select("cid_a", "cid_b").distinct()
-  }
+  def candidatePairs(dict: Array[ChemDictEntry]): Seq[(Long, Long)] =
+    banded(dict).groupMap(r => (r._1, r._2))(r => (r._3, r._4)).valuesIterator
+      .filter(m => keepsBucket(m.size))
+      .flatMap(m => for ((ca, na) <- m; (cb, nb) <- m if ca < cb && similar(na, nb))
+        yield (ca, cb))
+      .toSeq.distinct
 
   /** Connected components of the pair graph: (cid, cluster_id = min
     * cid of its component) for every node.
@@ -375,25 +355,13 @@ object Canonicalize {
   /** Full canonicalization: dict → clustered entity table (clusterId =
     * the minimum cid of the entry's component; an entry in no candidate
     * pair is its own cluster). The dictionary is a driver array, so the
-    * blocking, the verification and the union-find run on the driver
-    * with the same rule as the distributed [[candidatePairs]] +
-    * [[pairComponents]] (the broadcast-small-side choice SparkER makes
-    * for blocking indexes): no job until the caller's action, which
-    * reads one local relation.
+    * union-find over [[candidatePairs]] runs on the driver too (the
+    * broadcast-small-side choice SparkER makes for blocking indexes):
+    * no job until the caller's action, which reads one local relation.
     */
   def entityTable(spark: SparkSession, dict: Array[ChemDictEntry]): Dataset[CanonicalEntity] = {
     import spark.implicits._
-    val pairs = dict.toSeq
-      .flatMap { e =>
-        val name = Normalize.chemNorm(e.canonicalName)
-        bandKeys(name).map(_ -> (e.cid, name))
-      }
-      .groupMap(_._1)(_._2).valuesIterator
-      .filter(m => keepsBucket(m.size, MaxBucket))
-      .flatMap(m => for ((ca, na) <- m; (cb, nb) <- m if ca < cb && similar(na, nb))
-        yield (ca, cb))
-      .toSet
-    val labels = unionFind(pairs)
+    val labels = unionFind(candidatePairs(dict))
     spark.createDataset(dict.toIndexedSeq.map(e => CanonicalEntity(
       labels.getOrElse(e.cid, e.cid), e.cid, e.canonicalName, e.synonyms,
       e.molecularFormula, e.molecularWeight)))

@@ -16,12 +16,21 @@ import org.apache.spark.sql.functions._
   *    canonicalization per the north star);
   *  - J2: back-attach linked properties to every mention row.
   *
+  * The dictionary is a driver array (`ChemDict.entries`), and every
+  * relation built from it here is computed on the driver: the link
+  * table's dictionary side is one local relation, `name_norm` → cid
+  * plus the property columns, joined in advance. No Spark job
+  * parallelizes or groups the dictionary, and the broadcast forms ship
+  * it once, names and properties together (the broadcast-small-side
+  * choice SparkER makes for blocking indexes).
+  *
   * Scale design (the part the reference cannot express):
-  *  - default path: `broadcast(dict)` hash join — zero shuffle on the
+  *  - default path: broadcast hash joins — zero shuffle on the
   *    10^12-row probe side; A1 is the only shuffle (partial agg first);
-  *  - `salted` path for when the dictionary exceeds broadcast budget at
-  *    real scale: explicit salt column on the probe side
-  *    (pmod(hash(url), nSalts)) with the dict side exploded ×nSalts, so
+  *  - `salted` path for when the link table (the A1-eligible surfaces
+  *    with their properties) exceeds the broadcast budget at real scale:
+  *    no broadcast of it, an explicit salt column on the probe side
+  *    (pmod(hash(url), nSalts)) and the link side exploded ×nSalts, so
   *    head entities ("water": ~15% of all mentions in the fixture
   *    workload) spread over nSalts reducers instead of one. AQE skew
   *    join stays enabled as the backstop (spark.sql.adaptive.*).
@@ -48,32 +57,55 @@ object Linking {
       .groupBy("mention").agg(count(lit(1)).as("occurrences"))
   }
 
-  /** The dictionary is a DISTRIBUTED Dataset, not a driver array — the
-    * honest shape for a 100M-synonym PubChem dump that cannot live on
-    * the driver at all. The Array overloads below parallelize the small
-    * fixture dictionary for tests and driver queries.
+  /** (nameNorm, cid) of every synonym; a name several entries share
+    * keeps the minimum cid (first-wins like linker memoization).
     */
-  def dictDs(spark: SparkSession, dict: Array[ChemDictEntry]): Dataset[ChemDictEntry] = {
+  private def nameCids(dict: Array[ChemDictEntry]): Seq[(String, Long)] =
+    dict.toSeq.flatMap(e => e.synonyms.map(s => Normalize.chemNorm(s) -> e.cid))
+      .groupMapReduce(_._1)(_._2)(math.min).toSeq
+
+  private val PropCols = Seq("cid", "canonical_name", "molecular_formula",
+    "molecular_weight", "canonical_smiles", "iupac_name")
+
+  /** Dictionary rows flattened to (name_norm, cid), as a local relation. */
+  def dictNames(spark: SparkSession, dict: Array[ChemDictEntry]): DataFrame = {
     import spark.implicits._
-    spark.createDataset(dict.toIndexedSeq)
+    nameCids(dict).toDF("name_norm", "cid")
   }
 
-  /** Dictionary rows flattened to (nameNorm, cid) — the join build side. */
-  def dictNames(dict: Dataset[ChemDictEntry]): DataFrame = {
-    val spark = dict.sparkSession
+  /** (cid, properties...) of every entry, as a local relation. */
+  def dictProps(spark: SparkSession, dict: Array[ChemDictEntry]): DataFrame = {
     import spark.implicits._
-    dict.flatMap(e => e.synonyms.map(s => (Normalize.chemNorm(s), e.cid)))
-      .toDF("name_norm", "cid")
-      .groupBy("name_norm").agg(min("cid").as("cid")) // first-wins like linker memoization
+    dict.toSeq.map(e => (e.cid, e.canonicalName, e.molecularFormula, e.molecularWeight,
+      e.canonicalSmiles, e.iupacName)).toDF(PropCols: _*)
   }
 
-  def dictProps(dict: Dataset[ChemDictEntry]): DataFrame = {
-    val spark = dict.sparkSession
+  /** The A1 gate over compact mention rows: (mention, name_norm,
+    * occurrences) of every surface with at least `minOccurrences` exact
+    * occurrences.
+    */
+  private def a1Gate(mentions: DataFrame, minOccurrences: Int): DataFrame =
+    mentions.groupBy("mention").agg(count(lit(1)).as("occurrences"))
+      .filter(col("occurrences") >= minOccurrences)
+      .withColumn("name_norm", chemNormCol(col("mention")))
+      .select("mention", "name_norm", "occurrences")
+
+  /** The surface-link table, (mention, occurrences, cid, properties...):
+    * the [[a1Gate]] surfaces ⋈ the dictionary on `name_norm`. The
+    * dictionary side is [[dictNames]] ⋈ [[dictProps]] joined on the
+    * driver. It is broadcast, or with `shuffled` planned as a shuffled
+    * hash join, so the salted forms broadcast nothing.
+    */
+  private def linkTable(eligible: DataFrame, dict: Array[ChemDictEntry],
+      shuffled: Boolean): DataFrame = {
+    val spark = eligible.sparkSession
     import spark.implicits._
-    dict.map(e => (e.cid, e.canonicalName, e.molecularFormula, e.molecularWeight,
-      e.canonicalSmiles, e.iupacName))
-      .toDF("cid", "canonical_name", "molecular_formula", "molecular_weight",
-        "canonical_smiles", "iupac_name")
+    val byCid = dict.groupBy(_.cid)
+    val side = (for ((name, cid) <- nameCids(dict); e <- byCid(cid))
+      yield (name, e.cid, e.canonicalName, e.molecularFormula, e.molecularWeight,
+        e.canonicalSmiles, e.iupacName)).toDF("name_norm" +: PropCols: _*)
+    eligible.join(if (shuffled) side.hint("shuffle_hash") else broadcast(side), Seq("name_norm"))
+      .drop("name_norm")
   }
 
   /** J2 strict form (linker.py:157-162): back-attach linked properties
@@ -83,23 +115,17 @@ object Linking {
     * mention with its CID + properties (nulls when the surface is rare
     * or unresolved), so a consumer of the annotated sentence table gets
     * per-mention CIDs exactly like the reference's primary artifact.
-    * Same broadcast discipline as the triple path (links is
-    * A1-gated + dict-joined, then broadcast onto the mention rows).
-    */
-  /** Fused single-pass form of the J2 strict back-attachment: ONE
-    * flatMap over the annotated table emits the compact per-mention
-    * rows, that dataset persists, and BOTH consumers — the A1
-    * occurrence count and the final attach join — read the cache. The
-    * pre-round-4 shape re-derived mentionCounts from the un-persisted
-    * `annotated` and so ran the full NER annotate stage twice; at
-    * 10^12 pages that doubles the dominant cost of the pipeline's
-    * primary artifact. Single-pass is asserted by LinkingSpec with a
-    * row accumulator on the annotate subtree.
-    * The compact mention cache registers into `scope`.
+    *
+    * Fused single pass: ONE flatMap over the annotated table emits the
+    * compact per-mention rows, that dataset persists (into `scope`), and
+    * BOTH consumers — the A1 occurrence count and the final attach
+    * join — read the cache, so the NER annotate stage runs once
+    * (asserted by LinkingSpec with a row accumulator on the annotate
+    * subtree). The link table is broadcast onto the mention rows.
     */
   def attachToMentions(
       annotated: Dataset[Sentence],
-      dict: Dataset[ChemDictEntry],
+      dict: Array[ChemDictEntry],
       minOccurrences: Int = MinOccurrences
   )(implicit scope: Scope): DataFrame = {
     val spark = annotated.sparkSession
@@ -110,14 +136,8 @@ object Linking {
     }.toDF("url", "sent_id", "start_char", "end_char", "start_tok", "mention"))
     // A1 gate computed from the SAME compact rows (groupBy over exact
     // surfaces — identical to mentionCounts over `annotated`)
-    val eligible = mentions.groupBy("mention").agg(count(lit(1)).as("occurrences"))
-      .filter(col("occurrences") >= minOccurrences)
-      .withColumn("name_norm", chemNormCol(col("mention")))
-      .select("mention", "name_norm")
-    val links = eligible
-      .join(broadcast(dictNames(dict)), Seq("name_norm"))
-      .join(broadcast(dictProps(dict)), Seq("cid"))
-      .drop("name_norm")
+    val links = linkTable(a1Gate(mentions, minOccurrences), dict, shuffled = false)
+      .drop("occurrences")
     mentions.join(broadcast(links), Seq("mention"), "left_outer")
   }
 
@@ -145,11 +165,11 @@ object Linking {
     */
   def linkTriplesFused(
       annotated: Dataset[Sentence],
-      dictArr: Array[ChemDictEntry],
+      dict: Array[ChemDictEntry],
       minOccurrences: Int = MinOccurrences
   )(implicit scope: Scope): DataFrame = {
     val (eligible, triples) = fusedParts(annotated, minOccurrences)
-    linkEligible(triples, eligible, dictArr)
+    linkEligible(triples, eligible, dict)
   }
 
   /** J1+J2 broadcast path: `triples` ⟕ the surface-link table of the
@@ -161,14 +181,8 @@ object Linking {
     * (linker.py:160-161).
     */
   def linkEligible(triples: DataFrame, eligible: DataFrame,
-      dictArr: Array[ChemDictEntry]): DataFrame = {
-    val dict = dictDs(triples.sparkSession, dictArr)
-    val links = eligible
-      .join(broadcast(dictNames(dict)), Seq("name_norm"))
-      .join(broadcast(dictProps(dict)), Seq("cid"))
-      .drop("name_norm", "occurrences")
-    joinLinks(triples, links)
-  }
+      dict: Array[ChemDictEntry]): DataFrame =
+    joinLinks(triples, linkTable(eligible, dict, shuffled = false).drop("occurrences"))
 
   /** Shared skeleton of the fused single-pass paths and of
     * `Materialize.materializeGraph`: ONE flatMap over the annotated
@@ -193,11 +207,7 @@ object Linking {
         else Iterator.empty
       mentions ++ trips
     })
-    val eligible = combined.filter(col("mention").isNotNull)
-      .groupBy("mention").agg(count(lit(1)).as("occurrences"))
-      .filter(col("occurrences") >= minOccurrences)
-      .withColumn("name_norm", chemNormCol(col("mention")))
-      .select("mention", "name_norm", "occurrences")
+    val eligible = a1Gate(combined.filter(col("mention").isNotNull).toDF(), minOccurrences)
     // `triple.*` of the nullable struct column reads every field as
     // nullable; the primitive fields (never null in a non-null struct)
     // get a non-null coalesce so the triple table records the schema
@@ -212,7 +222,7 @@ object Linking {
     (eligible, triples)
   }
 
-  /** Fused + salted: the broadcast-free large-dict path with the
+  /** Fused + salted: the broadcast-free path with the
     * single-annotate-pass plan shape of `linkTriplesFused` (previously
     * the salted driver query recomputed the annotate stage twice).
     * Identical rows to `linkTriplesFused` and to the two-pass reference
@@ -220,35 +230,36 @@ object Linking {
     */
   def linkTriplesSaltedFused(
       annotated: Dataset[Sentence],
-      dictArr: Array[ChemDictEntry],
+      dict: Array[ChemDictEntry],
       nSalts: Int = 8,
       minOccurrences: Int = MinOccurrences
   )(implicit scope: Scope): DataFrame = {
-    val spark = annotated.sparkSession
-    val dict = dictDs(spark, dictArr)
     val (eligible, triples) = fusedParts(annotated, minOccurrences)
-    val links = eligible
-      .join(dictNames(dict).hint("shuffle_hash"), Seq("name_norm"))
-      .join(dictProps(dict).hint("shuffle_hash"), Seq("cid"))
-      .drop("name_norm", "occurrences")
-    val saltedDict = links.withColumn("salt", explode(lit((0 until nSalts).toArray)))
+    val saltedDict = linkTable(eligible, dict, shuffled = true).drop("occurrences")
+      .withColumn("salt", explode(lit((0 until nSalts).toArray)))
     val probe = triples
       .withColumn("head_surface", when(col("headLabel") === "CHEM", col("headText")))
       .withColumn("salt", pmod(hash(col("url")), lit(nSalts)))
+    saltedJoin(probe, saltedDict)
+  }
+
+  /** `probe` ⟕ `saltedDict` on (head surface, salt), as a shuffled hash
+    * join.
+    */
+  private def saltedJoin(probe: DataFrame, saltedDict: DataFrame): DataFrame =
     probe
       .hint("shuffle_hash")
       .join(saltedDict,
         probe("head_surface") === saltedDict("mention") && probe("salt") === saltedDict("salt"),
         "left_outer")
       .drop("mention", "head_surface", "salt")
-  }
 
   /** Occurrence threshold above which a mention surface counts as a
     * head entity (water, NaCl) for salting purposes. The heavy SET is
     * bounded by construction: at most totalMentions/HeavyThreshold
     * surfaces can exceed it, so broadcasting the set is always safe —
-    * unlike the dictionary, whose size is unbounded corpus-independent
-    * input. Production value ~1e6; driver/spec fixtures pass a small
+    * unlike the link table, which grows with the corpus's distinct
+    * surfaces. Production value ~1e6; driver/spec fixtures pass a small
     * one so both branches are exercised at test scale.
     */
   val HeavyThreshold: Long = 1000000L
@@ -268,20 +279,14 @@ object Linking {
     */
   def linkTriplesSaltedTargeted(
       annotated: Dataset[Sentence],
-      dictArr: Array[ChemDictEntry],
+      dict: Array[ChemDictEntry],
       nSalts: Int = 8,
       heavyThreshold: Long = HeavyThreshold,
       minOccurrences: Int = MinOccurrences
   )(implicit scope: Scope): DataFrame = {
-    val spark = annotated.sparkSession
-    val dict = dictDs(spark, dictArr)
     val (eligible, triples) = fusedParts(annotated, minOccurrences)
-    val links = eligible
-      .join(dictNames(dict).hint("shuffle_hash"), Seq("name_norm"))
-      .join(dictProps(dict).hint("shuffle_hash"), Seq("cid"))
-      .drop("name_norm")
     // heavy explodes to all salts; the long tail keeps one row at salt 0
-    val saltedDict = links
+    val saltedDict = linkTable(eligible, dict, shuffled = true)
       .withColumn("salt", explode(when(col("occurrences") >= heavyThreshold,
         lit((0 until nSalts).toArray)).otherwise(array(lit(0)))))
       .drop("occurrences")
@@ -293,11 +298,6 @@ object Linking {
       .withColumn("salt", when(col("heavy_mention").isNotNull,
         pmod(hash(col("url")), lit(nSalts))).otherwise(lit(0)))
       .drop("heavy_mention")
-    probe
-      .hint("shuffle_hash")
-      .join(saltedDict,
-        probe("head_surface") === saltedDict("mention") && probe("salt") === saltedDict("salt"),
-        "left_outer")
-      .drop("mention", "head_surface", "salt")
+    saltedJoin(probe, saltedDict)
   }
 }

@@ -4,8 +4,8 @@ import graft.model.{CanonicalEntity, ChemDictEntry}
 import graft.operators.Canonicalize
 import graft.plans.Scope
 import graft.sources.ChemDict
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions.{coalesce, col}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** J5: min-hash blocking + connected-components vs the dictionary's
@@ -15,16 +15,40 @@ class CanonicalizeSpec extends AnyFunSuite with ScopePerTest {
 
   private lazy val spark = SparkSpec.spark
 
-  /** Distributed reference form of `Canonicalize.entityTable`: LSH
-    * self-join blocking ([[Canonicalize.candidatePairs]]), CC over the
-    * pair graph ([[Canonicalize.pairComponents]]) and a join back onto
-    * the dictionary. The driver form must produce its rows.
+  /** Distributed reference form of `Canonicalize.candidatePairs`: the
+    * blocking rows self-join within their (band, band_hash) buckets,
+    * with the same bucket cap and verification rule. Only (band,
+    * band_hash, cid) rows plus the in-bucket name pairs move.
     */
-  private def entityTableDistributed(dict: Dataset[ChemDictEntry])(implicit scope: Scope)
+  private def candidatePairsDistributed(dict: Array[ChemDictEntry]): DataFrame = {
+    val banded = Canonicalize.bandedNames(spark, dict)
+    // cap degenerate buckets before the self-join
+    val keep = udf((n: Long) => Canonicalize.keepsBucket(n))
+    val bucketSizes = banded.groupBy("band", "band_hash")
+      .agg(count(lit(1)).as("n"))
+      .filter(keep(col("n")))
+    val pruned = banded.join(bucketSizes, Seq("band", "band_hash"), "left_semi")
+    val a = pruned.select(col("band"), col("band_hash"),
+      col("cid").as("cid_a"), col("name").as("name_a"))
+    val b = pruned.select(col("band"), col("band_hash"),
+      col("cid").as("cid_b"), col("name").as("name_b"))
+    val similar = udf((x: String, y: String) => Canonicalize.similar(x, y))
+    a.join(b, Seq("band", "band_hash"))
+      .filter(col("cid_a") < col("cid_b"))
+      .filter(similar(col("name_a"), col("name_b")))
+      .select("cid_a", "cid_b").distinct()
+  }
+
+  /** Distributed reference form of `Canonicalize.entityTable`: the
+    * distributed blocking above, CC over the pair graph
+    * ([[Canonicalize.pairComponents]]) and a join back onto the
+    * dictionary. The driver form must produce its rows.
+    */
+  private def entityTableDistributed(dict: Array[ChemDictEntry])(implicit scope: Scope)
       : Dataset[CanonicalEntity] = {
     import spark.implicits._
-    val labels = Canonicalize.pairComponents(Canonicalize.candidatePairs(dict))
-    dict.toDF()
+    val labels = Canonicalize.pairComponents(candidatePairsDistributed(dict))
+    spark.createDataset(dict.toIndexedSeq).toDF()
       .join(labels, Seq("cid"), "left")
       .select(coalesce(col("cluster_id"), col("cid")).as("clusterId"),
         col("cid"),
@@ -42,8 +66,10 @@ class CanonicalizeSpec extends AnyFunSuite with ScopePerTest {
 
   private def assertDriverMatchesDistributed(dict: Array[ChemDictEntry]): Map[Long, Long] = {
     import spark.implicits._
+    assert(Canonicalize.candidatePairs(dict).toDF("cid_a", "cid_b").collect().toSet ==
+      candidatePairsDistributed(dict).collect().toSet)
     val driver = Canonicalize.entityTable(spark, dict)
-    assert(rows(driver) == rows(entityTableDistributed(spark.createDataset(dict.toIndexedSeq))))
+    assert(rows(driver) == rows(entityTableDistributed(dict)))
     driver.collect().map(e => e.cid -> e.clusterId).toMap
   }
 

@@ -88,4 +88,21 @@ class CorpusSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted
     assert(a.sameElements(b))
   }
+
+  test("S8 sink: writeSplits partitions by fold and reads back with split's per-fold counts") {
+    val names = ChemDict.entries.flatMap(_.synonyms)
+    val sents = Pipeline.annotate(Pipeline.sentences(PageGen.pages(spark, 100)), names)
+    val dir = java.nio.file.Files.createTempDirectory("graft-splits").toString
+    Corpus.writeSplits(sents, s"$dir/out")
+    // one fold=<name> directory per fold, the fold column restored from it
+    val dirs = new java.io.File(s"$dir/out").list().filter(_.startsWith("fold=")).toSet
+    assert(dirs == Set("fold=train", "fold=dev", "fold=test"))
+    def perFold(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.groupBy("fold").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val back = spark.read.parquet(s"$dir/out")
+    assert(perFold(back) == perFold(Corpus.split(sents)))
+    val key = Seq("url", "sentId", "fold").map(col)
+    assert(back.select(key: _*).collect().map(_.toString).sorted
+      .sameElements(Corpus.split(sents).select(key: _*).collect().map(_.toString).sorted))
+  }
 }

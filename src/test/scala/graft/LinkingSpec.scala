@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Normalize
 import graft.model.{ChemDictEntry, Sentence, Triple}
 import graft.operators.Linking
 import graft.plans.{Pipeline, Scope}
@@ -26,12 +27,24 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
   // exact CHEM head surface. Every fused and salted path in `main` must
   // produce their rows.
 
+  /** Distributed reference of `Linking.dictNames`: the dictionary
+    * parallelized, flattened to (name_norm, cid) and grouped to the
+    * minimum cid per name.
+    */
+  private def dictNamesDistributed(dict: Array[ChemDictEntry]): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(dict.toIndexedSeq)
+      .flatMap(e => e.synonyms.map(s => (Normalize.chemNorm(s), e.cid)))
+      .toDF("name_norm", "cid")
+      .groupBy("name_norm").agg(min("cid").as("cid"))
+  }
+
   /** (cid, mention, properties...) for every surface with at least
     * `minOccurrences` occurrences that resolves via chem_norm;
     * `useBroadcast = false` makes every dictionary join a shuffled hash
     * join (the large-dictionary shape).
     */
-  private def surfaceLinks(annotated: Dataset[Sentence], dict: Dataset[ChemDictEntry],
+  private def surfaceLinks(annotated: Dataset[Sentence], dict: Array[ChemDictEntry],
       minOccurrences: Int, useBroadcast: Boolean): DataFrame = {
     def side(df: DataFrame): DataFrame =
       if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
@@ -39,15 +52,15 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
       .filter(col("occurrences") >= minOccurrences)
       .withColumn("name_norm", Linking.chemNormCol(col("mention")))
       .select("mention", "name_norm")
-      .join(side(Linking.dictNames(dict)), Seq("name_norm"))
-      .join(side(Linking.dictProps(dict)), Seq("cid"))
+      .join(side(dictNamesDistributed(dict)), Seq("name_norm"))
+      .join(side(Linking.dictProps(spark, dict)), Seq("cid"))
       .drop("name_norm")
   }
 
   /** Broadcast form: triples ⟕ surface links on the CHEM head surface. */
   private def linkTriples(triples: Dataset[Triple], annotated: Dataset[Sentence],
       dict: Array[ChemDictEntry]): DataFrame = {
-    val links = surfaceLinks(annotated, Linking.dictDs(spark, dict), Linking.MinOccurrences,
+    val links = surfaceLinks(annotated, dict, Linking.MinOccurrences,
       useBroadcast = true)
     triples.toDF()
       .withColumn("head_surface", when(col("headLabel") === "CHEM", col("headText")))
@@ -60,7 +73,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
     */
   private def linkTriplesSalted(triples: Dataset[Triple], annotated: Dataset[Sentence],
       dict: Array[ChemDictEntry], nSalts: Int): DataFrame = {
-    val links = surfaceLinks(annotated, Linking.dictDs(spark, dict), Linking.MinOccurrences,
+    val links = surfaceLinks(annotated, dict, Linking.MinOccurrences,
       useBroadcast = false)
     val saltedDict = links.withColumn("salt", explode(lit((0 until nSalts).toArray)))
     val probe = triples.toDF()
@@ -72,6 +85,28 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
         probe("head_surface") === saltedDict("mention") && probe("salt") === saltedDict("salt"),
         "left_outer")
       .drop("mention", "head_surface", "salt")
+  }
+
+  /** Per-mention reference of `Linking.attachToMentions`: every CHEM
+    * mention ⟕ the broadcast surface links on its exact text.
+    */
+  private def attachReference(annotated: Dataset[Sentence],
+      dict: Array[ChemDictEntry]): DataFrame = {
+    import spark.implicits._
+    val links = surfaceLinks(annotated, dict, Linking.MinOccurrences, useBroadcast = true)
+    annotated.flatMap(s => s.ents.filter(_.label == "CHEM").map(e =>
+        (s.url, s.sentId, e.startChar, e.endChar, e.startTok, e.text)))
+      .toDF("url", "sent_id", "start_char", "end_char", "start_tok", "mention")
+      .join(broadcast(links), Seq("mention"), "left_outer")
+  }
+
+  /** `a` and `b` hold the same columns and the same multiset of rows. */
+  private def assertSameRows(a: DataFrame, b: DataFrame, clue: String = ""): Unit = {
+    assert(a.columns.sorted.sameElements(b.columns.sorted), clue)
+    val cols = a.columns.sorted.toSeq
+    val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
+    val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
+    assert(ka.sameElements(kb), clue)
   }
 
   test("A1 gate: only mentions with count >= 3 link (linker.py:138-155)") {
@@ -111,8 +146,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
 
   test("J2 strict: attachToMentions rows = CHEM mentions; CIDs agree with the triple path") {
     import spark.implicits._
-    val attached = Linking.attachToMentions(annotated,
-      Linking.dictDs(spark, ChemDict.entries)).cache()
+    val attached = Linking.attachToMentions(annotated, ChemDict.entries).cache()
     // exactly one row per CHEM mention of the annotated table
     val nMentions = annotated.flatMap(s => s.ents.filter(_.label == "CHEM")).count()
     assert(attached.count() == nMentions)
@@ -145,8 +179,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
     val instrumented = annotated.map { s => acc.add(1); s }
     val nSentences = annotated.count()
     acc.reset()
-    val attached = Linking.attachToMentions(
-      instrumented, Linking.dictDs(spark, ChemDict.entries))
+    val attached = Linking.attachToMentions(instrumented, ChemDict.entries)
     attached.collect()
     assert(acc.value == nSentences,
       s"annotate subtree ran ${acc.value.toDouble / nSentences}x (expected 1x)")
@@ -155,21 +188,13 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
   test("salted join produces identical rows to broadcast join") {
     val a = linkTriples(triples, annotated, ChemDict.entries)
     val b = linkTriplesSalted(triples, annotated, ChemDict.entries, nSalts = 4)
-    assert(a.columns.sorted.sameElements(b.columns.sorted))
-    val cols = a.columns.sorted.toSeq
-    val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
-    val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
-    assert(ka.sameElements(kb))
+    assertSameRows(a, b)
   }
 
   test("fused single-pass path produces identical rows to the two-pass path") {
     val a = linkTriples(triples, annotated, ChemDict.entries)
     val b = Linking.linkTriplesFused(annotated, ChemDict.entries)
-    assert(a.columns.sorted.sameElements(b.columns.sorted))
-    val cols = a.columns.sorted.toSeq
-    val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
-    val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
-    assert(ka.sameElements(kb))
+    assertSameRows(a, b)
   }
 
   test("salted path contains NO broadcast even with auto-broadcast disabled (large-dict honesty)") {
@@ -189,10 +214,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
         s"salted path must not broadcast:\n$plan")
       assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
         s"expected shuffled joins:\n$plan")
-      val cols = a.columns.sorted.toSeq
-      val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
-      val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
-      assert(ka.sameElements(kb))
+      assertSameRows(a, b)
     } finally conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
@@ -207,10 +229,7 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
       val plan = b.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastExchange") && !plan.contains("BroadcastHashJoin"),
         s"salted-fused path must not broadcast:\n$plan")
-      val cols = a.columns.sorted.toSeq
-      val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
-      val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
-      assert(ka.sameElements(kb))
+      assertSameRows(a, b)
     } finally conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
@@ -254,12 +273,49 @@ class LinkingSpec extends AnyFunSuite with ScopePerTest {
           assert(e.child.output.map(_.name) == Seq("heavy_mention"),
             s"only the heavy list may broadcast, saw: ${e.child.output.map(_.name)}")
         }
-        val cols = a.columns.sorted.toSeq
-        val ka = a.select(cols.map(col): _*).collect().map(_.toString).sorted
-        val kb = b.select(cols.map(col): _*).collect().map(_.toString).sorted
-        assert(ka.sameElements(kb), s"row mismatch at heavyThreshold=$t")
+        assertSameRows(a, b, s"row mismatch at heavyThreshold=$t")
       }
     } finally conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+  }
+
+  test("a name shared by two entries keeps the minimum cid in every link form") {
+    import spark.implicits._
+    // "Benzene" also names a lower cid (0) than benzene's own (3), and
+    // "WATER" a higher one (900) than water's (1): both normalize onto a
+    // name_norm another entry already holds
+    def entry(cid: Long, names: String*) =
+      ChemDictEntry(cid, names.head, names.toArray, s"F$cid", 10.0 + cid, s"S$cid", names.head)
+    val dict = ChemDict.entries ++ Array(entry(0L, "benzole", "Benzene"),
+      entry(900L, "aqua pura", "WATER"))
+    val names = Linking.dictNames(spark, dict).as[(String, Long)].collect()
+    assert(names.map(_._1).distinct.length == names.length)
+    assert(names.toMap.get("benzene").contains(0L) && names.toMap.get("water").contains(1L))
+    assert(names.sorted.sameElements(
+      dictNamesDistributed(dict).as[(String, Long)].collect().sorted))
+
+    val reference = linkTriples(triples, annotated, dict)
+    assert(reference.filter(col("cid") === 0L && col("canonical_name") === "benzole")
+      .count() > 0, "the fixture must link a head through the shared name")
+    assertSameRows(reference, Linking.linkTriplesFused(annotated, dict), "fused")
+    assertSameRows(reference, Linking.linkTriplesSaltedFused(annotated, dict, nSalts = 4),
+      "salted")
+    assertSameRows(reference, Linking.linkTriplesSaltedTargeted(annotated, dict, nSalts = 4,
+      heavyThreshold = 5L), "targeted")
+    assertSameRows(attachReference(annotated, dict), Linking.attachToMentions(annotated, dict),
+      "attachToMentions")
+  }
+
+  test("linking cached fused parts: the dictionary side is one driver-built broadcast") {
+    // the linked stage of a graph build over the compact cache: the A1
+    // gate's shuffle, the broadcast of the driver-built dictionary side,
+    // the broadcast of the link table and the write. No job parallelizes
+    // or groups the dictionary, and its names and properties are not
+    // broadcast apart
+    val (eligible, cached) = Linking.fusedParts(annotated, Linking.MinOccurrences)
+    assert(cached.count() > 0)
+    val (_, jobs) = SparkSpec.withJobs(Linking.linkEligible(cached, eligible, ChemDict.entries)
+      .write.format("noop").mode("overwrite").save())
+    assert(jobs == 4, s"linking the cached parts ran $jobs jobs")
   }
 
   test("broadcast path plans a BroadcastHashJoin with no shuffle on the probe side") {

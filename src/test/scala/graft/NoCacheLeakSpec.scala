@@ -50,7 +50,7 @@ class NoCacheLeakSpec extends AnyFunSuite {
     "Canonicalize.entityTable" -> { implicit s =>
       Canonicalize.entityTable(spark, ChemDict.entries).count() },
     "Linking.attachToMentions" -> { implicit s =>
-      Linking.attachToMentions(annotated, Linking.dictDs(spark, ChemDict.entries)).count() },
+      Linking.attachToMentions(annotated, ChemDict.entries).count() },
     "Linking.linkTriplesFused" -> { implicit s =>
       Linking.linkTriplesFused(annotated, ChemDict.entries).count() },
     "Linking.linkTriplesSaltedFused" -> { implicit s =>

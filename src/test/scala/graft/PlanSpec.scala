@@ -159,8 +159,7 @@ class PlanSpec extends AnyFunSuite with ScopePerTest {
     val ann = graft.plans.Pipeline.annotate(
       graft.plans.Pipeline.sentences(graft.sources.PageGen.pages(spark, 60)),
       graft.sources.ChemDict.entries.flatMap(_.synonyms))
-    val df = graft.operators.Linking.attachToMentions(ann,
-      graft.operators.Linking.dictDs(spark, graft.sources.ChemDict.entries))
+    val df = graft.operators.Linking.attachToMentions(ann, graft.sources.ChemDict.entries)
     df.collect() // finalize the adaptive plan
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"link table must broadcast:\n$plan")

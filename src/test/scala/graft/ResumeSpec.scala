@@ -72,22 +72,6 @@ class ResumeSpec extends AnyFunSuite {
       "partition filters must not be empty")
   }
 
-  /** Run `body` and count the Spark jobs it submits. */
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      Thread.sleep(1000) // listener bus is async; drain before asserting
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
-
   test("materializeGraph: single annotate pass feeds triple write, linking and entity table") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-mat-graph").toString
@@ -96,12 +80,14 @@ class ResumeSpec extends AnyFunSuite {
     // annotate pass reads each page once
     val pageReads = spark.sparkContext.longAccumulator("page-reads")
     val counted = pages.map { p => pageReads.add(1); p }
-    val jobs = countJobs(Materialize.materializeGraph(spark, counted, dir, buckets = 4))
+    val (_, jobs) =
+      SparkSpec.withJobs(Materialize.materializeGraph(spark, counted, dir, buckets = 4))
     assert(pageReads.value == 60, s"the graph build read ${pageReads.value} page rows for 60 pages")
     // the triples write (the annotate pass fills the compact cache inside
-    // it), the linked write from that cache and one local entity-table
-    // write, over 60 pages in 4 buckets
-    assert(jobs == 13, s"the graph build ran $jobs jobs")
+    // it), the linked write from that cache (its dictionary side built
+    // on the driver) and one local entity-table write, over 60 pages in
+    // 4 buckets
+    assert(jobs == 11, s"the graph build ran $jobs jobs")
     val triples = Materialize.readTriples(spark, dir)
     val linked = Materialize.readLinked(spark, dir)
     val entities = spark.read.parquet(s"$dir/entities/data")
@@ -203,7 +189,8 @@ class ResumeSpec extends AnyFunSuite {
     }
     val beforeFiles = mtimes("triples/data") ++ mtimes("linked/data") ++ mtimes("entities/data")
     assert(beforeFiles.nonEmpty)
-    val jobs = countJobs(Materialize.materializeGraph(spark, pages, dirB, buckets = 4))
+    val (_, jobs) =
+      SparkSpec.withJobs(Materialize.materializeGraph(spark, pages, dirB, buckets = 4))
     val afterFiles = mtimes("triples/data") ++ mtimes("linked/data") ++ mtimes("entities/data")
     assert(afterFiles == beforeFiles, "rerun touched materialized data files")
     assert(jobs == 0, s"complete rerun submitted $jobs jobs (none expected)")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.plans.Scope
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.concurrent.Eventually._
@@ -70,26 +70,10 @@ class ScopeSpec extends AnyFunSuite {
     assert(!cached(df))
   }
 
-  /** `body`'s result and the number of Spark jobs it submitted. */
-  private def withJobs[A](body: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val a = try body finally {
-      Thread.sleep(200) // let the listener bus drain
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    (a, jobs.get)
-  }
-
   test("leaf materializes with exactly one job and plans over a LogicalRDD") {
     Scope(spark) { s =>
       val df = frame(6).filter("id % 3 = 0")
-      val ((leaf, n), jobs) = withJobs(s.leaf(df))
+      val ((leaf, n), jobs) = SparkSpec.withJobs(s.leaf(df))
       assert(jobs == 1)
       assert(n == 67)
       assert(cached(df))
@@ -123,9 +107,9 @@ class ScopeSpec extends AnyFunSuite {
     // a persisted leaf passed as one partition: one job, whole or None
     Scope(spark) { local =>
       val (leaf, _) = local.leaf(spark.range(0, 4, 1, 4).toDF())
-      val (four, jobs4) = withJobs(
+      val (four, jobs4) = SparkSpec.withJobs(
         Scope.collectWithin(leaf.coalesce(1).as[Long], rowBytes))
-      val (all, jobsAll) = withJobs(
+      val (all, jobsAll) = SparkSpec.withJobs(
         Scope.collectWithin(leaf.coalesce(1).as[Long], Scope.DriverBytes / 4))
       assert(four.isEmpty && all.map(_.sorted.toSeq) == Some(Seq(0L, 1L, 2L, 3L)))
       assert(jobs4 == 1 && jobsAll == 1)
