@@ -617,12 +617,11 @@ object Dedup {
     * dedup_embedding_pairs oracles) hash-match exactly as before.
     * Array (not Seq) parameters decode via toFloatArray — no boxing.
     *
-    * One divergence: a ZERO-NORM vector. Under ANSI mode the Column form
-    * raises DIVIDE_BY_ZERO on the zero divisor, while this UDF
-    * returns NaN (plain IEEE 0/0 or x/0 in the JVM), and NaN fails
-    * every `>= threshold` filter — so a zero embedding silently drops
-    * out of `embeddingPairs` / the ANN scorers instead of failing the
-    * job. Callers that must reject zero vectors check norms upstream.
+    * A ZERO-NORM vector (a zero divisor) raises, as the Column form
+    * does under ANSI mode (DIVIDE_BY_ZERO): plain IEEE division would
+    * return NaN, which fails every `>= threshold` filter, so a zero
+    * embedding would silently drop out of `embeddingPairs` / the ANN
+    * scorers instead of failing the job.
     */
   def cosineFloatUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (a: Array[Float], b: Array[Float]) =>
@@ -643,7 +642,10 @@ object Dedup {
         while (i < a.length) { na += a(i) * a(i); i += 1 }
         i = 0
         while (i < b.length) { nb += b(i) * b(i); i += 1 }
-        java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+        val norms = math.sqrt(na) * math.sqrt(nb)
+        if (norms == 0.0) throw new ArithmeticException(
+          "[DIVIDE_BY_ZERO] cosine of a zero-norm vector")
+        java.lang.Double.valueOf(dot / norms)
       }
     }
 

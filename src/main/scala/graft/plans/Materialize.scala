@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   *     versions/batch=<id>/bucket=<b>/part-*.parquet  per-url versions
   *       (one parquet file per bucket per write: [[write]] hash-distributes
   *       by bucket, the Iceberg `write.distribution-mode=hash` analog)
-  *     snapshots/v<N>                                 the commit log
+  *     snapshots/v<N>                                 the commit log (live entries,
+  *       schemas, done buckets, horizon, bucket count, dictionary hash)
   *     manifest/part-*.parquet                        lineage (stage,bucket,rows,t0,t1)
-  *     table_meta.json                                bucket count + dict hash
-  *   out/linked/{data,snapshots,manifest}/, out/entities/data/
+  *   out/linked/{data,snapshots,manifest}/
+  *   out/entities/{data,snapshots}/                   one live entry, bucket=0
   *
   * Every writer — bootstrap (`runResumable`, `materializeGraph`), the
   * copy-on-write and merge-on-read `incrementalUpdate`, and `compact` —
@@ -58,11 +59,10 @@ object Materialize {
   def dataPath(outDir: String): String = s"$outDir/$StageTriples/data"
   def deltaPath(outDir: String): String = s"$outDir/$StageTriples/delta"
   def versionsPath(outDir: String): String = s"$outDir/$StageTriples/versions"
-  def metaPath(outDir: String): String = s"$outDir/$StageTriples/table_meta.json"
 
-  /** The session's file system: the driver-side commit path (snapshot
-    * swap, `table_meta.json`, `snapshots/`) stays on it, because the
-    * swap relies on it refusing a rename onto an existing file.
+  /** The session's file system: the driver-side commit path (the
+    * `snapshots/` log and its swap) stays on it, because the swap relies
+    * on it refusing a rename onto an existing file.
     */
   private def fsOf(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -93,45 +93,6 @@ object Materialize {
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
 
-  /** The bucket count every write/resume/read path must agree on: once
-    * table metadata exists, the STORED B wins and the caller-supplied
-    * value is ignored — resuming an existing table with a different
-    * `buckets` argument would otherwise silently mix two bucket
-    * numberings in one table (wrong resume skips + wrong pruning).
-    * A dictionary CHANGE between runs fails loudly instead: completed
-    * buckets were annotated/linked under the old dict and cannot be
-    * mixed with new-dict output — write to a fresh outDir.
-    * First call records the requested B + current dict hash.
-    */
-  private def resolveBuckets(spark: SparkSession, outDir: String, requested: Int): Int = {
-    val path = new Path(metaPath(outDir))
-    val fs = fsOf(spark, metaPath(outDir))
-    val dh = dictHash(ChemDict.entries)
-    if (fs.exists(path)) {
-      """"dict_hash"\s*:\s*"([0-9a-f]+)"""".r.findFirstMatchIn(readText(fs, path)).foreach { m =>
-        require(m.group(1) == dh,
-          s"dictionary changed since this table was written ($outDir): " +
-            "completed buckets hold old-dict annotations — materialize to a fresh outDir")
-      }
-      tableBuckets(spark, outDir)
-    } else {
-      writeText(fs, path, s"""{"buckets":$requested,"dict_hash":"$dh"}""")
-      requested
-    }
-  }
-
-  /** Bucket count the table was written with (from table_meta.json). */
-  def tableBuckets(spark: SparkSession, outDir: String): Int = {
-    val path = new Path(metaPath(outDir))
-    val fs = fsOf(spark, metaPath(outDir))
-    require(fs.exists(path), s"no table metadata at ${metaPath(outDir)}")
-    val s = readText(fs, path)
-    """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(s) match {
-      case Some(m) => m.group(1).toInt
-      case None => sys.error(s"malformed table metadata: $s")
-    }
-  }
-
   // ------------------------------------------------------------------
   // snapshot log
   // ------------------------------------------------------------------
@@ -156,26 +117,33 @@ object Materialize {
     * of several writes — e.g. an upsert into a never-bootstrapped bucket
     * before the bootstrap resumes), copy-on-write and compact REPLACE a
     * bucket's whole entry set. `done` = bootstrap-completed buckets;
-    * `horizonMs` = the time-travel retention floor.
+    * `horizonMs` = the time-travel retention floor. `buckets` and
+    * `dictHash` are the table properties every row was written under
+    * (the bucket count and [[DictHash]]): like Iceberg's partition spec,
+    * they live in the record whose swap is the commit.
     */
   private[graft] final case class Snapshot(version: Long, entries: Set[Entry],
-      done: Set[Int], horizonMs: Long, schemas: Map[String, String]) {
+      done: Set[Int], horizonMs: Long, schemas: Map[String, String],
+      buckets: Int, dictHash: String) {
     def restrict(buckets: Set[Int]): Snapshot =
       copy(entries = entries.filter(e => buckets(e.bucket)))
     def of(kinds: String*): Set[Entry] = entries.filter(e => kinds.contains(e.kind))
     def render: String =
-      (Seq(s"horizon $horizonMs", ("done" +: done.toSeq.sorted.map(_.toString)).mkString(" ")) ++
+      (Seq(s"buckets $buckets", s"dict $dictHash", s"horizon $horizonMs",
+        ("done" +: done.toSeq.sorted.map(_.toString)).mkString(" ")) ++
         schemas.toSeq.sorted.map { case (root, json) => s"schema $root $json" } ++
         entries.toSeq.sortBy(e => (e.kind, e.id, e.bucket))
           .map(e => s"${e.kind} ${e.id} ${e.bucket}")).mkString("\n")
   }
 
-  private val Empty = Snapshot(0L, Set.empty, Set.empty, 0L, Map.empty)
+  private val Empty = Snapshot(0L, Set.empty, Set.empty, 0L, Map.empty, 0, "")
 
   private val SnapshotName = """v(\d+)""".r
 
   private def parseSnapshot(version: Long, text: String): Snapshot =
     text.split("\n").map(_.split(" ").toList).foldLeft(Empty.copy(version = version)) {
+      case (s, "buckets" :: n :: Nil) => s.copy(buckets = n.toInt)
+      case (s, "dict" :: h :: Nil) => s.copy(dictHash = h)
       case (s, "horizon" :: h :: Nil) => s.copy(horizonMs = h.toLong)
       case (s, "schema" :: root :: json) => s.copy(schemas = s.schemas + (root -> json.mkString(" ")))
       case (s, "done" :: bs) => s.copy(done = bs.map(_.toInt).toSet)
@@ -186,7 +154,9 @@ object Materialize {
   /** The latest committed state of a stage dir (empty before the first
     * commit). A stage that holds data but no snapshot log was written by
     * the pre-snapshot table format, whose crash states this reader cannot
-    * interpret — it fails loudly rather than reading as empty.
+    * interpret, and a snapshot without table properties by the format
+    * that kept them in a side file — both fail loudly rather than
+    * reading as empty or as some bucket count.
     */
   private[graft] def latestSnapshot(spark: SparkSession, stageDir: String): Snapshot = {
     val fs = fsOf(spark, stageDir)
@@ -201,36 +171,77 @@ object Materialize {
         case SnapshotName(n) => n.toLong
       }
       if (vs.isEmpty) Empty
-      else parseSnapshot(vs.max, readText(fs, new Path(dir, s"v${vs.max}")))
+      else {
+        val snap = parseSnapshot(vs.max, readText(fs, new Path(dir, s"v${vs.max}")))
+        require(snap.buckets > 0 && snap.dictHash.nonEmpty,
+          s"$stageDir/snapshots/v${vs.max} records no bucket count or dictionary hash — " +
+            "a table written before they moved into the snapshot; re-materialize it into a fresh outDir")
+        snap
+      }
     }
   }
 
-  /** Writer entry: the latest snapshot, with the log dir created BEFORE
-    * the first data write so a crashed first commit can never look like
-    * a pre-snapshot table.
+  /** Writer entry: the latest snapshot with its table properties
+    * resolved. The STORED bucket count wins over the caller's `buckets`
+    * (resuming with another count would mix two bucket numberings in one
+    * table: wrong resume skips, wrong pruning); a stage not committed yet
+    * takes `buckets` and the current [[DictHash]]. A dictionary CHANGE
+    * fails loudly: committed buckets were annotated/linked under the old
+    * dictionary and cannot be mixed with new-dictionary output. The log
+    * dir is created BEFORE the first data write so a crashed first commit
+    * can never look like a pre-snapshot table.
     */
-  private def openStage(spark: SparkSession, stageDir: String): Snapshot = {
+  private def openStage(spark: SparkSession, stageDir: String, buckets: Int): Snapshot = {
     val snap = latestSnapshot(spark, stageDir)
+    require(snap.version == 0 || snap.dictHash == DictHash,
+      s"dictionary changed since this table was written ($stageDir): " +
+        "completed buckets hold old-dict annotations — materialize to a fresh outDir")
     val fs = fsOf(spark, stageDir)
     val dir = new Path(s"$stageDir/snapshots")
     if (!fs.exists(dir)) fs.mkdirs(dir)
+    if (snap.version == 0) snap.copy(buckets = buckets, dictHash = DictHash) else snap
+  }
+
+  /** Content hash of the dictionary every stage annotates, links and
+    * canonicalizes with, recorded in each snapshot (see [[openStage]]).
+    */
+  private lazy val DictHash: String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    ChemDict.entries.sortBy(_.cid).foreach { e =>
+      md.update((e.cid.toString + "|" + e.canonicalName + "|" +
+        e.synonyms.mkString(",") + "|" + e.molecularFormula + "|" +
+        e.molecularWeight + "|" + e.canonicalSmiles + "|" + e.iupacName + "\n")
+        .getBytes("UTF-8"))
+    }
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** The latest snapshot of the triple table, which must have committed. */
+  private def committed(spark: SparkSession, outDir: String): Snapshot = {
+    val snap = latestSnapshot(spark, s"$outDir/$StageTriples")
+    require(snap.version > 0, s"no committed triple table under $outDir")
     snap
   }
+
+  /** Bucket count the table was written with (from its latest snapshot). */
+  def tableBuckets(spark: SparkSession, outDir: String): Int = committed(spark, outDir).buckets
 
   private def freshId(): String =
     f"c${System.currentTimeMillis()}%x${java.util.concurrent.ThreadLocalRandom.current().nextLong()}%016x"
 
   /** THE commit point of every write. Publishes `read` minus `remove`
-    * plus the `written` entries (and their schemas, the `done` buckets
-    * and the raised horizon) as `v<N+1>` with one temp-file + rename —
+    * plus the `written` entries (and their schemas, the `done` buckets,
+    * the raised horizon and `read`'s table properties) as `v<N+1>` with
+    * one temp-file + rename —
     * HDFS and this build's local file system refuse a rename onto an
     * existing file; the existence check narrows the race on file systems
     * that would overwrite. A writer that loses the race re-reads the
     * latest snapshot and retries only if everything it replaces is still
     * live — so a compact racing a committing stream never drops the
     * stream's new batch, and never folds state someone else already
-    * replaced. Then deletes what this commit superseded and every
-    * snapshot file before the previous one.
+    * replaced, and under the same table properties — a table never
+    * holds two bucket numberings. Then deletes what this commit
+    * superseded and every snapshot file before the previous one.
     */
   private def commit(spark: SparkSession, stageDir: String, read: Snapshot,
       written: Seq[Written], remove: Set[Entry] = Set.empty,
@@ -242,9 +253,12 @@ object Materialize {
       require(remove.subsetOf(cur.entries) && (done & cur.done).isEmpty,
         s"a concurrent commit to $stageDir replaced state this write " +
           "folded or bootstrapped — rerun it")
+      require(cur.buckets == read.buckets && cur.dictHash == read.dictHash,
+        s"a concurrent commit to $stageDir recorded ${cur.buckets} buckets and dictionary " +
+          s"${cur.dictHash}, this write ${read.buckets} and ${read.dictHash} — rerun it")
       val next = Snapshot(cur.version + 1, cur.entries -- remove ++ written.flatMap(_.entries),
         cur.done ++ done, math.max(cur.horizonMs, horizonMs),
-        cur.schemas ++ written.map(w => rootOf(w.kind) -> w.schema))
+        cur.schemas ++ written.map(w => rootOf(w.kind) -> w.schema), read.buckets, read.dictHash)
       val tmp = new Path(dir, s".pending-${freshId()}")
       writeText(fs, tmp, next.render)
       val v = new Path(dir, s"v${next.version}")
@@ -404,9 +418,9 @@ object Materialize {
       buckets: Int = 16,
       onlyBuckets: Option[Set[Int]] = None // test hook: simulate partial run
   ): Int = {
-    val b = resolveBuckets(spark, outDir, buckets)
     val stageDir = s"$outDir/$StageTriples"
-    val snap = openStage(spark, stageDir)
+    val snap = openStage(spark, stageDir, buckets)
+    val b = snap.buckets
     val attempted = onlyBuckets.getOrElse((0 until b).toSet) -- snap.done
     if (attempted.isEmpty) return 0 // true no-op: no job submitted
 
@@ -540,24 +554,32 @@ object Materialize {
     * from the url, so the scans touch exactly that bucket's directories
     * (PartitionFilters in the plan; asserted in ResumeSpec), tombstones
     * included. At 10^12 rows with B=10^5 buckets this reads 1/B of the
-    * table. B comes from the table's own metadata (never caller-supplied:
+    * table. B comes from the table's own snapshot (never caller-supplied:
     * a mismatched B would prune to the wrong partition and silently
     * return zero rows).
     */
   def readTriplesForUrl(spark: SparkSession, outDir: String, url: String): DataFrame = {
-    val buckets = tableBuckets(spark, outDir)
-    val bk = bucketOf(url, buckets)
-    val snap = latestSnapshot(spark, s"$outDir/$StageTriples").restrict(Set(bk))
-    resolve(spark, outDir, snap, Long.MaxValue).getOrElse(emptyTriples(spark, buckets))
+    val all = committed(spark, outDir)
+    val bk = bucketOf(url, all.buckets)
+    resolve(spark, outDir, all.restrict(Set(bk)), Long.MaxValue)
+      .getOrElse(emptyTriples(spark, all.buckets))
       .filter(col("bucket") === bk && col("url") === url)
       .drop("seq")
   }
 
   /** The linked triple table of `materializeGraph` (latest snapshot). */
-  def readLinked(spark: SparkSession, outDir: String): DataFrame = {
-    val stageDir = s"$outDir/$StageLinked"
+  def readLinked(spark: SparkSession, outDir: String): DataFrame = readStage(spark, outDir, StageLinked)
+
+  /** The canonical entity table of `materializeGraph` (latest snapshot),
+    * without the bucket column of its one entry.
+    */
+  def readEntities(spark: SparkSession, outDir: String): DataFrame =
+    readStage(spark, outDir, StageEntities).drop("bucket")
+
+  private def readStage(spark: SparkSession, outDir: String, stage: String): DataFrame = {
+    val stageDir = s"$outDir/$stage"
     readEntries(spark, stageDir, latestSnapshot(spark, stageDir), Data)
-      .getOrElse(sys.error(s"no linked data under $outDir"))
+      .getOrElse(sys.error(s"no $stage data under $outDir"))
   }
 
   // ------------------------------------------------------------------
@@ -651,8 +673,8 @@ object Materialize {
   ): IncrementalStats = Scope(spark) { scope =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val b = resolveBuckets(spark, outDir, buckets)
-    val snap = openStage(spark, s"$outDir/$StageTriples")
+    val snap = openStage(spark, s"$outDir/$StageTriples", buckets)
+    val b = snap.buckets
 
     // newest row per url within the batch (a batch may carry several
     // crawls of one url); equal-ts ties break on content hash so every
@@ -829,36 +851,13 @@ object Materialize {
   // graph
   // ------------------------------------------------------------------
 
-  /** Content hash of the dictionary the entity table was built from —
-    * recorded in entities/table_meta.json so an unchanged dict skips
-    * the full CC rebuild on resume.
-    */
-  private def dictHash(dict: Array[graft.model.ChemDictEntry]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    dict.sortBy(_.cid).foreach { e =>
-      md.update((e.cid.toString + "|" + e.canonicalName + "|" +
-        e.synonyms.mkString(",") + "|" + e.molecularFormula + "|" +
-        e.molecularWeight + "|" + e.canonicalSmiles + "|" + e.iupacName + "\n")
-        .getBytes("UTF-8"))
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private def entitiesMetaPath(outDir: String) = s"$outDir/$StageEntities/table_meta.json"
-
-  private def entitiesUpToDate(spark: SparkSession, outDir: String, hash: String): Boolean = {
-    val path = new Path(entitiesMetaPath(outDir))
-    val fs = fsOf(spark, entitiesMetaPath(outDir))
-    fs.exists(path) && readText(fs, path).contains(s""""dict_hash":"$hash"""")
-  }
-
   /** Materialize the full graph: triples + linked triple table +
     * canonical entity table + lineage. ALL three stages are resumable:
     * triples and linked at bucket granularity (completed buckets are
-    * never re-scanned or re-joined), the entity table by dictionary
-    * content hash (an unchanged dict skips the rebuild). A rerun over a
-    * fully materialized graph reads two snapshot files and submits NO
-    * Spark job (asserted in ResumeSpec via a job listener).
+    * never re-scanned or re-joined), the entity table as one committed
+    * entry (a dictionary change fails loudly, see [[openStage]]). A rerun
+    * over a fully materialized graph reads three snapshot files and
+    * submits NO Spark job (asserted in ResumeSpec via a job listener).
     *
     * One annotate pass feeds both page-dependent stages, cached as the
     * compact (mention | triple) rows of `Linking.fusedParts`, never as
@@ -877,18 +876,28 @@ object Materialize {
       buckets: Int = 16,
       onlyBuckets: Option[Set[Int]] = None // test hook: simulate partial run
   ): Unit = {
-    val b = resolveBuckets(spark, outDir, buckets)
     val triplesDir = s"$outDir/$StageTriples"
     val linkedDir = s"$outDir/$StageLinked"
-    val snapT = openStage(spark, triplesDir)
-    val snapL = openStage(spark, linkedDir)
-    val dHash = dictHash(ChemDict.entries)
-    val entitiesDone = entitiesUpToDate(spark, outDir, dHash)
+    val entitiesDir = s"$outDir/$StageEntities"
+    val snapT = openStage(spark, triplesDir, buckets)
+    val b = snapT.buckets
+    val snapL = openStage(spark, linkedDir, b)
+    val snapE = openStage(spark, entitiesDir, 1)
     val only: Set[Int] = onlyBuckets.getOrElse((0 until b).toSet)
     val remainingT = only -- snapT.done
     val remainingL = only -- snapL.done
-    if (remainingT.isEmpty && remainingL.isEmpty && entitiesDone) return
+    if (remainingT.isEmpty && remainingL.isEmpty && snapE.done(0)) return
 
+    if (!snapE.done(0)) {
+      // one job, one file: a local relation scans with one task per
+      // core, and `write`'s bucket shuffle would add a job
+      val id = freshId()
+      val entities = Canonicalize.entityTable(spark, ChemDict.entries).toDF()
+      entities.coalesce(1).write.options(TableWriteOptions)
+        .parquet(s"$entitiesDir/data/batch=$id/bucket=0")
+      commit(spark, entitiesDir, snapE, Seq(Written(Data, id,
+        Map(0 -> ChemDict.entries.length.toLong), entities.schema.json)), done = Set(0))
+    }
     Scope(spark) { implicit scope =>
       // only when some page-dependent stage needs it
       lazy val (eligible, cached) = Linking.fusedParts(
@@ -915,14 +924,6 @@ object Materialize {
           .getOrElse(emptyTriples(spark, b).drop("seq", "bucket"))
         bootstrap(spark, linkedDir, StageLinked, snapL,
           Linking.linkEligible(todo, eligible, ChemDict.entries), b, remainingL)
-      }
-      if (!entitiesDone) {
-        // one file: a local relation scans with one task per core
-        Canonicalize.entityTable(spark, ChemDict.entries).coalesce(1)
-          .write.options(TableWriteOptions).mode(SaveMode.Overwrite)
-          .parquet(s"$outDir/$StageEntities/data")
-        writeText(fsOf(spark, entitiesMetaPath(outDir)), new Path(entitiesMetaPath(outDir)),
-          s"""{"dict_hash":"$dHash"}""")
       }
     }
   }

@@ -132,28 +132,6 @@ object EventStream {
       }
   }
 
-  /** Batch reference semantics for `userSessions` (used by the spec to
-    * assert stream == batch): sessions = per-user runs of events with
-    * gaps <= gapMinutes.
-    */
-  def userSessionsBatch(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val gapMs = gapMinutes * 60000L
-    val w = Window.partitionBy("user_id").orderBy("ts_ms")
-    events
-      .select(col("user_id"),
-        (col("ts").cast("timestamp").cast("double") * 1000).cast("long").as("ts_ms"))
-      .withColumn("prev", lag("ts_ms", 1).over(w))
-      .withColumn("new_session",
-        when(col("prev").isNull || col("ts_ms") - col("prev") > gapMs, 1).otherwise(0))
-      .withColumn("session_id", sum("new_session").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("user_id", "session_id")
-      .agg(min("ts_ms").as("session_start_ms"), max("ts_ms").as("session_end_ms"),
-        count(lit(1)).as("n_events"))
-      .drop("session_id")
-  }
-
   val docSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("ts", TimestampType),
     StructField("text", StringType)))
@@ -244,25 +222,6 @@ object EventStream {
       .start()
   }
 
-  /** [[maintainTriples]] with the crawl arriving AS WARC SHARDS — the
-    * end-to-end shape of a live CC-style deployment: `*.warc.gz` files
-    * land in `warcDir`, each discovered shard stream-parses in-task
-    * (binaryFile delivers whole files, so per-task memory = shard
-    * size; bound micro-batches with `maxFilesPerTrigger` and size
-    * shards accordingly), text/lang derive exactly as the batch ingest
-    * derives them, and the parsed pages commit through the SAME
-    * merge-on-read path — so the whole safety story above (idempotent
-    * replay, stale no-ops, O(micro-batch) write amplification, atomic
-    * visibility at the snapshot swap) carries over unchanged.
-    *
-    * `lenientTail = true` is the DEFAULT here — the operational setting
-    * for a directory fed by real crawlers: a damaged or non-atomically-
-    * copied shard parses to its good prefix instead of failing the
-    * micro-batch — and since the file is already in the source's input
-    * log, a strict failure would REPLAY the same bytes forever (a
-    * poison shard). Pass `lenientTail = false` only for ingest from a
-    * trusted writer where a damaged shard should halt the stream.
-    */
   /** [[maintainTriplesFromWarc]] for producers that land shards WITH a
     * CDX index ([[graft.sources.Warc.writeWithCdx]] — the index rows
     * commit only after their shard's bytes, so a discovered index row
@@ -272,8 +231,8 @@ object EventStream {
     * landed-shard parse SPLITTABLE below file granularity: a 1-GB
     * shard fans across ~size/splitBytes tasks with O(run) per-task
     * memory (the seek + bounded gzip-run reader), where the
-    * binaryFile path above holds the WHOLE shard in one task (its
-    * disclosed bound). Page derivation (extractText + detectLang over
+    * binaryFile path holds the WHOLE shard in one task (its disclosed
+    * bound). Page derivation (extractText + detectLang over
     * the raw bytes) and the merge-on-read commit are identical —
     * StreamingSpec asserts table equality between the two paths.
     */
@@ -311,6 +270,25 @@ object EventStream {
       .start()
   }
 
+  /** [[maintainTriples]] with the crawl arriving AS WARC SHARDS — the
+    * end-to-end shape of a live CC-style deployment: `*.warc.gz` files
+    * land in `warcDir`, each discovered shard stream-parses in-task
+    * (binaryFile delivers whole files, so per-task memory = shard
+    * size; bound micro-batches with `maxFilesPerTrigger` and size
+    * shards accordingly), text/lang derive exactly as the batch ingest
+    * derives them, and the parsed pages commit through the SAME
+    * merge-on-read path — so the whole safety story above (idempotent
+    * replay, stale no-ops, O(micro-batch) write amplification, atomic
+    * visibility at the snapshot swap) carries over unchanged.
+    *
+    * `lenientTail = true` is the DEFAULT here — the operational setting
+    * for a directory fed by real crawlers: a damaged or non-atomically-
+    * copied shard parses to its good prefix instead of failing the
+    * micro-batch — and since the file is already in the source's input
+    * log, a strict failure would REPLAY the same bytes forever (a
+    * poison shard). Pass `lenientTail = false` only for ingest from a
+    * trusted writer where a damaged shard should halt the stream.
+    */
   def maintainTriplesFromWarc(
       spark: SparkSession, warcDir: String, tableDir: String,
       checkpointDir: String, buckets: Int, maxPayload: Int = 8 << 20,

@@ -33,20 +33,23 @@ class CommitSweepSpec extends AnyFunSuite {
     "concat_ws('|', url, sentId, headLabel, headText, propType, valueLabel, valueText, value, unit, seq)"
 
   /** What a reader can observe: the triple rows (with seq) as a sorted
-    * multiset, the horizon, and the linked rows.
+    * multiset, the horizon, the linked rows and the entity rows.
     */
-  private case class State(triples: Seq[String], horizonMs: Long, linked: Seq[String])
+  private case class State(triples: Seq[String], horizonMs: Long, linked: Seq[String],
+      entities: Seq[String])
 
   private def state(dir: String): State = {
     val t = Materialize.latestSnapshot(spark, s"$dir/triples")
-    val l = Materialize.latestSnapshot(spark, s"$dir/linked")
-    def keys(df: org.apache.spark.sql.DataFrame, expr: String) =
-      df.selectExpr(expr).collect().map(_.getString(0)).toSeq.sorted
+    def keys(stage: String, rows: => org.apache.spark.sql.DataFrame, expr: String) =
+      if (Materialize.latestSnapshot(spark, s"$dir/$stage").entries.isEmpty) Nil
+      else rows.selectExpr(expr).collect().map(_.getString(0)).toSeq.sorted
     State(
-      if (t.entries.isEmpty) Nil else keys(Materialize.readTriplesWithSeq(spark, dir), rowKey),
+      keys("triples", Materialize.readTriplesWithSeq(spark, dir), rowKey),
       t.horizonMs,
-      if (l.entries.isEmpty) Nil
-      else keys(Materialize.readLinked(spark, dir), "concat_ws('|', url, sentId, headText, valueText, cast(cid as string))"))
+      keys("linked", Materialize.readLinked(spark, dir),
+        "concat_ws('|', url, sentId, headText, valueText, cast(cid as string))"),
+      keys("entities", Materialize.readEntities(spark, dir),
+        "concat_ws('|', clusterId, cid, canonicalName)"))
   }
 
   private def copyRec(src: File, dst: File): Unit =
@@ -88,7 +91,8 @@ class CommitSweepSpec extends AnyFunSuite {
       FaultyFs.disarm()
       val s = state(d)
       assert(Seq(preS, postS).exists(x => (x.triples, x.horizonMs) == (s.triples, s.horizonMs)) &&
-        (s.linked == preS.linked || s.linked == postS.linked),
+        (s.linked == preS.linked || s.linked == postS.linked) &&
+        (s.entities == preS.entities || s.entities == postS.entities),
         s"$name: crash before op $k (${ops(k - 1)}) left a state that is neither pre nor post")
       op(d)
       assert(state(d) == postS,
@@ -115,6 +119,9 @@ class CommitSweepSpec extends AnyFunSuite {
   test("materializeGraph: every crash point reads pre or post per stage; resume equals the crash-free run") {
     sweep("materializeGraph") { d =>
       Materialize.materializeGraph(spark, ds(base), d, B, onlyBuckets = half)
+      // a build that crashed before its entity stage opened: the op
+      // commits all three stages
+      rmRec(new File(new java.net.URI(d).getPath, Materialize.StageEntities))
     } { d => Materialize.materializeGraph(spark, ds(base), d, B) }
   }
 
@@ -210,5 +217,21 @@ class CommitSweepSpec extends AnyFunSuite {
     val once = table("once")
     Materialize.compact(spark, once)
     assert(state(twice) == state(once))
+    // two first writers with different bucket counts: the winner's count
+    // is the table's, and the loser fails loudly rather than committing
+    // its rows under another bucket numbering
+    val first = FaultyFs.uri(Files.createTempDirectory("graft-sweep-race-buckets").toFile)
+    val e2 = intercept[IllegalArgumentException] {
+      racing(first)(Materialize.runResumable(spark, ds(base), first, 2 * B, Some(Set(B, B + 1))))(
+        Materialize.runResumable(spark, ds(base), first, B))
+    }
+    assert(e2.getMessage.contains(s"concurrent commit to $first/triples recorded ${2 * B} buckets"),
+      e2.getMessage)
+    assert(Materialize.tableBuckets(spark, first) == 2 * B)
+    // the loser's rerun resumes under the winner's numbering
+    assert(Materialize.runResumable(spark, ds(base), first, B) == 2 * B - 2)
+    val wide = FaultyFs.uri(Files.createTempDirectory("graft-sweep-race-wide").toFile)
+    Materialize.runResumable(spark, ds(base), wide, 2 * B)
+    assert(state(first) == state(wide))
   }
 }

@@ -58,7 +58,7 @@ class ResumeSpec extends AnyFunSuite {
     // of the B bucket directories (PartitionFilters on the bucket column)
     val someUrl = Materialize.readTriples(spark, dirA)
       .select("url").limit(1).collect()(0).getString(0)
-    // bucket count comes from the table's own metadata, never the caller
+    // bucket count comes from the table's own snapshot, never the caller
     assert(Materialize.tableBuckets(spark, dirA) == B)
     val lookup = Materialize.readTriplesForUrl(spark, dirA, someUrl)
     assert(lookup.count() > 0)
@@ -90,13 +90,22 @@ class ResumeSpec extends AnyFunSuite {
     assert(jobs == 11, s"the graph build ran $jobs jobs")
     val triples = Materialize.readTriples(spark, dir)
     val linked = Materialize.readLinked(spark, dir)
-    val entities = spark.read.parquet(s"$dir/entities/data")
+    val entities = Materialize.readEntities(spark, dir)
     assert(triples.count() > 0)
     // linked rows = triple rows (left-outer link preserves cardinality)
     assert(linked.count() == triples.count())
     assert(entities.count() == graft.sources.ChemDict.entries.length)
-    val entityFiles = new java.io.File(s"$dir/entities/data").list().filter(_.endsWith(".parquet"))
+    // the entity table is one live snapshot entry holding one parquet file
+    val entityEntries = Materialize.latestSnapshot(spark, s"$dir/${Materialize.StageEntities}").entries
+    assert(entityEntries.map(_.bucket) == Set(0), s"entity entries $entityEntries")
+    val entityFiles = new java.io.File(s"$dir/entities/data/batch=${entityEntries.head.id}/bucket=0")
+      .list().filter(_.endsWith(".parquet"))
     assert(entityFiles.length == 1, s"entity table in ${entityFiles.mkString(", ")}")
+    assert(new java.io.File(s"$dir/entities").list().sorted.toSeq == Seq("data", "snapshots"))
+    // table properties live in the snapshots: no side file anywhere
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    assert(!walk(new java.io.File(dir)).exists(_.getName.contains("table_meta")))
     // rerun is a no-op for the triple stage (all buckets manifested) and
     // produces identical linked output
     val before = tripleKeys(triples)
@@ -121,14 +130,17 @@ class ResumeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-dict-guard").toString
     val pages = PageGen.pages(spark, 20)
     Materialize.runResumable(spark, pages, dir, 4)
-    // simulate a dictionary change by tampering the stored content hash
-    val metaFile = java.nio.file.Paths.get(Materialize.metaPath(dir))
-    val meta = java.nio.file.Files.readString(metaFile)
-    java.nio.file.Files.writeString(metaFile,
-      meta.replaceAll(""""dict_hash":"[0-9a-f]+"""", """"dict_hash":"deadbeef00000000deadbeef00000000""""))
+    // simulate a dictionary change by tampering the content hash the
+    // latest snapshot records
+    val snap = Materialize.latestSnapshot(spark, s"$dir/${Materialize.StageTriples}")
+    val snapFile = java.nio.file.Paths.get(s"$dir/${Materialize.StageTriples}/snapshots/v${snap.version}")
+    val text = java.nio.file.Files.readString(snapFile)
+    assert(text.linesIterator.contains(s"dict ${snap.dictHash}"))
+    java.nio.file.Files.writeString(snapFile,
+      text.replaceAll("(?m)^dict [0-9a-f]+$", "dict deadbeef00000000deadbeef00000000"))
     // drop the Hadoop local-FS checksum sidecar invalidated by the edit
     java.nio.file.Files.deleteIfExists(
-      metaFile.getParent.resolve("." + metaFile.getFileName.toString + ".crc"))
+      snapFile.getParent.resolve("." + snapFile.getFileName.toString + ".crc"))
     val e = intercept[IllegalArgumentException] {
       Materialize.runResumable(spark, pages, dir, 4)
     }
@@ -181,7 +193,7 @@ class ResumeSpec extends AnyFunSuite {
     // a rerun over the fully materialized graph must do no stage work:
     // no triple re-scan, no linking join, no CC rebuild. Direct
     // evidence: every data file untouched (mtime), and no Spark job at
-    // all — resume reads the two stages' latest snapshot files.
+    // all — resume reads the three stages' latest snapshot files.
     def mtimes(sub: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -194,6 +206,28 @@ class ResumeSpec extends AnyFunSuite {
     val afterFiles = mtimes("triples/data") ++ mtimes("linked/data") ++ mtimes("entities/data")
     assert(afterFiles == beforeFiles, "rerun touched materialized data files")
     assert(jobs == 0, s"complete rerun submitted $jobs jobs (none expected)")
+  }
+
+  test("a snapshot without table properties fails loudly instead of guessing a bucket count") {
+    // the layout that kept the bucket count and dictionary hash in a
+    // side file: its snapshots carry neither line
+    val dir = Files.createTempDirectory("graft-no-props").toString
+    val pages = PageGen.pages(spark, 20)
+    Materialize.runResumable(spark, pages, dir, 4)
+    val snapDir = new java.io.File(s"$dir/triples/snapshots")
+    snapDir.listFiles().foreach { f =>
+      if (f.getName.endsWith(".crc")) f.delete()
+      else java.nio.file.Files.writeString(f.toPath, java.nio.file.Files.readString(f.toPath)
+        .linesIterator.filterNot(l => l.startsWith("buckets ") || l.startsWith("dict ")).mkString("\n"))
+    }
+    for ((name, call) <- Seq[(String, () => Any)](
+        "readTriples" -> (() => Materialize.readTriples(spark, dir)),
+        "tableBuckets" -> (() => Materialize.tableBuckets(spark, dir)),
+        "runResumable" -> (() => Materialize.runResumable(spark, pages, dir, 4)),
+        "incrementalUpdate" -> (() => Materialize.incrementalUpdate(spark, pages, dir, 4)))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("re-materialize it into a fresh outDir"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("a table without a snapshot log fails loudly instead of reading as empty") {

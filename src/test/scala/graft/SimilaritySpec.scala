@@ -174,11 +174,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("cosineFloatUdf == cosineCol bit-exactly (random, zero, NaN vectors)") {
     import spark.implicits._
-    // no zero vectors: under ANSI mode the HOF form RAISES
-    // DIVIDE_BY_ZERO on a zero-norm divisor where the UDF yields NaN —
-    // the UDF is strictly more tolerant on that (engine-unreachable)
-    // degenerate input, and bit-equal everywhere the expression form
-    // can evaluate. NaN COMPONENTS are in scope (NaN divisor is legal).
+    // no zero vectors here: both forms raise on a zero-norm divisor
+    // (the next test). NaN COMPONENTS are in scope (NaN divisor is legal).
     val rnd = new scala.util.Random(11)
     val rows = (0L until 300L).map { i =>
       val dim = 64
@@ -200,6 +197,22 @@ class SimilaritySpec extends AnyFunSuite {
       assert(java.lang.Double.doubleToLongBits(h) ==
         java.lang.Double.doubleToLongBits(u),
         s"cosine diverged: HOF $h vs UDF $u")
+    }
+  }
+
+  test("cosineFloatUdf raises on a zero-norm vector, as cosineCol does under ANSI") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    def chain(e: Throwable): Seq[String] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).toSeq
+    val zero = Seq(0f, 0f, 0f)
+    for (pair <- Seq((zero, Seq(1f, 2f, 3f)), (Seq(1f, 2f, 3f), zero), (zero, zero))) {
+      val one = Seq(pair).toDF("va", "vb")
+      val ref = intercept[Exception](one.select(cosineCol(col("va"), col("vb"))).collect())
+      assert(chain(ref).exists(_.contains("DIVIDE_BY_ZERO")), chain(ref).mkString("\n"))
+      val udf = intercept[Exception](
+        one.select(graft.operators.Dedup.cosineFloatUdf(col("va"), col("vb"))).collect())
+      assert(chain(udf).exists(_.contains("DIVIDE_BY_ZERO")), chain(udf).mkString("\n"))
     }
   }
 

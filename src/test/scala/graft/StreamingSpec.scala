@@ -3,6 +3,7 @@ package graft
 import graft.plans.Pipeline
 import graft.sources.PageGen
 import graft.streaming.EventStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -10,6 +11,28 @@ import java.nio.file.Files
 class StreamingSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSpec.spark
+
+  /** Batch reference semantics for `EventStream.userSessions` (the
+    * sessionization tests assert stream == batch): sessions = per-user
+    * runs of events with gaps <= gapMinutes.
+    */
+  private def userSessionsBatch(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val gapMs = gapMinutes * 60000L
+    val w = Window.partitionBy("user_id").orderBy("ts_ms")
+    events
+      .select(col("user_id"),
+        (col("ts").cast("timestamp").cast("double") * 1000).cast("long").as("ts_ms"))
+      .withColumn("prev", lag("ts_ms", 1).over(w))
+      .withColumn("new_session",
+        when(col("prev").isNull || col("ts_ms") - col("prev") > gapMs, 1).otherwise(0))
+      .withColumn("session_id", sum("new_session").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .groupBy("user_id", "session_id")
+      .agg(min("ts_ms").as("session_start_ms"), max("ts_ms").as("session_end_ms"),
+        count(lit(1)).as("n_events"))
+      .drop("session_id")
+  }
 
   test("windowed event counts: streaming result == batch equivalent") {
     val dir = Files.createTempDirectory("graft-events").toString
@@ -257,7 +280,7 @@ class StreamingSpec extends AnyFunSuite {
         "SELECT user_id, session_start_ms, session_end_ms, n_events FROM sessions_ooo " +
         "WHERE user_id < 999")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      val batch = EventStream.userSessionsBatch(
+      val batch = userSessionsBatch(
         spark.read.parquet(dir).filter(col("user_id") < 999), gapMinutes = 30)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
       assert(streamed == batch,
@@ -316,7 +339,7 @@ class StreamingSpec extends AnyFunSuite {
         s"got $streamed")
       // stream == batch over the NON-LATE events (the watermark
       // contract): batch sessions over {0, 100} match exactly
-      val batch = EventStream.userSessionsBatch(
+      val batch = userSessionsBatch(
         spark.read.parquet(dir)
           .filter(col("user_id") === 10 &&
             col("ts") =!= expr("timestamp_millis(30 * 60000 + 1500000000000)")),
@@ -353,7 +376,7 @@ class StreamingSpec extends AnyFunSuite {
         "SELECT user_id, session_start_ms, session_end_ms, n_events FROM sessions " +
         "WHERE user_id <> 999999999")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      val batch = EventStream.userSessionsBatch(events, gapMinutes = 30)
+      val batch = userSessionsBatch(events, gapMinutes = 30)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
       assert(streamed == batch,
         s"missing=${(batch -- streamed).take(3)} spurious=${(streamed -- batch).take(3)}")

@@ -51,7 +51,7 @@ class WriteLayoutSpec extends AnyFunSuite {
   }
 
   /** The dirs table write jobs write under (the session's commit path
-    * writes `snapshots/` and `table_meta.json`, not these).
+    * writes `snapshots/`, not these).
     */
   private def writtenRoots(dir: String): Seq[File] =
     (for (stage <- Seq(Materialize.StageTriples, Materialize.StageLinked);
@@ -110,7 +110,7 @@ class WriteLayoutSpec extends AnyFunSuite {
     forkFree(g, "materializeGraph")(Materialize.materializeGraph(spark, pages, g, B))
     assertOneFilePerBucket(g, Materialize.StageTriples, "materializeGraph")
     assertOneFilePerBucket(g, Materialize.StageLinked, "materializeGraph")
-    assert(new File(s"$g/${Materialize.StageEntities}/data").listFiles().exists(_.getName.endsWith(".parquet")))
+    assertOneFilePerBucket(g, Materialize.StageEntities, "materializeGraph")
     val markers = walk(new File(g)).filter(_.getName == "_SUCCESS")
     assert(markers.isEmpty, s"materializeGraph left success markers: $markers")
   }
