@@ -291,27 +291,34 @@ object Materialize {
     */
   val DefaultGcGraceMs: Long = 60L * 60 * 1000
 
-  /** Delete the dirs and snapshot temp files no snapshot names that are
-    * older than [[DefaultGcGraceMs]] — what crashed writers leave behind.
+  /** Delete what crashed writers left behind in every stage dir under
+    * `outDir` that holds a snapshot log (triples, linked, entities): the
+    * dirs and snapshot temp files its latest snapshot does not name that
+    * are older than [[DefaultGcGraceMs]].
     */
-  private def gcOrphans(spark: SparkSession, stageDir: String, snap: Snapshot): Unit = {
-    val fs = fsOf(spark, stageDir)
+  private def gcOrphans(spark: SparkSession, outDir: String): Unit = {
+    val fs = fsOf(spark, outDir)
     val cutoff = System.currentTimeMillis() - DefaultGcGraceMs
     def list(p: Path) = if (fs.exists(p)) fs.listStatus(p).toSeq else Nil
-    for (root <- Seq("data", "delta", "versions")) {
-      val live = snap.entries.filter(e => rootOf(e.kind) == root)
-        .groupBy(_.id).map { case (id, es) => s"batch=$id" -> es.map(e => s"bucket=${e.bucket}") }
-      list(new Path(s"$stageDir/$root")).foreach { d =>
-        val unnamed = live.get(d.getPath.getName) match {
-          case None => Seq(d)
-          case Some(buckets) => list(d.getPath).filter(b => b.isDirectory && !buckets(b.getPath.getName))
+    for (stage <- list(new Path(outDir)).map(_.getPath.getName)
+        if fs.exists(new Path(s"$outDir/$stage/snapshots"))) {
+      val stageDir = s"$outDir/$stage"
+      val snap = latestSnapshot(spark, stageDir)
+      for (root <- Seq("data", "delta", "versions")) {
+        val live = snap.entries.filter(e => rootOf(e.kind) == root)
+          .groupBy(_.id).map { case (id, es) => s"batch=$id" -> es.map(e => s"bucket=${e.bucket}") }
+        list(new Path(s"$stageDir/$root")).foreach { d =>
+          val unnamed = live.get(d.getPath.getName) match {
+            case None => Seq(d)
+            case Some(buckets) => list(d.getPath).filter(b => b.isDirectory && !buckets(b.getPath.getName))
+          }
+          unnamed.filter(_.getModificationTime < cutoff).foreach(u => fs.delete(u.getPath, true))
         }
-        unnamed.filter(_.getModificationTime < cutoff).foreach(u => fs.delete(u.getPath, true))
       }
+      list(new Path(s"$stageDir/snapshots"))
+        .filter(s => s.getPath.getName.startsWith(".pending-") && s.getModificationTime < cutoff)
+        .foreach(s => fs.delete(s.getPath, false))
     }
-    list(new Path(s"$stageDir/snapshots"))
-      .filter(s => s.getPath.getName.startsWith(".pending-") && s.getModificationTime < cutoff)
-      .foreach(s => fs.delete(s.getPath, false))
   }
 
   /** Per-bucket row-count accumulator: commit entries and lineage counts
@@ -639,8 +646,8 @@ object Materialize {
     *  - MERGE-ON-READ (mergeOnRead=true): new rows land under
     *    delta/batch=<id>/bucket=N and the batch's version rows under
     *    versions/batch=<id>/bucket=N; NOTHING existing is rewritten —
-    *    write cost is O(delta) regardless of scatter, two write jobs
-    *    total (the versions rows double as the tombstone set).
+    *    write cost is O(delta) regardless of scatter, two writes total
+    *    (the versions rows double as the tombstone set).
     *    `compact()` folds deltas into the base and consolidates
     *    versions (which then kill nothing — compacted rows carry their
     *    version as seq).
@@ -650,11 +657,19 @@ object Materialize {
     * applies it afresh (its versions were never committed, so it is
     * not stale); a crash after it makes the redelivery a stale no-op.
     *
-    * Cost scales with the delta, not the table: the versions read is
-    * partition-pruned to pmod(hash(url), B) of batch urls
-    * (PartitionFilters, asserted in IncrementalSpec), the extraction
-    * pipeline runs over applied pages only, and under merge-on-read no
-    * existing data file is touched at all (byte-stamp-asserted).
+    * Cost scales with the delta, not the table. The batch's
+    * (url, warc_ts_ms, bucket) keys come to the driver in ONE bounded
+    * collect ([[Scope.collectWithin]], [[KeyRowBytes]] per key), and the
+    * stored versions of exactly those urls in one more: the versions
+    * read is partition-pruned to the batch's buckets (PartitionFilters,
+    * asserted in IncrementalSpec on the update's own scan) and filtered
+    * to its urls, so it returns at most one row per key. Applied/stale
+    * is decided there, so the write path joins nothing against the
+    * batch. The extraction pipeline runs over applied pages only, and
+    * under merge-on-read no existing data file is touched at all
+    * (byte-stamp-asserted). A batch whose keys overflow the driver
+    * budget (a 1% batch at 10^10 urls) is marked in the cluster
+    * instead, by [[incrementalUpdateDistributed]].
     *
     * Scope: this maintains the TRIPLES stage (the base table). The
     * linked/entity stages are DERIVED artifacts whose semantics are
@@ -670,7 +685,52 @@ object Materialize {
       outDir: String,
       buckets: Int = 16,
       mergeOnRead: Boolean = false
-  ): IncrementalStats = Scope(spark) { scope =>
+  ): IncrementalStats = update(spark, newPages, outDir, buckets, mergeOnRead) {
+    (scope, snap, latest) =>
+      import spark.implicits._
+      Scope.collectWithin(latest.select("url", "warc_ts_ms", "bucket").as[(String, Long, Int)],
+        KeyRowBytes) match {
+        case Some(keys) => decideOnDriver(spark, outDir, snap, latest, keys)
+        case None => markDistributed(spark, scope, outDir, snap, latest)
+      }
+  }
+
+  /** The distributed branch of [[incrementalUpdate]], the path a batch
+    * whose keys overflow the driver budget takes: the batch is marked
+    * applied/stale by a join against the stored versions in the
+    * cluster.
+    */
+  private[graft] def incrementalUpdateDistributed(
+      spark: SparkSession,
+      newPages: Dataset[Page],
+      outDir: String,
+      buckets: Int = 16,
+      mergeOnRead: Boolean = false
+  ): IncrementalStats =
+    update(spark, newPages, outDir, buckets, mergeOnRead)(markDistributed(spark, _, outDir, _, _))
+
+  /** A key row's price in [[incrementalUpdate]]'s driver collect: its
+    * url, budgeted at 128 B (well above a typical crawl url's length),
+    * plus 12 B for its long version and int bucket. The budget then
+    * keeps about 240k urls per batch.
+    */
+  private val KeyRowBytes: Long = 128L + 12L
+
+  /** An update's applied/stale split: the stats; the batch rows of the
+    * applied urls (the pages to extract) and their version rows
+    * (url, warc_ts_ms, bucket); the step that gives the applied pages'
+    * triples their `seq`; and the stored versions of the batch's
+    * buckets, which a copy-on-write fold carries over.
+    */
+  private final case class Decision(stats: IncrementalStats, pages: DataFrame,
+      keys: DataFrame, withSeq: DataFrame => DataFrame, stored: DataFrame)
+
+  /** The body both update forms share: take each url's newest batch row,
+    * split the batch with `decide`, and commit the applied part.
+    */
+  private def update(spark: SparkSession, newPages: Dataset[Page], outDir: String,
+      buckets: Int, mergeOnRead: Boolean)(
+      decide: (Scope, Snapshot, DataFrame) => Decision): IncrementalStats = Scope(spark) { scope =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val snap = openStage(spark, s"$outDir/$StageTriples", buckets)
@@ -679,7 +739,7 @@ object Materialize {
     // newest row per url within the batch (a batch may carry several
     // crawls of one url); equal-ts ties break on content hash so every
     // delivery order commits the SAME winner. Persisted (O(delta) by
-    // contract): it feeds both the version-marking join and the
+    // contract): it feeds both the applied/stale decision and the
     // applied-page extraction, and without the persist the per-url
     // window would re-read and re-shuffle the whole batch source twice.
     val latest = scope.persist(newPages.toDF()
@@ -691,8 +751,50 @@ object Materialize {
         (col("warc_ts").cast("double") * 1000).cast("long"))
       .withColumn("bucket", pmod(hash(col("url")), lit(b)).cast("int")))
 
-    // versions pruning needs the batch's bucket set (bounded-size
-    // collect: at most B values), computed from the cached `latest`
+    val d = decide(scope, snap, latest)
+    val affected = d.stats.affectedBuckets
+    if (affected.nonEmpty) {
+      // new rows carry seq = their crawl's warc_ts_ms (the per-url
+      // version order tombstones resolve against)
+      val fresh = d.withSeq(withBucket(
+        Pipeline.run(d.pages.drop("warc_ts_ms", "bucket").as[Page]).toDF(), b))
+      if (mergeOnRead) morCommit(spark, outDir, snap, fresh, d.keys)
+      else cowCommit(spark, outDir, snap, b, fresh, d.keys, d.stored, affected)
+    }
+    d.stats
+  }
+
+  /** The driver branch of the applied/stale split, over the batch's
+    * collected keys: ONE collect brings the stored versions of those urls
+    * (readVersions' group-by leaves at most one row per url), and a key
+    * applies iff its url has no stored version or an older one. The
+    * applied pages are a narrow filter of the cached batch, their
+    * triples' `seq` a lookup in a driver map and their version rows a
+    * driver-built frame: no join of the batch, and no broadcast of a
+    * local relation (which would cost its own collect job).
+    */
+  private def decideOnDriver(spark: SparkSession, outDir: String, snap: Snapshot,
+      latest: DataFrame, keys: Array[(String, Long, Int)]): Decision = {
+    import spark.implicits._
+    val stored = readVersions(spark, outDir, keys.map(_._3).toSet, Some(snap))
+    val storedMs = stored.filter(col("url").isin(keys.map(_._1): _*))
+      .select("url", "warc_ts_ms").as[(String, Long)].collect().toMap
+    val (applied, stale) = keys.partition { case (url, ms, _) => storedMs.get(url).forall(ms > _) }
+    val seqOf = applied.map { case (url, ms, _) => url -> ms }.toMap
+    val seq = udf((url: String) => seqOf(url))
+    Decision(IncrementalStats(applied.length, stale.length, applied.map(_._3).toSet),
+      if (stale.isEmpty) latest else latest.filter(col("url").isin(seqOf.keys.toSeq: _*)),
+      applied.toSeq.toDF("url", "warc_ts_ms", "bucket"),
+      _.withColumn("seq", seq(col("url"))), stored)
+  }
+
+  /** The distributed branch of the applied/stale split: the batch is
+    * joined to the stored versions of its buckets in the cluster, and
+    * the marked keys are persisted for the stats and the write path.
+    */
+  private def markDistributed(spark: SparkSession, scope: Scope, outDir: String,
+      snap: Snapshot, latest: DataFrame): Decision = {
+    // versions pruning needs the batch's bucket set (at most B values)
     val batchBuckets = latest
       .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
     val stored = readVersions(spark, outDir, batchBuckets, Some(snap))
@@ -707,33 +809,27 @@ object Materialize {
       .select("url", "warc_ts_ms", "bucket", "is_applied"))
     val stats = marked.groupBy("bucket", "is_applied").agg(count(lit(1)).as("n")).collect()
     val appliedStats = stats.filter(_.getBoolean(1))
-    val affected = appliedStats.map(_.getInt(0)).toSet
-    val nApplied = appliedStats.map(_.getLong(2)).sum
-    val nStale = stats.filterNot(_.getBoolean(1)).map(_.getLong(2)).sum
-    if (affected.isEmpty) return IncrementalStats(0L, nStale, Set.empty)
-
-    val appliedKeys = marked.filter(col("is_applied")).drop("is_applied")
-    // applied PAGE rows (html et al.) for the extraction pipeline:
-    // semi-join the (persisted) batch against the cached applied keys
-    val appliedPages = latest
-      .join(appliedKeys.select("url"), Seq("url"), "left_semi")
-      .drop("warc_ts_ms", "bucket").as[Page]
-    // new rows carry seq = their crawl's warc_ts_ms (the per-url
-    // version order tombstones resolve against). No broadcast hint:
-    // appliedKeys is O(delta) — 10^8 urls for a 1% batch at the
-    // 10^10-url scale this mode targets, far past any broadcast
-    // limit; AQE upgrades small deltas to broadcast at runtime.
-    val fresh = withBucket(Pipeline.run(appliedPages).toDF(), b)
-      .join(appliedKeys.select(col("url"),
-        col("warc_ts_ms").as("seq")), Seq("url"))
-
-    if (mergeOnRead) morCommit(spark, outDir, snap, fresh, appliedKeys)
-    else cowCommit(spark, outDir, snap, b, fresh, appliedKeys, stored, affected)
-    IncrementalStats(nApplied, nStale, affected)
+    val keys = marked.filter(col("is_applied")).drop("is_applied")
+    // No broadcast hint on the key joins: the keys are O(delta) — 10^8
+    // urls for a 1% batch at the 10^10-url scale this branch serves, far
+    // past any broadcast limit; AQE upgrades small deltas to broadcast
+    // at runtime.
+    Decision(
+      IncrementalStats(appliedStats.map(_.getLong(2)).sum,
+        stats.filterNot(_.getBoolean(1)).map(_.getLong(2)).sum,
+        appliedStats.map(_.getInt(0)).toSet),
+      latest.join(keys.select("url"), Seq("url"), "left_semi"),
+      keys,
+      _.join(keys.select(col("url"), col("warc_ts_ms").as("seq")), Seq("url")),
+      stored)
   }
 
   /** Merge-on-read commit: delta rows + the batch's versions (its
     * tombstones) under one fresh id, published by one snapshot commit.
+    * Five jobs: each write is a bucket shuffle and a write job, and the
+    * lineage append one more. Together with the driver branch's key
+    * collect (3 jobs) and versions collect (2), a small update runs 10
+    * (IncrementalSpec counts them).
     */
   private def morCommit(spark: SparkSession, outDir: String, snap: Snapshot,
       fresh: DataFrame, appliedKeys: DataFrame): Unit = {
@@ -818,8 +914,9 @@ object Materialize {
     * last compaction). Rewrites only buckets with outstanding delta/
     * tombstone entries and returns that bucket set; a crash inside
     * compact() leaves the previous snapshot live and is recovered by
-    * re-running it. Also collects crashed writers' unnamed dirs older
-    * than [[DefaultGcGraceMs]].
+    * re-running it. Also collects the unnamed dirs crashed writers left
+    * in every stage (triples, linked, entities) that are older than
+    * [[DefaultGcGraceMs]].
     *
     * Safe to run concurrently with a committing stream: the fold is
     * computed from one snapshot and commits only if every entry it
@@ -827,9 +924,9 @@ object Materialize {
     * live next to the folded base.
     */
   def compact(spark: SparkSession, outDir: String): Set[Int] = {
+    gcOrphans(spark, outDir)
     val stageDir = s"$outDir/$StageTriples"
     val snap = latestSnapshot(spark, stageDir)
-    gcOrphans(spark, stageDir, snap)
     val affected = snap.of(Delta, Tomb).map(_.bucket)
     if (affected.isEmpty) return Set.empty
     val t0 = System.currentTimeMillis()

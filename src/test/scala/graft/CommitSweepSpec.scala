@@ -183,6 +183,31 @@ class CommitSweepSpec extends AnyFunSuite {
     assert(Materialize.incrementalUpdate(spark, ds(v1), d, B, mergeOnRead = true).appliedUrls == 2)
   }
 
+  test("compact collects aged unnamed dirs in every stage: triples, linked and entities") {
+    val dir = Files.createTempDirectory("graft-sweep-gc-stages").toFile
+    val d = FaultyFs.uri(dir)
+    Materialize.materializeGraph(spark, ds(base), d, B)
+    val before = state(d)
+    // what a crashed write of each stage leaves: a data dir no snapshot
+    // names, holding a copy of a committed bucket's files
+    val orphans = Seq(Materialize.StageTriples, Materialize.StageLinked, Materialize.StageEntities)
+      .map { stage =>
+        val committed = new File(dir, s"$stage/data").listFiles().filter(_.isDirectory).head
+        val orphan = new File(dir, s"$stage/data/batch=crashed-$stage")
+        copyRec(committed, orphan)
+        orphan
+      }
+    assert(state(d) == before, "unnamed dirs leaked into the read path")
+    assert(Materialize.compact(spark, d).isEmpty)
+    assert(orphans.forall(_.exists()), "compact collected dirs inside the GC grace window")
+    val old = System.currentTimeMillis() - Materialize.DefaultGcGraceMs - 60000L
+    orphans.foreach(_.setLastModified(old))
+    assert(Materialize.compact(spark, d).isEmpty)
+    assert(orphans.forall(!_.exists()),
+      s"compact left unnamed dirs: ${orphans.filter(_.exists()).mkString(", ")}")
+    assert(state(d) == before)
+  }
+
   test("a commit that loses the snapshot rename retries onto the winner's state, or fails loudly if the winner replaced what it folded") {
     def table(tag: String): String = {
       val d = FaultyFs.uri(Files.createTempDirectory(s"graft-sweep-race-$tag").toFile)

@@ -625,4 +625,105 @@ class IncrementalSpec extends AnyFunSuite {
     assert(tripleKeys(Materialize.readTriples(spark, dir)) ==
       tripleKeys(Pipeline.run(ds(world)).toDF()))
   }
+
+  /** The live rows of a table, `seq` included, as a sorted multiset. */
+  private def liveRows(dir: String): Seq[String] =
+    Materialize.readTriplesWithSeq(spark, dir).selectExpr("concat_ws('|', url, sentId, " +
+      "headLabel, headText, propType, valueLabel, valueText, value, unit, seq)")
+      .collect().map(_.getString(0)).toSeq.sorted
+
+  test("the driver applied/stale decision equals the distributed marking: stats and live rows, MoR and COW") {
+    val base = (0L until 12L).map(PageGen.genPage(_).page)
+    val orig = PageGen.genPage(3).page
+    val ts = new Timestamp(orig.warc_ts.getTime + 86400000L)
+    val tieA = PageGen.genPage(503).page.copy(url = orig.url, warc_ts = ts)
+    val tieB = PageGen.genPage(603).page.copy(url = orig.url, warc_ts = ts)
+    val v1 = Seq(recrawl(5, 505, tsPlusDays = 10), recrawl(6, 506, tsPlusDays = 10))
+    val scenarios = Seq(
+      // applied, then an equal-ts redelivery and an older crawl: both
+      // all-stale batches, the early return
+      "stale redelivery" -> Seq(v1, v1, Seq(PageGen.genPage(5).page)),
+      "equal-ts tie a,b" -> Seq(Seq(tieA, tieB)),
+      "equal-ts tie b,a" -> Seq(Seq(tieB, tieA)),
+      "brand-new urls" -> Seq((20L until 24L).map(PageGen.genPage(_).page)),
+      // url 5 applies, url 6's older crawl is stale, url 24 is new
+      "mixed" -> Seq(v1, Seq(recrawl(5, 605, tsPlusDays = 20), PageGen.genPage(6).page,
+        PageGen.genPage(24).page)))
+    for (mor <- Seq(true, false); (name, batches) <- scenarios) {
+      val Seq(drv, dist) = Seq("drv", "dist").map(t =>
+        Files.createTempDirectory(s"graft-incr-parity-$t").toString)
+      for (d <- Seq(drv, dist)) Materialize.runResumable(spark, ds(base), d, B)
+      for ((batch, i) <- batches.zipWithIndex) {
+        val sD = Materialize.incrementalUpdate(spark, ds(batch), drv, B, mergeOnRead = mor)
+        val sX = Materialize.incrementalUpdateDistributed(spark, ds(batch), dist, B,
+          mergeOnRead = mor)
+        assert(sD == sX, s"$name batch $i (mergeOnRead=$mor)")
+        assert(liveRows(drv) == liveRows(dist), s"$name batch $i (mergeOnRead=$mor)")
+      }
+    }
+  }
+
+  test("a warm merge-on-read update of a small batch runs one key collect and one versions collect") {
+    val dir = Files.createTempDirectory("graft-incr-jobs").toString
+    Materialize.runResumable(spark, ds((0L until 20L).map(PageGen.genPage(_).page)), dir, B)
+    Materialize.incrementalUpdate(spark,
+      ds(Seq(recrawl(5, 505, tsPlusDays = 10), recrawl(6, 506, tsPlusDays = 10))), dir, B,
+      mergeOnRead = true)
+    val batch = Seq(recrawl(5, 605, tsPlusDays = 20), recrawl(7, 507, tsPlusDays = 20),
+      PageGen.genPage(20).page)
+    val (s, jobs) = SparkSpec.withJobs(
+      Materialize.incrementalUpdate(spark, ds(batch), dir, B, mergeOnRead = true))
+    assert(s.appliedUrls == 3 && s.staleUrls == 0)
+    // the key collect (the batch window's shuffle, the cache and the
+    // collect: 3), the stored-versions collect (scan and group-by: 2),
+    // the delta and versions writes (a bucket shuffle and a write each:
+    // 4) and the lineage append (1)
+    assert(jobs == 10, s"the update ran $jobs jobs")
+  }
+
+  test("the update's own versions scan is partition-pruned on bucket, driver path and fallback") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every plan node, through adaptive plans, query stages and caches
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }).flatMap(nodes)
+    val forms = Seq[(String, (Dataset[Page], String) => Materialize.IncrementalStats)](
+      "driver" -> ((b, d) => Materialize.incrementalUpdate(spark, b, d, B, mergeOnRead = true)),
+      "distributed" -> ((b, d) =>
+        Materialize.incrementalUpdateDistributed(spark, b, d, B, mergeOnRead = true)))
+    for ((name, update) <- forms) {
+      val dir = Files.createTempDirectory(s"graft-incr-prune-$name").toString
+      Materialize.runResumable(spark, ds((0L until 20L).map(PageGen.genPage(_).page)), dir, B)
+      // stored versions to read
+      Materialize.incrementalUpdate(spark, ds(Seq(recrawl(5, 505, tsPlusDays = 10))), dir, B,
+        mergeOnRead = true)
+      val scans = new java.util.concurrent.ConcurrentLinkedQueue[FileSourceScanExec]
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          nodes(qe.executedPlan).foreach {
+            case f: FileSourceScanExec
+                if f.relation.location.rootPaths.exists(_.getName == "versions") => scans.add(f)
+            case _ =>
+          }
+        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      // withJobs' marker drains the listener bus the listener rides on
+      val (s, _) = try SparkSpec.withJobs(update(ds(Seq(recrawl(5, 605, tsPlusDays = 20),
+        recrawl(7, 507, tsPlusDays = 20))), dir))
+        finally spark.listenerManager.unregister(listener)
+      assert(s.appliedUrls == 2, name)
+      assert(!scans.isEmpty, s"$name: the update read no versions")
+      scans.forEach { f =>
+        assert(f.partitionFilters.exists(_.references.exists(_.name == "bucket")),
+          s"$name: expected bucket partition pruning in the versions scan:\n$f")
+      }
+    }
+  }
 }
