@@ -1,15 +1,15 @@
 package graft.plans
 
-import graft.model.{Page, Triple}
+import graft.model.{LineageRow, Page, Triple}
 import graft.operators.{Canonicalize, Linking}
 import graft.sources.ChemDict
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S5/S2/S7-analog: stage materialization with Iceberg-style layout,
-  * per-partition lineage rows, and checkpoint-resumable stage
-  * boundaries (north rule).
+  * per-partition lineage in the snapshot, and checkpoint-resumable
+  * stage boundaries (north rule).
   *
   * No Iceberg runtime jar exists in this sandbox (documented deviation,
   * BASELINE.md), so the table format reproduces Iceberg's COMMIT MODEL
@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   *     versions/batch=<id>/bucket=<b>/part-*.parquet  per-url versions
   *       (one parquet file per bucket per write: [[write]] hash-distributes
   *       by bucket, the Iceberg `write.distribution-mode=hash` analog)
-  *     snapshots/v<N>                                 the commit log (live entries,
+  *     snapshots/v<N>                                 the commit log (live entries
+  *       with their row counts, the stage and times of each live write,
   *       schemas, done buckets, horizon, bucket count, dictionary hash)
-  *     manifest/part-*.parquet                        lineage (stage,bucket,rows,t0,t1)
-  *   out/linked/{data,snapshots,manifest}/
+  *   out/linked/{data,snapshots}/
   *   out/entities/{data,snapshots}/                   one live entry, bucket=0
   *
   * Every writer — bootstrap (`runResumable`, `materializeGraph`), the
@@ -43,8 +43,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: bucket count B is the resume granularity; at 10^12 docs
   * you'd set B ~ 10^5 so one bucket ≈ 10^7 docs. Writes stream through
-  * — no collect; lineage row counts come from an accumulator filled by
-  * the write itself.
+  * — no collect; each entry's row count comes from an accumulator filled
+  * by the write itself, and [[lineage]] reads it back from the snapshot
+  * files alone.
   */
 object Materialize {
 
@@ -55,7 +56,6 @@ object Materialize {
   def withBucket(df: DataFrame, buckets: Int): DataFrame =
     df.withColumn("bucket", pmod(hash(col("url")), lit(buckets)))
 
-  def manifestPath(outDir: String): String = s"$outDir/$StageTriples/manifest"
   def dataPath(outDir: String): String = s"$outDir/$StageTriples/data"
   def deltaPath(outDir: String): String = s"$outDir/$StageTriples/delta"
   def versionsPath(outDir: String): String = s"$outDir/$StageTriples/versions"
@@ -110,8 +110,11 @@ object Materialize {
   private[graft] def rootOf(kind: String): String =
     if (kind == Tomb || kind == VBase) "versions" else kind
 
-  /** One live bucket directory: `<root of kind>/batch=<id>/bucket=<bucket>`. */
-  private[graft] final case class Entry(kind: String, id: String, bucket: Int)
+  /** One live bucket directory, `<root of kind>/batch=<id>/bucket=<bucket>`, and its rows. */
+  private[graft] final case class Entry(kind: String, id: String, bucket: Int, rows: Long)
+
+  /** One write id's lineage: its stage label, its start and its pre-swap time. */
+  private[graft] final case class WriteLog(stage: String, startedAtMs: Long, finishedAtMs: Long)
 
   /** One table state. Bootstrap ADDS entries (a bucket may hold the rows
     * of several writes — e.g. an upsert into a never-bootstrapped bucket
@@ -120,35 +123,44 @@ object Materialize {
     * `horizonMs` = the time-travel retention floor. `buckets` and
     * `dictHash` are the table properties every row was written under
     * (the bucket count and [[DictHash]]): like Iceberg's partition spec,
-    * they live in the record whose swap is the commit.
+    * they live in the record whose swap is the commit — as does the
+    * lineage, `writes`, rendered only for ids with a live entry.
     */
   private[graft] final case class Snapshot(version: Long, entries: Set[Entry],
       done: Set[Int], horizonMs: Long, schemas: Map[String, String],
-      buckets: Int, dictHash: String) {
+      writes: Map[String, WriteLog], buckets: Int, dictHash: String) {
     def restrict(buckets: Set[Int]): Snapshot =
       copy(entries = entries.filter(e => buckets(e.bucket)))
     def of(kinds: String*): Set[Entry] = entries.filter(e => kinds.contains(e.kind))
-    def render: String =
+    def render: String = {
+      val live = entries.map(_.id)
       (Seq(s"buckets $buckets", s"dict $dictHash", s"horizon $horizonMs",
         ("done" +: done.toSeq.sorted.map(_.toString)).mkString(" ")) ++
         schemas.toSeq.sorted.map { case (root, json) => s"schema $root $json" } ++
+        writes.toSeq.filter(w => live(w._1)).sortBy(_._1).map { case (id, w) =>
+          s"write $id ${w.stage} ${w.startedAtMs} ${w.finishedAtMs}"
+        } ++
         entries.toSeq.sortBy(e => (e.kind, e.id, e.bucket))
-          .map(e => s"${e.kind} ${e.id} ${e.bucket}")).mkString("\n")
+          .map(e => s"${e.kind} ${e.id} ${e.bucket} ${e.rows}")).mkString("\n")
+    }
   }
 
-  private val Empty = Snapshot(0L, Set.empty, Set.empty, 0L, Map.empty, 0, "")
+  private val Empty = Snapshot(0L, Set.empty, Set.empty, 0L, Map.empty, Map.empty, 0, "")
 
   private val SnapshotName = """v(\d+)""".r
 
-  private def parseSnapshot(version: Long, text: String): Snapshot =
+  private def parseSnapshot(file: Path, version: Long, text: String): Snapshot =
     text.split("\n").map(_.split(" ").toList).foldLeft(Empty.copy(version = version)) {
       case (s, "buckets" :: n :: Nil) => s.copy(buckets = n.toInt)
       case (s, "dict" :: h :: Nil) => s.copy(dictHash = h)
       case (s, "horizon" :: h :: Nil) => s.copy(horizonMs = h.toLong)
       case (s, "schema" :: root :: json) => s.copy(schemas = s.schemas + (root -> json.mkString(" ")))
       case (s, "done" :: bs) => s.copy(done = bs.map(_.toInt).toSet)
-      case (s, k :: id :: b :: Nil) => s.copy(entries = s.entries + Entry(k, id, b.toInt))
-      case (_, l) => sys.error(s"malformed snapshot v$version line: ${l.mkString(" ")}")
+      case (s, "write" :: id :: stage :: t0 :: t1 :: Nil) =>
+        s.copy(writes = s.writes + (id -> WriteLog(stage, t0.toLong, t1.toLong)))
+      case (s, k :: id :: b :: n :: Nil) => s.copy(entries = s.entries + Entry(k, id, b.toInt, n.toLong))
+      case (_, l) => throw new IllegalArgumentException(s"$file: `${l.mkString(" ")}` is not a line of " +
+        "this format (entry lines carry their rows); re-materialize it into a fresh outDir")
     }
 
   /** The latest committed state of a stage dir (empty before the first
@@ -172,7 +184,8 @@ object Materialize {
       }
       if (vs.isEmpty) Empty
       else {
-        val snap = parseSnapshot(vs.max, readText(fs, new Path(dir, s"v${vs.max}")))
+        val file = new Path(dir, s"v${vs.max}")
+        val snap = parseSnapshot(file, vs.max, readText(fs, file))
         require(snap.buckets > 0 && snap.dictHash.nonEmpty,
           s"$stageDir/snapshots/v${vs.max} records no bucket count or dictionary hash — " +
             "a table written before they moved into the snapshot; re-materialize it into a fresh outDir")
@@ -230,9 +243,10 @@ object Materialize {
     f"c${System.currentTimeMillis()}%x${java.util.concurrent.ThreadLocalRandom.current().nextLong()}%016x"
 
   /** THE commit point of every write. Publishes `read` minus `remove`
-    * plus the `written` entries (and their schemas, the `done` buckets,
-    * the raised horizon and `read`'s table properties) as `v<N+1>` with
-    * one temp-file + rename —
+    * plus the `written` entries (and their schemas, their lineage — the
+    * `stage` label, `startedAtMs` and the time just before the swap —,
+    * the `done` buckets, the raised horizon and `read`'s table
+    * properties) as `v<N+1>` with one temp-file + rename —
     * HDFS and this build's local file system refuse a rename onto an
     * existing file; the existence check narrows the race on file systems
     * that would overwrite. A writer that loses the race re-reads the
@@ -243,8 +257,8 @@ object Materialize {
     * holds two bucket numberings. Then deletes what this commit
     * superseded and every snapshot file before the previous one.
     */
-  private def commit(spark: SparkSession, stageDir: String, read: Snapshot,
-      written: Seq[Written], remove: Set[Entry] = Set.empty,
+  private def commit(spark: SparkSession, stageDir: String, read: Snapshot, stage: String,
+      startedAtMs: Long, written: Seq[Written], remove: Set[Entry] = Set.empty,
       done: Set[Int] = Set.empty, horizonMs: Long = 0L): Snapshot = {
     val fs = fsOf(spark, stageDir)
     val dir = new Path(s"$stageDir/snapshots")
@@ -258,7 +272,9 @@ object Materialize {
           s"${cur.dictHash}, this write ${read.buckets} and ${read.dictHash} — rerun it")
       val next = Snapshot(cur.version + 1, cur.entries -- remove ++ written.flatMap(_.entries),
         cur.done ++ done, math.max(cur.horizonMs, horizonMs),
-        cur.schemas ++ written.map(w => rootOf(w.kind) -> w.schema), read.buckets, read.dictHash)
+        cur.schemas ++ written.map(w => rootOf(w.kind) -> w.schema),
+        cur.writes ++ written.map(_.id -> WriteLog(stage, startedAtMs, System.currentTimeMillis())),
+        read.buckets, read.dictHash)
       val tmp = new Path(dir, s".pending-${freshId()}")
       writeText(fs, tmp, next.render)
       val v = new Path(dir, s"v${next.version}")
@@ -321,8 +337,8 @@ object Materialize {
     }
   }
 
-  /** Per-bucket row-count accumulator: commit entries and lineage counts
-    * collected DURING a write instead of a read-back job.
+  /** Per-bucket row-count accumulator: the commit's entries and their
+    * row counts, collected DURING a write instead of a read-back job.
     */
   private class BucketCountAcc
       extends org.apache.spark.util.AccumulatorV2[Int, Map[Int, Long]] {
@@ -339,12 +355,12 @@ object Materialize {
   }
 
   /** One write's result: its snapshot entries (the buckets it wrote
-    * rows into), rows per bucket, and its data schema — recorded in the
-    * snapshot so readers skip the parquet schema-inference job.
+    * rows into, with their row counts) and its data schema — recorded in
+    * the snapshot so readers skip the parquet schema-inference job.
     */
   private final case class Written(kind: String, id: String, counts: Map[Int, Long],
       schema: String) {
-    def entries: Set[Entry] = counts.keySet.map(Entry(kind, id, _))
+    def entries: Set[Entry] = counts.map { case (b, n) => Entry(kind, id, b, n) }.toSet
   }
 
   /** Write `df` bucket-partitioned under the fresh `<root>/batch=<id>`,
@@ -367,22 +383,6 @@ object Materialize {
       .partitionBy("bucket").parquet(s"$stageDir/${rootOf(kind)}/batch=$id")
     Written(kind, id, acc.value,
       org.apache.spark.sql.types.StructType(df.schema.filterNot(_.name == "bucket")).json)
-  }
-
-  /** Post-commit lineage append: one row per bucket. The commit has
-    * already succeeded — lineage is a log, not the commit record.
-    */
-  private def appendLineage(spark: SparkSession, stageDir: String, stage: String,
-      rows: Map[Int, Long], t0: Long): Unit = if (rows.nonEmpty) {
-    import spark.implicits._
-    rows.toSeq.sorted.toDF("bucket", "rows")
-      .withColumn("stage", lit(stage))
-      .withColumn("startedAtMs", lit(t0))
-      .withColumn("finishedAtMs", lit(System.currentTimeMillis()))
-      .select("stage", "bucket", "rows", "startedAtMs", "finishedAtMs")
-      .coalesce(1)
-      .write.options(TableWriteOptions).mode(SaveMode.Append)
-      .parquet(s"$stageDir/manifest")
   }
 
   /** The rows of the snapshot's `kinds` entries (all under one root):
@@ -444,18 +444,16 @@ object Materialize {
       Pipeline.run(remaining).toDF().withColumn("seq", lit(0L)), b, attempted)
   }
 
-  /** Write stage rows bucketed by url-hash under a fresh dir, commit them
-    * with the attempted buckets marked done — including row-count-0
-    * buckets, which have no data directory but are complete — then
-    * append their lineage rows.
+  /** Write stage rows bucketed by url-hash under a fresh dir and commit
+    * them, with their lineage, with the attempted buckets marked done —
+    * including row-count-0 buckets, which have no data directory (and so
+    * no entry) but are complete.
     */
   private def bootstrap(spark: SparkSession, stageDir: String, stage: String,
       snap: Snapshot, rows: DataFrame, buckets: Int, attempted: Set[Int]): Int = {
     val t0 = System.currentTimeMillis()
     val w = write(spark, withBucket(rows, buckets), stageDir, Data, freshId())
-    commit(spark, stageDir, snap, Seq(w), done = attempted)
-    appendLineage(spark, stageDir, stage,
-      attempted.map(bk => bk -> w.counts.getOrElse(bk, 0L)).toMap, t0)
+    commit(spark, stageDir, snap, stage, t0, Seq(w), done = attempted)
     attempted.size
   }
 
@@ -587,6 +585,23 @@ object Materialize {
     val stageDir = s"$outDir/$stage"
     readEntries(spark, stageDir, latestSnapshot(spark, stageDir), Data)
       .getOrElse(sys.error(s"no $stage data under $outDir"))
+  }
+
+  /** Lineage of the live tables: one row per live `data`/`delta` entry of
+    * the triples, linked and entities stages — its write's stage label and
+    * times, its rows — from the latest snapshot files alone, as a local
+    * relation (no Spark job). A superseded entry's lineage expires with its
+    * snapshot file, as in Iceberg's expire-snapshots.
+    */
+  def lineage(spark: SparkSession, outDir: String): Dataset[LineageRow] = {
+    import spark.implicits._
+    Seq(StageTriples, StageLinked, StageEntities).flatMap { stage =>
+      val snap = latestSnapshot(spark, s"$outDir/$stage")
+      snap.of(Data, Delta).toSeq.sortBy(e => (e.bucket, e.kind, e.id)).map { e =>
+        val w = snap.writes(e.id)
+        LineageRow(w.stage, e.bucket, e.rows, w.startedAtMs, w.finishedAtMs)
+      }
+    }.toDS()
   }
 
   // ------------------------------------------------------------------
@@ -825,11 +840,11 @@ object Materialize {
   }
 
   /** Merge-on-read commit: delta rows + the batch's versions (its
-    * tombstones) under one fresh id, published by one snapshot commit.
-    * Five jobs: each write is a bucket shuffle and a write job, and the
-    * lineage append one more. Together with the driver branch's key
-    * collect (3 jobs) and versions collect (2), a small update runs 10
-    * (IncrementalSpec counts them).
+    * tombstones) under one fresh id, published with their lineage by one
+    * snapshot commit. Four jobs: each write is a bucket shuffle and a
+    * write job. Together with the driver branch's key collect (3 jobs)
+    * and versions collect (2), a small update runs 9 (IncrementalSpec
+    * counts them).
     */
   private def morCommit(spark: SparkSession, outDir: String, snap: Snapshot,
       fresh: DataFrame, appliedKeys: DataFrame): Unit = {
@@ -838,8 +853,7 @@ object Materialize {
     val id = freshId()
     val rows = write(spark, fresh, stageDir, Delta, id)
     val vers = write(spark, appliedKeys, stageDir, Tomb, id)
-    commit(spark, stageDir, snap, Seq(rows, vers))
-    appendLineage(spark, stageDir, s"${StageTriples}_delta", rows.counts, t0)
+    commit(spark, stageDir, snap, s"${StageTriples}_delta", t0, Seq(rows, vers))
   }
 
   /** Copy-on-write commit: rewrite affected buckets (survivors keep
@@ -893,7 +907,7 @@ object Materialize {
   /** The fold shared by COW and compact: the affected buckets' whole
     * state (base, deltas, tombstones, consolidated versions) is replaced
     * by one rewrite under a fresh id, together with the horizon its
-    * removals raise, in one snapshot commit.
+    * removals raise and its lineage, in one snapshot commit.
     */
   private def fold(spark: SparkSession, outDir: String, snap: Snapshot,
       affected: Set[Int], rows: Option[DataFrame], versions: DataFrame,
@@ -902,10 +916,8 @@ object Materialize {
     val id = freshId()
     val data = rows.map(write(spark, _, stageDir, Data, id))
     val vers = write(spark, versions, stageDir, VBase, id)
-    commit(spark, stageDir, snap, data.toSeq :+ vers, remove = snap.restrict(affected).entries,
-      horizonMs = horizonMs)
-    appendLineage(spark, stageDir, stage,
-      affected.map(bk => bk -> data.flatMap(_.counts.get(bk)).getOrElse(0L)).toMap, t0)
+    commit(spark, stageDir, snap, stage, t0, data.toSeq :+ vers,
+      remove = snap.restrict(affected).entries, horizonMs = horizonMs)
   }
 
   /** Fold all outstanding merge-on-read deltas and tombstones into the
@@ -949,7 +961,8 @@ object Materialize {
   // ------------------------------------------------------------------
 
   /** Materialize the full graph: triples + linked triple table +
-    * canonical entity table + lineage. ALL three stages are resumable:
+    * canonical entity table, each with its lineage in its snapshot. ALL
+    * three stages are resumable:
     * triples and linked at bucket granularity (completed buckets are
     * never re-scanned or re-joined), the entity table as one committed
     * entry (a dictionary change fails loudly, see [[openStage]]). A rerun
@@ -988,11 +1001,12 @@ object Materialize {
     if (!snapE.done(0)) {
       // one job, one file: a local relation scans with one task per
       // core, and `write`'s bucket shuffle would add a job
+      val t0 = System.currentTimeMillis()
       val id = freshId()
       val entities = Canonicalize.entityTable(spark, ChemDict.entries).toDF()
       entities.coalesce(1).write.options(TableWriteOptions)
         .parquet(s"$entitiesDir/data/batch=$id/bucket=0")
-      commit(spark, entitiesDir, snapE, Seq(Written(Data, id,
+      commit(spark, entitiesDir, snapE, StageEntities, t0, Seq(Written(Data, id,
         Map(0 -> ChemDict.entries.length.toLong), entities.schema.json)), done = Set(0))
     }
     Scope(spark) { implicit scope =>

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model.Page
-import graft.plans.{Pipeline, Scope}
+import graft.plans.Scope
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -14,10 +14,11 @@ import org.apache.spark.sql.types._
   *
   *  - `windowedEventCounts`: watermarked tumbling-window aggregation
   *    over an events directory (file source).
-  *  - `streamTriples`: page stream → foreachBatch(full KG pipeline) →
-  *    one `batch=<id>` dir per micro-batch. Each micro-batch reuses the
-  *    exact batch dataflow, so stream output ≡ batch output on the same
-  *    rows (asserted in StreamingSpec).
+  *  - `maintainTriples` (and its CDX and WARC sources): page stream →
+  *    foreachBatch(merge-on-read commit) into the one snapshot-logged
+  *    triple table. Each micro-batch reuses the exact batch dataflow, so
+  *    stream output ≡ batch output on the same rows (asserted in
+  *    StreamingSpec).
   */
 /** One pending session interval for `EventStream.userSessions`
   * (top-level: encoder codegen requires a publicly constructible
@@ -152,26 +153,6 @@ object EventStream {
       .withColumn("text_hash", md5(col("text")))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("text_hash")
-
-  /** Stream pages → triples using the batch pipeline per micro-batch.
-    * Checkpointed — restart-safe like the batch resume path: each
-    * micro-batch OVERWRITES its own `outDir/batch=<batchId>`, so a batch
-    * the checkpoint replays after a crash (foreachBatch is at-least-once)
-    * replaces its earlier output instead of appending it twice.
-    */
-  def streamTriples(
-      spark: SparkSession, pagesDir: String, outDir: String, checkpointDir: String
-  ): StreamingQuery = {
-    import spark.implicits._
-    spark.readStream.schema(pageSchema).parquet(pagesDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pipeline.run(batch.as[Page]).write.options(graft.plans.Materialize.TableWriteOptions)
-          .mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-  }
 
   /** Stream pages → an INCREMENTALLY MAINTAINED triple table: each
     * micro-batch applies as a latest-crawl-wins merge-on-read commit

@@ -33,10 +33,27 @@ class CommitSweepSpec extends AnyFunSuite {
     "concat_ws('|', url, sentId, headLabel, headText, propType, valueLabel, valueText, value, unit, seq)"
 
   /** What a reader can observe: the triple rows (with seq) as a sorted
-    * multiset, the horizon, the linked rows and the entity rows.
+    * multiset, the horizon, the linked rows, the entity rows and the
+    * lineage as sorted (stage, bucket, rows) — its times differ between
+    * runs.
     */
   private case class State(triples: Seq[String], horizonMs: Long, linked: Seq[String],
-      entities: Seq[String])
+      entities: Seq[String], lineage: Seq[(String, Int, Long)]) {
+    /** The part of the state one stage dir's commits change. */
+    def of(stage: String): Product = {
+      val own = lineage.filter(l => stage match {
+        case Materialize.StageLinked | Materialize.StageEntities => l._1 == stage
+        case _ => l._1 != Materialize.StageLinked && l._1 != Materialize.StageEntities
+      })
+      stage match {
+        case Materialize.StageLinked => (linked, own)
+        case Materialize.StageEntities => (entities, own)
+        case _ => (triples, horizonMs, own)
+      }
+    }
+  }
+
+  private val stages = Seq(Materialize.StageTriples, Materialize.StageLinked, Materialize.StageEntities)
 
   private def state(dir: String): State = {
     val t = Materialize.latestSnapshot(spark, s"$dir/triples")
@@ -49,7 +66,8 @@ class CommitSweepSpec extends AnyFunSuite {
       keys("linked", Materialize.readLinked(spark, dir),
         "concat_ws('|', url, sentId, headText, valueText, cast(cid as string))"),
       keys("entities", Materialize.readEntities(spark, dir),
-        "concat_ws('|', clusterId, cid, canonicalName)"))
+        "concat_ws('|', clusterId, cid, canonicalName)"),
+      Materialize.lineage(spark, dir).collect().map(r => (r.stage, r.bucket, r.rows)).toSeq.sorted)
   }
 
   private def copyRec(src: File, dst: File): Unit =
@@ -90,9 +108,7 @@ class CommitSweepSpec extends AnyFunSuite {
       try op(d) catch { case _: Exception => () }
       FaultyFs.disarm()
       val s = state(d)
-      assert(Seq(preS, postS).exists(x => (x.triples, x.horizonMs) == (s.triples, s.horizonMs)) &&
-        (s.linked == preS.linked || s.linked == postS.linked) &&
-        (s.entities == preS.entities || s.entities == postS.entities),
+      assert(stages.forall(st => s.of(st) == preS.of(st) || s.of(st) == postS.of(st)),
         s"$name: crash before op $k (${ops(k - 1)}) left a state that is neither pre nor post")
       op(d)
       assert(state(d) == postS,
@@ -118,6 +134,9 @@ class CommitSweepSpec extends AnyFunSuite {
 
   test("materializeGraph: every crash point reads pre or post per stage; resume equals the crash-free run") {
     sweep("materializeGraph") { d =>
+      // two partial builds: the op's triples and linked commits then
+      // expire a snapshot file after their swaps, a crash point too
+      Materialize.materializeGraph(spark, ds(base), d, B, onlyBuckets = Some(Set(0)))
       Materialize.materializeGraph(spark, ds(base), d, B, onlyBuckets = half)
       // a build that crashed before its entity stage opened: the op
       // commits all three stages

@@ -663,6 +663,50 @@ class IncrementalSpec extends AnyFunSuite {
     }
   }
 
+  test("lineage recounts exactly: every live entry's parquet rows after a graph build, MoR, COW and compact") {
+    val dir = Files.createTempDirectory("graft-incr-lineage").toString
+    val stages = Seq(Materialize.StageTriples, Materialize.StageLinked, Materialize.StageEntities)
+    /** Recount every live entry's rows from its parquet files (one read
+      * per stage root, grouped by its batch and bucket dirs): each must
+      * equal its snapshot `rows` field, and per (stage label, bucket)
+      * the data and delta rows must equal `lineage`'s.
+      */
+    def recount(after: String, label: String): Unit = {
+      val counted = for {
+        stage <- stages
+        snap = Materialize.latestSnapshot(spark, s"$dir/$stage")
+        (root, es) <- snap.entries.groupBy(e => Materialize.rootOf(e.kind)).toSeq
+        onDisk = spark.read.parquet(s"$dir/$stage/$root").groupBy("batch", "bucket").count()
+          .collect().map(r => (r.get(0).toString, r.getInt(1)) -> r.getLong(2)).toMap
+        _ = assert(onDisk.keySet == es.map(e => (e.id, e.bucket)),
+          s"after $after: $stage/$root dirs ${onDisk.keySet} vs live entries $es")
+        e <- es.toSeq
+      } yield {
+        assert(onDisk((e.id, e.bucket)) == e.rows, s"after $after: $stage $e holds ${onDisk((e.id, e.bucket))} rows")
+        (e, snap.writes(e.id).stage)
+      }
+      val fromFiles = counted.collect {
+        case (e, stage) if e.kind == Materialize.Data || e.kind == Materialize.Delta => (stage, e.bucket, e.rows)
+      }.groupMapReduce(t => (t._1, t._2))(_._3)(_ + _)
+      val (lineage, jobs) = SparkSpec.withJobs(Materialize.lineage(spark, dir).collect().toSeq)
+      assert(jobs == 0, s"after $after: lineage ran $jobs Spark jobs")
+      assert(lineage.groupMapReduce(r => (r.stage, r.bucket))(_.rows)(_ + _) == fromFiles, s"after $after")
+      assert(lineage.exists(_.stage == label), s"after $after: no $label lineage in $lineage")
+      assert(lineage.forall(r => r.startedAtMs <= r.finishedAtMs), s"after $after")
+      for (stage <- stages)
+        assert(!new java.io.File(s"$dir/$stage/manifest").exists(), s"after $after: $stage/manifest")
+    }
+    Materialize.materializeGraph(spark, ds((0L until 20L).map(PageGen.genPage(_).page)), dir, B)
+    recount("the graph build", Materialize.StageLinked)
+    Materialize.incrementalUpdate(spark, ds((0L until 6L).map(i => recrawl(i, 500 + i, 10))),
+      dir, B, mergeOnRead = true)
+    recount("the MoR update", s"${Materialize.StageTriples}_delta")
+    Materialize.incrementalUpdate(spark, ds(Seq(recrawl(7, 507, 20))), dir, B)
+    recount("the COW update", Materialize.StageTriplesUpsert)
+    assert(Materialize.compact(spark, dir).nonEmpty, "precondition: the MoR deltas outlive the COW fold")
+    recount("compact", "compact")
+  }
+
   test("a warm merge-on-read update of a small batch runs one key collect and one versions collect") {
     val dir = Files.createTempDirectory("graft-incr-jobs").toString
     Materialize.runResumable(spark, ds((0L until 20L).map(PageGen.genPage(_).page)), dir, B)
@@ -675,10 +719,10 @@ class IncrementalSpec extends AnyFunSuite {
       Materialize.incrementalUpdate(spark, ds(batch), dir, B, mergeOnRead = true))
     assert(s.appliedUrls == 3 && s.staleUrls == 0)
     // the key collect (the batch window's shuffle, the cache and the
-    // collect: 3), the stored-versions collect (scan and group-by: 2),
-    // the delta and versions writes (a bucket shuffle and a write each:
-    // 4) and the lineage append (1)
-    assert(jobs == 10, s"the update ran $jobs jobs")
+    // collect: 3), the stored-versions collect (scan and group-by: 2)
+    // and the delta and versions writes (a bucket shuffle and a write
+    // each: 4); lineage rides in the snapshot commit
+    assert(jobs == 9, s"the update ran $jobs jobs")
   }
 
   test("the update's own versions scan is partition-pruned on bucket, driver path and fallback") {

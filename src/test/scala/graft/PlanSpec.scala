@@ -178,20 +178,22 @@ class PlanSpec extends AnyFunSuite with ScopePerTest {
   import org.apache.spark.sql.util.QueryExecutionListener
 
   /** The executed plan of every table-data write `op` runs (the
-    * `batch=<id>` dirs), keyed by output path. The op's lineage append
-    * is its last write, so its arrival drains the async listener bus.
+    * `batch=<id>` dirs), keyed by output path. Query executions reach
+    * listeners on their own queue, so a marker action run after `op`
+    * drains it: its `onSuccess` arrives after every one of `op`'s.
     */
   private def tableWrites(op: => Unit): Seq[(String, SparkPlan)] = {
     val data = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
-    val lineage = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = s"tableWrites_marker_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        nodes(qe.executedPlan).foreach {
+        if (qe.analyzed.output.exists(_.name == marker)) drained.countDown()
+        else nodes(qe.executedPlan).foreach {
           case w: DataWritingCommandExec => w.cmd match {
             case i: InsertIntoHadoopFsRelationCommand =>
               val path = i.outputPath.toString
               if (path.contains("/batch=")) data.add(path -> w.child)
-              else if (path.endsWith("/manifest")) lineage.incrementAndGet()
             case _ =>
           }
           case _ =>
@@ -201,10 +203,10 @@ class PlanSpec extends AnyFunSuite with ScopePerTest {
     spark.listenerManager.register(listener)
     try {
       op
-      val deadline = System.currentTimeMillis() + 30000
-      while (lineage.get() == 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      spark.range(1).toDF(marker).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker query never reached the listener")
     } finally spark.listenerManager.unregister(listener)
-    assert(lineage.get() == 1, "the op's lineage write never reached the listener")
     data.toArray(Array.empty[(String, SparkPlan)]).toSeq
   }
 

@@ -49,9 +49,9 @@ class ResumeSpec extends AnyFunSuite {
     assert(Materialize.tableBuckets(spark, dirB) == B)
 
     // lineage: one row per bucket, row counts match the data
-    val manifest = spark.read.parquet(Materialize.manifestPath(dirB))
-    assert(manifest.select("bucket").distinct().count() == B)
-    val lineageTotal = manifest.groupBy().sum("rows").collect()(0).getLong(0)
+    val lineage = Materialize.lineage(spark, dirB)
+    assert(lineage.select("bucket").distinct().count() == B)
+    val lineageTotal = lineage.groupBy().sum("rows").collect()(0).getLong(0)
     assert(lineageTotal == Materialize.readTriples(spark, dirB).count())
 
     // J6: url lookup is partition-pruned — the scan reads exactly one
@@ -86,8 +86,8 @@ class ResumeSpec extends AnyFunSuite {
     // the triples write (the annotate pass fills the compact cache inside
     // it), the linked write from that cache (its dictionary side built
     // on the driver) and one local entity-table write, over 60 pages in
-    // 4 buckets
-    assert(jobs == 11, s"the graph build ran $jobs jobs")
+    // 4 buckets; lineage rides in each stage's snapshot commit
+    assert(jobs == 9, s"the graph build ran $jobs jobs")
     val triples = Materialize.readTriples(spark, dir)
     val linked = Materialize.readLinked(spark, dir)
     val entities = Materialize.readEntities(spark, dir)
@@ -101,7 +101,9 @@ class ResumeSpec extends AnyFunSuite {
     val entityFiles = new java.io.File(s"$dir/entities/data/batch=${entityEntries.head.id}/bucket=0")
       .list().filter(_.endsWith(".parquet"))
     assert(entityFiles.length == 1, s"entity table in ${entityFiles.mkString(", ")}")
-    assert(new java.io.File(s"$dir/entities").list().sorted.toSeq == Seq("data", "snapshots"))
+    // lineage lives in the snapshots: no stage holds anything else
+    for (stage <- Seq(Materialize.StageTriples, Materialize.StageLinked, Materialize.StageEntities))
+      assert(new java.io.File(s"$dir/$stage").list().sorted.toSeq == Seq("data", "snapshots"), stage)
     // table properties live in the snapshots: no side file anywhere
     def walk(f: java.io.File): Seq[java.io.File] =
       f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
@@ -161,7 +163,8 @@ class ResumeSpec extends AnyFunSuite {
     Materialize.materializeGraph(spark, pages, dirA, buckets = 4)
     // partial run (buckets 0-1 only), then resume completes 2-3
     Materialize.materializeGraph(spark, pages, dirB, buckets = 4, Some(Set(0, 1)))
-    val partial = spark.read.parquet(s"$dirB/linked/manifest")
+    val partial = Materialize.lineage(spark, dirB)
+      .filter(org.apache.spark.sql.functions.col("stage") === Materialize.StageLinked)
       .select("bucket").distinct().collect().map(_.getInt(0)).toSet
     assert(partial == Set(0, 1))
     Materialize.materializeGraph(spark, pages, dirB, buckets = 4)
@@ -241,13 +244,32 @@ class ResumeSpec extends AnyFunSuite {
     def rmRec(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmRec); f.delete(); ()
     }
-    Seq("data", "snapshots", "manifest").foreach(d => rmRec(new java.io.File(s"$dir/triples/$d")))
+    Seq("data", "snapshots").foreach(d => rmRec(new java.io.File(s"$dir/triples/$d")))
     assert(new java.io.File(s"$dir/triples/old/data").renameTo(new java.io.File(s"$dir/triples/data")))
     for ((name, call) <- Seq[(String, () => Any)](
         "readTriples" -> (() => Materialize.readTriples(spark, dir)),
         "runResumable" -> (() => Materialize.runResumable(spark, pages, dir, 4)),
         "incrementalUpdate" -> (() => Materialize.incrementalUpdate(spark, pages, dir, 4)),
         "compact" -> (() => Materialize.compact(spark, dir)))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("re-materialize it into a fresh outDir"), s"$name: ${e.getMessage}")
+    }
+    // the snapshot form before lineage moved into it: entry lines
+    // `kind id bucket` without their row count, and no write lines
+    val noRows = Files.createTempDirectory("graft-no-rows").toString
+    Materialize.runResumable(spark, pages, noRows, 4)
+    new java.io.File(s"$noRows/triples/snapshots").listFiles().foreach { f =>
+      if (f.getName.endsWith(".crc")) f.delete()
+      else java.nio.file.Files.writeString(f.toPath, java.nio.file.Files.readString(f.toPath)
+        .linesIterator.filterNot(_.startsWith("write ")).map { l =>
+          if (l.startsWith(s"${Materialize.Data} ")) l.split(" ").take(3).mkString(" ") else l
+        }.mkString("\n"))
+    }
+    for ((name, call) <- Seq[(String, () => Any)](
+        "readTriples" -> (() => Materialize.readTriples(spark, noRows)),
+        "lineage" -> (() => Materialize.lineage(spark, noRows)),
+        "runResumable" -> (() => Materialize.runResumable(spark, pages, noRows, 4)),
+        "compact" -> (() => Materialize.compact(spark, noRows)))) {
       val e = intercept[IllegalArgumentException](call())
       assert(e.getMessage.contains("re-materialize it into a fresh outDir"), s"$name: ${e.getMessage}")
     }

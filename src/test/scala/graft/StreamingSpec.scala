@@ -62,43 +62,48 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("page stream -> triples via foreachBatch == batch pipeline") {
+    import graft.plans.Materialize
+    import TripleFixtures.tripleKeys
     val pagesDir = Files.createTempDirectory("graft-stream-pages").toString
-    val outDir = Files.createTempDirectory("graft-stream-out").toString + "/triples"
+    val tableDir = Files.createTempDirectory("graft-stream-table").toString
     val ckDir = Files.createTempDirectory("graft-stream-ck").toString
     val pages = PageGen.pages(spark, 40)
     pages.write.mode("overwrite").parquet(pagesDir)
 
-    val q = EventStream.streamTriples(spark, pagesDir, outDir, ckDir)
+    // the maintained table starts empty: the first micro-batch bootstraps it
+    val q = EventStream.maintainTriples(spark, pagesDir, tableDir, ckDir, 8)
     try q.processAllAvailable() finally q.stop()
 
-    import TripleFixtures.tripleKeys
-    assert(tripleKeys(spark.read.parquet(outDir)) ==
+    assert(tripleKeys(Materialize.readTriples(spark, tableDir)) ==
       tripleKeys(Pipeline.run(pages).toDF()))
   }
 
   test("page stream -> triples: a micro-batch replayed after a lost commit is written once") {
+    import graft.plans.Materialize
     import TripleFixtures.tripleKeyBag
     val pagesDir = Files.createTempDirectory("graft-stream-pages").toString
-    val outDir = Files.createTempDirectory("graft-stream-out").toString + "/triples"
+    val tableDir = Files.createTempDirectory("graft-stream-table").toString
     val ckDir = Files.createTempDirectory("graft-stream-ck").toString
     val pages = PageGen.pages(spark, 40)
     pages.write.mode("overwrite").parquet(pagesDir)
 
-    val q1 = EventStream.streamTriples(spark, pagesDir, outDir, ckDir)
+    val q1 = EventStream.maintainTriples(spark, pagesDir, tableDir, ckDir, 8)
     try q1.processAllAvailable() finally q1.stop()
-    // a crash after the sink write but before the checkpoint commit: the
-    // restarted query replays the last batch under the same batch id
+    val committed = tripleKeyBag(Materialize.readTriples(spark, tableDir))
+    assert(committed == tripleKeyBag(Pipeline.run(pages).toDF()))
+    // a crash after the table commit but before the checkpoint commit:
+    // the restarted query replays the last batch under the same batch id
     val commits = new java.io.File(ckDir, "commits").listFiles()
       .filter(_.getName.forall(_.isDigit))
     assert(commits.nonEmpty, "the first run committed no batch")
     val last = commits.maxBy(_.getName.toLong)
     new java.io.File(ckDir, s"commits/.${last.getName}.crc").delete()
     assert(last.delete())
-    val q2 = EventStream.streamTriples(spark, pagesDir, outDir, ckDir)
+    val q2 = EventStream.maintainTriples(spark, pagesDir, tableDir, ckDir, 8)
     try q2.processAllAvailable() finally q2.stop()
 
-    assert(tripleKeyBag(spark.read.parquet(outDir)) ==
-      tripleKeyBag(Pipeline.run(pages).toDF()))
+    assert(last.exists(), "the restarted query did not replay the batch")
+    assert(tripleKeyBag(Materialize.readTriples(spark, tableDir)) == committed)
   }
 
   test("streaming incremental maintenance: commits == batch latest-crawl-wins; full replay is idempotent") {

@@ -55,7 +55,7 @@ class WriteLayoutSpec extends AnyFunSuite {
     */
   private def writtenRoots(dir: String): Seq[File] =
     (for (stage <- Seq(Materialize.StageTriples, Materialize.StageLinked);
-          root <- Seq("data", "delta", "versions", "manifest"))
+          root <- Seq("data", "delta", "versions"))
       yield new File(s"$dir/$stage/$root")) :+
       new File(s"$dir/${Materialize.StageEntities}/data")
 
